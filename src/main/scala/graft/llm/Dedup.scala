@@ -871,7 +871,7 @@ object Dedup {
       //    Deterministic: the probed bucket is the lowest existing id.
       val emitClean: Boolean = ph("emit probe") {
         val probeBucket = (0 until buckets)
-          .find(m => graft.util.Fs.exists(s, s"$base/occ/b=$m"))
+          .find(m => graft.util.Fs.exists(s"$base/occ/b=$m"))
         probeBucket.forall { m =>
           val r = s.read.parquet(s"$base/occ/b=$m")
             .groupBy(col("h")).agg(count(lit(1)).as("n"))
@@ -925,7 +925,7 @@ object Dedup {
       val posDir = if (emitClean) "clean" else "rep"
       ph("bucket merges")(graft.util.Jobs.inPool(SubPoolWidth)((0 until buckets).map(m => () => {
         val bp = s"$base/occ/b=$m"
-        if (graft.util.Fs.exists(s, bp)) {
+        if (graft.util.Fs.exists(bp)) {
           val rows = s.read.parquet(bp)
           val pos =
             if (emitClean)
@@ -957,7 +957,7 @@ object Dedup {
       //    buckets² RPCs at the 65536-bucket cap).
       val posByDb: Map[Int, Seq[String]] = (0 until buckets)
         .flatMap { m =>
-          graft.util.Fs.listDirs(s, s"$base/$posDir/m$m").collect {
+          graft.util.Fs.listDirs(s"$base/$posDir/m$m").collect {
             case n if n.startsWith("db=") =>
               (n.stripPrefix("db=").toInt, s"$base/$posDir/m$m/$n")
           }
@@ -965,7 +965,7 @@ object Dedup {
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
       val islandDbs: Set[Int] =
         if (emitClean)
-          graft.util.Fs.listDirs(s, s"$base/lens")
+          graft.util.Fs.listDirs(s"$base/lens")
             .collect { case n if n.startsWith("db=") => n.stripPrefix("db=").toInt }
             .toSet
         else posByDb.keySet
@@ -982,7 +982,7 @@ object Dedup {
         }
       })))
       // 4. verdict assembly on O(docs) slim rows; EAGER
-      val covPaths = graft.util.Fs.listDirs(s, s"$base/cov")
+      val covPaths = graft.util.Fs.listDirs(s"$base/cov")
         .collect { case n if n.startsWith("db") => s"$base/cov/$n" }
       val spans =
         if (covPaths.nonEmpty) s.read.parquet(covPaths: _*)
@@ -993,7 +993,7 @@ object Dedup {
         case Some(v) => s.conf.set(cw, v)
         case None => s.conf.unset(cw)
       }
-      graft.util.Fs.delete(s, base)
+      graft.util.Fs.delete(base)
     }
   }
 

@@ -87,7 +87,7 @@ object IncrementalAnn {
     // bootstrap: the first batch trains the initial quantizer on itself
     // (there is nothing else to train on); later batches fold against the
     // stored centroids untouched
-    if (!graft.util.Fs.exists(s, centsPath))
+    if (!graft.util.Fs.exists(centsPath))
       Sinks.writeAtomic(Similarity.kmeansCentroids(se), centsPath)
     val cents = s.read.parquet(centsPath)
     // assign ONLY the batch: O(batch x n_cells) against the stored-centroid broadcast
@@ -113,7 +113,7 @@ object IncrementalAnn {
     * store's current contents. */
   private[graft] def retrain(s: SparkSession, base: String): Unit = {
     graft.functions.GraftFunctions.register(s)
-    Sinks.healBuckets(s"$base/vecs")
+    graft.util.Fs.heal(s"$base/vecs")
     val all = s.read.parquet(s"$base/vecs")
       .select(col("vec_id"), col("se")).localCheckpoint()
     val cents = Similarity.kmeansCentroids(all)
@@ -134,7 +134,7 @@ object IncrementalAnn {
   private[graft] def serve(s: SparkSession, base: String,
                            queryPred: String = "vec_id < 10",
                            nProbe: Int = 2, topK: Int = 3): DataFrame = {
-    Seq("vecs", "assign").foreach(p => Sinks.healBuckets(s"$base/$p"))
+    Seq("vecs", "assign").foreach(p => graft.util.Fs.heal(s"$base/$p"))
     graft.functions.GraftFunctions.register(s)
     val vecs = withNrm(s.read.parquet(s"$base/vecs").select(col("vec_id"), col("se")))
       .localCheckpoint() // corpus side AND query side read it
@@ -204,7 +204,7 @@ object IncrementalAnn {
   private[graft] def serveLsh(s: SparkSession, base: String,
                               queryPred: String = "vec_id < 10",
                               topK: Int = 3): DataFrame = {
-    Sinks.healBuckets(s"$base/vecs")
+    graft.util.Fs.heal(s"$base/vecs")
     graft.functions.GraftFunctions.register(s)
     val bucketed = s.read.parquet(s"$base/vecs")
       .selectExpr("vec_id", "se", "bucket",
@@ -250,7 +250,7 @@ object IncrementalAnn {
     val subs = subsOf(scaled(batch.select(col("vec_id"), col("embedding"))))
       .localCheckpoint()
     val cbPath = s"$base/cb"
-    if (!graft.util.Fs.exists(s, cbPath))
+    if (!graft.util.Fs.exists(cbPath))
       Sinks.writeAtomic(Similarity.pqCodebooks(subs), cbPath)
     val cb = s.read.parquet(cbPath)
     val codes = Similarity.pqEncode(subs, cb)
@@ -268,7 +268,7 @@ object IncrementalAnn {
     * re-encode, atomic swap of both derived stores. */
   private[graft] def retrainPq(s: SparkSession, base: String): Unit = {
     graft.functions.GraftFunctions.register(s)
-    Sinks.healBuckets(s"$base/subs")
+    graft.util.Fs.heal(s"$base/subs")
     val subs = s.read.parquet(s"$base/subs")
       .select(col("vec_id"), col("m"), col("sub")).localCheckpoint()
     Sinks.writeAtomic(Similarity.pqCodebooks(subs), s"$base/cb")
@@ -286,7 +286,7 @@ object IncrementalAnn {
   private[graft] def servePq(s: SparkSession, base: String,
                              queryPred: String = "vec_id < 10",
                              topK: Int = 3): DataFrame = {
-    Seq("subs", "codes").foreach(p => Sinks.healBuckets(s"$base/$p"))
+    Seq("subs", "codes").foreach(p => graft.util.Fs.heal(s"$base/$p"))
     graft.functions.GraftFunctions.register(s)
     val cb = s.read.parquet(s"$base/cb")
     val lut = s.read.parquet(s"$base/subs").where(expr(queryPred))

@@ -73,9 +73,9 @@ object IncrementalDedup {
     // previous attempt's bucket swap must see the complete store, or the
     // new-vs-stored join silently loses every pair against the damaged
     // bucket (mergeByKeyBucket heals too, but that runs after this read)
-    Sinks.healBuckets(bandStore)
+    graft.util.Fs.heal(bandStore)
     val stored =
-      if (graft.util.Fs.exists(s, bandStore))
+      if (graft.util.Fs.exists(bandStore))
         s.read.parquet(bandStore).select(col("doc_id"), col("band_idx"), col("band_key"))
       else s.createDataFrame(s.sparkContext.emptyRDD[Row],
         StructType(bandsNew.schema.fields))
@@ -141,7 +141,7 @@ object IncrementalDedup {
     * `_SUCCESS` marker is committed last, so a crash mid-write leaves no
     * marker and the artifact is recomputed). */
   private def committed(s: SparkSession, p: String): Boolean =
-    graft.util.Fs.exists(s, s"$p/_SUCCESS")
+    graft.util.Fs.exists(s"$p/_SUCCESS")
 
   /** Fold one batch of NEW edges into the persisted label store via
     * COMPONENT CONTRACTION: the fixpoint CC runs on the label graph —
@@ -174,9 +174,9 @@ object IncrementalDedup {
                             base: String): Unit = {
     val store = s"$base/labels"
     val edges = batch.select(col("doc_a"), col("doc_b")).localCheckpoint()
-    Sinks.healBuckets(store)
+    graft.util.Fs.heal(store)
     val stored =
-      if (graft.util.Fs.exists(s, store))
+      if (graft.util.Fs.exists(store))
         s.read.parquet(store).select(col("doc"), col("label"))
       else edges.select(col("doc_a").as("doc"), col("doc_a").as("label")).limit(0)
     // current labels of the batch endpoints; unseen nodes label themselves
@@ -232,7 +232,7 @@ object IncrementalDedup {
     // idempotent (anti-join on remap passes already-moved rows through);
     // the append overwrites its own per-tick file by name.
     val elog = s"$base/edges"
-    Sinks.healBuckets(elog)
+    graft.util.Fs.heal(elog)
     val nE = Sinks.storedBucketCount(elog).getOrElse {
       Sinks.initBucketStore(elog, 16); 16
     }
@@ -316,7 +316,7 @@ object IncrementalDedup {
                               deleted: DataFrame, tickId: Long): Unit = {
     val store = s"$base/labels"
     val del = deleted.select(col("doc_id")).localCheckpoint()
-    Sinks.healBuckets(store)
+    graft.util.Fs.heal(store)
     val affectedPath = s"$base/forgets/tick_$tickId"
     if (!committed(s, affectedPath))
       s.read.parquet(store)
@@ -331,7 +331,7 @@ object IncrementalDedup {
       .select(col("doc")).localCheckpoint()
     // pruned edge read: ONLY the affected labels' buckets are listed
     val elog = s"$base/edges"
-    Sinks.healBuckets(elog)
+    graft.util.Fs.heal(elog)
     val nE = Sinks.storedBucketCount(elog).getOrElse(16)
     def bucketOf(c: org.apache.spark.sql.Column) = pmod(c, lit(nE)).cast("int")
     val aDirs = forgetEdgeDirs(s, base, affected)
@@ -404,7 +404,7 @@ object IncrementalDedup {
     * a bare directory. */
   private[graft] def labelsOrEmpty(s: SparkSession, base: String): DataFrame = {
     val p = s"$base/labels"
-    val hasData = graft.util.Fs.hasDataFiles(s, p)
+    val hasData = graft.util.Fs.hasDataFiles(p)
     if (hasData) s.read.parquet(p)
     else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -529,7 +529,7 @@ object IncrementalDedup {
     * Forgotten docs are gone from both stores, so their pairs simply
     * never generate. */
   private[graft] def simhashVerify(s: SparkSession, base: String): DataFrame = {
-    Seq("fps", "bands").foreach(p => Sinks.healBuckets(s"$base/$p"))
+    Seq("fps", "bands").foreach(p => graft.util.Fs.heal(s"$base/$p"))
     val fp = s.read.parquet(s"$base/fps").select(col("doc_id"), col("simhash"))
       .localCheckpoint() // both pair sides
     val bands = s.read.parquet(s"$base/bands")
@@ -627,7 +627,7 @@ object IncrementalDedup {
     * df-cap against the store's final corpus count, capped pair join
     * ([[Dedup.winnowPairsFromCapped]]). No document text is read. */
   private[graft] def winnowServe(s: SparkSession, base: String): DataFrame = {
-    Sinks.healBuckets(s"$base/fps")
+    graft.util.Fs.heal(s"$base/fps")
     val st = s.read.parquet(s"$base/fps")
     val n = st.agg(count(lit(1)).as("n_corpus"))
     val fp = st.select(col("doc_id"), explode(col("fhs")).as("fh"))
@@ -903,12 +903,12 @@ object IncrementalDedup {
       (0 to 1).foreach { t =>
         val tmp = s"$base/src_stage_$t"
         newDocs.where(expr(s"(doc_id DIV 3) % 2 = $t")).coalesce(1).write.parquet(tmp)
-        val part = graft.util.Fs.listFiles(s, tmp, ".parquet").head
-        graft.util.Fs.mkdirs(s, s"$base/src")
+        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
+        graft.util.Fs.mkdirs(s"$base/src")
         val dest = s"$base/src/t$t.parquet"
-        graft.util.Fs.move(s, part, dest)
+        graft.util.Fs.move(part, dest)
         Sinks.deleteRec(tmp)
-        graft.util.Fs.setMtime(s, dest, 1700000000000L + t * 60000L)
+        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
       }
       val agreeExpr = (0 until XHash.K).map(k => s"IF(m$k = o$k, 1, 0)").mkString(" + ")
       val stream = s.readStream

@@ -157,12 +157,12 @@ object Safety {
       (0 to 1).foreach { t =>
         val tmp = s"$base/src_stage_$t"
         newDocs.where(expr(s"doc_id % 2 = $t")).coalesce(1).write.parquet(tmp)
-        val part = graft.util.Fs.listFiles(s, tmp, ".parquet").head
-        graft.util.Fs.mkdirs(s, s"$base/src")
+        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
+        graft.util.Fs.mkdirs(s"$base/src")
         val dest = s"$base/src/t$t.parquet"
-        graft.util.Fs.move(s, part, dest)
+        graft.util.Fs.move(part, dest)
         graft.sinks.Sinks.deleteRec(tmp)
-        graft.util.Fs.setMtime(s, dest, 1700000000000L + t * 60000L)
+        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
       }
       val stream = s.readStream
         .schema(StructType(Seq(StructField("doc_id", LongType),

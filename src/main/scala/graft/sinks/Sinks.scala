@@ -1,10 +1,5 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.ingest.CommitEtl
 import graft.sources.Tables
 import graft.util.Exact._
+import graft.util.Fs
 
 /** Durable sink surface: crash-safe atomic overwrite, partitioned tables
   * with pruned reads (reference O7, the KV prefix scan `git_etl.ts:142`),
@@ -19,119 +15,72 @@ import graft.util.Exact._
   * (O8 made durable, `git_etl.ts:127-132`), and `observe()` row-count
   * metrics (O13, `git_etl.ts:67-71`).
   *
-  * Atomicity model (SURVEY §7.4): write to `<dest>.inprogress`, then swap
-  * via filesystem rename — readers see either the old table or the new one,
-  * never a partial batch. This strictly improves on the reference's
-  * row-at-a-time non-transactional writes (`git_etl.ts:128-131`), which can
-  * leave half a batch on crash. On a real deployment the same pattern is a
-  * table-format transaction; the rename swap is its minimal file-system
-  * expression.
-  *
-  * COMMITTER CONTRACT (r15, binding on every sink added here): the engine
-  * runs FileOutputCommitter v2 session-wide ([[graft.sources.Tables
-  * .sessionConfs]]) — task commits rename output into the destination
-  * directly, so a Spark-level write is NOT atomic mid-job. That is safe
-  * only because every sink in this file layers its OWN staged-publish
-  * atomicity on top (writeAtomic's two-rename swap, per-bucket staged
-  * swaps in [[mergeByKeyBucket]]/[[rewriteBuckets]], versioned staged-dir
-  * renames in [[commitVersion]], the [[publishSet]] manifest). A new sink
-  * MUST do the same: write to an invisible staging path (dot/underscore
-  * prefix or a sidecar dir) and publish with an atomic rename — never
-  * point readers at a directory a Spark job is writing into. */
+  * Every sink here publishes through the staged-publish protocol of
+  * [[graft.util.Fs]] (SURVEY §7.4): readers see a table, bucket, version
+  * or manifest from before a write or after it, never half of one — where
+  * the reference's row-at-a-time writes (`git_etl.ts:128-131`) can leave
+  * half a batch on crash. A crashed sink call is recovered by re-running
+  * it. */
 object Sinks {
 
   /** All sink queries write beneath the build dir — never outside the repo. */
   val tmpBase = "/root/repo/target/qtmp"
 
-  def deleteRec(p: String): Unit = {
-    val path = Paths.get(p)
-    if (Files.exists(path)) {
-      Files.walk(path).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-  }
+  def deleteRec(p: String): Unit = Fs.delete(p)
 
   /** O11: truncate/reset a table directory (the reference clears its KV
     * store + WAL sidecars on startup when configured; `git_etl.ts:293-308`).
-    * Also clears the atomic-swap sidecars so a fresh store never resurrects
+    * Also clears the publish sidecars so a fresh store never resurrects
     * a stale `.old` copy. */
-  def truncate(dest: String): Unit = {
-    deleteRec(dest); deleteRec(dest + ".old"); deleteRec(dest + ".inprogress")
-  }
+  def truncate(dest: String): Unit =
+    Seq(dest, Fs.stagingOf(dest), Fs.oldOf(dest)).foreach(Fs.delete)
 
-  /** Recover from a crash BETWEEN writeAtomic's two renames: in that
-    * window `dest` is missing but `dest.old` holds the complete previous
-    * table, so the old-or-new guarantee is restored by renaming it back.
-    * Called on every writeAtomic (startup-equivalent) and safe to call any
-    * time — a no-op unless exactly that crash window is on disk. */
-  def recover(dest: String): Unit = {
-    val destPath = Paths.get(dest)
-    val old = Paths.get(dest + ".old")
-    if (!Files.exists(destPath) && Files.exists(old))
-      Files.move(old, destPath, StandardCopyOption.ATOMIC_MOVE)
+  /** Stage `write`'s output beside `live`, then swap it in. */
+  private def publish(live: String)(write: String => Unit): Unit = {
+    val staged = Fs.stagingOf(live)
+    Fs.delete(staged)
+    write(staged)
+    Fs.swap(staged, live)
   }
 
   /** Publish a SET of tables as one atomic unit: every table's data lands
     * under `base/tables/<name>/v_<version>` first, then the one-line
-    * MANIFEST pointer swaps via temp-write + atomic rename. A crash
-    * anywhere before the swap leaves readers on the previous complete
-    * set; after it, on the new complete set — never a cross-version mix
-    * (the guarantee per-table [[writeAtomic]] cannot give across tables).
-    *
-    * Replay-safe: a crash-recovery re-run of an already-committed version
-    * is a no-op — readers are LIVE on those `v_<version>` dirs, so
-    * rewriting them in place would break the never-partial guarantee. An
-    * uncommitted version's dirs (crash before the manifest swap) are
-    * invisible to readers and are staged + atomically renamed per table. */
+    * MANIFEST pointer is replaced. Readers resolve the pointer, so they
+    * see the previous complete set or the new one — never a cross-version
+    * mix (the guarantee per-table [[writeAtomic]] cannot give across
+    * tables). A replay of an already-committed version is a no-op:
+    * readers are LIVE on those `v_<version>` dirs. */
   def publishSet(s: SparkSession, base: String, version: Long,
                  tables: Map[String, DataFrame]): Unit = {
+    Fs.heal(base)
     val committed =
       try manifestVersion(base) catch { case _: Exception => Long.MinValue }
     // <= not ==: a delayed replay of an OLDER committed publish must not
     // roll readers back to stale data (versions are monotone by contract)
-    if (version <= committed) return // replay of a committed publish
+    if (version <= committed) return
     tables.foreach { case (name, df) =>
-      val dest = s"$base/tables/$name/v_$version"
-      val staging = dest + ".staging"
-      deleteRec(staging)
-      df.write.mode("overwrite").parquet(staging)
-      deleteRec(dest) // uncommitted leftovers only — version != committed
-      Files.move(Paths.get(staging), Paths.get(dest), StandardCopyOption.ATOMIC_MOVE)
+      publish(s"$base/tables/$name/v_$version")(df.write.mode("overwrite").parquet)
     }
-    Files.createDirectories(Paths.get(base))
-    val tmp = Paths.get(s"$base/MANIFEST.tmp")
-    Files.writeString(tmp, version.toString)
-    Files.move(tmp, Paths.get(s"$base/MANIFEST"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val manifest = s"$base/MANIFEST"
+    Fs.write(Fs.stagingOf(manifest), version.toString)
+    Fs.replaceFile(Fs.stagingOf(manifest), manifest)
   }
 
   /** Current committed version of a [[publishSet]] store. */
   def manifestVersion(base: String): Long =
-    Files.readString(Paths.get(s"$base/MANIFEST")).trim.toLong
+    Fs.read(s"$base/MANIFEST").trim.toLong
 
   /** Read one table of the committed set — always the manifest's version. */
   def readSet(s: SparkSession, base: String, name: String): DataFrame =
     s.read.parquet(s"$base/tables/$name/v_${manifestVersion(base)}")
 
-  /** Crash-safe atomic overwrite: stage into `dest.inprogress`, rename into
-    * place. Optional `partitionBy` produces a layout whose reads prune.
-    * Readers see the old table or the new one, never a partial batch; a
-    * crash between the two renames is healed by [[recover]] on the next
-    * write (or by any caller invoking it at startup). */
-  def writeAtomic(df: DataFrame, dest: String, partitionCols: Seq[String] = Nil): Unit = {
-    val destPath = Paths.get(dest)
-    Files.createDirectories(destPath.getParent)
-    recover(dest) // heal a leftover .old BEFORE deleting sidecars
-    val tmp = dest + ".inprogress"
-    val old = dest + ".old"
-    deleteRec(tmp); deleteRec(old)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
-    if (Files.exists(destPath))
-      Files.move(destPath, Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), destPath, StandardCopyOption.ATOMIC_MOVE)
-    deleteRec(old)
-  }
+  /** Crash-safe atomic overwrite. Optional `partitionBy` produces a layout
+    * whose reads prune. */
+  def writeAtomic(df: DataFrame, dest: String, partitionCols: Seq[String] = Nil): Unit =
+    publish(dest) { staged =>
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(staged)
+    }
 
   /** Partition-scoped keyed merge (the 100 TB fix for rewrite-the-world
     * upserts): the store is partitioned by a STABLE hash bucket of the key
@@ -141,21 +90,12 @@ object Sinks {
     * rewrites ONLY those buckets. A batch touching 1% of buckets rewrites
     * 1% of the table.
     *
-    * Crash safety (per bucket, like [[writeAtomic]] per table): merged
-    * buckets are staged under `dest/_merge_staging` (underscore prefix —
-    * invisible to Spark readers), then swapped in with the two-rename
-    * pattern (`live → .old_bucket_N → delete`); [[healBuckets]] restores
-    * any bucket whose live dir vanished mid-swap before the next merge
-    * reads the store, so a replayed tick never merges against a damaged
-    * store (callers reading the store OUTSIDE a merge after a possible
-    * crash should call [[healBuckets]] first). Readers never see a
-    * partial FILE SET for a bucket — but a reader racing the swap itself
-    * can observe a bucket briefly ABSENT between the two renames, and
-    * may see some buckets updated before others. Per-key (within-bucket)
-    * consistency always holds, and the ETL's own sequential ticks resume
-    * correctly because the keyed upsert is idempotent. True
-    * reader-concurrent snapshot atomicity is a table-format transaction
-    * log's job, out of scope for the filesystem expression. */
+    * Each touched bucket is swapped in on its own, so a reader racing a
+    * merge may see some buckets updated before others; per-key
+    * (within-bucket) consistency always holds, and a replayed tick
+    * converges because the keyed upsert is idempotent. Callers reading
+    * the store outside a sink call after a possible crash should
+    * [[graft.util.Fs.heal]] it first. */
   def mergeByKeyBucket(s: SparkSession, dest: String, batch: DataFrame,
                        key: String, orderCols: Seq[String],
                        nBuckets: Int = 16,
@@ -168,39 +108,27 @@ object Sinks {
     // given key (otherwise an update could land beside a stale twin it
     // never reads).
     val bCol = Option(bucketCol).getOrElse(key)
-    if (!Files.exists(Paths.get(dest))) {
-      // first write: stage + single rename, so readers never see a
-      // half-written initial store. The chosen bucket count is persisted
-      // as `_graft_buckets` INSIDE the staged dir (underscore-prefixed —
-      // invisible to Spark readers), so it is atomic with the data and
-      // every later merge buckets against the store's true layout.
-      // int-typed so it round-trips partition discovery with a stable type
-      val bucketed = batch.withColumn("_bucket",
-        pmod(col(bCol), lit(nBuckets)).cast("int"))
-      Files.createDirectories(Paths.get(dest).getParent)
-      val init = dest + ".init"
-      deleteRec(init)
-      bucketed.write.partitionBy("_bucket").parquet(init)
-      Files.write(Paths.get(init, "_graft_buckets"),
-        nBuckets.toString.getBytes("UTF-8"))
-      // persist the bucketing column too: a later delete/merge must bucket
-      // by the store's TRUE layout column, not assume the merge key
-      Files.write(Paths.get(init, "_graft_bucket_col"),
-        bCol.getBytes("UTF-8"))
-      Files.move(Paths.get(init), Paths.get(dest), StandardCopyOption.ATOMIC_MOVE)
+    Fs.heal(dest)
+    if (!Fs.exists(dest)) {
+      // first write: the whole store publishes at once. The bucket count
+      // and the bucketing column are persisted INSIDE the staged dir
+      // (underscore-prefixed — invisible to Spark readers), atomic with
+      // the data, so every later merge or delete buckets against the
+      // store's true layout. `_bucket` is int-typed so it round-trips
+      // partition discovery with a stable type.
+      publish(dest) { staged =>
+        batch.withColumn("_bucket", pmod(col(bCol), lit(nBuckets)).cast("int"))
+          .write.partitionBy("_bucket").parquet(staged)
+        Fs.write(s"$staged/_graft_buckets", nBuckets.toString)
+        Fs.write(s"$staged/_graft_bucket_col", bCol)
+      }
     } else {
-      healBuckets(dest)
-      // merge against the STORE's bucket count, not the caller's: a
-      // mismatched nBuckets would assign a key's new row to a different
+      // merge against the STORE's bucket count and column, not the
+      // caller's: a mismatch would assign a key's new row to a different
       // bucket than its stored twin, and the upsert (which only reads
       // touched buckets) would leave the stale twin alive — silent
-      // duplicate keys. The metadata file makes the layout self-describing;
-      // pre-metadata stores fall back to the caller's value.
+      // duplicate keys. Pre-metadata stores fall back to the caller's.
       val n = storedBucketCount(dest).getOrElse(nBuckets)
-      // same self-describing discipline for the bucketing COLUMN: a later
-      // merge that omits bucketCol must still bucket by the store's true
-      // layout, or the upsert reads the wrong buckets and leaves stale
-      // twins alive (exactly the mismatched-nBuckets failure mode)
       val storeBCol = storedBucketCol(dest).getOrElse(bCol)
       val bucketed = batch.withColumn("_bucket",
         pmod(col(storeBCol), lit(n)).cast("int"))
@@ -210,23 +138,22 @@ object Sinks {
       val existing = s.read.parquet(dest)
         .where(col("_bucket").isin(touched: _*))
       val merged = CommitEtl.upsert(existing, bucketed, key, orderCols)
-      stageAndSwap(s, dest, merged, touched)
+      rewriteBuckets(s, dest, merged, touched)
     }
   }
 
   /** Keyed DELETE from a [[mergeByKeyBucket]] store: remove every row whose
-    * `key` appears in `keys`, rewriting only the touched buckets (same
-    * crash-safe two-rename swap as the merge). The GDPR / right-to-be-
-    * forgotten primitive: at 100 TB a delete list of any size costs only
-    * the buckets it hashes into, never a full-table rewrite. Idempotent —
-    * replaying a delete finds no matching keys and rewrites the same
-    * (already-clean) buckets. A bucket whose rows are all deleted is
-    * dropped from the store (readers of `dest` see the remaining buckets;
-    * partition discovery needs no placeholder). */
+    * `key` appears in `keys`, rewriting only the touched buckets. The GDPR
+    * / right-to-be-forgotten primitive: at 100 TB a delete list of any
+    * size costs only the buckets it hashes into, never a full-table
+    * rewrite. Idempotent — replaying a delete finds no matching keys and
+    * rewrites the same (already-clean) buckets. A bucket whose rows are
+    * all deleted is dropped from the store (readers of `dest` see the
+    * remaining buckets; partition discovery needs no placeholder). */
   def deleteByKeyBucket(s: SparkSession, dest: String, keys: DataFrame,
                         key: String): Unit = {
-    if (!Files.exists(Paths.get(dest))) return
-    healBuckets(dest)
+    if (!Fs.exists(dest)) return
+    Fs.heal(dest)
     val n = storedBucketCount(dest).getOrElse(16)
     // Bucket by the store's TRUE layout column (persisted at init), not by
     // the merge key: a bucketCol store (e.g. the FK-bucketed join MV) hashes
@@ -249,7 +176,7 @@ object Sinks {
     val remaining = s.read.parquet(dest)
       .where(col("_bucket").isin(touched: _*))
       .join(del.select(col(key)), Seq(key), "left_anti")
-    stageAndSwap(s, dest, remaining, touched, dropMissing = true)
+    rewriteBuckets(s, dest, remaining, touched, dropMissing = true)
   }
 
   /** Merge-on-read keyed DELETE — the cheap tier [[deleteByKeyBucket]]'s
@@ -259,11 +186,11 @@ object Sinks {
     * request time; it appends the keys to an underscore-prefixed sidecar
     * (`dest/_deletes/` — invisible to plain parquet readers of `dest`),
     * [[readWithDeletes]] anti-joins the sidecar at read time, and
-    * [[compactDeletes]] later folds the log into the data buckets with
-    * the same crash-safe swap as the CoW path. The delete itself moves
-    * O(delete-list) bytes and touches ZERO data buckets (spec-asserted).
+    * [[compactDeletes]] later folds the log into the data buckets. The
+    * delete itself moves O(delete-list) bytes and touches ZERO data
+    * buckets (spec-asserted).
     *
-    * Replay-idempotent via `tag`: a replayed tick first clears its own
+    * Replay-idempotent via `tag`: a replayed tick replaces its own
     * `del_<tag>_*` files, so re-shipping a delete list never duplicates
     * sidecar rows (harmless anyway — the anti-join is set-semantics —
     * but unbounded sidecar growth isn't).
@@ -282,7 +209,7 @@ object Sinks {
     * exactly this ordering). */
   def deleteByKeyMoR(s: SparkSession, dest: String, keys: DataFrame,
                      key: String, tag: String): Unit = {
-    if (!Files.exists(Paths.get(dest))) return
+    if (!Fs.exists(dest)) return
     val n = storedBucketCount(dest).getOrElse(16)
     val bCol = storedBucketCol(dest).getOrElse(key)
     val withBucket =
@@ -295,40 +222,36 @@ object Sinks {
       else
         keys.select(col(key)).distinct()
           .withColumn("_del_bucket", lit(null).cast("int"))
-    val delDir = Paths.get(dest, "_deletes")
-    Files.createDirectories(delDir)
-    // stage then move under deterministic per-tag names (dot-prefixed
-    // staging dir: invisible to the sidecar reader if a crash strands it)
-    val staging = s"$dest/_deletes/.staging_$tag"
-    deleteRec(staging)
-    withBucket.write.mode("overwrite").parquet(staging)
-    val listing = Files.list(delDir)
-    try listing.iterator().asScala.toList
-      .filter(_.getFileName.toString.startsWith(s"del_${tag}_"))
-      .foreach(Files.deleteIfExists(_))
-    finally listing.close()
-    val stFiles = Files.list(Paths.get(staging))
-    val parts = try stFiles.iterator().asScala.toList
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    finally stFiles.close()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      Files.move(p, delDir.resolve(s"del_${tag}_$i.parquet"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val delDir = s"$dest/_deletes"
+    val staged = Fs.stagingOf(s"$delDir/del_$tag")
+    Fs.delete(staged)
+    withBucket.write.mode("overwrite").parquet(staged)
+    replaceTagged(staged, delDir, s"del_${tag}_")
+    Fs.delete(staged)
+  }
+
+  /** Move the staged part files into `dir` under the deterministic names
+    * `<prefix><i>.parquet`, after clearing every file an earlier attempt
+    * published under `prefix` — so a replay that stages fewer files than
+    * the first attempt cannot leave a stale higher-index file (duplicated
+    * rows) behind. */
+  private def replaceTagged(staged: String, dir: String, prefix: String): Unit = {
+    Fs.mkdirs(dir)
+    Fs.listFiles(dir, ".parquet")
+      .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith(prefix))
+      .foreach(Fs.delete)
+    Fs.listFiles(staged, ".parquet").zipWithIndex.foreach { case (p, i) =>
+      Fs.replaceFile(p, s"$dir/$prefix$i.parquet")
     }
-    deleteRec(staging)
   }
 
   /** The store's pending (un-compacted) delete keys, or None if the
     * sidecar is absent/empty. Bounded by the delete traffic since the
     * last compaction, not by store size. */
   def pendingDeleteKeys(s: SparkSession, dest: String): Option[DataFrame] = {
-    val delDir = Paths.get(dest, "_deletes")
-    if (!Files.exists(delDir)) return None
-    val listing = Files.list(delDir)
-    val any = try listing.iterator().asScala
-      .exists(_.getFileName.toString.endsWith(".parquet"))
-    finally listing.close()
-    if (any) Some(s.read.parquet(delDir.toString)) else None
+    val delDir = s"$dest/_deletes"
+    if (Fs.listFiles(delDir, ".parquet").isEmpty) None
+    else Some(s.read.parquet(delDir))
   }
 
   /** Read a bucketed store with pending MoR deletes applied: base scan
@@ -349,14 +272,14 @@ object Sinks {
   /** Fold the pending delete sidecar into the data buckets (the
     * compaction half of the MoR contract): anti-join ONLY the buckets
     * the sidecar names (all-bucket fallback when any row lacks a
-    * recorded bucket), swap them with the crash-safe two-rename, then
-    * clear the sidecar. Crash anywhere = still correct: before the swap
-    * loop the sidecar masks at read; between swap and sidecar clear the
-    * keys are gone from the data AND the anti-join of already-deleted
-    * keys is a no-op, so a replayed compaction converges. The result is
-    * row-identical to having taken [[deleteByKeyBucket]] directly
-    * (spec-asserted). */
+    * recorded bucket), swap them in, then clear the sidecar. The store is
+    * healed first: a bucket stranded in its `.old` copy would otherwise
+    * be missing from the touched set, its deletes skipped and then
+    * cleared. A crash anywhere converges on replay — the anti-join of
+    * already-deleted keys is a no-op. The result is row-identical to
+    * having taken [[deleteByKeyBucket]] directly (spec-asserted). */
   def compactDeletes(s: SparkSession, dest: String, key: String): Unit = {
+    Fs.heal(dest)
     pendingDeleteKeys(s, dest).foreach { d =>
       val buckets = d.select(col("_del_bucket")).distinct().collect()
         .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
@@ -368,39 +291,33 @@ object Sinks {
         val remaining = s.read.parquet(dest)
           .where(col("_bucket").isin(touched: _*))
           .join(d.select(col(key)).distinct(), Seq(key), "left_anti")
-        stageAndSwap(s, dest, remaining, touched, dropMissing = true)
+        rewriteBuckets(s, dest, remaining, touched, dropMissing = true)
       }
     }
-    deleteRec(s"$dest/_deletes")
+    Fs.delete(s"$dest/_deletes")
   }
 
-  /** Write `df` (which carries an int `_bucket` column) to the store's
-    * staging dir, then swap each touched bucket live with the crash-safe
-    * two-rename pattern (see [[mergeByKeyBucket]]'s scaladoc).
+  /** Replace the `touched` buckets of a bucketed store with `df`'s rows
+    * (`df` carries an int `_bucket` column and holds rows ONLY for
+    * touched buckets): stage them under the store's `_merge_staging`
+    * (underscore: invisible to readers of the store), then swap each
+    * touched bucket in.
     * `dropMissing`: a touched bucket with NO staged output (every row
-    * deleted) is removed from the live store instead of left stale —
-    * the delete path sets it; merge/compact paths never shrink a bucket
-    * to zero rows, so for them a missing staged dir means untouched. */
-  private def stageAndSwap(s: SparkSession, dest: String, df: DataFrame,
-                           touched: Seq[Int], dropMissing: Boolean = false): Unit = {
+    * deleted or moved elsewhere) is removed from the live store instead
+    * of left stale — the delete paths and multiset stores like the CC
+    * edge log set it; merge/compact paths never shrink a bucket to zero
+    * rows, so for them a missing staged dir means untouched. */
+  def rewriteBuckets(s: SparkSession, dest: String, df: DataFrame,
+                     touched: Seq[Int], dropMissing: Boolean = false): Unit = {
     val staging = s"$dest/_merge_staging"
-    deleteRec(staging)
+    Fs.delete(staging)
     df.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
     touched.foreach { b =>
-      val live = Paths.get(s"$dest/_bucket=$b")
-      val old = Paths.get(s"$dest/.old_bucket_$b")
-      val staged = Paths.get(s"$staging/_bucket=$b")
-      if (Files.exists(staged)) {
-        deleteRec(old.toString)
-        if (Files.exists(live))
-          Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(staged, live, StandardCopyOption.ATOMIC_MOVE)
-        deleteRec(old.toString)
-      } else if (dropMissing && Files.exists(live)) {
-        deleteRec(live.toString)
-      }
+      val (staged, live) = (s"$staging/_bucket=$b", s"$dest/_bucket=$b")
+      if (Fs.exists(staged)) Fs.swap(staged, live)
+      else if (dropMissing) Fs.delete(live)
     }
-    deleteRec(staging)
+    Fs.delete(staging)
   }
 
   /** Create an empty bucketed store: just the directory plus the
@@ -409,64 +326,36 @@ object Sinks {
     * MULTISET bucket stores — rows bucketed by some derived column with
     * no unique merge key — which [[mergeByKeyBucket]]'s keyed init path
     * can't host (its upsert would collapse same-key rows). */
-  def initBucketStore(dest: String, nBuckets: Int): Unit = {
-    val d = Paths.get(dest)
-    if (!Files.exists(d)) {
-      Files.createDirectories(d)
-      Files.write(Paths.get(dest, "_graft_buckets"),
-        nBuckets.toString.getBytes("UTF-8"))
-    }
-  }
-
-  /** Replace the `touched` buckets of a bucketed store with `df`'s rows
-    * (`df` carries an int `_bucket` column and holds rows ONLY for
-    * touched buckets) — the crash-safe per-bucket staged swap exposed
-    * for multiset stores like the CC edge log. `dropMissing = true`
-    * removes a touched bucket whose staged output is empty (every row
-    * deleted or moved elsewhere). */
-  def rewriteBuckets(s: SparkSession, dest: String, df: DataFrame,
-                     touched: Seq[Int], dropMissing: Boolean = false): Unit =
-    stageAndSwap(s, dest, df, touched, dropMissing)
+  def initBucketStore(dest: String, nBuckets: Int): Unit =
+    if (!Fs.exists(dest))
+      publish(dest)(staged => Fs.write(s"$staged/_graft_buckets", nBuckets.toString))
 
   /** The EXISTING partition directories of the given buckets — handed to
     * a parquet read, this is file-level pruning: no other bucket's files
     * are ever listed, let alone read. */
   def bucketDirs(dest: String, buckets: Seq[Int]): Seq[String] =
-    buckets.map(b => s"$dest/_bucket=$b")
-      .filter(p => Files.exists(Paths.get(p)))
+    buckets.map(b => s"$dest/_bucket=$b").filter(Fs.exists)
+
+  private def storeMeta(dest: String, name: String): Option[String] = {
+    val meta = s"$dest/$name"
+    if (Fs.exists(meta)) Some(Fs.read(meta).trim) else None
+  }
 
   /** The store's bucket count from its `_graft_buckets` metadata file;
     * None for stores predating the metadata (callers then supply it). */
-  def storedBucketCount(dest: String): Option[Int] = {
-    val meta = Paths.get(dest, "_graft_buckets")
-    if (Files.exists(meta))
-      Some(new String(Files.readAllBytes(meta), "UTF-8").trim.toInt)
-    else None
-  }
+  def storedBucketCount(dest: String): Option[Int] =
+    storeMeta(dest, "_graft_buckets").map(_.toInt)
 
   /** The store's bucketing COLUMN from its `_graft_bucket_col` metadata;
     * None for stores predating it (which always bucketed by the key). */
-  def storedBucketCol(dest: String): Option[String] = {
-    val meta = Paths.get(dest, "_graft_bucket_col")
-    if (Files.exists(meta))
-      Some(new String(Files.readAllBytes(meta), "UTF-8").trim)
-    else None
-  }
+  def storedBucketCol(dest: String): Option[String] =
+    storeMeta(dest, "_graft_bucket_col")
 
   /** The bucket ids that physically exist in the store right now —
     * parsed from the `_bucket=N` partition dirs. */
-  def existingBuckets(dest: String): Seq[Int] = {
-    val d = Paths.get(dest)
-    if (!Files.exists(d)) Nil
-    else {
-      val st = Files.list(d)
-      try st.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("_bucket="))
-        .map(_.stripPrefix("_bucket=").toInt).toIndexedSeq
-      finally st.close()
-    }
-  }
+  def existingBuckets(dest: String): Seq[Int] =
+    Fs.listDirs(dest).filter(_.startsWith("_bucket="))
+      .map(_.stripPrefix("_bucket=").toInt).toIndexedSeq
 
   /** Bucket count sized from expected store rows: one bucket per
     * `targetRowsPerBucket` (default 4M — a ~100-500 MB bucket rewrite at
@@ -485,48 +374,21 @@ object Sinks {
     * rows are staged partitioned-by-bucket (repartitioned on `_bucket`, so
     * each bucket's rows land in one task → one staged file), then each
     * staged file moves into the live bucket dir under a DETERMINISTIC
-    * per-(tag, bucket) name with REPLACE_EXISTING — a replayed tick
-    * overwrites its own file instead of duplicating rows. This is what
-    * makes a merge-free edge-log tick O(batch): no existing bucket is
-    * listed, read, or swapped. [[compactBuckets]] later folds the
-    * accumulated per-tick files. Only valid for multiset stores — a keyed
-    * store's upsert must go through [[mergeByKeyBucket]]. */
+    * per-(tag, bucket) name — a replayed tick replaces its own file
+    * instead of duplicating rows. This is what makes a merge-free
+    * edge-log tick O(batch): no existing bucket is read or swapped.
+    * [[compactBuckets]] later folds the accumulated per-tick files. Only
+    * valid for multiset stores — a keyed store's upsert must go through
+    * [[mergeByKeyBucket]]. */
   def appendBuckets(s: SparkSession, dest: String, df: DataFrame, tag: String): Unit = {
-    val staging = s"$dest/_append_staging_$tag"
-    deleteRec(staging)
+    val staging = Fs.stagingOf(s"$dest/append_$tag")
+    Fs.delete(staging)
     df.repartition(col("_bucket")).write.mode("overwrite")
       .partitionBy("_bucket").parquet(staging)
-    val stagingPath = Paths.get(staging)
-    if (Files.exists(stagingPath)) {
-      val listing = Files.list(stagingPath)
-      val staged = try listing.iterator().asScala.toList
-        .filter(_.getFileName.toString.startsWith("_bucket="))
-      finally listing.close()
-      staged.foreach { bd =>
-        val b = bd.getFileName.toString.stripPrefix("_bucket=")
-        val live = Paths.get(s"$dest/_bucket=$b")
-        Files.createDirectories(live)
-        val files = Files.list(bd)
-        val parts = try files.iterator().asScala.toList
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        finally files.close()
-        // Replay idempotence must not depend on the replay staging the
-        // SAME file count as the first attempt: clear every file this tag
-        // previously moved into the bucket before laying down the new
-        // set, so a replay that stages fewer files cannot leave a stale
-        // higher-index file (= duplicated rows) behind.
-        val prior = Files.list(live)
-        try prior.iterator().asScala.toList
-          .filter(_.getFileName.toString.startsWith(s"append_${tag}_"))
-          .foreach(Files.deleteIfExists(_))
-        finally prior.close()
-        parts.zipWithIndex.foreach { case (p, i) =>
-          Files.move(p, live.resolve(s"append_${tag}_$i.parquet"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        }
-      }
+    Fs.listDirs(staging).filter(_.startsWith("_bucket=")).foreach { b =>
+      replaceTagged(s"$staging/$b", s"$dest/$b", s"append_${tag}_")
     }
-    deleteRec(staging)
+    Fs.delete(staging)
   }
 
   /** Coalesce each bucket holding more than `maxFilesPerBucket` parquet
@@ -534,34 +396,21 @@ object Sinks {
     * small files accumulating across merges (each merge rewrites a
     * touched bucket with up to `spark.sql.shuffle.partitions` files).
     * Oversized buckets are rewritten via `repartition(_bucket)` (each
-    * bucket lands wholly in one task → one file) and swapped live with
-    * the same crash-safe two-rename pattern as the merge; untouched
-    * buckets are never read. Contents are byte-identical (spec-asserted),
-    * so compaction can run any time between merges. */
+    * bucket lands wholly in one task → one file) and swapped in like a
+    * merge; untouched buckets are never read. Contents are byte-identical
+    * (spec-asserted), so compaction can run any time between merges. */
   def compactBuckets(s: SparkSession, dest: String,
                      maxFilesPerBucket: Int = 1): Unit = {
-    healBuckets(dest)
-    val d = Paths.get(dest)
-    if (!Files.exists(d)) return
-    def parquetCount(b: Path): Int = {
-      val listing = Files.list(b)
-      try listing.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
-      finally listing.close()
-    }
-    val listing = Files.list(d)
-    val oversized =
-      try listing.iterator().asScala.toList
-        .filter(_.getFileName.toString.startsWith("_bucket="))
-        .filter(parquetCount(_) > maxFilesPerBucket)
-        .map(_.getFileName.toString.stripPrefix("_bucket=").toInt)
-      finally listing.close()
+    Fs.heal(dest)
+    val oversized = existingBuckets(dest).filter(b =>
+      Fs.listFiles(s"$dest/_bucket=$b", ".parquet").size > maxFilesPerBucket)
     if (oversized.nonEmpty) {
       val df = s.read.parquet(dest)
         .where(col("_bucket").isin(oversized: _*))
         .repartition(math.max(1, oversized.size / math.max(1, maxFilesPerBucket)),
           col("_bucket"))
-      stageAndSwap(s, dest, df, oversized)
-    }
+      rewriteBuckets(s, dest, df, oversized)
+    } else Fs.delete(s"$dest/_merge_staging") // a crashed pass that finished its swaps
   }
 
   // ---------------------------------------------------------------------
@@ -569,50 +418,39 @@ object Sinks {
   // only the latest row per key (`git_etl.ts:127-132`); a training-data
   // pipeline also needs "what did the table look like at version V" —
   // reproducing the exact corpus a model was trained on. Merge-on-read:
-  // each commit is an immutable keyed delta dir `delta_v=N` (staged +
-  // atomic rename = the commit point), and a snapshot read resolves each
-  // key to its highest version <= V. Version listing is directory
-  // METADATA (one fs listing, never a data scan), so pruning newer
-  // versions costs nothing at 100 TB; periodic [[compactVersions]] folds
-  // old deltas into a materialized `base_v=N` snapshot so read fan-in
-  // stays bounded (the retention horizon moves up to N).
+  // each commit is an immutable keyed delta dir `delta_v=N` (its publish
+  // is the commit point), and a snapshot read resolves each key to its
+  // highest version <= V. Version listing is directory METADATA (one fs
+  // listing, never a data scan), so pruning newer versions costs nothing
+  // at 100 TB; periodic [[compactVersions]] folds old deltas into a
+  // materialized `base_v=N` snapshot so read fan-in stays bounded (the
+  // retention horizon moves up to N).
   // ---------------------------------------------------------------------
 
-  private def versionsOf(store: String, prefix: String): Seq[Long] = {
-    val d = Paths.get(store)
-    if (!Files.exists(d)) Nil
-    else {
-      val listing = Files.list(d)
-      try listing.iterator().asScala.toList
-        .map(_.getFileName.toString)
-        .filter(_.startsWith(prefix + "="))
-        .map(_.stripPrefix(prefix + "=").toLong)
-      finally listing.close()
-    }
-  }
+  private def versionsOf(store: String, prefix: String): Seq[Long] =
+    Fs.listDirs(store).filter(_.startsWith(prefix + "="))
+      .map(_.stripPrefix(prefix + "=").toLong)
 
   /** Highest committed version, or None for an empty store. */
   def latestVersion(store: String): Option[Long] =
     (versionsOf(store, "delta_v") ++ versionsOf(store, "base_v"))
       .maxOption
 
-  /** Append `batch` (keyed by `key`; duplicate keys within the batch are
-    * collapsed arbitrarily-last) as the next version. The staged-dir
-    * rename IS the commit: a crash before it leaves only an invisible
-    * `.staging` dir (cleaned on the next commit attempt), never a
-    * half-visible version. Returns the committed version number. */
-  def commitVersion(s: SparkSession, store: String, batch: DataFrame,
-                    key: String): Long = {
-    Files.createDirectories(Paths.get(store))
+  /** Publish `delta` as the next version; returns its number. */
+  private def commitDelta(store: String, delta: DataFrame, tombstone: Boolean): Long = {
+    Fs.heal(store)
     val v = latestVersion(store).map(_ + 1).getOrElse(0L)
-    val stage = s"$store/.staging_delta_$v"
-    deleteRec(stage)
-    batch.dropDuplicates(key).withColumn("_tombstone", lit(false))
-      .withColumn("_v", lit(v)).write.parquet(stage)
-    Files.move(Paths.get(stage), Paths.get(s"$store/delta_v=$v"),
-      StandardCopyOption.ATOMIC_MOVE)
+    publish(s"$store/delta_v=$v")(delta.withColumn("_tombstone", lit(tombstone))
+      .withColumn("_v", lit(v)).write.parquet)
     v
   }
+
+  /** Append `batch` (keyed by `key`; duplicate keys within the batch are
+    * collapsed arbitrarily-last) as the next version. Returns the
+    * committed version number. */
+  def commitVersion(s: SparkSession, store: String, batch: DataFrame,
+                    key: String): Long =
+    commitDelta(store, batch.dropDuplicates(key), tombstone = false)
 
   /** Commit a DELETE wave as the next version: a tombstone delta holding
     * only (key, _tombstone=true). Snapshot reads resolve each key to its
@@ -620,20 +458,10 @@ object Sinks {
     * costs O(|deleted keys|) on write and nothing extra on read — never a
     * rewrite of live data (the versioned-store counterpart of
     * [[deleteByKeyBucket]]). Deleting an absent key is a harmless no-op
-    * row. Same staged-rename commit point as [[commitVersion]]. */
+    * row. */
   def commitDeletes(s: SparkSession, store: String, keys: DataFrame,
-                    key: String): Long = {
-    Files.createDirectories(Paths.get(store))
-    val v = latestVersion(store).map(_ + 1).getOrElse(0L)
-    val stage = s"$store/.staging_delta_$v"
-    deleteRec(stage)
-    keys.select(col(key)).dropDuplicates(key)
-      .withColumn("_tombstone", lit(true)).withColumn("_v", lit(v))
-      .write.parquet(stage)
-    Files.move(Paths.get(stage), Paths.get(s"$store/delta_v=$v"),
-      StandardCopyOption.ATOMIC_MOVE)
-    v
-  }
+                    key: String): Long =
+    commitDelta(store, keys.select(col(key)).dropDuplicates(key), tombstone = true)
 
   /** The table as of version `v`: union the base snapshot at or below `v`
     * (if compaction produced one) with every delta in scope, then resolve
@@ -762,46 +590,20 @@ object Sinks {
     * snapshot `base_v=upTo`, then drop the folded deltas and any older
     * base. Reads at versions > `upTo` are unaffected (they resolve
     * base + remaining deltas); versions < `upTo` become unreadable —
-    * compaction IS the retention policy. Crash-safe: the base rename
-    * lands before any delta is deleted, and until the deletes finish a
-    * lingering delta is harmless to [[snapshotAt]] (see its scaladoc),
-    * so the next compaction simply finishes the cleanup. */
+    * compaction IS the retention policy. A replay swaps the base in
+    * whole, and until the deletes finish a lingering delta is harmless
+    * to [[snapshotAt]] (see its scaladoc), so a re-run simply finishes
+    * the cleanup. */
   def compactVersions(s: SparkSession, store: String, upTo: Long,
                       key: String): Unit = {
+    Fs.heal(store)
     // raw winners: tombstone markers MUST survive into the base (see
     // snapshotRawAt's scaladoc for the crash-window resurrection argument)
-    val snap = snapshotRawAt(s, store, upTo, key)
-    val stage = s"$store/.staging_base_$upTo"
-    deleteRec(stage)
-    snap.write.parquet(stage)
-    val dest = Paths.get(s"$store/base_v=$upTo")
-    deleteRec(dest.toString)
-    Files.move(Paths.get(stage), dest, StandardCopyOption.ATOMIC_MOVE)
+    publish(s"$store/base_v=$upTo")(snapshotRawAt(s, store, upTo, key).write.parquet)
     versionsOf(store, "delta_v").filter(_ <= upTo)
-      .foreach(d => deleteRec(s"$store/delta_v=$d"))
+      .foreach(d => Fs.delete(s"$store/delta_v=$d"))
     versionsOf(store, "base_v").filter(_ < upTo)
-      .foreach(b => deleteRec(s"$store/base_v=$b"))
-  }
-
-  /** Restore any bucket whose live dir vanished between mergeByKeyBucket's
-    * two renames (crash window); discard `.old_bucket_*` leftovers whose
-    * swap completed. Safe to call any time; a no-op on a healthy store. */
-  def healBuckets(dest: String): Unit = {
-    val d = Paths.get(dest)
-    if (Files.exists(d)) {
-      val listing = Files.list(d)
-      try {
-        listing.iterator().asScala.toList
-          .filter(_.getFileName.toString.startsWith(".old_bucket_"))
-          .foreach { old =>
-            val b = old.getFileName.toString.stripPrefix(".old_bucket_")
-            val live = d.resolve(s"_bucket=$b")
-            if (!Files.exists(live))
-              Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
-            else deleteRec(old.toString)
-          }
-      } finally listing.close()
-    }
+      .foreach(b => Fs.delete(s"$store/base_v=$b"))
   }
 
   /** SCD2 transition over the customer dimension (see q_sink_scd2):
@@ -1044,7 +846,7 @@ object Sinks {
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val existing =
-            if (Files.exists(Paths.get(dest))) s.read.parquet(dest)
+            if (Fs.exists(dest)) s.read.parquet(dest)
             else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
           writeAtomic(CommitEtl.upsert(existing, batch, "event_id", Seq("ts", "value")), dest)
         }
@@ -1392,7 +1194,7 @@ object Sinks {
       // at first batch, AQE-exempt, fixed per-partition per-tick cost —
       // this entry was the r15 bench's worst anti-scaler at 0.37)
       graft.util.Streams.withShufflePartitions(s,
-          graft.util.Streams.statePartitionsFor(graft.util.Fs.sizeBytes(s, src))) {
+          graft.util.Streams.statePartitionsFor(Fs.sizeBytes(src))) {
         val q = agg.writeStream.outputMode("update")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (b: DataFrame, _: Long) =>

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -11,6 +11,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.util.Fs
 
 /** DataSource V2 WRITE path — the sink half of the reference's ETL
   * (persist the pulled batch to the store, `git_etl.ts:127-132`),
@@ -25,7 +27,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    deletes its own file;
   *  - the DRIVER publishes in [[KvBatchWrite.commit]]: exactly the files
   *    named by the arriving messages move into the live dir, then a
-  *    MANIFEST listing them swaps in via temp-write + atomic rename.
+  *    MANIFEST listing them is replaced through the staged-publish
+  *    protocol of [[graft.util.Fs]].
   *    Readers resolve the store THROUGH the manifest
   *    ([[KvStoreSink.committedFiles]]), so a crashed job (no swap) or a
   *    losing speculative attempt (file never published) is invisible —
@@ -55,9 +58,9 @@ object KvStoreSink {
     * manifest, never by listing the directory (staged or orphaned files
     * are invisible by construction). */
   def committedFiles(path: String): Seq[String] = {
-    val m = Paths.get(path, "MANIFEST")
-    if (!Files.exists(m)) Nil
-    else Files.readString(m).split("\n").filter(_.nonEmpty).toIndexedSeq
+    val m = s"$path/MANIFEST"
+    if (!Fs.exists(m)) Nil
+    else Fs.read(m).split("\n").filter(_.nonEmpty).toIndexedSeq
       .map(f => s"$path/$f")
   }
 }
@@ -91,7 +94,7 @@ class KvBatchWrite(path: String, schema: StructType, queryId: String,
     s"kvstore expects (k BIGINT, v STRING, cents BIGINT), got $schema")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(Paths.get(path, ".staging"))
+    Fs.mkdirs(s"$path/.staging")
     new KvWriterFactory(path, queryId)
   }
 
@@ -101,31 +104,20 @@ class KvBatchWrite(path: String, schema: StructType, queryId: String,
     * staged/live-but-unlisted files. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val names = messages.collect { case m: KvCommitMessage => m.fileName }
-    names.foreach { f =>
-      Files.move(Paths.get(path, ".staging", f), Paths.get(path, f),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    names.foreach(f => Fs.replaceFile(s"$path/.staging/$f", s"$path/$f"))
     val prior =
       if (truncate) Nil
-      else KvStoreSink.committedFiles(path).map(p => Paths.get(p).getFileName.toString)
-    val tmp = Paths.get(path, "MANIFEST.tmp")
-    Files.writeString(tmp, (prior ++ names).mkString("\n"))
-    Files.move(tmp, Paths.get(path, "MANIFEST"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    deleteStaging()
+      else KvStoreSink.committedFiles(path).map(_.stripPrefix(s"$path/"))
+    val manifest = s"$path/MANIFEST"
+    Fs.write(Fs.stagingOf(manifest), (prior ++ names).mkString("\n"))
+    Fs.replaceFile(Fs.stagingOf(manifest), manifest)
+    Fs.delete(s"$path/.staging")
   }
 
   /** Job-level abort: every staged attempt file dies; the manifest (and
     * therefore the readable store) is untouched. */
-  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteStaging()
-
-  private def deleteStaging(): Unit = {
-    val st = Paths.get(path, ".staging")
-    if (Files.exists(st)) {
-      Files.walk(st).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    Fs.delete(s"$path/.staging")
 }
 
 class KvWriterFactory(path: String, queryId: String) extends DataWriterFactory {

@@ -32,9 +32,9 @@ object StreamOps {
     * (watch it directly — the glob would match nothing inside). */
   private def streamReader(s: SparkSession, dir: String, name: String,
                            schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = java.nio.file.Paths.get(dir, s"$name.parquet")
-    if (java.nio.file.Files.isDirectory(p))
-      s.readStream.schema(schema).parquet(p.toString)
+    val p = s"$dir/$name.parquet"
+    if (graft.util.Fs.isDirectory(p))
+      s.readStream.schema(schema).parquet(p)
     else
       s.readStream.schema(schema)
         .option("pathGlobFilter", s"$name.parquet").parquet(dir)
@@ -88,8 +88,7 @@ object StreamOps {
   /** Input volume of the streamed events table (file or part-file dir —
     * the two layouts [[streamReader]] handles), for state sizing. */
   private def eventsBytes(s: SparkSession, dir: String): Long =
-    graft.util.Fs.sizeBytes(s,
-      java.nio.file.Paths.get(dir, "events.parquet").toString)
+    graft.util.Fs.sizeBytes(s"$dir/events.parquet")
 
   /** Streaming read of the documents table (schema is static). */
   private def documentsStream(s: SparkSession, dir: String): DataFrame =
@@ -173,7 +172,7 @@ object StreamOps {
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("event_type"), col("value"))
       runToParquet(s, "dedup_bounded", dd, complete = false,
-          stateBytes = graft.util.Fs.sizeBytes(s, src))
+          stateBytes = graft.util.Fs.sizeBytes(src))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumFix(col("value"), 2).as("sum_value"))
         .orderBy(col("event_type"))
@@ -268,7 +267,7 @@ object StreamOps {
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val existing =
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(store)))
+            if (graft.util.Fs.exists(store))
               s.read.parquet(store)
             else s.createDataFrame(
               s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
@@ -309,7 +308,7 @@ object StreamOps {
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val existing =
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(dest)))
+            if (graft.util.Fs.exists(dest))
               s.read.parquet(dest)
             else s.createDataFrame(
               s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
@@ -479,15 +478,13 @@ object StreamOps {
       (0 to 2).foreach { t =>
         val tmp = s"$base/src_stage_$t"
         ev.where(col("tick") === t).coalesce(1).write.parquet(tmp)
-        val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-          .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
-        val dest = java.nio.file.Paths.get(s"$base/src/t$t.parquet")
-        java.nio.file.Files.move(part, dest)
+        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
+        graft.util.Fs.mkdirs(s"$base/src")
+        val dest = s"$base/src/t$t.parquet"
+        graft.util.Fs.move(part, dest)
         graft.sinks.Sinks.deleteRec(tmp)
         // pin arrival order: the file source sorts by modification time
-        dest.toFile.setLastModified(1700000000000L + t * 60000L)
+        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
       }
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
@@ -500,7 +497,7 @@ object StreamOps {
           // the 1h subtraction happens IN the plan (timestamp − interval):
           // a driver-side getTime() round-trip would truncate micros
           val prior =
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(wmDir)))
+            if (graft.util.Fs.exists(wmDir))
               s.read.option("recursiveFileLookup", "true").parquet(wmDir)
                 .where(col("tick") < t)
                 .select((max(col("tickmax")) - expr("INTERVAL 1 HOUR")).as("wm"))

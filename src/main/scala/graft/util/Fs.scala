@@ -1,39 +1,83 @@
 package graft.util
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Hadoop-FileSystem helpers for operator code that manages its own
-  * scratch/store directories (the sharded dedup's staging tree, bucketed
-  * merge outputs). `java.nio.file` only works when the path is a local
-  * disk on the DRIVER — on a real cluster these paths are HDFS/object
-  * store URIs, and existence/delete must go through the Hadoop FS client
-  * resolved from the session's `hadoopConfiguration` (VERDICT r13
-  * wrong-item 2: the sharded dedup path was the one place the 100 TB
-  * story leaned on localhost `Files.exists`).
-  */
+/** Hadoop-FileSystem access for every store, staging and scratch path the
+  * engine manages itself. `java.nio.file` only reaches a disk local to the
+  * DRIVER; on a cluster these paths are HDFS/object-store URIs, so every
+  * existence check, listing, delete and rename resolves through the
+  * Hadoop client of the path's scheme, configured from the active (else
+  * default) session's `hadoopConfiguration` — a plain `Configuration`
+  * when no session is running.
+  *
+  * STAGED PUBLISH — a new sink publishes only through it. A sink writes
+  * its output to an invisible staging path (normally [[stagingOf]] the
+  * target: a dot-prefixed sibling every Spark and DuckDB reader skips)
+  * and makes it visible with one of three operations:
+  *
+  *  - [[swap]]`(staged, live)`: move `live` to its hidden `.old` sibling,
+  *    move `staged` to `live`, drop the old copy. Readers see the old
+  *    content or the new, never a partial file set; a reader racing the
+  *    swap can find `live` briefly absent. Each rename demands an absent
+  *    target, because Hadoop's `rename` onto an existing directory nests
+  *    the source inside it instead of failing.
+  *  - [[heal]]`(p)`: a crash between swap's renames strands `.old` copies;
+  *    heal moves a stranded copy back when its live path is missing and
+  *    drops it when the swap had finished — for `p` itself and for every
+  *    entry directly inside `p` (a bucket store's per-bucket swaps). Every
+  *    swap heals its own target first; a read-modify-write of a store
+  *    heals the store before it reads.
+  *  - [[replaceFile]]`(staged, live)`: replace one small file (a MANIFEST
+  *    pointer, a per-tag part file) — one rename where the filesystem
+  *    replaces files atomically (POSIX local disk), a swap where it
+  *    refuses an existing target (HDFS, object stores).
+  *
+  * A crash at any step, followed by a re-run of the same operation, ends
+  * in the state of a run with no crash and leaves no staging or `.old`
+  * entries behind (SinksCrashSpec enumerates every step). Spark's own
+  * writes commit with FileOutputCommitter v2 session-wide
+  * ([[graft.sources.Tables.sessionConfs]]), which is not atomic mid-job:
+  * never point readers at a directory a Spark job is writing into. */
 object Fs {
 
-  private def fsFor(s: SparkSession, p: String): (FileSystem, Path) = {
+  private def conf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new Configuration())
+
+  private def fsFor(p: String): (FileSystem, Path) = {
     val path = new Path(p)
-    (path.getFileSystem(s.sparkContext.hadoopConfiguration), path)
+    (path.getFileSystem(conf), path)
+  }
+
+  /** Direct children of `dir`; empty when `dir` is absent. */
+  private def children(dir: String): Seq[FileStatus] = {
+    val (fs, path) = fsFor(dir)
+    try fs.listStatus(path).toSeq
+    catch { case _: FileNotFoundException => Seq.empty }
   }
 
   /** True iff `p` exists on whatever filesystem its scheme resolves to. */
-  def exists(s: SparkSession, p: String): Boolean = {
-    val (fs, path) = fsFor(s, p)
+  def exists(p: String): Boolean = {
+    val (fs, path) = fsFor(p)
     fs.exists(path)
   }
 
-  /** Keep only the paths that exist — the per-shard/per-bucket store
-    * reads, where an empty shard legitimately wrote nothing. */
-  def existing(s: SparkSession, paths: Seq[String]): Seq[String] =
-    paths.filter(exists(s, _))
+  def isDirectory(p: String): Boolean = {
+    val (fs, path) = fsFor(p)
+    fs.isDirectory(path)
+  }
 
   /** Recursive delete; no-op when absent. */
-  def delete(s: SparkSession, p: String): Unit = {
-    val (fs, path) = fsFor(s, p)
-    if (fs.exists(path)) { fs.delete(path, true); () }
+  def delete(p: String): Unit = {
+    val (fs, path) = fsFor(p)
+    fs.delete(path, true); ()
   }
 
   /** Names of the direct child DIRECTORIES of `dir` (empty when `dir`
@@ -41,52 +85,55 @@ object Fs {
     * probing each candidate child with `exists` costs one RPC per
     * candidate (buckets² at the 65536-bucket cap), listing costs one
     * per parent. */
-  def listDirs(s: SparkSession, dir: String): Seq[String] = {
-    val (fs, path) = fsFor(s, dir)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-  }
+  def listDirs(dir: String): Seq[String] =
+    children(dir).filter(_.isDirectory).map(_.getPath.getName)
 
-  /** Direct children of `dir` whose name ends with `suffix`. */
-  def listFiles(s: SparkSession, dir: String, suffix: String): Seq[String] = {
-    val (fs, path) = fsFor(s, dir)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq.map(_.getPath.toString)
+  /** Direct child files of `dir` whose name ends with `suffix`, as full
+    * paths, sorted. */
+  def listFiles(dir: String, suffix: String): Seq[String] =
+    children(dir).filter(_.isFile).map(_.getPath.toString)
       .filter(_.endsWith(suffix)).sorted
+
+  def mkdirs(p: String): Unit = {
+    val (fs, path) = fsFor(p)
+    fs.mkdirs(path); ()
   }
 
-  def mkdirs(s: SparkSession, p: String): Unit = {
-    val (fs, path) = fsFor(s, p)
-    fs.mkdirs(path); ()
+  /** A small UTF-8 file: store metadata, MANIFEST pointers. */
+  def read(p: String): String = {
+    val (fs, path) = fsFor(p)
+    val in = fs.open(path)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  def write(p: String, text: String): Unit = {
+    val (fs, path) = fsFor(p)
+    val out = fs.create(path, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
   }
 
   /** Total bytes under `p` (file or directory tree); 0 when absent.
     * One metadata call (`getContentSummary` — recursive on the server
     * side for HDFS, a listing walk elsewhere), never a data read: the
     * cheap input-volume signal stream sizing decisions are made from. */
-  def sizeBytes(s: SparkSession, p: String): Long = {
-    val (fs, path) = fsFor(s, p)
+  def sizeBytes(p: String): Long = {
+    val (fs, path) = fsFor(p)
     if (!fs.exists(path)) 0L else fs.getContentSummary(path).getLength
   }
 
-  /** Rename within one filesystem (the staging→store move of a
-    * just-written part file). Hadoop `rename` reports failure by
-    * returning false (dest exists, source missing) rather than
-    * throwing — unchecked, a failed fixture move silently drops a file
-    * and the downstream stream produces wrong rows instead of an
-    * error, so the false is promoted to an exception here. */
-  def move(s: SparkSession, from: String, to: String): Unit = {
-    val (fs, _) = fsFor(s, from)
-    if (!fs.rename(new Path(from), new Path(to)))
-      throw new java.io.IOException(s"rename failed: $from -> $to")
+  /** Rename within one filesystem onto an absent target (the
+    * staging→source move of a just-written fixture file). */
+  def move(from: String, to: String): Unit = {
+    val (fs, path) = fsFor(to)
+    rename(fs, new Path(from), path)
   }
 
   /** Set the modification time (ms) — file-stream sources order their
     * backlog by mtime, so fixture-staged sources pin it explicitly.
     * HDFS/local honor it; object stores may no-op (acceptable: ordering
     * there comes from ingest time anyway). */
-  def setMtime(s: SparkSession, p: String, mtimeMs: Long): Unit = {
-    val (fs, path) = fsFor(s, p)
+  def setMtime(p: String, mtimeMs: Long): Unit = {
+    val (fs, path) = fsFor(p)
     fs.setTimes(path, mtimeMs, -1)
   }
 
@@ -94,14 +141,71 @@ object Fs {
     * depth — "store has committed data", degrading an empty-but-created
     * store directory to the caller's empty frame instead of failing
     * parquet schema inference. */
-  def hasDataFiles(s: SparkSession, p: String,
-                   suffix: String = ".parquet"): Boolean = {
-    val (fs, path) = fsFor(s, p)
+  def hasDataFiles(p: String, suffix: String = ".parquet"): Boolean = {
+    val (fs, path) = fsFor(p)
     if (!fs.exists(path)) return false
     val it = fs.listFiles(path, true)
     while (it.hasNext) {
       if (it.next().getPath.getName.endsWith(suffix)) return true
     }
     false
+  }
+
+  // --- staged publish -----------------------------------------------------
+
+  private def sibling(live: String, kind: String): String = {
+    val p = new Path(live)
+    new Path(p.getParent, s".${p.getName}.$kind").toString
+  }
+
+  /** Where a staged write of `live` goes: its hidden `.staging` sibling. */
+  def stagingOf(live: String): String = sibling(live, "staging")
+
+  /** Where [[swap]] parks the previous content of `live`. */
+  def oldOf(live: String): String = sibling(live, "old")
+
+  private val OldName = """\.(.+)\.old""".r
+
+  /** Rename onto an absent target, failing loudly: Hadoop reports a
+    * refused rename by returning false, not by throwing. */
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit = {
+    if (fs.exists(to)) throw new IOException(s"publish target exists: $to")
+    if (!fs.rename(from, to)) throw new IOException(s"rename failed: $from -> $to")
+  }
+
+  /** Heal the swap of `live` alone (see the protocol above). */
+  private def restore(fs: FileSystem, live: Path, old: Path): Unit =
+    if (fs.exists(old)) {
+      if (fs.exists(live)) fs.delete(old, true) else rename(fs, old, live)
+    }
+
+  /** Heal `p` and every entry directly inside it. */
+  def heal(p: String): Unit = {
+    val (fs, path) = fsFor(p)
+    restore(fs, path, new Path(oldOf(p)))
+    children(p).map(_.getPath.getName).foreach {
+      case OldName(name) =>
+        val live = new Path(path, name)
+        restore(fs, live, new Path(oldOf(live.toString)))
+      case _ => ()
+    }
+  }
+
+  /** Publish `staged` as `live`, replacing whatever `live` held. */
+  def swap(staged: String, live: String): Unit = {
+    val (fs, l) = fsFor(live)
+    val (s, o) = (new Path(staged), new Path(oldOf(live)))
+    restore(fs, l, o)
+    if (!fs.exists(s)) throw new IOException(s"nothing staged at $s")
+    val replacing = fs.exists(l)
+    if (replacing) rename(fs, l, o)
+    rename(fs, s, l)
+    if (replacing) fs.delete(o, true)
+  }
+
+  /** Publish the staged FILE `staged` as the file `live`. */
+  def replaceFile(staged: String, live: String): Unit = {
+    val (fs, l) = fsFor(live)
+    if (!fs.rename(new Path(staged), l)) swap(staged, live)
   }
 }

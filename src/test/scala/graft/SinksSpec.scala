@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sinks.Sinks
+import graft.util.Fs
 
 /** Durable sink semantics: atomic overwrite visibility, truncate, and
   * partition-pruned reads of a partitionBy layout (O7/O11, SURVEY §7.4). */
@@ -18,8 +19,8 @@ class SinksSpec extends SparkSpec {
     Sinks.writeAtomic(Seq((3, "v2")).toDF("k", "v"), dest)
     val got = spark.read.parquet(dest).as[(Int, String)].collect()
     assert(got === Array((3, "v2")))
-    assert(!Files.exists(Paths.get(dest + ".inprogress")))
-    assert(!Files.exists(Paths.get(dest + ".old")))
+    assert(!Files.exists(Paths.get(Fs.stagingOf(dest))))
+    assert(!Files.exists(Paths.get(Fs.oldOf(dest))))
   }
 
   test("writeAtomic heals a crash window between renames (.old present, dest gone)") {
@@ -27,18 +28,18 @@ class SinksSpec extends SparkSpec {
     val dest = s"$base/recover"
     Sinks.truncate(dest)
     Sinks.writeAtomic(Seq((1, "v1")).toDF("k", "v"), dest)
-    // simulate a crash AFTER dest->dest.old but BEFORE tmp->dest: the
+    // simulate a crash AFTER dest->.old but BEFORE staged->dest: the
     // table vanishes and only the .old copy remains
-    Files.move(Paths.get(dest), Paths.get(dest + ".old"))
+    Files.move(Paths.get(dest), Paths.get(Fs.oldOf(dest)))
     assert(!Files.exists(Paths.get(dest)))
-    Sinks.recover(dest)
+    Fs.heal(dest)
     val healed = spark.read.parquet(dest).as[(Int, String)].collect()
-    assert(healed === Array((1, "v1")), "recover must restore the previous snapshot")
-    // and writeAtomic itself heals-then-overwrites if recover wasn't called
-    Files.move(Paths.get(dest), Paths.get(dest + ".old"))
+    assert(healed === Array((1, "v1")), "heal must restore the previous snapshot")
+    // and writeAtomic itself heals-then-overwrites if heal wasn't called
+    Files.move(Paths.get(dest), Paths.get(Fs.oldOf(dest)))
     Sinks.writeAtomic(Seq((2, "v2")).toDF("k", "v"), dest)
     assert(spark.read.parquet(dest).as[(Int, String)].collect() === Array((2, "v2")))
-    assert(!Files.exists(Paths.get(dest + ".old")))
+    assert(!Files.exists(Paths.get(Fs.oldOf(dest))))
   }
 
   test("truncate removes the table (O11)") {
@@ -59,7 +60,7 @@ class SinksSpec extends SparkSpec {
     // simulate a crash BETWEEN the two renames of bucket 2's swap: the
     // live dir is gone, only the .old copy remains (dot prefix keeps it
     // invisible to readers)
-    Files.move(Paths.get(s"$dest/_bucket=2"), Paths.get(s"$dest/.old_bucket_2"))
+    Files.move(Paths.get(s"$dest/_bucket=2"), Paths.get(Fs.oldOf(s"$dest/_bucket=2")))
     // a plain reader sees the healthy buckets only — never a torn dir
     assert(spark.read.parquet(dest).count() === 12)
     // the next merge heals first, then applies its batch
@@ -69,8 +70,25 @@ class SinksSpec extends SparkSpec {
       .map(r => r._1 -> r._3).toMap
     assert(got.size === 16, "healed store must have all 16 keys back")
     assert(got(1L) === "v2" && got(2L) === "v1" && got(6L) === "v1")
-    assert(!Files.exists(Paths.get(s"$dest/.old_bucket_2")))
+    assert(!Files.exists(Paths.get(Fs.oldOf(s"$dest/_bucket=2"))))
     assert(!Files.exists(Paths.get(s"$dest/_merge_staging")))
+  }
+
+  test("compactDeletes heals a stranded bucket before folding its deletes") {
+    import spark.implicits._
+    val dest = s"$base/mor_stranded"
+    Sinks.truncate(dest)
+    Sinks.mergeByKeyBucket(spark, dest, (0L to 15L).map(k => (k, s"v$k")).toDF("k", "v"),
+      "k", Seq("v"), nBuckets = 4)
+    // a crash between the two renames of bucket 2's swap strands it in its
+    // .old copy, hiding it from a listing of the live buckets
+    Files.move(Paths.get(s"$dest/_bucket=2"), Paths.get(Fs.oldOf(s"$dest/_bucket=2")))
+    Sinks.deleteByKeyMoR(spark, dest, Seq(6L).toDF("k"), "k", tag = "d1")
+    Sinks.compactDeletes(spark, dest, "k")
+    Fs.heal(dest)
+    val keys = spark.read.parquet(dest).select("k").as[Long].collect().sorted.toSeq
+    assert(keys === (0L to 15L).filterNot(_ == 6L),
+      "a compaction that reported key 6 deleted must not let a heal bring it back")
   }
 
   test("mergeByKeyBucket rewrites only touched buckets, preserves the rest") {

@@ -35,18 +35,19 @@ class SurveyIndexSpec extends AnyFunSuite {
   }
 
   test("llm/ operator code never touches java.nio.file (cluster portability)") {
-    // Operator store/scratch paths must go through the Hadoop FS client
-    // (util.Fs) so they work when the path is HDFS/object-store, not a
-    // driver-local disk (VERDICT r13 wrong-item 2). java.nio.ByteBuffer
-    // etc. remain fine — only the *.file package is the local-FS leak.
+    // Operator, sink and stream store/scratch paths must go through the
+    // Hadoop FS client (util.Fs) so they work when the path is
+    // HDFS/object-store, not a driver-local disk (VERDICT r13 wrong-item
+    // 2). java.nio.ByteBuffer etc. remain fine — only the *.file package
+    // is the local-FS leak.
     import scala.jdk.CollectionConverters._
-    val dir = Paths.get("src/main/scala/graft/llm")
-    val offenders = Files.walk(dir).iterator().asScala
+    val offenders = Seq("llm", "sinks", "streaming")
+      .flatMap(d => Files.walk(Paths.get(s"src/main/scala/graft/$d")).iterator().asScala)
       .filter(_.toString.endsWith(".scala"))
       .filter(f => new String(Files.readAllBytes(f), "UTF-8")
         .contains("java.nio.file"))
-      .map(_.toString).toSeq
+      .map(_.toString)
     assert(offenders.isEmpty,
-      s"java.nio.file in llm/ operator code: $offenders — use graft.util.Fs")
+      s"java.nio.file in llm/, sinks/ or streaming/ code: $offenders — use graft.util.Fs")
   }
 }
