@@ -62,28 +62,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // optional name filter for local perf iteration (driver runs all)
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val full = selected.size == SparkEntry.queries.size
     // local perf-experiment overrides ("k=v;k=v") — unset in driver runs,
     // so the measured regime is always sessionConfs; used to A/B a conf
     // before promoting it INTO sessionConfs with a scale justification
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").map(_.trim)
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").map(_.trim).filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+    val spark = Session.build(cpus, overrides)
     spark.sparkContext.setLogLevel("ERROR")
-    // perf forensics only (no methodology change): with SPARK_GRAFT_JOBLOG
-    // set, per-job "finished ... took N s" lines (with callsites) come back
-    // at INFO so a single entry's action mix can be profiled offline.
-    if (sys.env.contains("SPARK_GRAFT_JOBLOG"))
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.scheduler.DAGScheduler",
-        org.apache.logging.log4j.Level.INFO)
     // Warmup with a REAL table read + agg: JVM, codegen, AND the parquet
     // reader/filesystem paths are warm before the first measured query —
     // a range()-only warmup left 3-4 s of reader init charged to whatever
@@ -98,10 +88,6 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
-    // optional name filter for local perf iteration (driver runs all)
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty).getOrElse(Set.empty)
     // Variance floor: this machine is shared, and single-shot timings of
     // unchanged code have swung up to 10x round-over-round (r10: driver
     // 426.6 s vs builder 385.5 s, q_from_json 0.67 -> 6.58 s). So any
@@ -135,7 +121,7 @@ object Bench {
           else Bench.priorMismatch(
               Option(root.path("runner").asText(null)),
               if (root.hasNonNull("cpus")) Some(root.path("cpus").asInt()) else None,
-              runner, cpus.toInt) match {
+              runner, cpus) match {
             case Some(why) =>
               System.err.println(s"[bench] drift prior skipped: $why")
               (Map.empty[String, Double], None)
@@ -183,8 +169,7 @@ object Bench {
       graft.util.RunCache.sweep(spark)
       (t, ok)
     }
-    val results0 = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
+    val results0 = selected.toSeq.sortBy(_._1)
       .map { case (name, fn) =>
         val (t1, ok1) = runOnce(name, fn)
         val noisy = ok1 && retryBudget > 0 &&
@@ -203,7 +188,7 @@ object Bench {
     // agreeing slow samples per regressor (both recorded in `remeasured`).
     val driftTotal = results0.collect { case (_, v, true, _) => v }.sum
     val results = priorTotal match {
-      case Some(pt) if only.isEmpty && driftTotal > 1.15 * pt =>
+      case Some(pt) if full && driftTotal > 1.15 * pt =>
         val regressors = Bench.driftRegressors(prior, pt, driftTotal,
           results0.collect { case (k, v, true, _) => (k, v) })
         System.err.println(s"[bench] drift: total $driftTotal > 1.15x prior $pt; " +
@@ -244,7 +229,7 @@ object Bench {
       .mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""warmup_sec":$warmupSec,"failed":$failedArr,"suites":$suites,""" +
-      s""""runner":"$runner","cpus":${cpus.toInt},""" +
+      s""""runner":"$runner","cpus":$cpus,""" +
       f""""heap_gb":$heapGb%.1f,""" +
       s""""remeasured":$remeasuredJson,"queries":$qs,"sf":"$sfDir"}"""
     // The driver tail-grabs the last ~2000 chars of stdout and parses the
@@ -270,7 +255,7 @@ object Bench {
     val compact = fixed + entries.mkString("{", ",", "}") + "}"
     println(compact)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isEmpty) "BENCH_LOCAL.json" else "")
+      if (full) "BENCH_LOCAL.json" else "")
     if (outPath.nonEmpty) Files.writeString(Paths.get(outPath), json + "\n")
     spark.stop()
   }

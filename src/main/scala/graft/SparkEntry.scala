@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
+import graft.functions.GraftFunctions
 import graft.ingest.CommitEtl
 import graft.ops.{Aggregates, Analytics, AsOf, Cbo, Extras, Quality, Relational, Scalars, TimeWindows, Typed, Windows}
 import graft.sources.Tables
@@ -31,8 +32,29 @@ object SparkEntry {
       .orderBy(col("event_type"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One entry per implemented operator from SURVEY.md §2. Every entry
+    * registers the graft functions on the session it is handed, so an
+    * entry runs on any session, including one the driver built itself. */
+  def queries: Map[String, Query] = operators.map { case (name, fn) =>
+    name -> { (s: SparkSession, dir: String) => GraftFunctions.register(s); fn(s, dir) }
+  }
+
+  /** The entries named in a comma-separated `filter`; all of them when
+    * there is no filter or it names nothing. A name that is not an entry
+    * fails the selection, listing every such name. */
+  def select(filter: Option[String]): Map[String, Query] = {
+    val names = filter.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    if (filter.isDefined && names.isEmpty)
+      System.err.println("[entry] blank query filter — running ALL queries")
+    val all = queries
+    val unknown = names -- all.keySet
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) all else all.filter { case (name, _) => names.contains(name) }
+  }
+
+  private def operators: Map[String, Query] =
     CommitEtl.queries ++ Relational.queries ++ Aggregates.queries ++
       Windows.queries ++ Scalars.queries ++ Extras.queries ++ Typed.queries ++
       AsOf.queries ++ TimeWindows.queries ++ Analytics.queries ++

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,41 +6,28 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (local iteration only;
-    // the driver always runs the full set). Blank/whitespace entries are
-    // dropped, so an empty third arg means "run all" instead of silently
-    // matching nothing.
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet
-      else Set.empty
-    if (args.length > 2 && only.isEmpty)
-      System.err.println("[verify] blank query filter — running ALL queries")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    // the driver always runs the full set)
+    val selected = SparkEntry.select(args.lift(2))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.build(cpus, Map.empty)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          // Hard gate: a DecimalType output column can only hash-mismatch
-          // the DOUBLE-typed oracle (see util.SchemaGuard) — fail loudly
-          // here rather than let the round record a silent red row.
-          graft.util.SchemaGuard.assertNoDecimal(name, df.schema)
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // block-manager hygiene between queries (see RunCache scaladoc):
-        // keeps query N's runtime independent of how many ran before it
-        graft.util.RunCache.sweep(spark)
+    selected.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        // Hard gate: a DecimalType output column can only hash-mismatch
+        // the DOUBLE-typed oracle (see util.SchemaGuard) — fail loudly
+        // here rather than let the round record a silent red row.
+        graft.util.SchemaGuard.assertNoDecimal(name, df.schema)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      // block-manager hygiene between queries (see RunCache scaladoc):
+      // keeps query N's runtime independent of how many ran before it
+      graft.util.RunCache.sweep(spark)
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

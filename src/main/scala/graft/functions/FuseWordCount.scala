@@ -18,10 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * default -1 limit, non-legacy size-of-null (legacy mode returns -1 on
   * null where WordCount returns null — that variant is left alone).
   *
-  * Wired twice, like the function registry: injected at session build via
-  * [[GraftExtensions]] (`injectOptimizerRule`), and appended to a live
-  * session's `experimental.extraOptimizations` by
-  * [[GraftFunctions.register]] — so driver-handed sessions get it too.
+  * Appended to a session's `experimental.extraOptimizations` by
+  * [[GraftFunctions.register]], together with the graft functions.
   */
 object FuseWordCount extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

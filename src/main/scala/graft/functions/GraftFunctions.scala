@@ -1,28 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration for the graft native expressions.
+/** The graft native expressions and the one call that installs them, with
+  * the [[FuseWordCount]] optimizer rule, on a session.
   *
-  * Two paths to the same registry entries:
-  *  - `spark.sql.extensions=graft.functions.GraftExtensions` at session
-  *    build (the standard extension-point wiring);
-  *  - [[GraftFunctions.register]] on a live session (idempotent), used
-  *    defensively by the queries that need the functions so they work on
-  *    any session the driver hands us.
+  * [[register]] runs in two places only: once on every session
+  * `graft.Session.build` makes, and at the start of every
+  * `graft.SparkEntry.queries` entry, which covers a session the driver
+  * built itself. Operator code assumes its session is registered and
+  * never calls it. A streaming `foreachBatch` batch runs on a clone of
+  * the query's session, and a clone copies both the function registry
+  * and the extra optimizer rules.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptors.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-    ext.injectOptimizerRule(_ => FuseWordCount)
-  }
-}
-
 object GraftFunctions {
   type Builder = Seq[Expression] => Expression
 
@@ -44,7 +36,7 @@ object GraftFunctions {
       b(args)
     }
 
-  val descriptors: Seq[(String, ExpressionInfo, Builder)] = Seq(
+  private val descriptors: Seq[(String, ExpressionInfo, Builder)] = Seq(
     ("graft_charhash", 1,
       new ExpressionInfo(classOf[CharPolyHash].getName, "graft_charhash"),
       (args: Seq[Expression]) => CharPolyHash(args.head)),
@@ -88,10 +80,10 @@ object GraftFunctions {
       (name, info, checked(name, arity)(builder))
     }
 
-  /** Idempotent runtime registration on an existing session. Synchronized
-    * on the session: concurrent callers (operators that overlap store jobs
-    * via Jobs.inPool call register from pool threads) would otherwise race
-    * the extraOptimizations check-then-set and append FuseWordCount twice —
+  /** Idempotent registration on an existing session. Synchronized on the
+    * session: callers on different threads that share one session (a
+    * driver running entries concurrently) would otherwise race the
+    * extraOptimizations check-then-set and append FuseWordCount twice —
     * harmless only while the rule stays idempotent, so make the check
     * atomic instead of relying on that. */
   def register(spark: SparkSession): Unit = spark.synchronized {
@@ -99,8 +91,6 @@ object GraftFunctions {
       spark.sessionState.functionRegistry
         .registerFunction(FunctionIdentifier(name), info, builder)
     }
-    // live-session optimizer hook (idempotent): the FuseWordCount rewrite
-    // reaches sessions the driver built without spark.sql.extensions
     if (!spark.experimental.extraOptimizations.contains(FuseWordCount))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ FuseWordCount

@@ -139,7 +139,6 @@ object Curation {
 
   /** See the `q_llm_chunk_windows` entry comment. */
   private[graft] def chunkWindowsOf(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     val (w, st) = (ChunkW, ChunkS)
     d.selectExpr("doc_id", "split(text, ' ') AS t")
       .selectExpr("doc_id", "size(t) AS n_tok", "t")
@@ -213,7 +212,6 @@ object Curation {
     // over the per-source stream; every number is integer arithmetic, so
     // the card is bit-reproducible at any partition count.
     "q_llm_data_card" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val b = docs(s, dir).selectExpr("doc_id", "source", "lang", "n_chars",
         "CAST(size(split(text, ' ')) AS BIGINT) AS toks",
         "graft_charhash(lower(trim(text))) AS h")
@@ -303,7 +301,6 @@ object Curation {
     // these). 80/10/10 by hash mod 100. Output: per (source, split)
     // counts + exact token mass, the table a data-mixture audit reads.
     "q_llm_split_assign" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .selectExpr("source", "size(split(text, ' ')) AS n_tok",
           s"graft_charhash(concat('split-v1:', CAST(doc_id AS STRING))) % 100 AS bucket")
@@ -325,7 +322,6 @@ object Curation {
     // canonical that pinned it; cost = the dedup pipeline (already the
     // corpus's standing cost) + one hash projection.
     "q_llm_split_leakage_safe" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val d = docs(s, dir)
       val cc = graft.llm.Dedup.connectedComponents(
         graft.llm.Dedup.verifiedPairsCached(s, dir))
@@ -377,7 +373,6 @@ object Curation {
     // cumulative fill exceeds the budget are cut — so the selection is a
     // prefix of the hash order, not a size-biased sample.
     "q_llm_token_budget" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val w = Window.partitionBy(col("source"))
         .orderBy(col("pri"), col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -430,7 +425,6 @@ object Curation {
     // shape: two slim per-source aggs + a broadcast epochs join — one
     // corpus scan, nothing corpus-sized shuffles.
     "q_llm_mixture_temperature" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val per = docs(s, dir)
         .selectExpr("source", "doc_id", "size(split(text, ' ')) AS n_tok",
           s"${sparkWordHash("concat('temp-v1:', CAST(doc_id AS STRING))")} % 1000000 AS h")
@@ -505,7 +499,6 @@ object Curation {
     // and token counts plus the shard's token share of its epoch. One
     // scan; the per-epoch explode is a constant 3x fan-out of slim longs.
     "q_llm_epoch_shards" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val d = docs(s, dir)
         .selectExpr("doc_id", "size(split(text, ' ')) AS n_tok")
         .selectExpr("doc_id", "n_tok", "explode(sequence(0, 2)) AS epoch")
@@ -554,7 +547,6 @@ object Curation {
     // thresholds). Pure per-row array built-ins — one scan, no joins, no
     // explode; the cheapest possible shape at 100 TB.
     "q_llm_repetition" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .selectExpr("doc_id", "split(text, ' ') AS t",
           s"${sparkWordHashes("text")} AS wh")
@@ -592,7 +584,6 @@ object Curation {
     // immune: consecutive ids sweep all residues uniformly.)
     "q_llm_sample_stratified" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val thresholds = mixtureWeights
         .map { case (src, w) => (src, math.floor(w * 50000.0).toLong) }
         .toDF("source", "keep_below")
@@ -768,7 +759,6 @@ object Curation {
     // ranking and normalization are exact integer arithmetic.
     "q_llm_mixture_reweight" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val w6tab = mixtureWeights
         .map { case (src, w) => (src, math.floor(w * 1000000.0 + 0.5).toLong) }
         .toDF("source", "w6")
@@ -829,7 +819,6 @@ object Curation {
     // (the token_budget sharding pattern). Nothing corpus-sized crosses
     // a join; one corpus scan feeds everything via the checkpoint.
     "q_llm_dsir_select" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val nb = DsirBuckets
       // feature stream: hashed unigrams + bigrams folded into nb buckets
       val feats = docs(s, dir)

@@ -61,7 +61,6 @@ object Dedup {
     * InferFiltersFromGenerate inlining trap by construction (see its
     * scaladoc and the note on q_llm_dedup_ngram_jaccard). */
   private[graft] def shingleStreamOf(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     corpus
       .selectExpr("doc_id", s"${sparkWordHashes("text")} AS wh")
       .where(expr("size(wh) >= 3"))
@@ -113,7 +112,6 @@ object Dedup {
     * position; pos < 2^20 bounds docs at ~1M shingles, h·2^20 < 2^50
     * stays in BIGINT). Full windows only, distinct per doc. */
   private[graft] def winnowFingerprintsOf(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // One compiled pass per doc (the graft_winnowfps kernel, fed by the
     // graft_wordhashes kernel — shingles are built IN-kernel, see its
     // scaladoc for why the interpreted HOF shingle form must not sit
@@ -137,7 +135,6 @@ object Dedup {
     * independent model the parity spec checks [[winnowFingerprintsOf]]
     * against (same role as sparkWordHashesHof for the word-hash kernel). */
   private[graft] def winnowFingerprintsWindowed(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // materialize the shingle ARRAYS before the generator: posexplode
     // over the raw HOF projection would invite the
     // InferFiltersFromGenerate inlining trap (see q_llm_dedup_ngram_jaccard)
@@ -526,7 +523,6 @@ object Dedup {
     * this plan's cost; the DuckDB oracle keeps the relational unnest+sum
     * mirror, which computes the identical majority). */
   private def simhashOf(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     corpus.selectExpr("doc_id", s"graft_simhash(${sparkWordHashes("text")}) AS simhash")
   }
 
@@ -545,7 +541,6 @@ object Dedup {
     * over collected (index, segment) structs). Output carries rebuilt
     * fingerprints, not text. See the q_llm_dedup_passages entry note. */
   private[graft] def passagesOf(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     val segs = d.selectExpr("doc_id", "split(text, ' ') AS t")
       .selectExpr("doc_id",
         "explode(transform(sequence(0, (size(t) - 1) DIV 10), i -> " +
@@ -796,21 +791,10 @@ object Dedup {
   private[graft] def substringCoverageOf(d: DataFrame,
                                          shardChars: Long = SubShardChars)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     val s = d.sparkSession
-    // phase timing to stderr when SPARK_GRAFT_SUBPROF is set (perf
-    // forensics only; no plan impact)
-    val prof = sys.env.contains("SPARK_GRAFT_SUBPROF")
-    def ph[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (prof) System.err.println(
-        f"[subprof] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
-      r
-    }
     // bounded 1-row stats collect (the sanctioned metadata-collect
     // idiom): total chars picks the plan and sizes the bucket fan-out
-    val st = ph("stats")(d.agg(sum(length(col("text"))).as("tc")).collect()(0))
+    val st = d.agg(sum(length(col("text"))).as("tc")).collect()(0)
     val totalChars = if (st.isNullAt(0)) 0L else st.getLong(0)
     if (totalChars <= shardChars) {
       val wh = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
@@ -833,13 +817,11 @@ object Dedup {
     // past the cap Spark falls back to sorting the residual partitions,
     // which is the bounded-memory behaviour we want at that scale.
     // Session-conf note: this override is visible to concurrent queries
-    // on the same session until the finally restores it; the operator
-    // is single-flight per session by contract (bench/verify run
-    // queries sequentially), and the setting is harmless to reads.
-    val cw = "spark.sql.maxConcurrentOutputFileWriters"
-    val cwPrev = s.conf.getOption(cw)
-    s.conf.set(cw, math.min(512, math.max(128, buckets + 8)).toString)
-    try {
+    // on the same session until it is restored; the operator is
+    // single-flight per session by contract (bench/verify run queries
+    // sequentially), and the setting is harmless to reads.
+    try graft.Session.withConfs(s, Map("spark.sql.maxConcurrentOutputFileWriters" ->
+        math.min(512, math.max(128, buckets + 8)).toString)) {
       // 1. the occurrence store. repartition by doc_id so write
       //    parallelism tracks the cluster, not the input file count
       //    (generated corpora arrive as a handful of >=128 MB splits),
@@ -848,12 +830,12 @@ object Dedup {
       //    it FITS IN AN INT, and h is the incompressible column, so the
       //    cast nearly halves the store and the merge scans.
       val par = s.sparkContext.defaultParallelism * 2
-      ph("occ store")(gramOcc(d.repartition(par, col("doc_id")))
+      gramOcc(d.repartition(par, col("doc_id")))
         .select(col("doc_id"), col("p"), col("h").cast("int").as("h"),
           pmod(col("h"), lit(buckets)).cast("int").as("b"))
         .write.partitionBy("b")
         .option("parquet.block.size", (8L * 1024 * 1024).toString)
-        .parquet(s"$base/occ"))
+        .parquet(s"$base/occ")
       // 1c. EMISSION DECISION (r15; VERDICT r14 next-1): the complement
       //    emission below is optimal only when repeated positions
       //    dominate (the operator's target corpora — raw crawl shards;
@@ -869,7 +851,7 @@ object Dedup {
       //    row-identical verdicts, spec-pinned — so estimator error near
       //    50/50 is harmless). Probe cost: one extra ~1/B bucket read.
       //    Deterministic: the probed bucket is the lowest existing id.
-      val emitClean: Boolean = ph("emit probe") {
+      val emitClean: Boolean = {
         val probeBucket = (0 until buckets)
           .find(m => graft.util.Fs.exists(s"$base/occ/b=$m"))
         probeBucket.forall { m =>
@@ -880,9 +862,6 @@ object Dedup {
             .collect()(0)
           val (cl, rep) = (if (r.isNullAt(0)) 0L else r.getLong(0),
             if (r.isNullAt(1)) 0L else r.getLong(1))
-          if (prof) System.err.println(
-            s"[subprof] emit probe bucket=$m clean=$cl rep=$rep -> " +
-              (if (cl <= rep) "clean (complement)" else "repeated"))
           cl <= rep
         }
       }
@@ -894,11 +873,11 @@ object Dedup {
       //     repeated arm reconstructs islands from the repeated
       //     positions directly (islandsOf), where all-clean docs simply
       //     emit no rows and the verdict tail's left join zero-fills.
-      if (emitClean) ph("lens store")(d
+      if (emitClean) d
         .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
         .where(col("n_chars") >= SubK)
         .withColumn("db", pmod(col("doc_id"), lit(buckets)).cast("int"))
-        .write.partitionBy("db").parquet(s"$base/lens"))
+        .write.partitionBy("db").parquet(s"$base/lens")
       // 2. bounded per-bucket merges (disjoint outputs — two Spark jobs
       //    must never append into one tree: committer _temporary races).
       //
@@ -923,7 +902,7 @@ object Dedup {
       //    Either arm lands positions partitioned by DOC bucket so the
       //    islands stage runs bounded per-db jobs.
       val posDir = if (emitClean) "clean" else "rep"
-      ph("bucket merges")(graft.util.Jobs.inPool(SubPoolWidth)((0 until buckets).map(m => () => {
+      graft.util.Jobs.inPool(SubPoolWidth)((0 until buckets).map(m => () => {
         val bp = s"$base/occ/b=$m"
         if (graft.util.Fs.exists(bp)) {
           val rows = s.read.parquet(bp)
@@ -944,7 +923,7 @@ object Dedup {
             .option("parquet.block.size", (8L * 1024 * 1024).toString)
             .parquet(s"$base/$posDir/m$m")
         }
-      })))
+      }))
       // 3. islands per doc-bucket (each doc lives in exactly one db, so
       //    the union of per-db rows is identical to a monolithic pass),
       //    one bounded job per db, slim per-doc outputs. Clean arm:
@@ -969,7 +948,7 @@ object Dedup {
             .collect { case n if n.startsWith("db=") => n.stripPrefix("db=").toInt }
             .toSet
         else posByDb.keySet
-      ph("islands")(graft.util.Jobs.inPool(SubPoolWidth)((0 until buckets).map(k => () => {
+      graft.util.Jobs.inPool(SubPoolWidth)((0 until buckets).map(k => () => {
         if (islandDbs.contains(k)) {
           val ins = posByDb.getOrElse(k, Seq.empty)
           val posK =
@@ -980,21 +959,15 @@ object Dedup {
             else islandsOf(posK)
           isl.write.parquet(s"$base/cov/db$k")
         }
-      })))
+      }))
       // 4. verdict assembly on O(docs) slim rows; EAGER
       val covPaths = graft.util.Fs.listDirs(s"$base/cov")
         .collect { case n if n.startsWith("db") => s"$base/cov/$n" }
       val spans =
         if (covPaths.nonEmpty) s.read.parquet(covPaths: _*)
         else s.range(0).selectExpr("id AS doc_id", "id AS dup_chars", "id AS n_spans")
-      ph("coverage tail")(coverageOf(d, spans).localCheckpoint())
-    } finally {
-      cwPrev match {
-        case Some(v) => s.conf.set(cw, v)
-        case None => s.conf.unset(cw)
-      }
-      graft.util.Fs.delete(base)
-    }
+      coverageOf(d, spans).localCheckpoint()
+    } finally graft.util.Fs.delete(base)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1126,7 +1099,6 @@ object Dedup {
     // shuffle-only shape that holds at corpus scale, and every agg is a
     // pushdown barrier (see the ngram query's inlining note).
     "q_llm_dedup_chunks" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val ch = docs(s, dir)
         .selectExpr("doc_id", s"${sparkWordHashes("text")} AS wh")
         .where(expr("size(wh) >= 1"))
@@ -1399,7 +1371,6 @@ object Dedup {
     // keeping (dedup at the pair level, not the doc level). One scan +
     // one hash agg — the exact-dedup cost class.
     "q_llm_dedup_prefix" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .selectExpr("doc_id",
           "concat('p', doc_id % 40, ' u', doc_id % 8, ' v', doc_id % 5, ' ', text) AS pt")
@@ -1480,7 +1451,6 @@ object Dedup {
       // word-hash array per element — measured 10x the entire query's
       // cost. InferFiltersFromGenerate skips custom generators, so the
       // trap cannot re-arm.
-      graft.functions.GraftFunctions.register(s)
       val ex0 = docs(s, dir)
         .selectExpr("doc_id", "lang", "source", s"${sparkWordHashes("text")} AS wh")
         .where(expr("size(wh) >= 3"))
@@ -1544,7 +1514,6 @@ object Dedup {
       // norms precomputed per vector (pre-join): keeps the pair stage to a
       // single unrolled dot (under the 64 KB codegen method limit) and does
       // O(N) norm work instead of O(candidates)
-      graft.functions.GraftFunctions.register(s)
       val se = Tables.load(s, dir, "embeddings")
         .selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
         .selectExpr("vec_id", "se",
@@ -1704,7 +1673,7 @@ object Dedup {
       // generated sf1 (500 k docs) that meant 39 M simhash band pairs
       // (79 s), a winnow pair join measured at 198.6 s, and a 41 M-row
       // union distinct (21 s), of which verification then killed 99.9%
-      // (truth = 50 k rows; tools/Prof `famrecall`, PERF.md r12).
+      // (truth = 50 k rows; PERF.md r12).
       // Verification is a pure per-pair predicate over the capped
       // shingle universe, so for ANY candidate set C:
       //   verify(C) = C ∩ P,  P = all pairs sharing ≥1 capped shingle
@@ -2695,88 +2664,5 @@ object Dedup {
       SELECT vec_a, vec_b, ${graft.util.Exact.sqlFix("cos_raw", 6)} AS cos
       FROM scored WHERE cos_raw >= 0.25
       ORDER BY vec_a, vec_b""")
-  }
-
-  /** Phase profile of q_llm_dedup_family_recall (tools/Prof `famrecall`):
-    * the same pipeline as the entry, with each Store-checkpoint forced
-    * and timed separately so perf work targets the measured phase, not
-    * the guessed one (bench-protocol rule). Measurement-only — not part
-    * of the engine surface. */
-  private[graft] def profileFamilyRecall(s: SparkSession, dir: String): Unit = {
-    def time[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
-      r
-    }
-    val d = docs(s, dir)
-    val ckBase = s"${graft.sinks.Sinks.tmpBase}/family_recall_prof"
-    graft.sinks.Sinks.truncate(ckBase)
-    val ck = graft.util.Checkpointer.Store(ckBase)
-    val raw = time("raw shingles ck")(ck(shingleStreamOf(d)))
-    println(s"[prof]   raw rows = ${raw.count()}")
-    val dfreq = raw.groupBy(col("sg")).agg(count(lit(1)).as("f"))
-    val nC = corpusCountOf(d)
-    val ex = time("ex (cap join) ck")(ck(raw.join(cappedDfreq(dfreq, nC), "sg")
-      .select(col("doc_id"), col("sg"))))
-    println(s"[prof]   ex rows = ${ex.count()}")
-    val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val co = ex.alias("a").join(ex.alias("b"),
-        col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-    val p = time("P co+verify ck")(ck(co
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .where(expr("2 * i >= na + nb - i"))
-      .select(col("doc_a"), col("doc_b"))))
-    println(s"[prof]   P rows = ${p.count()}")
-    val bands = time("mh sig+bands ck")(ck(bandsFromSigs(sigsFromShingles(raw))))
-    val mhCand = time("mh candidates ck")(ck(candidatesFromBands(bands)))
-    println(s"[prof]   mhCand rows = ${mhCand.count()}")
-    val tMh = p.join(mhCand, Seq("doc_a", "doc_b"), "left_semi")
-    val fp = time("simhash fp ck")(ck(simhashOf(d)))
-    val bandStructs = (0 until 4).map(bd =>
-      s"named_struct('band_idx', $bd, 'band_key', shiftright(simhash, ${bd * graft.functions.GraftKernels.SimBandBits}) & ${graft.functions.GraftKernels.SimBandMask}L)")
-      .mkString(", ")
-    val shBands = fp.selectExpr("doc_id", s"explode(array($bandStructs)) AS band")
-      .selectExpr("doc_id", "band.band_idx AS band_idx", "band.band_key AS band_key")
-    val shKept = time("sh bands+cap ck")(ck(capSimBands(shBands, nC)))
-    val tSh = time("sh membership ck")(ck(p.alias("p")
-      .join(shKept.alias("x"), col("p.doc_a") === col("x.doc_id"))
-      .join(shKept.alias("y"), col("p.doc_b") === col("y.doc_id") &&
-        col("x.band_idx") === col("y.band_idx") &&
-        col("x.band_key") === col("y.band_key"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()))
-    println(s"[prof]   tSh rows = ${tSh.count()}")
-    val shFound = tSh
-      .join(fp.select(col("doc_id").as("doc_a"), col("simhash").as("fa")), "doc_a")
-      .join(fp.select(col("doc_id").as("doc_b"), col("simhash").as("fb")), "doc_b")
-      .where(expr("bit_count(fa ^ fb) <= 3"))
-      .select(col("doc_a"), col("doc_b"))
-    val fpc = time("winnow capped fps ck")(ck(winnowCappedFps(d)))
-    val tW = time("winnow membership ck")(ck(p.alias("p")
-      .join(fpc.alias("x"), col("p.doc_a") === col("x.doc_id"))
-      .join(fpc.alias("y"), col("p.doc_b") === col("y.doc_id") &&
-        col("x.fh") === col("y.fh"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()))
-    println(s"[prof]   tW rows = ${tW.count()}")
-    val truth = time("truth union ck")(ck(tMh.union(tSh).union(tW).distinct()))
-    println(s"[prof]   truth rows = ${truth.count()}")
-    def famEval(name: String, found: DataFrame): DataFrame =
-      truth.join(found.select(col("doc_a"), col("doc_b"))
-          .withColumn("_hit", lit(1)), Seq("doc_a", "doc_b"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("_hit"), lit(0))).as("n_found"))
-        .selectExpr(s"'$name' AS family", "n_true", "n_found",
-          "CASE WHEN n_true = 0 THEN CAST(0.0 AS DOUBLE) " +
-            "ELSE CAST(n_found AS DOUBLE) / n_true END AS recall")
-    time("famEval x3 + out")(
-      famEval("minhash", mhCand).unionByName(famEval("simhash", shFound))
-        .unionByName(famEval("winnow", tW))
-        .orderBy(col("family"))
-        .write.format("noop").mode("overwrite").save())
   }
 }

@@ -66,7 +66,6 @@ object IncrementalAnn {
   private[graft] def reset(base: String): Unit = Sinks.truncate(base)
 
   private def scaled(batch: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     batch.selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
   }
 
@@ -79,9 +78,6 @@ object IncrementalAnn {
     * train is an atomic overwrite. */
   private[graft] def tick(s: SparkSession, batch: DataFrame, batchId: Long,
                           base: String): Unit = {
-    // register on BOTH sessions: the micro-batch clone (scaled() does it)
-    // and the outer session whose reads feed assignCells/kmeansCentroids
-    graft.functions.GraftFunctions.register(s)
     val se = scaled(batch.select(col("vec_id"), col("embedding"))).localCheckpoint()
     val centsPath = s"$base/cents"
     // bootstrap: the first batch trains the initial quantizer on itself
@@ -112,7 +108,6 @@ object IncrementalAnn {
     * this tick the index is bit-identical to a from-scratch build on the
     * store's current contents. */
   private[graft] def retrain(s: SparkSession, base: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     graft.util.Fs.heal(s"$base/vecs")
     val all = s.read.parquet(s"$base/vecs")
       .select(col("vec_id"), col("se")).localCheckpoint()
@@ -135,7 +130,6 @@ object IncrementalAnn {
                            queryPred: String = "vec_id < 10",
                            nProbe: Int = 2, topK: Int = 3): DataFrame = {
     Seq("vecs", "assign").foreach(p => graft.util.Fs.heal(s"$base/$p"))
-    graft.functions.GraftFunctions.register(s)
     val vecs = withNrm(s.read.parquet(s"$base/vecs").select(col("vec_id"), col("se")))
       .localCheckpoint() // corpus side AND query side read it
     val cents = s.read.parquet(s"$base/cents")
@@ -192,7 +186,6 @@ object IncrementalAnn {
     * Idempotent per (batch, batchId). */
   private[graft] def tickLsh(s: SparkSession, batch: DataFrame, batchId: Long,
                              base: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val se = scaled(batch.select(col("vec_id"), col("embedding")))
     Sinks.mergeByKeyBucket(s, s"$base/vecs",
       withBucket(se).withColumn("_tick", lit(batchId)), "vec_id", Seq("_tick"))
@@ -205,7 +198,6 @@ object IncrementalAnn {
                               queryPred: String = "vec_id < 10",
                               topK: Int = 3): DataFrame = {
     graft.util.Fs.heal(s"$base/vecs")
-    graft.functions.GraftFunctions.register(s)
     val bucketed = s.read.parquet(s"$base/vecs")
       .selectExpr("vec_id", "se", "bucket",
         "sqrt(CAST(graft_dot(se, se) AS DOUBLE)) AS nrm")
@@ -246,7 +238,6 @@ object IncrementalAnn {
   /** Fold one arrival batch into the PQ stores. Idempotent per batch. */
   private[graft] def tickPq(s: SparkSession, batch: DataFrame, batchId: Long,
                             base: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val subs = subsOf(scaled(batch.select(col("vec_id"), col("embedding"))))
       .localCheckpoint()
     val cbPath = s"$base/cb"
@@ -267,7 +258,6 @@ object IncrementalAnn {
   /** Periodic re-train: codebooks over the FULL sub-vector store, full
     * re-encode, atomic swap of both derived stores. */
   private[graft] def retrainPq(s: SparkSession, base: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     graft.util.Fs.heal(s"$base/subs")
     val subs = s.read.parquet(s"$base/subs")
       .select(col("vec_id"), col("m"), col("sub")).localCheckpoint()
@@ -287,7 +277,6 @@ object IncrementalAnn {
                              queryPred: String = "vec_id < 10",
                              topK: Int = 3): DataFrame = {
     Seq("subs", "codes").foreach(p => graft.util.Fs.heal(s"$base/$p"))
-    graft.functions.GraftFunctions.register(s)
     val cb = s.read.parquet(s"$base/cb")
     val lut = s.read.parquet(s"$base/subs").where(expr(queryPred))
       .join(broadcast(cb), Seq("m"))

@@ -491,7 +491,6 @@ object IncrementalDedup {
 
   /** (doc_id, simhash) of a batch — per-row compiled kernel work. */
   private def simhashOfBatch(b: DataFrame, fpExpr: String): DataFrame = {
-    graft.functions.GraftFunctions.register(b.sparkSession)
     b.selectExpr("doc_id", s"$fpExpr AS simhash")
   }
 

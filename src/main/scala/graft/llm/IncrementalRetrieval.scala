@@ -62,7 +62,6 @@ object IncrementalRetrieval {
     * Token-free documents get no row — the same `size(wh) >= 1` gate the
     * one-shot build applies, so store contents match it exactly. */
   private def packed(batch: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     batch.selectExpr("doc_id", s"${XHash.sparkWordHashes("text")} AS wh")
       .where(expr("size(wh) >= 1"))
       .selectExpr("doc_id", "CAST(size(wh) AS BIGINT) AS dl", "explode(wh) AS h")

@@ -527,7 +527,6 @@ object Multimodal {
     * equi-join (never all-pairs); the payload itself never shuffles —
     * only the 1-long fingerprint does. */
   private[graft] def mediaNearDupOf(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     // ASCII payloads: byte stream == codepoint stream (decodeStub note),
     // so the fingerprint reads the text column the payload was encoded
     // from — one kernel call, no byte-array materialization
@@ -582,7 +581,6 @@ object Multimodal {
     // overlap vs the shorter item, and an integer-arithmetic verdict.
     // The payload never shuffles — only (doc_id, fp) rows do.
     "q_llm_media_clip_dedup" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val d = Tables.load(s, dir, "documents")
       val frames = d
         .selectExpr("doc_id", "text", "(length(text) + 99) DIV 100 AS nf")

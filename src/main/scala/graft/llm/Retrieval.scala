@@ -78,7 +78,6 @@ object Retrieval {
 
   /** [[bm25Scores]] over an arbitrary `(doc_id, text, ...)` corpus. */
   private[graft] def bm25ScoresOf(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // toks feeds dl, tf, and (via tf) query terms — materialize once
     val toks = corpus
       .selectExpr("doc_id", s"${sparkWordHashes("text")} AS wh")
@@ -200,7 +199,6 @@ object Retrieval {
     // and only the ≤ LiQ × LiCand survivors pay the |q_tok| × |d_tok|
     // MaxSim join. All-integer scoring ⇒ bit-exact oracle.
     "q_llm_late_interaction" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val toks = docs(s, dir)
         .selectExpr("doc_id", s"explode(${sparkWordHashes("text")}) AS h")
         .distinct().localCheckpoint()
@@ -249,7 +247,6 @@ object Retrieval {
     // builds, one more hash agg to (source, term), a top-k window over
     // sources×terms partitions — no joins wider than slim long keys.
     "q_llm_tfidf_terms" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val toks = docs(s, dir)
         .selectExpr("doc_id", "source", s"${sparkWordHashes("text")} AS wh")
         .where(expr("size(wh) >= 1"))

@@ -247,7 +247,6 @@ object Safety {
     // construction (documented recall tradeoff); the oracle mirrors the
     // identical pipeline, so both engines see the same candidates.
     "q_llm_decontaminate_embed" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val se = Tables.load(s, dir, "embeddings")
         .selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
         .selectExpr("vec_id", "se",
@@ -314,7 +313,6 @@ object Safety {
     // corpus-wide, and the probe side is ~1% of the corpus so the
     // windowed stage is tiny.
     "q_llm_memorization" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("p"))
       val wh = docs(s, dir)

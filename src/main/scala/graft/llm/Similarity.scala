@@ -32,7 +32,6 @@ object Similarity {
     * ONCE per vector before any join (O(N), not O(pairs)); dot products go
     * through the native codegen kernel [[graft.functions.LongDot]]. */
   private[llm] def scaledEmb(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.load(s, dir, "embeddings")
       .selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
       .selectExpr("vec_id", "se",
@@ -41,7 +40,6 @@ object Similarity {
 
   /** [[scaledEmb]] plus the `label` column (for per-class audits). */
   private def scaledEmbWithLabel(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.load(s, dir, "embeddings")
       .selectExpr("vec_id", "label", s"${sparkScaledEmb("embedding")} AS se")
       .selectExpr("vec_id", "label", "se",
@@ -722,7 +720,6 @@ object Similarity {
     // one hash aggregation per label; no joins, no floats anywhere, so
     // the audit is bit-reproducible at any partition count.
     "q_llm_embed_quantize" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.load(s, dir, "embeddings")
         .selectExpr("vec_id", "label", s"${sparkScaledEmb("embedding")} AS se")
         .selectExpr("vec_id", "label",
@@ -761,7 +758,6 @@ object Similarity {
     // than just bucketing. Candidates only from bands, never all pairs;
     // distances attach to slim id pairs after the distinct.
     "q_llm_jl_distortion" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val se = Tables.load(s, dir, "embeddings")
         .selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
         .selectExpr("vec_id", "se",
@@ -841,7 +837,6 @@ object Similarity {
       val q = stream.writeStream.outputMode("append")
         .option("checkpointLocation", s"$base/ckpt")
         .foreachBatch { (rawBatch: DataFrame, bid: Long) =>
-          graft.functions.GraftFunctions.register(rawBatch.sparkSession)
           val batch = Tables.spread(rawBatch)
           val qse = batch
             .selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")

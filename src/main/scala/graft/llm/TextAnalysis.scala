@@ -40,7 +40,6 @@ object TextAnalysis {
     * slim count tables joined back on long keys, one per-doc agg — no
     * self-joins, no windows, no driver. */
   private[llm] def bigramNllPerDoc(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // materialized once: referenced by bgd AND the vocab count — an
     // unmaterialized stream would re-tokenize the corpus per use
     val toks = docs(s, dir)
@@ -484,7 +483,6 @@ object TextAnalysis {
     // native codegen kernel (graft.functions.CharPolyHash) — same value as
     // the SQL aggregate(split(...)) form, without the interpreted lambda.
     "q_llm_fingerprint" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .selectExpr("doc_id",
           "graft_charhash(text) AS fp",
@@ -505,7 +503,6 @@ object TextAnalysis {
     // broadcast. Every hash is the shared affine family (XHash.A/B mod
     // P), so the oracle reproduces the sketch cell-for-cell.
     "q_llm_heavy_hitters" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val ex = docs(s, dir)
         .selectExpr(s"explode(${sparkWordHashes("text")}) AS h")
         .localCheckpoint() // feeds the sketch build AND the truth counts
@@ -537,7 +534,6 @@ object TextAnalysis {
     // "hello world" collide after normalization, not before). One scan,
     // codegen regexes + the charhash kernel; no joins.
     "q_llm_normalize" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .selectExpr("doc_id", "length(text) AS len_raw",
           "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' '), ' +', ' ')) AS norm")
@@ -564,7 +560,6 @@ object TextAnalysis {
     // lookup → integer sum per doc, one explode + one hash agg, no joins,
     // no floats until the final margin division) is exactly this plan.
     "q_llm_classifier" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val w = s"(((h % 256) * ${A(1)} + ${B(1)}) % $P) % 2001 - 1000"
       docs(s, dir)
         .selectExpr("doc_id", s"explode(${sparkWordHashes("text")}) AS h")
@@ -637,7 +632,6 @@ object TextAnalysis {
     // size, built by one scan + one bit_or agg (associative ⇒ partial
     // filters merge across partitions/days), served as a broadcast.
     "q_llm_bloom" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val d = docs(s, dir)
         .selectExpr("doc_id", "source", "graft_charhash(text) AS fp")
         .localCheckpoint() // feeds build, probe, and truth sides
@@ -821,7 +815,6 @@ object TextAnalysis {
     // The universe is docs with >= 3 tokens (trigrams are undefined
     // below that — both engines agree).
     "q_llm_lm_trigram" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val toks = docs(s, dir)
         .selectExpr("doc_id", s"${sparkWordHashes("text")} AS wh")
         .where(expr("size(wh) >= 3"))
@@ -888,7 +881,6 @@ object TextAnalysis {
     // per-source counts, pair join only on the shared vocab, sources² is
     // tiny (pairs of corpora, not docs).
     "q_llm_source_divergence" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val cs = docs(s, dir)
         .selectExpr("source", s"explode(${sparkWordHashes("text")}) AS h")
         .groupBy(col("source"), col("h")).agg(count(lit(1)).as("c"))

@@ -90,9 +90,9 @@ object XHash {
       s"(a, d) -> a * 16 + d) % $P"
 
   /** Word-hash array of a space-tokenized text column. The Spark side is
-    * the codegen kernel [[graft.functions.WordHashes]] (`graft_wordhashes`
-    * — callers must have run `GraftFunctions.register`); value-identical
-    * to the HOF form kept below for cross-checks. */
+    * the codegen kernel [[graft.functions.WordHashes]] (`graft_wordhashes`,
+    * registered on every graft session); value-identical to the HOF form
+    * kept below for cross-checks. */
   def sparkWordHashes(text: String): String =
     s"graft_wordhashes($text)"
   /** The pre-kernel higher-order-function form — same values; kept as the
@@ -139,8 +139,8 @@ object XHash {
 
   /** Embedding scaled to exact longs (floor(x*1e6+0.5)) — float→double is
     * exact, so both engines compute identical longs. Spark side is the
-    * codegen kernel [[graft.functions.ScaledEmb]] (callers must have run
-    * `GraftFunctions.register`); the HOF form below is the parity model. */
+    * codegen kernel [[graft.functions.ScaledEmb]] (registered on every
+    * graft session); the HOF form below is the parity model. */
   def sparkScaledEmb(e: String): String =
     s"graft_scaledemb($e)"
   def sparkScaledEmbHof(e: String): String =

@@ -120,7 +120,6 @@ object Aggregates {
     // pure-expression buffer/update/merge, fully inside codegen's
     // HashAggregate (graft.functions.ExactWeightedAvg).
     "q_agg_declarative_wavg" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(expr("graft_wavg(l_quantity, l_extendedprice)").as("wavg_price"),

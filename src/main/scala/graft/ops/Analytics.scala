@@ -324,7 +324,6 @@ object Analytics {
     * O(SkewParts). The flag is exact integer arithmetic
     * (n_rows · parts > 2 · total). */
   def skewAudit(e: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val keyed = e.selectExpr("'user_id' AS key_col", "CAST(user_id AS STRING) AS k")
       .union(e.selectExpr("'event_type' AS key_col", "event_type AS k"))

@@ -72,19 +72,14 @@ object Cbo {
     }
   }
 
-  /** Run `f` with CBO + join reorder enabled, restoring the session's
-    * previous values after — entries share one session with every other
-    * query, so conf mutations must not leak. NOTE: Spark confs are read
-    * at PLAN time, and plans are lazy — callers must materialize inside
-    * the block (the entry below writes its result to parquet inside it)
-    * or the flags are off again by the time the plan is optimized. */
-  def withCbo[T](s: SparkSession)(f: => T): T = {
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val old = keys.map(k => k -> s.conf.get(k, "false"))
-    keys.foreach(s.conf.set(_, "true"))
-    try f
-    finally old.foreach { case (k, v) => s.conf.set(k, v) }
-  }
+  /** Run `f` with CBO + join reorder enabled, through
+    * [[graft.Session.withConfs]]: callers must materialize inside the
+    * block (the entry below writes its result to parquet inside it) or
+    * the flags are off again by the time the plan is optimized. */
+  def withCbo[T](s: SparkSession)(f: => T): T =
+    graft.Session.withConfs(s, Map(
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true"))(f)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q5's join graph declared in the PESSIMAL order — both fact

@@ -289,11 +289,10 @@ object Spj {
   import graft.sinks.Sinks
   import graft.util.Exact.{sqlSumFix, sumFix}
 
-  /** Run `f` with the v2-bucketing (SPJ) confs on, restoring previous
-    * values after — entries share one session, so conf mutations must not
-    * leak. Spark confs are read at PLAN time and plans are lazy: callers
-    * must materialize inside the block (the entry writes its result to
-    * parquet inside it). `requireAllClusterKeysForCoPartition=false` is
+  /** Run `f` with the v2-bucketing (SPJ) confs on, through
+    * [[graft.Session.withConfs]]: callers must materialize inside the
+    * block (the entry writes its result to parquet inside it).
+    * `requireAllClusterKeysForCoPartition=false` is
     * load-bearing: the stores report KeyGroupedPartitioning on `_bucket`
     * while the join clusters on (custkey, `_bucket`) — a SUBSET match,
     * which Spark only accepts with the strict flag off. Broadcast is
@@ -301,20 +300,12 @@ object Spj {
     * exchange question by broadcasting the small side (at 100 TB neither
     * store side is broadcastable — the demo must prove the
     * sort-merge-without-exchange shape, not a small-data shortcut). */
-  def withSpj[T](s: SparkSession)(f: => T): T = {
-    val want = Seq(
+  def withSpj[T](s: SparkSession)(f: => T): T =
+    graft.Session.withConfs(s, Map(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val old = want.map { case (k, _) => k -> s.conf.getOption(k) }
-    want.foreach { case (k, v) => s.conf.set(k, v) }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))(f)
 
   def read(s: SparkSession, store: String): DataFrame =
     s.read.format("graft.sources.BucketStoreSource").option("path", store).load()

@@ -210,16 +210,11 @@ object GenData {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GenData <outBase> <sf> [<sf>...]")
     val outBase = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // match the driver fixtures' physical type (Spark's default INT96
-      // reads back fine but is deprecated and surprises other engines)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    graft.sources.Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    // match the driver fixtures' physical type (Spark's default INT96
+    // reads back fine but is deprecated and surprises other engines)
+    val spark = graft.Session.build(cpus,
+      Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { sfs =>
       val t0 = System.nanoTime()

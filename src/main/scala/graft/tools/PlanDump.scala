@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registered queries (the
   * plans/r15 evidence files — not part of the driver contract).
   * Usage: runjvm.sh graft.tools.PlanDump <sfDir> <outDir> <name>[,<name>...]
@@ -17,13 +15,7 @@ object PlanDump {
     val dir = args(0)
     val outDir = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = graft.Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Map.empty)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

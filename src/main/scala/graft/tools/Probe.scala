@@ -1,14 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev smoke tool: runs SparkEntry.entry (the driver's t1 check) and shows
   * the result; with arg "explain <name> <sfDir>", prints a query's plan. */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled","false")
-      .config("spark.sql.shuffle.partitions","8")
-    graft.sources.Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = graft.Session.build(8, Map.empty)
     spark.sparkContext.setLogLevel("ERROR")
     args.toList match {
       case "explain" :: name :: dir :: Nil =>

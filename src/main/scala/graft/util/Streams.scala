@@ -48,17 +48,13 @@ object Streams {
   }
 
   /** Run `body` (a stream's start→awaitTermination) with
-    * `spark.sql.shuffle.partitions` pinned to `n`, restoring the
-    * session default afterwards. The override must cover the FIRST
+    * `spark.sql.shuffle.partitions` pinned to `n`, through
+    * [[graft.Session.withConfs]]. The override must cover the FIRST
     * micro-batch (that is when the state partitioning is captured into
     * the checkpoint); covering the whole drain is simplest and also
     * keeps the tiny per-batch foreachBatch jobs from planning `cpus`
     * reduce tasks each. Results are partitioning-independent by
     * construction (the oracle gate hash-compares them). */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    graft.Session.withConfs(s, Map("spark.sql.shuffle.partitions" -> n.toString))(body)
 }

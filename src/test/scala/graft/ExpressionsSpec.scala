@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, GraftKernels}
+import graft.functions.GraftKernels
 import graft.llm.XHash
 
 /** Native codegen expressions: value contract vs the SQL higher-order-
@@ -11,7 +11,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_charhash matches the SQL aggregate(split(...)) fold and the JVM kernel") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val samples = Seq("abc", "", "hello world", "key agg row scan", "a",
       "Brand#12|STANDARD", "0123456789abcdef" * 40)
     val df = samples.toDF("s")
@@ -29,7 +28,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("literal graft_charhash constant-folds at plan time") {
-    GraftFunctions.register(spark)
     val plan = spark.range(1).selectExpr("graft_charhash('abc') AS h")
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("96354"), s"expected folded literal in:\n$plan")
@@ -37,7 +35,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_wavg ignores rows with a null qty or price (null-safe updates)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Some(2.0), Some(10.0)),
       (None: Option[Double], Some(99.0)), // null qty: ignored entirely
@@ -56,7 +53,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_shingles (UDTF) emits exactly the distinct HOF shingle set") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "a a a a a a"),   // repeated token -> one distinct shingle
@@ -76,7 +72,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_wordhashes matches the HOF md5 form incl. split edge cases") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val texts = Seq(
       "the quick brown fox", "", " ", "a", "a ", " a", "a  b", // empty/trailing tokens
       "word", "0123 4567 with-punct! and, more.")
@@ -92,7 +87,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_simhash matches the explode + per-bit majority-vote model") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "a"),                       // single word: every bit = that word's vote
@@ -128,7 +122,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_chunks (UDTF) matches the HOF slice-fold chunk hashes") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // 25 elements at width 10 -> chunks of 10, 10, 5 (ragged tail)
     val wh = Array.tabulate(25)(i => (i * 9973L + 7) % GraftKernels.P)
     val df = Seq(Tuple1(wh)).toDF("wh")
@@ -151,7 +144,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("posexplode(graft_gramhashes) matches explode(sequence)+charhash(substring) exactly") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog and runs on",
       "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaa",        // max-overlap repeats
@@ -186,11 +178,14 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("wrong arity is an AnalysisException naming the function, not an IndexOutOfBounds") {
-    GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT graft_gramhashes('abc')").collect())
+    assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), e.getCondition)
+    import scala.jdk.CollectionConverters._
+    val params = e.getMessageParameters.asScala
+    assert(params.get("functionName").exists(_.contains("graft_gramhashes")), params)
+    assert(params.get("expectedNum").contains("2") && params.get("actualNum").contains("1"), params)
     assert(e.getMessage.contains("graft_gramhashes"))
-    assert(e.getMessage.contains("2"))
     // single-arg and 3-arg entries guard the same way
     assertThrows[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT graft_charhash('a', 'b')").collect())
@@ -200,7 +195,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_scaledemb matches the HOF floor-scale form on float arrays") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val emb = Array.tabulate(64)(d => (math.sin(d * 1.7) * 0.9).toFloat)
     val df = Seq(Tuple1(emb)).toDF("embedding")
     val viaKernel = df.selectExpr(s"${XHash.sparkScaledEmb("embedding")} AS se")
@@ -214,7 +208,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_planedots matches the per-plane unrolled dot sums") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val se = Array.tabulate(64)(d => (d * 1337L - 40000L))
     val df = Seq(Tuple1(se)).toDF("se")
     val viaKernel = df.selectExpr("graft_planedots(se) AS dots")
@@ -231,7 +224,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_dot matches the unrolled integer dot product in both eval paths") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val a = Array.tabulate(64)(i => (i * 37 - 1000).toLong)
     val b = Array.tabulate(64)(i => (i * i - 64).toLong)
     val expected = a.zip(b).map { case (x, y) => x * y }.sum
@@ -248,7 +240,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("graft_nearest_cells matches the join-then-rank argmin it replaced") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // deterministic vectors + centroids; reference = brute (dist, cid)
     // sort per vector, exactly the old crossJoin + row_number contract
     val dim = 8
@@ -293,7 +284,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("FuseWordCount rewrites size(split(s,' ')) and preserves exact semantics") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // every segment-shape edge case: empty, leading/trailing/consecutive
     // spaces, only-spaces, no spaces, multi-byte UTF-8 around spaces
     val cases = Seq("", " ", "  ", "a", "a b", "a  b", " a", "a ",

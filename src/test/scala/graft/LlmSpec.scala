@@ -23,7 +23,6 @@ class LlmSpec extends SparkSpec {
 
   test("minhash: identical token streams give identical signatures; supersets only lower minima") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       ("a", "x y z w q r s t u v"),
       ("b", "x y z w q r s t u v"),          // identical
@@ -42,7 +41,6 @@ class LlmSpec extends SparkSpec {
 
   test("simhash-style bit arithmetic is order-independent (hash aggregation)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val fwd = Seq("alpha beta gamma delta").toDF("text")
     val rev = Seq("delta gamma beta alpha").toDF("text")
     def bits(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
@@ -188,7 +186,6 @@ class LlmSpec extends SparkSpec {
     // ...and so do both iterative trainers (k-means + PQ codebooks):
     // deterministic training must land on identical models under any
     // materialization strategy
-    graft.functions.GraftFunctions.register(spark)
     val dim = graft.llm.XHash.EmbDim
     val emb = (0 until 20).map { i =>
       (i.toLong, (0 until dim).map(j => math.sin(i * 13 + j * 7).toFloat).toArray)
@@ -271,7 +268,6 @@ class LlmSpec extends SparkSpec {
       (1L, "p q r s t u v w"),
       (2L, "spam spam spam spam eggs"),
       (3L, "a b c d a b c d a b e f g h")).toDF("doc_id", "text")
-    graft.functions.GraftFunctions.register(spark)
     val v = d
       .selectExpr("doc_id", "split(text, ' ') AS t", s"${XHash.sparkWordHashes("text")} AS wh")
       .selectExpr("doc_id", "size(t) AS n_tok", "size(array_distinct(t)) AS n_uniq",
@@ -481,7 +477,6 @@ class LlmSpec extends SparkSpec {
 
   test("PQ: identical vectors encode to identical codes; ADC ranks the clone first") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dim = graft.llm.XHash.EmbDim
     // vec 0 and vec 100 identical; vecs 1..9 pseudo-random noise
     def v(seed: Long): Seq[Float] =
@@ -530,7 +525,6 @@ class LlmSpec extends SparkSpec {
   test("classifier: score is the exact integer sum of bucket weights") {
     import spark.implicits._
     import graft.llm.XHash._
-    graft.functions.GraftFunctions.register(spark)
     // independent model: HOF wordhashes + explicit weight formula
     val expected = Seq("alpha beta beta gamma").toDF("text")
       .selectExpr(s"explode(${sparkWordHashesHof("text")}) AS h")
@@ -545,7 +539,6 @@ class LlmSpec extends SparkSpec {
 
   test("corpus-relative k-means cell count: isqrt(N) fires past the floor") {
     import graft.llm.Similarity
-    graft.functions.GraftFunctions.register(spark)
     // isqrt exactness around perfect squares (the ±1 CASE repair), incl.
     // the large-N regime where the double estimate is least trustworthy —
     // evaluated on the formula text itself (what both engines embed)
@@ -582,7 +575,6 @@ class LlmSpec extends SparkSpec {
 
   test("perceptual media fingerprint: kernel parity; perturbed copies match, unrelated don't") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // parity: the compiled one-pass kernel equals the HOF composition of
     // the shared pieces (byte array -> shingle transform -> graft_simhash)
     // — the same relational decomposition the DuckDB oracle runs
@@ -735,7 +727,6 @@ class LlmSpec extends SparkSpec {
     val text = "shared template alpha beta gamma delta epsilon zeta eta theta"
     val d = ((1 to 6).map(i => (i.toLong, s"unrelated totally distinct content x$i y$i z$i q$i r$i s$i t$i u$i"))
       ++ Seq((10L, text), (11L, text))).toDF("doc_id", "text")
-    graft.functions.GraftFunctions.register(spark)
     val cc = graft.llm.Dedup.connectedComponents(
       graft.llm.Dedup.minhashVerifiedPairsOf(d).select($"doc_a", $"doc_b"))
     val canon = d.select($"doc_id").join(cc, Seq("doc_id"), "left")
@@ -1093,7 +1084,6 @@ class LlmSpec extends SparkSpec {
 
   test("k-center coreset: distinct centers, monotone radius, max-norm seed") {
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.register(spark)
     val out = SparkEntry.queries("q_llm_kcenter_sample")(spark, dir)
       .orderBy(col("round")).collect()
     assert(out.length === graft.llm.Similarity.KCenters)

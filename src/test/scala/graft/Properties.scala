@@ -196,7 +196,6 @@ object SparkProperties extends Properties("spark-ops") {
   property("graft_wordhashes == HOF md5 word hashes on arbitrary text") =
     forAll(Gen.listOfN(8, genText)) { texts =>
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("id", "text")
         .selectExpr("id",
@@ -210,7 +209,6 @@ object SparkProperties extends Properties("spark-ops") {
     forAll(Gen.listOfN(5, genDoc)) { docs =>
       import spark.implicits._
       import org.apache.spark.sql.functions.expr
-      graft.functions.GraftFunctions.register(spark)
       val df = docs.zipWithIndex
         .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }.toDF("doc_id", "text")
         .selectExpr("doc_id", s"${graft.llm.XHash.sparkWordHashes("text")} AS wh")

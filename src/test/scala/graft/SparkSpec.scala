@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suites run sequentially in the forked test JVM). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = Session.build(4, Map.empty)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -50,4 +50,23 @@ class SurveyIndexSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"java.nio.file in llm/, sinks/ or streaming/ code: $offenders — use graft.util.Fs")
   }
+
+  /** Files under src/ (this guard's own file aside) whose text contains
+    * `needle`, relative to src/. */
+  private def filesContaining(needle: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(Paths.get("src")).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.endsWith("SurveyIndexSpec.scala"))
+      .filter(f => new String(Files.readAllBytes(f), "UTF-8").contains(needle))
+      .map(f => Paths.get("src").relativize(f).toString).toSet
+  }
+
+  test("sessions are built only by graft.Session") {
+    assert(filesContaining("SparkSession.builder") === Set("main/scala/graft/Session.scala"))
+  }
+
+  test("graft functions are registered only by the session factory and the entry boundary") {
+    assert(filesContaining("GraftFunctions.register(") ===
+      Set("main/scala/graft/Session.scala", "main/scala/graft/SparkEntry.scala"))
+  }
 }
