@@ -4,13 +4,11 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.sinks.Sinks
 import graft.sources.Tables
 import graft.llm.XHash._
-import graft.util.Exact
+import graft.util.{Exact, Streams}
 
 /** Persisted, incrementally-maintained ANN index — the reference's
   * persisted-store identity (`git_etl.ts:127-132`, `:319-326`) applied to
@@ -59,11 +57,6 @@ import graft.util.Exact
   * converge to the same state.
   */
 object IncrementalAnn {
-
-  /** Wipe all per-entry state (stream source, stores, checkpoint).
-    * Wipes the dir itself: both index variants (IVF and LSH band-table)
-    * keep all state under their own base. */
-  private[graft] def reset(base: String): Unit = Sinks.truncate(base)
 
   private def scaled(batch: DataFrame): DataFrame = {
     batch.selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
@@ -148,21 +141,6 @@ object IncrementalAnn {
       .withColumn("cos", Exact.fix(col("cos_raw"), 6))
       .select(col("q_id"), col("rank"), col("neighbor_id"), col("cos"))
       .orderBy(col("q_id"), col("rank"))
-  }
-
-  /** Drain the file-stream of vector batches through `tickFn`; resumes
-    * from the checkpoint after a crash, processing only unseen batches. */
-  private[graft] def runTicks(s: SparkSession, base: String, schema: StructType,
-                              tickFn: (SparkSession, DataFrame, Long, String) => Unit = tick)
-      : Unit = {
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch((b: DataFrame, id: Long) => tickFn(s, Tables.spread(b), id, base))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   // --- LSH band-table store ----------------------------------------------
@@ -304,10 +282,10 @@ object IncrementalAnn {
     // contract, exactly the IncrementalDedup pattern.
     "q_llm_knn_ivf_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/ann_inc"
-      reset(base)
+      Sinks.truncate(base)
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(3, col("vec_id")).write.parquet(s"$base/src")
-      runTicks(s, base, e.schema)
+      Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tick(s, _, _, base))
       // bound the per-bucket file sets the fold ticks accumulated (one
       // file set per touched bucket per tick) before the corpus-sized
       // re-train reads the store; results unaffected (spec-asserted).
@@ -331,10 +309,10 @@ object IncrementalAnn {
     // is a two-step maintenance pass in production too.
     "q_llm_knn_ivf_forget" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/ann_forget"
-      reset(base)
+      Sinks.truncate(base)
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
-      runTicks(s, base, e.schema)
+      Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tick(s, _, _, base))
       val del = e.select(col("vec_id"))
         .where(expr("vec_id % 9 = 4 AND vec_id >= 10")) // queries stay live
         .localCheckpoint() // both concurrent deletes read it
@@ -353,10 +331,10 @@ object IncrementalAnn {
     // order. Oracle = the one-shot LSH SQL.
     "q_llm_knn_lsh_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/ann_lsh_inc"
-      reset(base)
+      Sinks.truncate(base)
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(3, col("vec_id")).write.parquet(s"$base/src")
-      runTicks(s, base, e.schema, tickLsh)
+      Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickLsh(s, _, _, base))
       // store maintenance between merge windows: bound per-bucket file
       // counts accumulated across the fold ticks (results unaffected —
       // spec-asserted; the same pass q_llm_dedup_incremental runs)
@@ -377,10 +355,10 @@ object IncrementalAnn {
     // join, and serving.
     "q_llm_knn_lsh_forget" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/ann_lsh_forget"
-      reset(base)
+      Sinks.truncate(base)
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
-      runTicks(s, base, e.schema, tickLsh)
+      Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickLsh(s, _, _, base))
       val del = e.select(col("vec_id"))
         .where(expr("vec_id % 9 = 4 AND vec_id >= 10")) // queries stay live
       Sinks.deleteByKeyBucket(s, s"$base/vecs", del, "vec_id")
@@ -394,10 +372,10 @@ object IncrementalAnn {
     // one-shot PQ SQL — rebuild equivalence, driver-checked.
     "q_llm_knn_pq_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/ann_pq_inc"
-      reset(base)
+      Sinks.truncate(base)
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
-      runTicks(s, base, e.schema, tickPq)
+      Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickPq(s, _, _, base))
       // small-file pass over both keyed stores before the re-train scan
       // (disjoint stores -> concurrent, r15)
       graft.util.Jobs.inPool(2)(Seq("subs", "codes").map(p =>
@@ -414,10 +392,10 @@ object IncrementalAnn {
 
   private val pqForgetEntry: (SparkSession, String) => DataFrame = { (s, dir) =>
     val base = s"${Sinks.tmpBase}/ann_pq_forget"
-    reset(base)
+    Sinks.truncate(base)
     val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
-    runTicks(s, base, e.schema, tickPq)
+    Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickPq(s, _, _, base))
     // delete keys are (vec, subspace) pairs — PqM rows per forgotten vector
     val delKeys = e.select(col("vec_id"))
       .where(expr("vec_id % 9 = 4 AND vec_id >= 10")) // queries stay live

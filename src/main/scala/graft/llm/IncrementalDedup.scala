@@ -3,12 +3,12 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.sinks.Sinks
 import graft.sources.Tables
 import graft.llm.XHash._
+import graft.util.Streams
 
 /** Incremental near-dup maintenance — the reference's defining behavior
   * (watermark → fetch only what's new → keyed upsert, `git_etl.ts:319-326`)
@@ -18,7 +18,9 @@ import graft.llm.XHash._
   * corpus pipeline actually runs every few minutes; the one-shot entries
   * are its cold-start special case.
   *
-  * Per tick (`foreachBatch` over a file stream, one file per trigger):
+  * Per tick ([[tick]], run on each batch of the arrival stream by the
+  * engine's one tick driver, [[graft.util.Streams.drain]] over
+  * [[graft.util.Streams.ticks]] — one file per trigger):
   *  1. band table of the NEW docs only — per-doc MinHash signatures are
   *     corpus-independent, so a batch's bands equal the full pipeline
   *     restricted to the batch;
@@ -55,9 +57,7 @@ import graft.llm.XHash._
 object IncrementalDedup {
 
   /** Wipe all per-entry state (stream source, stores, checkpoint). */
-  private[graft] def reset(base: String): Unit =
-    Seq("src", "bands", "cands", "shingles", "docs", "ckpt")
-      .foreach(p => Sinks.truncate(s"$base/$p"))
+  private[graft] def reset(base: String): Unit = Sinks.truncate(base)
 
   /** One maintenance tick: dedup `batch` against the stored index, then
     * fold the batch into the index. Idempotent per (batch, batchId). */
@@ -130,12 +130,6 @@ object IncrementalDedup {
   }
 
   // --- Incremental connected components (union-find as a store) ---------
-
-  /** Wipe the incremental-CC state (edge stream, label store, remap/forget
-    * recovery artifacts, checkpoint). */
-  private[graft] def ccReset(base: String): Unit =
-    Seq("src", "labels", "edges", "remaps", "emoves", "forgets", "ckpt")
-      .foreach(p => Sinks.truncate(s"$base/$p"))
 
   /** True iff a prior attempt COMPLETED the parquet write at `p` (the
     * `_SUCCESS` marker is committed last, so a crash mid-write leaves no
@@ -389,14 +383,6 @@ object IncrementalDedup {
     Sinks.bucketDirs(elog, abuckets)
   }
 
-  /** Drain a file-stream of edge batches through [[ccTick]] (crash-safe
-    * resume via the checkpoint, same contract as [[runTicks]]), then run
-    * the small-file maintenance pass over the label store: every tick's
-    * remap upsert rewrites its touched buckets with up to
-    * shuffle-partitions files each, and without compaction the per-bucket
-    * file count grows linearly in ticks — the classic streaming-store
-    * decay. Compaction is the same crash-safe staged swap as the merge and
-    * is spec-asserted result-identical. */
   /** The labels store, or an empty (doc, label) table when no tick ever
     * wrote it — an EMPTY edge stream is a legal corpus state (a fully
     * distinct corpus verifies zero near-dup pairs), and the store read
@@ -412,18 +398,19 @@ object IncrementalDedup {
         org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType))))
   }
 
+  /** Drain a file-stream of edge batches through [[ccTick]] (crash-safe
+    * resume via the checkpoint, [[graft.util.Streams.drain]]), then run
+    * the small-file maintenance pass over the label store: every tick's
+    * remap upsert rewrites its touched buckets with up to
+    * shuffle-partitions files each, and without compaction the per-bucket
+    * file count grows linearly in ticks — the classic streaming-store
+    * decay. Compaction is the same crash-safe staged swap as the merge and
+    * is spec-asserted result-identical. */
   private[graft] def runCcTicks(s: SparkSession, base: String): Unit = {
     val schema = StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_a", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("doc_b", org.apache.spark.sql.types.LongType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch((b: DataFrame, id: Long) => ccTick(s, Tables.spread(b), id, base))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.drain(Streams.ticks(s, s"$base/src", schema), s"$base/ckpt")(ccTick(s, _, _, base))
     Sinks.compactBuckets(s, s"$base/labels")
     Sinks.compactBuckets(s, s"$base/edges")
   }
@@ -477,10 +464,6 @@ object IncrementalDedup {
   // FINAL counts, which is exactly what serving from the store gives.
   // Result = bit-identical to the one-shot q_llm_dedup_simhash_pairs on
   // the store's current corpus, which is the entry's oracle.
-
-  private[graft] def simhashReset(base: String): Unit =
-    Seq("src", "fps", "bands", "ckpt")
-      .foreach(p => Sinks.truncate(s"$base/$p"))
 
   /** Default fingerprint kernel: word-level SimHash. The media variant
     * swaps in the byte-3-gram kernel (`graft_bytesimhash(text)`) — same
@@ -570,14 +553,8 @@ object IncrementalDedup {
   private[graft] def runSimhashTicks(s: SparkSession, base: String,
                                      schema: StructType,
                                      fpExpr: String = TextFpExpr): Unit = {
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch((b: DataFrame, id: Long) => simhashTick(s, Tables.spread(b), id, base, fpExpr))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.drain(Streams.ticks(s, s"$base/src", schema), s"$base/ckpt")(
+      simhashTick(s, _, _, base, fpExpr))
     Seq("fps", "bands").foreach(p => Sinks.compactBuckets(s, s"$base/$p"))
   }
 
@@ -594,9 +571,6 @@ object IncrementalDedup {
   // cap can only be judged against FINAL counts, which is exactly what
   // serving gives. Result = bit-identical to the one-shot
   // q_llm_winnow_dedup on the store's current corpus — the entry's oracle.
-
-  private[graft] def winnowReset(base: String): Unit =
-    Seq("src", "fps", "ckpt").foreach(p => Sinks.truncate(s"$base/$p"))
 
   /** One row per BATCH doc: doc_id → its full winnowed fingerprint set
     * (possibly empty). Storing the set as one ARRAY row — instead of one
@@ -647,29 +621,8 @@ object IncrementalDedup {
     * crash-safe resume via the checkpoint — then compact the store. */
   private[graft] def runWinnowTicks(s: SparkSession, base: String,
                                     schema: StructType): Unit = {
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch((b: DataFrame, id: Long) => winnowTick(s, Tables.spread(b), id, base))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.drain(Streams.ticks(s, s"$base/src", schema), s"$base/ckpt")(winnowTick(s, _, _, base))
     Sinks.compactBuckets(s, s"$base/fps")
-  }
-
-  /** Drain the file-stream of document batches through [[tick]]; resumes
-    * from the checkpoint, so a second call after a crash (or after new
-    * files arrive) processes only unseen batches. */
-  private[graft] def runTicks(s: SparkSession, base: String, schema: StructType): Unit = {
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch((b: DataFrame, id: Long) => tick(s, Tables.spread(b), id, base))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   /** Verify ALL accumulated candidates against each doc's CURRENT
@@ -725,7 +678,7 @@ object IncrementalDedup {
       reset(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
-      runTicks(s, base, d.schema)
+      Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt")(tick(s, _, _, base))
       // store maintenance between merge windows: coalesce the small files
       // each bucket accumulated across ticks (results unaffected — the
       // compaction spec asserts byte-identical contents; at 100 TB this
@@ -746,7 +699,7 @@ object IncrementalDedup {
     // spec-tested hard case.
     "q_llm_groups_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/cc_inc"
-      ccReset(base)
+      Sinks.truncate(base)
       val p = Dedup.verifiedPairsCached(s, dir)
       p.repartitionByRange(3, col("doc_a")).write.parquet(s"$base/src")
       runCcTicks(s, base)
@@ -767,7 +720,7 @@ object IncrementalDedup {
     // q_llm_forget's corpus-level re-verification.
     "q_llm_groups_forget" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/cc_forget"
-      ccReset(base)
+      Sinks.truncate(base)
       val p = Dedup.verifiedPairsCached(s, dir)
       // 2 arrival ticks (vs the 3 of q_llm_groups_incremental): forget
       // semantics need an incrementally built store, not a tick count
@@ -791,7 +744,7 @@ object IncrementalDedup {
     // the MinHash and ANN stores.
     "q_llm_dedup_simhash_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/simhash_inc"
-      simhashReset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema)
@@ -805,7 +758,7 @@ object IncrementalDedup {
     // the kept corpus.
     "q_llm_dedup_simhash_forget" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/simhash_forget"
-      simhashReset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema)
@@ -822,7 +775,7 @@ object IncrementalDedup {
     // one-shot q_llm_media_neardup SQL — rebuild equivalence.
     "q_llm_media_neardup_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/media_fp_inc"
-      simhashReset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema, fpExpr = MediaFpExpr)
@@ -836,7 +789,7 @@ object IncrementalDedup {
     // over the kept corpus.
     "q_llm_media_neardup_forget" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/media_fp_forget"
-      simhashReset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema, fpExpr = MediaFpExpr)
@@ -852,7 +805,7 @@ object IncrementalDedup {
     // same contract as the MinHash/SimHash/ANN stores.
     "q_llm_winnow_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/winnow_inc"
-      winnowReset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       runWinnowTicks(s, base, d.schema)
@@ -865,7 +818,7 @@ object IncrementalDedup {
     // store. Oracle = the one-shot SQL over the kept corpus.
     "q_llm_winnow_forget" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/winnow_forget"
-      winnowReset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
       runWinnowTicks(s, base, d.schema)
@@ -899,46 +852,28 @@ object IncrementalDedup {
       val base = s"${Sinks.tmpBase}/stream_dedup_gate"
       Sinks.truncate(base)
       val newDocs = d.where(col("doc_id") % 3 === 0)
-      (0 to 1).foreach { t =>
-        val tmp = s"$base/src_stage_$t"
-        newDocs.where(expr(s"(doc_id DIV 3) % 2 = $t")).coalesce(1).write.parquet(tmp)
-        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
-        graft.util.Fs.mkdirs(s"$base/src")
-        val dest = s"$base/src/t$t.parquet"
-        graft.util.Fs.move(part, dest)
-        Sinks.deleteRec(tmp)
-        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
-      }
+      Streams.land(base, (0 to 1).map(t => newDocs.where(expr(s"(doc_id DIV 3) % 2 = $t"))))
       val agreeExpr = (0 until XHash.K).map(k => s"IF(m$k = o$k, 1, 0)").mkString(" + ")
-      val stream = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (rawBatch: DataFrame, bid: Long) =>
-          val batch = Tables.spread(rawBatch)
-          val bSigs = Dedup.minhashSigsOf(batch).localCheckpoint()
-          val cand = Dedup.bandsFromSigs(bSigs)
-            .join(oldBands, Seq("band_idx", "band_key"))
-            .select(col("doc_id"), col("old_id")).distinct()
-          val best = cand
-            .join(bSigs, "doc_id").join(oldSigsR, "old_id")
-            .selectExpr("doc_id", "old_id", s"CAST($agreeExpr AS INT) AS agree")
-            .withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-                .orderBy(col("agree").desc, col("old_id"))))
-            .where(col("rn") === 1)
-          batch.select(col("doc_id"))
-            .join(best.select(col("doc_id"), col("old_id"), col("agree")),
-              Seq("doc_id"), "left")
-            .selectExpr("doc_id", "CAST(coalesce(agree, 0) AS INT) AS n_agree",
-              "old_id AS best_match")
-            .selectExpr("doc_id", "n_agree >= 8 AS is_dup", "best_match", "n_agree")
-            .write.mode("overwrite").parquet(s"$base/out/batch_$bid")
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt") { (batch, bid) =>
+        val bSigs = Dedup.minhashSigsOf(batch).localCheckpoint()
+        val cand = Dedup.bandsFromSigs(bSigs)
+          .join(oldBands, Seq("band_idx", "band_key"))
+          .select(col("doc_id"), col("old_id")).distinct()
+        val best = cand
+          .join(bSigs, "doc_id").join(oldSigsR, "old_id")
+          .selectExpr("doc_id", "old_id", s"CAST($agreeExpr AS INT) AS agree")
+          .withColumn("rn", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
+              .orderBy(col("agree").desc, col("old_id"))))
+          .where(col("rn") === 1)
+        batch.select(col("doc_id"))
+          .join(best.select(col("doc_id"), col("old_id"), col("agree")),
+            Seq("doc_id"), "left")
+          .selectExpr("doc_id", "CAST(coalesce(agree, 0) AS INT) AS n_agree",
+            "old_id AS best_match")
+          .selectExpr("doc_id", "n_agree >= 8 AS is_dup", "best_match", "n_agree")
+          .write.mode("overwrite").parquet(s"$base/out/batch_$bid")
+      }
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/out")
         .orderBy(col("doc_id"))
     },
@@ -958,7 +893,7 @@ object IncrementalDedup {
       // semantics need an index built incrementally, not a specific tick
       // count, and each tick costs a full stream trigger + merges
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
-      runTicks(s, base, d.schema)
+      Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt")(tick(s, _, _, base))
       forgetTick(s, base, d.where(col("doc_id") % 7 === 3), tickId = 1L << 40)
       verifyAccumulated(s, base)
     })

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sinks.Sinks
 import graft.sources.Tables
+import graft.util.Streams
 
 /** Persisted, incrementally-maintained BM25 inverted index — the
   * reference's persisted-store identity (`git_etl.ts:127-132`, `:319-326`)
@@ -55,8 +56,6 @@ import graft.sources.Tables
   * rewrites — the [[Sinks]] store contract.
   */
 object IncrementalRetrieval {
-
-  private[graft] def reset(base: String): Unit = Sinks.truncate(base)
 
   /** One packed index row per document in `batch`: `(doc_id, dl, tfs)`.
     * Token-free documents get no row — the same `size(wh) >= 1` gate the
@@ -122,10 +121,10 @@ object IncrementalRetrieval {
     // one-shot BM25 SQL — rebuild equivalence, driver-checked.
     "q_llm_bm25_incremental" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/bm25_inc"
-      reset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
-      IncrementalAnn.runTicks(s, base, d.schema, tick)
+      Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt")(tick(s, _, _, base))
       // bound the per-bucket file sets the fold ticks accumulated before
       // the stats pass scans the store; results unaffected (spec-asserted)
       Sinks.compactBuckets(s, s"$base/postings")
@@ -150,10 +149,10 @@ object IncrementalRetrieval {
     // IncrementalRetrievalSpec + SinksSpec.
     "q_llm_bm25_forget" -> { (s, dir) =>
       val base = s"${Sinks.tmpBase}/bm25_forget"
-      reset(base)
+      Sinks.truncate(base)
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
-      IncrementalAnn.runTicks(s, base, d.schema, tick)
+      Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt")(tick(s, _, _, base))
       val del = d.select(col("doc_id"))
         .where(expr(s"doc_id % 9 = 4 AND doc_id >= ${Retrieval.QMax}")) // queries stay live
       Sinks.deleteByKeyMoR(s, s"$base/postings", del, "doc_id", tag = "gdpr")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.llm.XHash._
-import graft.util.Exact
+import graft.util.{Exact, Streams}
 
 /** Safety/compliance curation operators (north-star suite): the two
   * passes every real training-data pipeline runs between dedup and
@@ -137,7 +137,7 @@ object Safety {
     // stream through a per-batch overlap gate — the screen a production
     // ingest runs so contaminated documents never reach the training
     // corpus instead of being hunted down later. Two real micro-batches
-    // (maxFilesPerTrigger=1); per batch: the batch's distinct shingles
+    // (one file per trigger); per batch: the batch's distinct shingles
     // left-join the eval set (keyed equi-join — the batch side is small,
     // the eval side never rescans raw eval text), per-doc hit counts,
     // the q_llm_decontaminate verdict boundary (ContamFrac cross-
@@ -146,7 +146,6 @@ object Safety {
     // overlap SQL one-shot over all streamed docs: batch boundaries
     // provably cannot change any verdict.
     "stream_llm_decontam_gate" -> { (s, dir) =>
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val evalSet = Dedup.shingleStreamOf(d.where(col("doc_id") % EvalMod === 0))
         .select(col("sg")).distinct().withColumn("hit", lit(1L))
@@ -154,44 +153,26 @@ object Safety {
       val base = s"${graft.sinks.Sinks.tmpBase}/stream_decontam_gate"
       graft.sinks.Sinks.truncate(base)
       val newDocs = d.where(col("doc_id") % EvalMod =!= 0)
-      (0 to 1).foreach { t =>
-        val tmp = s"$base/src_stage_$t"
-        newDocs.where(expr(s"doc_id % 2 = $t")).coalesce(1).write.parquet(tmp)
-        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
-        graft.util.Fs.mkdirs(s"$base/src")
-        val dest = s"$base/src/t$t.parquet"
-        graft.util.Fs.move(part, dest)
-        graft.sinks.Sinks.deleteRec(tmp)
-        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
+      Streams.land(base, (0 to 1).map(t => newDocs.where(expr(s"doc_id % 2 = $t"))))
+      Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt") { (batch, bid) =>
+        val bSg = Dedup.shingleStreamOf(batch)
+          .select(col("doc_id"), col("sg")).distinct()
+        val per = bSg.join(evalSet, Seq("sg"), "left")
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_ngrams"),
+            coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+        batch.select(col("doc_id")).join(per, Seq("doc_id"), "left")
+          .selectExpr("doc_id",
+            "coalesce(n_ngrams, 0L) AS n_ngrams",
+            "coalesce(n_hit, 0L) AS n_hit")
+          .selectExpr("doc_id", "n_ngrams", "n_hit",
+            "CASE WHEN n_ngrams = 0 THEN 0L " +
+              "ELSE n_hit * 1000000 DIV n_ngrams END AS overlap_ppm",
+            s"CASE WHEN n_ngrams > 0 AND $ContamFrac * n_hit >= n_ngrams " +
+              "THEN 'contaminated' WHEN n_hit > 0 THEN 'flagged' " +
+              "ELSE 'clean' END AS verdict")
+          .write.mode("overwrite").parquet(s"$base/out/batch_$bid")
       }
-      val stream = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (rawBatch: DataFrame, bid: Long) =>
-          val batch = Tables.spread(rawBatch)
-          val bSg = Dedup.shingleStreamOf(batch)
-            .select(col("doc_id"), col("sg")).distinct()
-          val per = bSg.join(evalSet, Seq("sg"), "left")
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_ngrams"),
-              coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-          batch.select(col("doc_id")).join(per, Seq("doc_id"), "left")
-            .selectExpr("doc_id",
-              "coalesce(n_ngrams, 0L) AS n_ngrams",
-              "coalesce(n_hit, 0L) AS n_hit")
-            .selectExpr("doc_id", "n_ngrams", "n_hit",
-              "CASE WHEN n_ngrams = 0 THEN 0L " +
-                "ELSE n_hit * 1000000 DIV n_ngrams END AS overlap_ppm",
-              s"CASE WHEN n_ngrams > 0 AND $ContamFrac * n_hit >= n_ngrams " +
-                "THEN 'contaminated' WHEN n_hit > 0 THEN 'flagged' " +
-                "ELSE 'clean' END AS verdict")
-            .write.mode("overwrite").parquet(s"$base/out/batch_$bid")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/out")
         .orderBy(col("doc_id"))
     },

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.llm.XHash._
-import graft.util.Exact
+import graft.util.{Exact, Streams}
 
 /** Similarity search over the `embeddings` table (north-star operator).
   *
@@ -805,8 +805,8 @@ object Similarity {
 
     // Online ANN serving: the IVF index (trained centroids + assigned
     // corpus) is built ONCE as static state; QUERIES arrive as a stream
-    // (two query files, maxFilesPerTrigger=1 → two real micro-batches)
-    // and each batch is served inside foreachBatch against the static
+    // (two query files, one per trigger → two real micro-batches)
+    // and each batch is served in its tick body against the static
     // index — the offline-train / online-serve split of a production
     // vector store. Per-query results touch only that query's probed
     // cells, so batch boundaries cannot change any query's top-k, and
@@ -822,43 +822,27 @@ object Similarity {
       val base = s"${graft.sinks.Sinks.tmpBase}/stream_ann_serve"
       graft.sinks.Sinks.truncate(base)
       val qsrc = Tables.load(s, dir, "embeddings").where(col("vec_id") < 10)
-      (0 to 1).foreach { t =>
-        val tmp = s"$base/src_stage_$t"
-        qsrc.where(col("vec_id") % 2 === t).coalesce(1).write.parquet(tmp)
-        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
-        graft.util.Fs.mkdirs(s"$base/src")
-        val dest = s"$base/src/t$t.parquet"
-        graft.util.Fs.move(part, dest)
-        graft.sinks.Sinks.deleteRec(tmp)
-        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
+      Streams.land(base, (0 to 1).map(t => qsrc.where(col("vec_id") % 2 === t)))
+      Streams.drain(Streams.ticks(s, s"$base/src", Tables.embeddings), s"$base/ckpt") { (batch, bid) =>
+        val qse = batch
+          .selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
+          .selectExpr("vec_id", "se",
+            "sqrt(CAST(graft_dot(se, se) AS DOUBLE)) AS nrm")
+        val probes = assignCells(qse, cents, 2)
+          .select(col("vec_id").as("q_id"), col("se").as("qse"),
+            col("nrm").as("qnrm"), col("cent_id").as("cell"))
+        val scored = assigned.join(probes, Seq("cell"))
+          .where(col("vec_id") =!= col("q_id"))
+          .selectExpr("q_id", "vec_id AS neighbor_id",
+            s"${cosExpr("qse", "se", "qnrm", "nrm")} AS cos_raw")
+        val topk = scored.withColumn("rank", row_number().over(
+            Window.partitionBy(col("q_id"))
+              .orderBy(col("cos_raw").desc, col("neighbor_id"))))
+          .where(col("rank") <= 3)
+          .withColumn("cos", Exact.fix(col("cos_raw"), 6))
+          .select(col("q_id"), col("rank"), col("neighbor_id"), col("cos"))
+        topk.write.mode("overwrite").parquet(s"$base/out/batch_$bid")
       }
-      val stream = s.readStream.schema(Tables.embeddings)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (rawBatch: DataFrame, bid: Long) =>
-          val batch = Tables.spread(rawBatch)
-          val qse = batch
-            .selectExpr("vec_id", s"${sparkScaledEmb("embedding")} AS se")
-            .selectExpr("vec_id", "se",
-              "sqrt(CAST(graft_dot(se, se) AS DOUBLE)) AS nrm")
-          val probes = assignCells(qse, cents, 2)
-            .select(col("vec_id").as("q_id"), col("se").as("qse"),
-              col("nrm").as("qnrm"), col("cent_id").as("cell"))
-          val scored = assigned.join(probes, Seq("cell"))
-            .where(col("vec_id") =!= col("q_id"))
-            .selectExpr("q_id", "vec_id AS neighbor_id",
-              s"${cosExpr("qse", "se", "qnrm", "nrm")} AS cos_raw")
-          val topk = scored.withColumn("rank", row_number().over(
-              Window.partitionBy(col("q_id"))
-                .orderBy(col("cos_raw").desc, col("neighbor_id"))))
-            .where(col("rank") <= 3)
-            .withColumn("cos", Exact.fix(col("cos_raw"), 6))
-            .select(col("q_id"), col("rank"), col("neighbor_id"), col("cos"))
-          topk.write.mode("overwrite").parquet(s"$base/out/batch_$bid")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/out")
         .orderBy(col("q_id"), col("rank"))
     })

@@ -2,12 +2,11 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.CommitEtl
 import graft.sources.Tables
 import graft.util.Exact._
-import graft.util.Fs
+import graft.util.{Fs, Streams}
 
 /** Durable sink surface: crash-safe atomic overwrite, partitioned tables
   * with pruned reads (reference O7, the KV prefix scan `git_etl.ts:142`),
@@ -81,6 +80,23 @@ object Sinks {
       val w = df.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(staged)
     }
+
+  /** O8 keyed upsert of `batch` into the parquet store `dest` (latest
+    * `orderCols` win per `key`, `CommitEtl.upsert`), published with
+    * [[writeAtomic]]. Heals `dest` before reading it: after a crash
+    * between a swap's two renames the store sits at its `.old` sibling,
+    * and an unhealed read would upsert into an empty store whose publish
+    * then drops the history. The whole store is rewritten per call, so
+    * a tick costs O(stored rows); [[mergeByKeyBucket]] is the O(touched
+    * buckets) form. */
+  def upsertInto(s: SparkSession, dest: String, batch: DataFrame,
+                 key: String, orderCols: Seq[String]): Unit = {
+    Fs.heal(dest)
+    val existing =
+      if (Fs.exists(dest)) s.read.parquet(dest)
+      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+    writeAtomic(CommitEtl.upsert(existing, batch, key, orderCols), dest)
+  }
 
   /** Partition-scoped keyed merge (the 100 TB fix for rewrite-the-world
     * upserts): the store is partitioned by a STABLE hash bucket of the key
@@ -841,18 +857,9 @@ object Sinks {
       truncate(dest); truncate(ckpt)
       val stream = graft.streaming.StreamOps.eventsStream(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val existing =
-            if (Fs.exists(dest)) s.read.parquet(dest)
-            else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-          writeAtomic(CommitEtl.upsert(existing, batch, "event_id", Seq("ts", "value")), dest)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streams.drain(stream, ckpt) { (batch, _) =>
+        upsertInto(s, dest, batch, "event_id", Seq("ts", "value"))
+      }
       s.read.parquet(dest)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumFix(col("value"), 2).as("sum_value"))
@@ -1184,8 +1191,7 @@ object Sinks {
       // semantics need multi-tick maintenance, not a specific tick count,
       // and each tick costs a full stream trigger + bucket merge
       ev.repartitionByRange(3, col("day")).write.parquet(src)
-      val agg = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val agg = Streams.ticks(s, src, ev.schema)
         .groupBy(col("event_type"), col("day"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
         .withColumn("mv_key", xxhash64(col("event_type"), col("day")))
@@ -1193,15 +1199,8 @@ object Sinks {
       // the session's core count (graft.util.Streams scaladoc: pinned
       // at first batch, AQE-exempt, fixed per-partition per-tick cost —
       // this entry was the r15 bench's worst anti-scaler at 0.37)
-      graft.util.Streams.withShufflePartitions(s,
-          graft.util.Streams.statePartitionsFor(Fs.sizeBytes(src))) {
-        val q = agg.writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            mergeByKeyBucket(s, store, b, "mv_key", Seq("n"))
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      Streams.withShufflePartitions(s, Streams.statePartitionsFor(Fs.sizeBytes(src))) {
+        Streams.drain(agg, ckpt)((b, _) => mergeByKeyBucket(s, store, b, "mv_key", Seq("n")))
       }
       s.read.parquet(store)
         .select(col("event_type"), col("day"), col("n"),

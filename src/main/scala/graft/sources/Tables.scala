@@ -163,9 +163,6 @@ object Tables {
     * partitioning-independent by construction (the oracle gate
     * hash-compares them). */
   def spread(df: DataFrame): DataFrame = {
-    // kill switch for perf bisection (and for callers that KNOW their
-    // layout): spark.graft.spread=false disables the guard session-wide
-    if (df.sparkSession.conf.get("spark.graft.spread", "true") != "true") return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // sizeInBytes is only meaningful for file-backed plans; a plan with

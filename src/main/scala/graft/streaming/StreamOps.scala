@@ -6,16 +6,21 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
 import graft.util.Exact._
+import graft.util.Streams
 
 /** Structured Streaming surface (SURVEY.md §2.2 "Streaming"): the reference's
   * cron-driven micro-batch loop (`git_etl.ts:353-355`) generalized to
   * `readStream → transform → writeStream`.
   *
   * Each entry runs a REAL streaming query — file source, watermark,
-  * AvailableNow trigger, checkpoint dir — into a DURABLE parquet sink
-  * (append mode writes the parquet sink directly; complete-mode window aggs
-  * go through `foreachBatch` + atomic overwrite). The driver's batch oracle
-  * then checks the sink contents. Nothing materializes in the driver: at
+  * AvailableNow trigger, checkpoint dir — into a DURABLE parquet store.
+  * Transforms drain through [[runToParquet]] (append mode writes the
+  * parquet sink directly; complete-mode window aggs overwrite the store
+  * atomically per batch). Tick entries — a keyed upsert or a per-tick
+  * audit over replayed arrival files — run their tick body through the
+  * engine's one tick driver ([[graft.util.Streams.drain]] over
+  * [[graft.util.Streams.ticks]]). The driver's batch oracle then checks
+  * the store contents. Nothing materializes in the driver: at
   * 100 TB the sink is the same partitioned store, just with a real
   * checkpoint volume — the transforms are unchanged, which is the point of
   * the unified batch/streaming Dataset API.
@@ -79,8 +84,8 @@ object StreamOps {
       q.awaitTermination()
     }
     if (stateBytes >= 0L)
-      graft.util.Streams.withShufflePartitions(s,
-        graft.util.Streams.statePartitionsFor(stateBytes))(drain())
+      Streams.withShufflePartitions(s,
+        Streams.statePartitionsFor(stateBytes))(drain())
     else drain()
     s.read.parquet(dest)
   }
@@ -166,8 +171,7 @@ object StreamOps {
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       ev.union(ev) // exact duplicate delivery of every event
         .repartitionByRange(2, col("ts")).write.parquet(src)
-      val dd = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val dd = Streams.ticks(s, src, ev.schema)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -259,24 +263,12 @@ object StreamOps {
           org.apache.spark.sql.types.DateType),
         org.apache.spark.sql.types.StructField("tick",
           org.apache.spark.sql.types.IntegerType)))
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val versions = Streams.ticks(s, src, schema)
         .drop("tick")
         .withColumn("vkey", concat(col("c_custkey"), lit("@"), col("vdate")))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val existing =
-            if (graft.util.Fs.exists(store))
-              s.read.parquet(store)
-            else s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-          graft.sinks.Sinks.writeAtomic(
-            graft.ingest.CommitEtl.upsert(existing, batch, "vkey",
-              Seq("seg")), store)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Streams.drain(versions, ckpt) { (batch, _) =>
+        graft.sinks.Sinks.upsertInto(s, store, batch, "vkey", Seq("seg"))
+      }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("c_custkey")).orderBy(col("vdate"))
       s.read.parquet(store)
@@ -289,8 +281,8 @@ object StreamOps {
 
     // The reference's ACTUAL runtime shape (git_etl.ts:353-355): REAL
     // multi-tick micro-batches. The source is split into 4 files,
-    // maxFilesPerTrigger=1 forces 4 sequential batches, and each batch
-    // upserts into the durable store via foreachBatch — the keyed merge
+    // the one-file-per-trigger replay forces 4 sequential batches, and
+    // each batch upserts into the durable store — the keyed merge
     // makes the final state independent of batch order (O8 idempotence).
     "stream_incremental_ticks" -> { (s, dir) =>
       val src = s"${graft.sinks.Sinks.tmpBase}/events_ticks_src"
@@ -301,23 +293,9 @@ object StreamOps {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       ev.repartitionByRange(4, col("ts")).write.parquet(src)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val existing =
-            if (graft.util.Fs.exists(dest))
-              s.read.parquet(dest)
-            else s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-          graft.sinks.Sinks.writeAtomic(
-            graft.ingest.CommitEtl.upsert(existing, batch, "event_id", Seq("ts", "value")), dest)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streams.drain(Streams.ticks(s, src, ev.schema), ckpt) { (batch, _) =>
+        graft.sinks.Sinks.upsertInto(s, dest, batch, "event_id", Seq("ts", "value"))
+      }
       s.read.parquet(dest)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumFix(col("value"), 2).as("sum_value"))
@@ -475,52 +453,36 @@ object StreamOps {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         .withColumn("tick", (col("event_id") % 3).cast("int"))
-      (0 to 2).foreach { t =>
-        val tmp = s"$base/src_stage_$t"
-        ev.where(col("tick") === t).coalesce(1).write.parquet(tmp)
-        val part = graft.util.Fs.listFiles(tmp, ".parquet").head
-        graft.util.Fs.mkdirs(s"$base/src")
-        val dest = s"$base/src/t$t.parquet"
-        graft.util.Fs.move(part, dest)
-        graft.sinks.Sinks.deleteRec(tmp)
-        // pin arrival order: the file source sorts by modification time
-        graft.util.Fs.setMtime(dest, 1700000000000L + t * 60000L)
+      Streams.land(base, (0 to 2).map(t => ev.where(col("tick") === t)))
+      Streams.drain(Streams.ticks(s, s"$base/src", ev.schema), s"$base/ckpt") { (batch, _) =>
+        val b = batch.localCheckpoint()
+        val t = b.agg(max(col("tick"))).collect()(0).getInt(0)
+        val wmDir = s"$base/wm"
+        // the 1h subtraction happens IN the plan (timestamp − interval):
+        // a driver-side getTime() round-trip would truncate micros
+        val prior =
+          if (graft.util.Fs.exists(wmDir))
+            s.read.option("recursiveFileLookup", "true").parquet(wmDir)
+              .where(col("tick") < t)
+              .select((max(col("tickmax")) - expr("INTERVAL 1 HOUR")).as("wm"))
+              .collect()(0)
+          else null
+        val wmTs =
+          if (prior == null || prior.isNullAt(0)) null
+          else prior.getTimestamp(0)
+        val audited = b
+          .withColumn("wm_ts", lit(wmTs).cast("timestamp"))
+          .agg(count(lit(1)).as("n_rows"),
+            sum(expr("CASE WHEN wm_ts IS NOT NULL AND ts < wm_ts " +
+              "THEN 1 ELSE 0 END")).as("n_late"))
+          .select(lit(t).as("tick"), lit(wmTs).cast("timestamp").as("wm_ts"),
+            col("n_rows"), col("n_late"),
+            (col("n_rows") - col("n_late")).as("n_kept"))
+        graft.sinks.Sinks.writeAtomic(audited, s"$base/audit/t$t")
+        graft.sinks.Sinks.writeAtomic(
+          b.agg(max(col("ts")).as("tickmax")).select(lit(t).as("tick"), col("tickmax")),
+          s"$base/wm/t$t")
       }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val b = batch.localCheckpoint()
-          val t = b.agg(max(col("tick"))).collect()(0).getInt(0)
-          val wmDir = s"$base/wm"
-          // the 1h subtraction happens IN the plan (timestamp − interval):
-          // a driver-side getTime() round-trip would truncate micros
-          val prior =
-            if (graft.util.Fs.exists(wmDir))
-              s.read.option("recursiveFileLookup", "true").parquet(wmDir)
-                .where(col("tick") < t)
-                .select((max(col("tickmax")) - expr("INTERVAL 1 HOUR")).as("wm"))
-                .collect()(0)
-            else null
-          val wmTs =
-            if (prior == null || prior.isNullAt(0)) null
-            else prior.getTimestamp(0)
-          val audited = b
-            .withColumn("wm_ts", lit(wmTs).cast("timestamp"))
-            .agg(count(lit(1)).as("n_rows"),
-              sum(expr("CASE WHEN wm_ts IS NOT NULL AND ts < wm_ts " +
-                "THEN 1 ELSE 0 END")).as("n_late"))
-            .select(lit(t).as("tick"), lit(wmTs).cast("timestamp").as("wm_ts"),
-              col("n_rows"), col("n_late"),
-              (col("n_rows") - col("n_late")).as("n_kept"))
-          graft.sinks.Sinks.writeAtomic(audited, s"$base/audit/t$t")
-          graft.sinks.Sinks.writeAtomic(
-            b.agg(max(col("ts")).as("tickmax")).select(lit(t).as("tick"), col("tickmax")),
-            s"$base/wm/t$t")
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/audit")
         .select(col("tick"), col("wm_ts"), col("n_rows"), col("n_late"), col("n_kept"))
         .orderBy(col("tick"))

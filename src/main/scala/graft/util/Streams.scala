@@ -1,10 +1,26 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
-/** State-store partitioning for STATEFUL streaming queries (guide §2:
-  * make partitioning scale-adaptive — derived from input size — rather
-  * than a constant tuned for either local mode or the cluster).
+import graft.sources.Tables
+
+/** The engine's one tick driver, and state-store partitioning for
+  * STATEFUL streaming queries.
+  *
+  * TICKS. The reference runs a scheduled micro-batch loop: fetch only
+  * what is new, upsert by key, resume after a crash
+  * (`git_etl.ts:319-326,353-355`). Every tick stream here is built from
+  * the same three pieces: [[land]] stages arrival slices as one file
+  * each, [[ticks]] replays a directory one file per trigger, and
+  * [[drain]] runs a tick body over every batch to the end of the backlog
+  * and resumes from its checkpoint after a crash. [[drain]] is the one
+  * place to tag, time or crash-enumerate a tick.
+  *
+  * STATE PARTITIONING (guide §2: make partitioning scale-adaptive —
+  * derived from input size — rather than a constant tuned for either
+  * local mode or the cluster).
   *
   * A stateful operator's shuffle-partition count is special in two ways:
   *
@@ -38,6 +54,45 @@ import org.apache.spark.sql.SparkSession
   * directory's bytes ARE the stream's whole input).
   */
 object Streams {
+
+  /** The file-replay tick source: `src`'s parquet files, one per
+    * trigger, in modification-time order. */
+  def ticks(s: SparkSession, src: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+
+  /** Drain `stream` to the end of its backlog (AvailableNow), running
+    * `tick` on each micro-batch after one [[Tables.spread]]. A re-run on
+    * the same `ckpt` resumes after the last committed batch, so `tick`
+    * must be idempotent per (batch, batchId). Output mode is "update":
+    * for a query without aggregation Spark treats it as append, and for
+    * a streaming aggregation it emits only the keys a batch changed.
+    *
+    * Three streams stay off this driver: `StreamOps.runToParquet`'s
+    * complete mode (it rewrites the whole result table every batch),
+    * `stream_dsv2_commits` (it writes through the parquet format sink)
+    * and `stream_processing_time` (its point is a ProcessingTime
+    * trigger). */
+  def drain(stream: DataFrame, ckpt: String)(tick: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream.outputMode("update")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch((b: DataFrame, id: Long) => tick(Tables.spread(b), id))
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+
+  /** Stage arrival slices for [[ticks]]: slice `i` becomes the single
+    * file `base/src/t<i>.parquet`, its mtime pinned to arrival order
+    * (the file source sorts its backlog by modification time). */
+  def land(base: String, slices: Seq[DataFrame]): Unit =
+    slices.zipWithIndex.foreach { case (slice, t) =>
+      val tmp = s"$base/src_stage_$t"
+      slice.coalesce(1).write.parquet(tmp)
+      val part = Fs.listFiles(tmp, ".parquet").head
+      Fs.mkdirs(s"$base/src")
+      val dest = s"$base/src/t$t.parquet"
+      Fs.move(part, dest)
+      Fs.delete(tmp)
+      Fs.setMtime(dest, 1700000000000L + t * 60000L)
+    }
 
   /** Input-volume-derived state partition count: ceil(bytes / 32 MB)
     * clamped to [1, 65536]. */

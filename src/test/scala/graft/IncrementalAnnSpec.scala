@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.llm.IncrementalAnn
 import graft.sinks.Sinks
+import graft.util.Streams
 
 /** Persisted ANN index maintenance: rebuild equivalence after the
   * re-train tick, crash-resume from the checkpoint, replay idempotence,
@@ -34,7 +35,7 @@ class IncrementalAnnSpec extends SparkSpec {
 
   test("incremental index equals one-shot across crash-resume, replay, and re-train") {
     import spark.implicits._
-    IncrementalAnn.reset(base)
+    Sinks.truncate(base)
     val d = corpus.localCheckpoint()
     val tdir = Sinks.tmpBase + "/spec_ann_table"
     Sinks.truncate(tdir)
@@ -45,14 +46,16 @@ class IncrementalAnnSpec extends SparkSpec {
     def writeSlice(cond: org.apache.spark.sql.Column): Unit =
       d.where(cond).coalesce(1).write.mode("append").parquet(s"$base/src")
     writeSlice($"vec_id" < 10)
-    IncrementalAnn.runTicks(spark, base, d.schema) // tick 1, then "crash"
+    Streams.drain(Streams.ticks(spark, s"$base/src", d.schema), s"$base/ckpt")(
+      IncrementalAnn.tick(spark, _, _, base)) // tick 1, then "crash"
     // between re-trains the index SERVES (bootstrap centroids are
     // stale-but-useful): probes return ranked neighbors right away
     assert(IncrementalAnn.serve(spark, base).count() > 0)
     // resume: remaining batches arrive, SAME checkpoint picks up only them
     writeSlice($"vec_id" >= 10 && $"vec_id" < 20)
     writeSlice($"vec_id" >= 20)
-    IncrementalAnn.runTicks(spark, base, d.schema)
+    Streams.drain(Streams.ticks(spark, s"$base/src", d.schema), s"$base/ckpt")(
+      IncrementalAnn.tick(spark, _, _, base))
     IncrementalAnn.retrain(spark, base)
     val inc = IncrementalAnn.serve(spark, base)
       .as[(Long, Int, Long, Double)].collect()
@@ -78,7 +81,7 @@ class IncrementalAnnSpec extends SparkSpec {
   test("LSH band-table store: fold-only maintenance equals one-shot across crash-resume") {
     import spark.implicits._
     val lbase = base + "_lsh"
-    IncrementalAnn.reset(lbase)
+    Sinks.truncate(lbase)
     val d = corpus.localCheckpoint()
     val tdir = Sinks.tmpBase + "/spec_ann_lsh_table"
     Sinks.truncate(tdir)
@@ -89,9 +92,11 @@ class IncrementalAnnSpec extends SparkSpec {
     def writeSlice(cond: org.apache.spark.sql.Column): Unit =
       d.where(cond).coalesce(1).write.mode("append").parquet(s"$lbase/src")
     writeSlice($"vec_id" < 12)
-    IncrementalAnn.runTicks(spark, lbase, d.schema, IncrementalAnn.tickLsh) // then "crash"
+    Streams.drain(Streams.ticks(spark, s"$lbase/src", d.schema), s"$lbase/ckpt")(
+      IncrementalAnn.tickLsh(spark, _, _, lbase)) // then "crash"
     writeSlice($"vec_id" >= 12)
-    IncrementalAnn.runTicks(spark, lbase, d.schema, IncrementalAnn.tickLsh)
+    Streams.drain(Streams.ticks(spark, s"$lbase/src", d.schema), s"$lbase/ckpt")(
+      IncrementalAnn.tickLsh(spark, _, _, lbase))
     // NO retrain exists for this index — fold ticks are the whole
     // maintenance surface (plane signatures are corpus-independent)
     val inc = IncrementalAnn.serveLsh(spark, lbase).as[(Long, Int, Long, Double)].collect()
@@ -134,7 +139,7 @@ class IncrementalAnnSpec extends SparkSpec {
   test("PQ code-table store: re-train equivalence, crash-resume, replay") {
     import spark.implicits._
     val pbase = base + "_pq"
-    IncrementalAnn.reset(pbase)
+    Sinks.truncate(pbase)
     val d = corpus.localCheckpoint()
     val tdir = Sinks.tmpBase + "/spec_ann_pq_table"
     Sinks.truncate(tdir)
@@ -145,11 +150,13 @@ class IncrementalAnnSpec extends SparkSpec {
     def writeSlice(cond: org.apache.spark.sql.Column): Unit =
       d.where(cond).coalesce(1).write.mode("append").parquet(s"$pbase/src")
     writeSlice($"vec_id" < 12)
-    IncrementalAnn.runTicks(spark, pbase, d.schema, IncrementalAnn.tickPq) // then "crash"
+    Streams.drain(Streams.ticks(spark, s"$pbase/src", d.schema), s"$pbase/ckpt")(
+      IncrementalAnn.tickPq(spark, _, _, pbase)) // then "crash"
     // stale-codebook serving between re-trains still answers probes
     assert(IncrementalAnn.servePq(spark, pbase).count() > 0)
     writeSlice($"vec_id" >= 12)
-    IncrementalAnn.runTicks(spark, pbase, d.schema, IncrementalAnn.tickPq)
+    Streams.drain(Streams.ticks(spark, s"$pbase/src", d.schema), s"$pbase/ckpt")(
+      IncrementalAnn.tickPq(spark, _, _, pbase))
     IncrementalAnn.retrainPq(spark, pbase)
     val inc = IncrementalAnn.servePq(spark, pbase)
       .as[(Long, Int, Long, Long)].collect()
@@ -169,7 +176,7 @@ class IncrementalAnnSpec extends SparkSpec {
   test("fold tick re-assigns ONLY the batch; re-ingested vectors move cells") {
     import spark.implicits._
     val rbase = base + "_reingest"
-    IncrementalAnn.reset(rbase)
+    Sinks.truncate(rbase)
     IncrementalAnn.tick(spark, corpus, 0L, rbase)
     val before = spark.read.parquet(s"$rbase/assign")
       .select($"vec_id", $"cell").as[(Long, Long)].collect().toMap

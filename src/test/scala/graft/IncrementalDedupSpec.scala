@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.llm.{Dedup, IncrementalDedup}
 import graft.sinks.Sinks
+import graft.util.Streams
 
 /** Incremental LSH index maintenance: one-shot equivalence, crash-resume
   * from the checkpoint, and at-least-once replay idempotence (the three
@@ -39,11 +40,13 @@ class IncrementalDedupSpec extends SparkSpec {
     def writeSlice(cond: org.apache.spark.sql.Column): Unit =
       d.where(cond).coalesce(1).write.mode("append").parquet(s"$base/src")
     writeSlice($"doc_id" <= 7)
-    IncrementalDedup.runTicks(spark, base, d.schema) // tick 1, then "crash"
+    Streams.drain(Streams.ticks(spark, s"$base/src", d.schema), s"$base/ckpt")(
+      IncrementalDedup.tick(spark, _, _, base)) // tick 1, then "crash"
     // resume: remaining batches arrive, SAME checkpoint picks up only them
     writeSlice($"doc_id" > 7 && $"doc_id" <= 103)
     writeSlice($"doc_id" > 103)
-    IncrementalDedup.runTicks(spark, base, d.schema)
+    Streams.drain(Streams.ticks(spark, s"$base/src", d.schema), s"$base/ckpt")(
+      IncrementalDedup.tick(spark, _, _, base))
 
     val inc = IncrementalDedup.verifyAccumulated(spark, base)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted
@@ -163,7 +166,7 @@ class IncrementalDedupSpec extends SparkSpec {
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    IncrementalDedup.ccReset(ccBase)
+    Sinks.truncate(ccBase)
     IncrementalDedup.ccTick(spark, Seq((1L, 2L)).toDF("doc_a", "doc_b"), 0L, ccBase)
     IncrementalDedup.ccTick(spark, Seq((3L, 4L)).toDF("doc_a", "doc_b"), 1L, ccBase)
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L),
@@ -183,7 +186,7 @@ class IncrementalDedupSpec extends SparkSpec {
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    IncrementalDedup.ccReset(ccBase)
+    Sinks.truncate(ccBase)
     Seq((1L, 2L)).toDF("doc_a", "doc_b")
       .coalesce(1).write.parquet(s"$ccBase/src")
     IncrementalDedup.runCcTicks(spark, ccBase) // "crash" after draining batch 0
@@ -200,7 +203,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("incremental SimHash index: one-shot equivalence, replay, forget") {
     import spark.implicits._
     val sbase = Sinks.tmpBase + "/spec_simhash"
-    IncrementalDedup.simhashReset(sbase)
+    Sinks.truncate(sbase)
     val d = corpus.localCheckpoint()
     val tdir = Sinks.tmpBase + "/spec_simhash_table"
     Sinks.truncate(tdir)
@@ -233,7 +236,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("incremental winnow index: one-shot equivalence, replay, re-crawl, forget") {
     import spark.implicits._
     val wbase = Sinks.tmpBase + "/spec_winnow"
-    IncrementalDedup.winnowReset(wbase)
+    Sinks.truncate(wbase)
     val d = corpus.localCheckpoint()
     val tdir = Sinks.tmpBase + "/spec_winnow_table"
     Sinks.truncate(tdir)
@@ -276,7 +279,7 @@ class IncrementalDedupSpec extends SparkSpec {
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    IncrementalDedup.ccReset(ccBase)
+    Sinks.truncate(ccBase)
     IncrementalDedup.ccTick(spark, Seq((1L, 2L), (1L, 5L)).toDF("doc_a", "doc_b"), 0L, ccBase)
     IncrementalDedup.ccTick(spark, Seq((3L, 4L)).toDF("doc_a", "doc_b"), 1L, ccBase)
     // construct the exact crash window of the bridge tick (batchId=2,
@@ -305,7 +308,7 @@ class IncrementalDedupSpec extends SparkSpec {
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    IncrementalDedup.ccReset(ccBase)
+    Sinks.truncate(ccBase)
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
     edges.coalesce(1).write.parquet(s"$ccBase/src")
     IncrementalDedup.ccTick(spark, edges, 0L, ccBase)
@@ -331,7 +334,7 @@ class IncrementalDedupSpec extends SparkSpec {
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    IncrementalDedup.ccReset(ccBase)
+    Sinks.truncate(ccBase)
     // chain 1-2-3 plus leaf 4 on node 1 — all one component
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 4L)).toDF("doc_a", "doc_b")
     edges.coalesce(1).write.parquet(s"$ccBase/src")
@@ -351,7 +354,7 @@ class IncrementalDedupSpec extends SparkSpec {
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    IncrementalDedup.ccReset(ccBase)
+    Sinks.truncate(ccBase)
     // 8 disjoint 2-node components; labels 1..8 land in 8 distinct
     // edge-log buckets (pmod over the default 16)
     val edges = (1L to 8L).map(k => (k, k + 100L)).toDF("doc_a", "doc_b")

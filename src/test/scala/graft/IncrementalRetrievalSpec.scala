@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.llm.{IncrementalAnn, IncrementalRetrieval, Retrieval}
+import graft.llm.{IncrementalRetrieval, Retrieval}
 import graft.sinks.Sinks
+import graft.util.Streams
 
 /** Persisted BM25 index maintenance: rebuild equivalence after the stats
   * refresh, stale-stats serving between refreshes, replay idempotence,
@@ -41,7 +42,7 @@ class IncrementalRetrievalSpec extends SparkSpec {
 
   test("incremental index equals one-shot across resume, replay, and compaction") {
     import spark.implicits._
-    IncrementalRetrieval.reset(base)
+    Sinks.truncate(base)
     val d = corpus.localCheckpoint()
     val truth = oneShot(d)
 
@@ -50,7 +51,8 @@ class IncrementalRetrievalSpec extends SparkSpec {
 
     // arrival in 3 files; only the FIRST is present before the "crash"
     writeSlice($"doc_id" < 10)
-    IncrementalAnn.runTicks(spark, base, d.schema, IncrementalRetrieval.tick)
+    Streams.drain(Streams.ticks(spark, s"$base/src", d.schema), s"$base/ckpt")(
+      IncrementalRetrieval.tick(spark, _, _, base))
     // between refreshes the index SERVES: the first refresh snapshots the
     // partial corpus, later arrivals are retrievable against it
     IncrementalRetrieval.refreshStats(spark, base)
@@ -58,7 +60,8 @@ class IncrementalRetrievalSpec extends SparkSpec {
     // resume: remaining batches arrive, SAME checkpoint picks up only them
     writeSlice($"doc_id" >= 10 && $"doc_id" < 18)
     writeSlice($"doc_id" >= 18)
-    IncrementalAnn.runTicks(spark, base, d.schema, IncrementalRetrieval.tick)
+    Streams.drain(Streams.ticks(spark, s"$base/src", d.schema), s"$base/ckpt")(
+      IncrementalRetrieval.tick(spark, _, _, base))
     // stale-stats window: new docs are candidates immediately (scored
     // with the tick-1 df snapshot), BEFORE any refresh runs
     assert(IncrementalRetrieval.serve(spark, base)
@@ -81,10 +84,11 @@ class IncrementalRetrievalSpec extends SparkSpec {
   test("forget propagates through postings, df, and avgdl") {
     import spark.implicits._
     val fbase = base + "_forget"
-    IncrementalRetrieval.reset(fbase)
+    Sinks.truncate(fbase)
     val d = corpus.localCheckpoint()
     d.coalesce(1).write.parquet(s"$fbase/src")
-    IncrementalAnn.runTicks(spark, fbase, d.schema, IncrementalRetrieval.tick)
+    Streams.drain(Streams.ticks(spark, s"$fbase/src", d.schema), s"$fbase/ckpt")(
+      IncrementalRetrieval.tick(spark, _, _, fbase))
     val del = d.select($"doc_id").where($"doc_id" % 5 === 3 && $"doc_id" >= 8)
     Sinks.deleteByKeyBucket(spark, s"$fbase/postings", del, "doc_id")
     IncrementalRetrieval.refreshStats(spark, fbase)
@@ -102,10 +106,11 @@ class IncrementalRetrievalSpec extends SparkSpec {
   test("merge-on-read forget: request rewrites zero buckets, mask serves, compaction converges") {
     import spark.implicits._
     val fbase = base + "_mor"
-    IncrementalRetrieval.reset(fbase)
+    Sinks.truncate(fbase)
     val d = corpus.localCheckpoint()
     d.coalesce(1).write.parquet(s"$fbase/src")
-    IncrementalAnn.runTicks(spark, fbase, d.schema, IncrementalRetrieval.tick)
+    Streams.drain(Streams.ticks(spark, s"$fbase/src", d.schema), s"$fbase/ckpt")(
+      IncrementalRetrieval.tick(spark, _, _, fbase))
     val store = s"$fbase/postings"
     def bucketListing: Seq[(String, Long)] = {
       val root = java.nio.file.Paths.get(store)

@@ -89,7 +89,7 @@ object SparkProperties extends Properties("spark-ops") {
       edges.isEmpty || {
         import spark.implicits._
         val base = graft.sinks.Sinks.tmpBase + "/prop_cc"
-        graft.llm.IncrementalDedup.ccReset(base)
+        graft.sinks.Sinks.truncate(base)
         edges.grouped(math.max(1, (edges.size + k - 1) / k)).zipWithIndex
           .foreach { case (b, i) =>
             graft.llm.IncrementalDedup.ccTick(

@@ -158,6 +158,11 @@ class SinksCrashSpec extends SparkSpec {
       Sinks.writeAtomic(kv(2L to 5L, "b"), _)))
   }
 
+  test("upsertInto: every crash point recovers on re-run") {
+    quietly(enumerate("upsert_into")(Sinks.writeAtomic(kv(0L to 3L, "a"), _))(
+      Sinks.upsertInto(spark, _, kv(2L to 5L, "b"), "k", Seq("v"))))
+  }
+
   test("mergeByKeyBucket first write: every crash point recovers on re-run") {
     quietly(enumerate("merge_first")(_ => ())(merge(_, kv(0L to 5L, "a"))))
   }

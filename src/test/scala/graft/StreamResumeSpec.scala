@@ -59,8 +59,7 @@ class StreamResumeSpec extends SparkSpec {
     val nKeys = ev.select(col("event_id")).distinct().count() // 1000
     ev.union(ev) // duplicate delivery of every key
       .repartitionByRange(6, col("ts")).write.parquet(src)
-    val q = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
+    val q = graft.util.Streams.ticks(spark, src, ev.schema)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .writeStream.format("noop")

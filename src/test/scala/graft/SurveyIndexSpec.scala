@@ -69,4 +69,15 @@ class SurveyIndexSpec extends AnyFunSuite {
     assert(filesContaining("GraftFunctions.register(") ===
       Set("main/scala/graft/Session.scala", "main/scala/graft/SparkEntry.scala"))
   }
+
+  test("foreachBatch streams are driven only by Streams.drain and runToParquet") {
+    // runToParquet's complete mode stays off drain: it rewrites the whole
+    // result table on every batch
+    assert(filesContaining(".foreachBatch") ===
+      Set("main/scala/graft/util/Streams.scala", "main/scala/graft/streaming/StreamOps.scala"))
+  }
+
+  test("file-replay tick sources are built only by Streams.ticks") {
+    assert(filesContaining("maxFilesPerTrigger\"") === Set("main/scala/graft/util/Streams.scala"))
+  }
 }
