@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.functions.GraftFunctions
+import graft.sinks.Sinks
 import graft.sources.Tables
 
 /** The one place a session is built, and the one helper that overrides
@@ -10,14 +11,16 @@ import graft.sources.Tables
 object Session {
 
   /** A `local[cpus]` session under the driver contract: shuffle
-    * partitions = cpus, UI off, then [[Tables.sessionConfs]], then
-    * `confs` (last wins). The graft functions and optimizer rule are
-    * registered on it before it is returned. */
+    * partitions = cpus, UI off, managed tables (q_bucketed_join) in the
+    * run's scratch root, then [[Tables.sessionConfs]], then `confs` (last
+    * wins). The graft functions and optimizer rule are registered on it
+    * before it is returned. */
   def build(cpus: Int, confs: Map[String, String]): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", s"${Sinks.runRoot}/warehouse")
     (Tables.sessionConfs ++ confs).foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     GraftFunctions.register(s)

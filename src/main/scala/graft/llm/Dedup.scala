@@ -175,17 +175,6 @@ object Dedup {
     winnowCapFps(winnowFingerprintsOf(corpus).localCheckpoint(),
       corpusCountOf(corpus))
 
-  /** Winnow-family CANDIDATE pairs: docs sharing any capped fingerprint —
-    * the pre-verdict pair generator the family-recall audit scores
-    * (bounded by the df cap exactly like the MinHash band join). */
-  private[llm] def winnowCandidatesOf(corpus: DataFrame): DataFrame = {
-    val fpc = winnowCappedFps(corpus).localCheckpoint()
-    fpc.alias("a").join(fpc.alias("b"),
-        col("a.fh") === col("b.fh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
-
   /** Winnowing near-dup pairs (q_llm_winnow_dedup body): selected
     * fingerprints drive the usual bounded pair join — corpus-relative df
     * cap, shared-fingerprint counting, overlap vs the smaller doc's set.
@@ -806,7 +795,7 @@ object Dedup {
     val buckets = math.max(SubMergeBuckets.toLong,
       math.min(65536L, 12L * totalChars / SubBucketBytes)).toInt
     val base =
-      s"${graft.sinks.Sinks.tmpBase}/sub_occ/${java.util.UUID.randomUUID().toString.take(8)}"
+      graft.sinks.Sinks.scratch(s"sub_occ/${java.util.UUID.randomUUID().toString.take(8)}")
     // dynamic-partition writes below fan one task across `buckets`
     // directories; concurrent writers skip the per-task partition SORT
     // the default path inserts (profiled: the sort+spill of the 1.66e9-row
@@ -1239,8 +1228,7 @@ object Dedup {
     // oracle IS q_llm_dedup_groups', since strategy choice is
     // availability/cost, never semantics.
     "q_llm_dedup_groups_store" -> { (s, dir) =>
-      val ckDir = s"${graft.sinks.Sinks.tmpBase}/groups_store_ckpt"
-      graft.sinks.Sinks.truncate(ckDir)
+      val ckDir = graft.sinks.Sinks.scratch("groups_store_ckpt")
       val ck = graft.util.Checkpointer.Store(ckDir)
       val pairs = minhashVerifiedPairsOf(docs(s, dir), ckpt = ck)
         .select(col("doc_a"), col("doc_b"))
@@ -1702,8 +1690,7 @@ object Dedup {
       // under [[FamilyRecallLocalMaxBytes]], Store above. Both
       // strategies are contents-identical by the Checkpointer contract
       // (spec-asserted there); the oracle hash pins this entry either way.
-      val ckBase = s"${graft.sinks.Sinks.tmpBase}/family_recall_ck"
-      graft.sinks.Sinks.truncate(ckBase)
+      val ckBase = graft.sinks.Sinks.scratch("family_recall_ck")
       val ck: graft.util.Checkpointer =
         if (d.queryExecution.optimizedPlan.stats.sizeInBytes
             <= FamilyRecallLocalMaxBytes) graft.util.Checkpointer.Local

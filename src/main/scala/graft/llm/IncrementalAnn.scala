@@ -281,8 +281,7 @@ object IncrementalAnn {
     // one-shot IVF SQL — rebuild equivalence is the driver-checked
     // contract, exactly the IncrementalDedup pattern.
     "q_llm_knn_ivf_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/ann_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("ann_inc")
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(3, col("vec_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tick(s, _, _, base))
@@ -308,8 +307,7 @@ object IncrementalAnn {
     // still carry the deleted vectors' mass — that's WHY delete + swap
     // is a two-step maintenance pass in production too.
     "q_llm_knn_ivf_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/ann_forget"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("ann_forget")
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tick(s, _, _, base))
@@ -330,8 +328,7 @@ object IncrementalAnn {
     // bit-identical to the one-shot bucketed corpus under any arrival
     // order. Oracle = the one-shot LSH SQL.
     "q_llm_knn_lsh_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/ann_lsh_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("ann_lsh_inc")
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(3, col("vec_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickLsh(s, _, _, base))
@@ -354,8 +351,7 @@ object IncrementalAnn {
     // driver checks the deletion propagated through bucketing, candidate
     // join, and serving.
     "q_llm_knn_lsh_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/ann_lsh_forget"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("ann_lsh_forget")
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickLsh(s, _, _, base))
@@ -371,8 +367,7 @@ object IncrementalAnn {
     // schedules); serving reads the code table only. Oracle = the
     // one-shot PQ SQL — rebuild equivalence, driver-checked.
     "q_llm_knn_pq_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/ann_pq_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("ann_pq_inc")
       val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickPq(s, _, _, base))
@@ -391,8 +386,7 @@ object IncrementalAnn {
     "q_llm_knn_pq_forget" -> pqForgetEntry)
 
   private val pqForgetEntry: (SparkSession, String) => DataFrame = { (s, dir) =>
-    val base = s"${Sinks.tmpBase}/ann_pq_forget"
-    Sinks.truncate(base)
+    val base = Sinks.scratch("ann_pq_forget")
     val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     e.repartitionByRange(2, col("vec_id")).write.parquet(s"$base/src")
     Streams.drain(Streams.ticks(s, s"$base/src", e.schema), s"$base/ckpt")(tickPq(s, _, _, base))

@@ -674,8 +674,7 @@ object IncrementalDedup {
     // persisted LSH index and deduping only its batch against it. The
     // oracle is the ONE-SHOT minhash-LSH SQL — equivalence is the check.
     "q_llm_dedup_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/neardup_inc"
-      reset(base)
+      val base = Sinks.scratch("neardup_inc")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt")(tick(s, _, _, base))
@@ -698,8 +697,7 @@ object IncrementalDedup {
     // ticks (a later edge bridging two stored components) are the
     // spec-tested hard case.
     "q_llm_groups_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/cc_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("cc_inc")
       val p = Dedup.verifiedPairsCached(s, dir)
       p.repartitionByRange(3, col("doc_a")).write.parquet(s"$base/src")
       runCcTicks(s, base)
@@ -719,8 +717,7 @@ object IncrementalDedup {
     // stream is fixed at ingest), deliberately distinct from
     // q_llm_forget's corpus-level re-verification.
     "q_llm_groups_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/cc_forget"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("cc_forget")
       val p = Dedup.verifiedPairsCached(s, dir)
       // 2 arrival ticks (vs the 3 of q_llm_groups_incremental): forget
       // semantics need an incrementally built store, not a tick count
@@ -743,8 +740,7 @@ object IncrementalDedup {
     // SQL — rebuild equivalence, driver-checked, the same contract as
     // the MinHash and ANN stores.
     "q_llm_dedup_simhash_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/simhash_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("simhash_inc")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema)
@@ -757,8 +753,7 @@ object IncrementalDedup {
     // bucket counts shrink accordingly. Oracle = the one-shot SQL over
     // the kept corpus.
     "q_llm_dedup_simhash_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/simhash_forget"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("simhash_forget")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema)
@@ -774,8 +769,7 @@ object IncrementalDedup {
     // kernel work; the payload store is never re-read. Oracle = the
     // one-shot q_llm_media_neardup SQL — rebuild equivalence.
     "q_llm_media_neardup_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/media_fp_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("media_fp_inc")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema, fpExpr = MediaFpExpr)
@@ -788,8 +782,7 @@ object IncrementalDedup {
     // and the capped bucket counts shrink. Oracle = one-shot media SQL
     // over the kept corpus.
     "q_llm_media_neardup_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/media_fp_forget"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("media_fp_forget")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
       runSimhashTicks(s, base, d.schema, fpExpr = MediaFpExpr)
@@ -804,8 +797,7 @@ object IncrementalDedup {
     // q_llm_winnow_dedup SQL — rebuild equivalence, driver-checked, the
     // same contract as the MinHash/SimHash/ANN stores.
     "q_llm_winnow_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/winnow_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("winnow_inc")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       runWinnowTicks(s, base, d.schema)
@@ -817,8 +809,7 @@ object IncrementalDedup {
     // generate pairs and the corpus-relative df cap shrinks with the
     // store. Oracle = the one-shot SQL over the kept corpus.
     "q_llm_winnow_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/winnow_forget"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("winnow_forget")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
       runWinnowTicks(s, base, d.schema)
@@ -849,8 +840,7 @@ object IncrementalDedup {
       val oldSigsR = oldSigs.select(
         col("doc_id").as("old_id") +:
           (0 until XHash.K).map(k => col(s"m$k").as(s"o$k")): _*)
-      val base = s"${Sinks.tmpBase}/stream_dedup_gate"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("stream_dedup_gate")
       val newDocs = d.where(col("doc_id") % 3 === 0)
       Streams.land(base, (0 to 1).map(t => newDocs.where(expr(s"(doc_id DIV 3) % 2 = $t"))))
       val agreeExpr = (0 until XHash.K).map(k => s"IF(m$k = o$k, 1, 0)").mkString(" + ")
@@ -886,8 +876,7 @@ object IncrementalDedup {
     // the deletion propagated through count, df universe, candidates, and
     // verification, not just the manifest.
     "q_llm_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/neardup_forget"
-      reset(base)
+      val base = Sinks.scratch("neardup_forget")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       // 2 arrival ticks (vs the 3 of q_llm_dedup_incremental): the forget
       // semantics need an index built incrementally, not a specific tick

@@ -120,8 +120,7 @@ object IncrementalRetrieval {
     // schedules), and rankings are SERVED from the stores. Oracle = the
     // one-shot BM25 SQL — rebuild equivalence, driver-checked.
     "q_llm_bm25_incremental" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/bm25_inc"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("bm25_inc")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(3, col("doc_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt")(tick(s, _, _, base))
@@ -148,8 +147,7 @@ object IncrementalRetrieval {
     // deleteByKeyBucket) and the compaction convergence by
     // IncrementalRetrievalSpec + SinksSpec.
     "q_llm_bm25_forget" -> { (s, dir) =>
-      val base = s"${Sinks.tmpBase}/bm25_forget"
-      Sinks.truncate(base)
+      val base = Sinks.scratch("bm25_forget")
       val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       d.repartitionByRange(2, col("doc_id")).write.parquet(s"$base/src")
       Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt")(tick(s, _, _, base))

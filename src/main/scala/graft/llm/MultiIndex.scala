@@ -48,7 +48,7 @@ object MultiIndex {
     val ctx = s.sparkContext
     built.entrySet.removeIf(e => e.getValue._1.isStopped)
     built.computeIfAbsent((ctx.applicationId, dir), _ => {
-      val base = s"${Sinks.tmpBase}/multi_ingest"
+      val base = Sinks.scratch("multi_ingest")
       // timed as a shared build: Bench re-attributes these seconds to a
       // `shared_build_multi_ingest` pseudo-entry so the four serving
       // entries' numbers mean serve cost, not build-landed-here
@@ -58,7 +58,6 @@ object MultiIndex {
   }
 
   private def build(s: SparkSession, dir: String, base: String): Unit = {
-    Sinks.truncate(base)
     val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     // same 3 range batches as every standalone incremental entry — the
     // stores end up identical, which is what lets each family reuse its

@@ -150,8 +150,7 @@ object Safety {
       val evalSet = Dedup.shingleStreamOf(d.where(col("doc_id") % EvalMod === 0))
         .select(col("sg")).distinct().withColumn("hit", lit(1L))
         .localCheckpoint()
-      val base = s"${graft.sinks.Sinks.tmpBase}/stream_decontam_gate"
-      graft.sinks.Sinks.truncate(base)
+      val base = graft.sinks.Sinks.scratch("stream_decontam_gate")
       val newDocs = d.where(col("doc_id") % EvalMod =!= 0)
       Streams.land(base, (0 to 1).map(t => newDocs.where(expr(s"doc_id % 2 = $t"))))
       Streams.drain(Streams.ticks(s, s"$base/src", d.schema), s"$base/ckpt") { (batch, bid) =>

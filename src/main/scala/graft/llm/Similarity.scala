@@ -819,8 +819,7 @@ object Similarity {
       val assigned = assignCells(se, cents, 1)
         .select(col("vec_id"), col("se"), col("nrm"), col("cent_id").as("cell"))
         .localCheckpoint()
-      val base = s"${graft.sinks.Sinks.tmpBase}/stream_ann_serve"
-      graft.sinks.Sinks.truncate(base)
+      val base = graft.sinks.Sinks.scratch("stream_ann_serve")
       val qsrc = Tables.load(s, dir, "embeddings").where(col("vec_id") < 10)
       Streams.land(base, (0 to 1).map(t => qsrc.where(col("vec_id") % 2 === t)))
       Streams.drain(Streams.ticks(s, s"$base/src", Tables.embeddings), s"$base/ckpt") { (batch, bid) =>

@@ -107,7 +107,7 @@ object Cbo {
           "customer" -> Seq("c_custkey", "c_nationkey"),
           "nation" -> Seq("n_nationkey", "n_regionkey", "n_name"),
           "region" -> Seq("r_regionkey", "r_name")))
-      val out = s"${Sinks.tmpBase}/cbo_join_reorder"
+      val out = Sinks.scratch("cbo_join_reorder")
       withCbo(s) {
         val li = s.table(s"$db.lineitem")
         val or = s.table(s"$db.orders")

@@ -50,8 +50,7 @@ object Extras {
     // CSV source: write nation as csv, read it back through the csv reader
     // with an explicit schema, then a broadcast join to region.
     "q_csv_scan" -> { (s, dir) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/nation_csv"
-      graft.sinks.Sinks.truncate(dest)
+      val dest = graft.sinks.Sinks.scratch("nation_csv")
       t(s, dir, "nation").write.option("header", "true").csv(dest)
       val nation = s.read.schema(Tables.nation).option("header", "true").csv(dest)
       nation.join(broadcast(t(s, dir, "region")),
@@ -63,8 +62,7 @@ object Extras {
 
     // JSON source: write supplier as json lines, read back with schema.
     "q_json_scan" -> { (s, dir) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/supplier_json"
-      graft.sinks.Sinks.truncate(dest)
+      val dest = graft.sinks.Sinks.scratch("supplier_json")
       t(s, dir, "supplier").write.json(dest)
       s.read.schema(Tables.supplier).json(dest)
         .groupBy(col("s_nationkey"))
@@ -77,8 +75,7 @@ object Extras {
     // as parquet — the point is the format surface, not a new plan
     // shape). The pushed filter and pruned schema land in the OrcScan.
     "q_orc_scan" -> { (s, dir) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/orders_orc"
-      graft.sinks.Sinks.truncate(dest)
+      val dest = graft.sinks.Sinks.scratch("orders_orc")
       t(s, dir, "orders").write.orc(dest)
       s.read.orc(dest)
         .where(col("o_orderstatus") =!= "F")
@@ -94,8 +91,7 @@ object Extras {
     // upgrade independently. Merge cost is O(files) footer metadata, not
     // data; the read plan is an ordinary pruned scan afterwards.
     "q_schema_evolution" -> { (s, dir) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/orders_evo"
-      graft.sinks.Sinks.truncate(dest)
+      val dest = graft.sinks.Sinks.scratch("orders_evo")
       val base = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       base.where(col("o_orderkey") % 2 === 0)
@@ -271,8 +267,7 @@ object Extras {
     // exercise the commit fan-in; the read-back resolves THROUGH the
     // manifest, so staged/orphaned files can't leak into the answer.
     "q_dsv2_write" -> { (s, dir) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/dsv2_write_store"
-      graft.sinks.Sinks.truncate(dest)
+      val dest = graft.sinks.Sinks.scratch("dsv2_write_store")
       Tables.load(s, dir, "events")
         .selectExpr("event_id AS k", "event_type AS v",
           "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents")

@@ -140,7 +140,7 @@ object Relational {
     // year dimension prunes its partitions at runtime, so the scan reads
     // 4 of 7 year directories. Profit by supplier nation × order year.
     "q9_snowflake_profit" -> { (s, dir) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/lineitem_by_year"
+      val dest = graft.sinks.Sinks.scratch("lineitem_by_year")
       graft.sinks.Sinks.writeAtomic(
         t(s, dir, "lineitem").withColumn("l_shipyear", year(col("l_shipdate"))),
         dest, partitionCols = Seq("l_shipyear"))

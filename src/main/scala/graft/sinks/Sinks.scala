@@ -1,5 +1,9 @@
 package graft.sinks
 
+import java.util.UUID
+
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,8 +26,29 @@ import graft.util.{Fs, Streams}
   * it. */
 object Sinks {
 
-  /** All sink queries write beneath the build dir — never outside the repo. */
-  val tmpBase = "/root/repo/target/qtmp"
+  /** This JVM's scratch root, `target/qtmp/run-<pid>-<random>` under the
+    * working directory: two runs on one machine, or a run from a copy of
+    * the tree, never share a path. Naming it creates nothing — the first
+    * write beneath it does — and the whole root is deleted when the JVM
+    * exits, after Spark's own shutdown and before Hadoop closes its
+    * filesystems. */
+  lazy val runRoot: String = {
+    val root = s"${System.getProperty("user.dir")}/target/qtmp/" +
+      s"run-${ProcessHandle.current.pid}-${UUID.randomUUID.toString.take(8)}"
+    ShutdownHookManager.get()
+      .addShutdownHook(() => Fs.delete(root), FileSystem.SHUTDOWN_HOOK_PRIORITY + 10)
+    root
+  }
+
+  /** The scratch path `name` beneath [[runRoot]], empty: whatever an
+    * earlier call left there is deleted with its publish sidecars
+    * ([[truncate]]), and the first write creates it. The one place an
+    * entry's scratch gets its location and starts empty. */
+  def scratch(name: String): String = {
+    val p = s"$runRoot/$name"
+    truncate(p)
+    p
+  }
 
   def deleteRec(p: String): Unit = Fs.delete(p)
 
@@ -698,8 +723,7 @@ object Sinks {
     // overlapping-redelivery scenario (same semantics as ingest_upsert,
     // but durable and bucket-scoped instead of rewrite-the-world).
     "q_sink_partition_merge" -> { (s, dir) =>
-      val dest = s"$tmpBase/events_bucketed_store"
-      truncate(dest)
+      val dest = scratch("events_bucketed_store")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       val b1 = ev.where(col("ts") < lit("2024-01-20").cast(org.apache.spark.sql.types.TimestampType))
@@ -725,9 +749,8 @@ object Sinks {
     // phase snapshot BEFORE compactDeletes mutates the store (DataFrames
     // are lazy; executing them afterwards would read the compacted data).
     "q_sink_delete_mor" -> { (s, dir) =>
-      val dest = s"$tmpBase/orders_mor"
-      val snap = s"$tmpBase/orders_mor_phases"
-      truncate(dest); truncate(snap)
+      val base = scratch("orders_mor")
+      val (dest, snap) = (s"$base/store", s"$base/phases")
       val orders = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       mergeByKeyBucket(s, dest, orders, "o_orderkey", Seq("o_totalprice"))
@@ -749,7 +772,7 @@ object Sinks {
     // partition filter — the scan touches only the matching directory
     // (PartitionFilters in .explain), exactly the reference's prefix scan.
     "q_sink_partitioned_prune" -> { (s, dir) =>
-      val dest = s"$tmpBase/events_by_type"
+      val dest = scratch("events_by_type")
       writeAtomic(Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"), col("event_type")),
         dest, partitionCols = Seq("event_type"))
@@ -769,7 +792,7 @@ object Sinks {
     // this plan reads every partition; with it, 2 of 5. PlanShapeSpec
     // asserts `dynamicpruning` actually appears in the scan.
     "q_sink_dpp" -> { (s, dir) =>
-      val dest = s"$tmpBase/events_dpp"
+      val dest = scratch("events_dpp")
       writeAtomic(Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type")),
         dest, partitionCols = Seq("event_type"))
@@ -786,7 +809,7 @@ object Sinks {
     // Atomic overwrite: write a v1 snapshot, overwrite with v2; the read
     // must see ONLY v2 (no partial/mixed state).
     "q_sink_atomic_overwrite" -> { (s, dir) =>
-      val dest = s"$tmpBase/orders_snapshot"
+      val dest = scratch("orders_snapshot")
       val orders = Tables.load(s, dir, "orders")
       writeAtomic(orders.where(col("o_orderstatus") === "F"), dest)
       writeAtomic(orders.where(col("o_orderstatus") =!= "F"), dest)
@@ -810,8 +833,7 @@ object Sinks {
     // dirs are garbage, not corruption — a janitor deletes dirs above
     // the manifest pointer.
     "q_sink_multi_atomic" -> { (s, dir) =>
-      val base = s"$tmpBase/multi_atomic"
-      truncate(base)
+      val base = scratch("multi_atomic")
       val or = Tables.load(s, dir, "orders")
       def stats(src: org.apache.spark.sql.DataFrame, key: String) =
         src.groupBy(col(key).as("k"))
@@ -836,7 +858,7 @@ object Sinks {
     // O11: write, truncate, re-write a subset; result reflects only the
     // post-truncate state.
     "q_sink_truncate" -> { (s, dir) =>
-      val dest = s"$tmpBase/customer_store"
+      val dest = scratch("customer_store")
       val cust = Tables.load(s, dir, "customer")
       writeAtomic(cust, dest)
       truncate(dest)
@@ -852,9 +874,8 @@ object Sinks {
     // key → atomic overwrite), with a checkpoint dir. The scale path the
     // memory sink can't offer: state lives in the store, not the driver.
     "q_sink_foreachbatch_upsert" -> { (s, dir) =>
-      val dest = s"$tmpBase/events_merged"
-      val ckpt = s"$tmpBase/events_merged.ckpt"
-      truncate(dest); truncate(ckpt)
+      val base = scratch("events_merged")
+      val (dest, ckpt) = (s"$base/store", s"$base/ckpt")
       val stream = graft.streaming.StreamOps.eventsStream(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       Streams.drain(stream, ckpt) { (batch, _) =>
@@ -902,8 +923,7 @@ object Sinks {
     // << the full domain), all in exact integer arithmetic the oracle
     // reproduces.
     "q_sink_zorder" -> { (s, dir) =>
-      val dest = s"$tmpBase/lineitem_zorder"
-      truncate(dest)
+      val dest = scratch("lineitem_zorder")
       val zbits = (0 until 6)
         .map(i => s"(((bx >> $i) & 1) << ${2 * i + 1}) + (((by >> $i) & 1) << ${2 * i})")
         .mkString(" + ")
@@ -929,8 +949,7 @@ object Sinks {
     // are aggregated with a literal `version` tag so one result exercises
     // both read paths; the oracle replays the update waves relationally.
     "q_sink_time_travel" -> { (s, dir) =>
-      val store = s"$tmpBase/orders_versioned"
-      deleteRec(store)
+      val store = scratch("orders_versioned")
       val orders = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_custkey").as("val"))
       commitVersion(s, store, orders, "o_orderkey")                     // v0
@@ -965,8 +984,7 @@ object Sinks {
     // spawns a new key. Result persists via the atomic staged swap and
     // reads back — the durable dimension a downstream join would see.
     "q_sink_scd2" -> { (s, dir) =>
-      val store = s"$tmpBase/customer_scd2"
-      truncate(store)
+      val store = scratch("customer_scd2")
       writeAtomic(scd2Of(s, dir, "2024-06-01"), store)
       s.read.parquet(store).orderBy(col("c_custkey"), col("eff_from"))
     },
@@ -1008,9 +1026,8 @@ object Sinks {
     // the clean-side payload sum — counts that must add up to the
     // source, spec-asserted.
     "q_sink_quarantine" -> { (s, dir) =>
-      val clean = s"$tmpBase/events_clean"
-      val dlq = s"$tmpBase/events_dlq"
-      truncate(clean); truncate(dlq)
+      val base = scratch("quarantine")
+      val (clean, dlq) = (s"$base/clean", s"$base/dlq")
       // the canonical Spark dead-letter pattern: PERMISSIVE parse with a
       // corrupt-record column — malformed payloads land verbatim in
       // `_bad` instead of silently nulling out (from_json never returns
@@ -1046,8 +1063,7 @@ object Sinks {
     },
 
     "q_sink_changefeed" -> { (s, dir) =>
-      val store = s"$tmpBase/orders_cdc"
-      deleteRec(store)
+      val store = scratch("orders_cdc")
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_custkey").as("val"))
       commitVersion(s, store, base, "o_orderkey")                         // v0
@@ -1073,9 +1089,8 @@ object Sinks {
     // is 100 TB and a window touches 0.1% of keys. The oracle states the
     // source's FINAL state declaratively: apply ≡ recompute.
     "q_sink_cdc_apply" -> { (s, dir) =>
-      val src = s"$tmpBase/cdc_apply_src"
-      val rep = s"$tmpBase/cdc_apply_replica"
-      deleteRec(src); truncate(rep)
+      val scr = scratch("cdc_apply")
+      val (src, rep) = (s"$scr/src", s"$scr/replica")
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_custkey").as("val"))
       commitVersion(s, src, base, "o_orderkey")                         // v0
@@ -1127,8 +1142,7 @@ object Sinks {
     // buckets, never the view. Oracle: the one-shot join against the
     // updated dim (maintenance ≡ recompute).
     "q_sink_join_mv" -> { (s, dir) =>
-      val store = s"$tmpBase/join_mv"
-      truncate(store)
+      val store = scratch("join_mv")
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
       val ord = Tables.load(s, dir, "orders")
@@ -1180,10 +1194,8 @@ object Sinks {
     // grow, so max-n upsert resolution is idempotent under re-delivery.
     // Oracle = the one-shot GROUP BY (maintenance ≡ recompute).
     "q_sink_incremental_agg" -> { (s, dir) =>
-      val src = s"$tmpBase/events_mv_src"
-      val store = s"$tmpBase/events_mv_store"
-      val ckpt = store + ".ckpt"
-      truncate(src); truncate(store); truncate(ckpt)
+      val base = scratch("events_mv")
+      val (src, store, ckpt) = (s"$base/src", s"$base/store", s"$base/ckpt")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_type"), to_date(col("ts")).as("day"),
           graft.util.Exact.scaled(col("value"), 2).as("cents"))

@@ -24,6 +24,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.Fs
+
 /** DataSource V2 reader over a graft bucket store (`Sinks.mergeByKeyBucket`
   * layout: parquet part files under `<path>/_bucket=<i>/` +
   * `_graft_buckets` metadata)
@@ -79,21 +81,17 @@ object BucketStoreSource {
     * sidecar lives at store level and never matches `_bucket=`) are
     * skipped the same way Spark's own file index hides them. */
   private[sources] def bucketDirs(path: String): Seq[(Int, Seq[String])] = {
-    val root = new java.io.File(path)
-    require(root.isDirectory, s"no bucket store at $path")
-    val dirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("_bucket="))
-      .flatMap { d =>
-        val files = Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(_.getAbsolutePath).sorted.toSeq
-        // an emptied bucket dir contributes no partition (deleteByKeyBucket
-        // drops emptied buckets entirely, so this is the crash-window case)
-        if (files.isEmpty) None
-        else Some(d.getName.stripPrefix("_bucket=").toInt -> files)
+    require(Fs.isDirectory(path), s"no bucket store at $path")
+    Fs.listDirs(path).filter(_.startsWith("_bucket=")).flatMap { d =>
+      val files = Fs.listFiles(s"$path/$d", ".parquet").filterNot { f =>
+        val name = new Path(f).getName
+        name.startsWith("_") || name.startsWith(".")
       }
-    dirs.sortBy(_._1).toSeq
+      // an emptied bucket dir contributes no partition (deleteByKeyBucket
+      // drops emptied buckets entirely, so this is the crash-window case)
+      if (files.isEmpty) None
+      else Some(d.stripPrefix("_bucket=").toInt -> files)
+    }.sortBy(_._1)
   }
 
   private def firstDataFile(path: String): String =
@@ -210,7 +208,7 @@ class BucketStoreScan(path: String, required: StructType)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private lazy val bytes = parts.flatMap(_.files)
-      .map(f => new java.io.File(f).length()).sum
+      .map(Fs.sizeBytes).sum
     override def sizeInBytes(): util.OptionalLong =
       util.OptionalLong.of(math.max(1L, bytes))
     override def numRows(): util.OptionalLong = util.OptionalLong.empty()
@@ -310,14 +308,14 @@ object Spj {
   def read(s: SparkSession, store: String): DataFrame =
     s.read.format("graft.sources.BucketStoreSource").option("path", store).load()
 
-  /** Build the two co-bucketed stores: orders bucketed by the JOIN key
+  /** Build the two co-bucketed stores at empty paths (the merge would
+    * fold into whatever they held): orders bucketed by the JOIN key
     * (`o_custkey` via `bucketCol` — clustered by the dimension FK, keyed
     * by its own PK) and customer bucketed by its PK. Same bucket count,
     * same `pmod` law → partition i holds exactly the keys partition i of
     * the other store holds. */
   def buildStores(s: SparkSession, dir: String,
                   ordStore: String, custStore: String, nBuckets: Int): Unit = {
-    Sinks.truncate(ordStore); Sinks.truncate(custStore)
     val orders = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     val customer = Tables.load(s, dir, "customer")
@@ -339,9 +337,8 @@ object Spj {
     // PROVE co-partitioning. This is the 100 TB store-store join: two
     // co-bucketed index stores join without moving a row.
     "q_dsv2_spj_join" -> { (s, dir) =>
-      val ordStore = s"${Sinks.tmpBase}/spj_orders_store"
-      val custStore = s"${Sinks.tmpBase}/spj_customer_store"
-      val out = s"${Sinks.tmpBase}/spj_join_out"
+      val base = Sinks.scratch("spj_join")
+      val (ordStore, custStore, out) = (s"$base/orders", s"$base/customer", s"$base/out")
       buildStores(s, dir, ordStore, custStore, nBuckets = 16)
       withSpj(s) {
         val o = read(s, ordStore).alias("o")

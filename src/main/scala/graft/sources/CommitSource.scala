@@ -323,13 +323,6 @@ case class CommitPage(start: Long, end: Long) extends InputPartition
 case class CommitOrderedSlice(start: Long, end: Long, desc: Boolean)
   extends InputPartition
 
-object CommitScan {
-  /** Diagnostic for specs (single-JVM local mode): the partition count of
-    * the most recent `planInputPartitions` call — lets a test observe
-    * that runtime filtering actually re-planned to fewer pages. */
-  @volatile var lastPlannedPartitions: Int = -1
-}
-
 class CommitScan(totalRows: Long, sinceMicros: Long, required: StructType,
                  limitPushed: Option[(Int, Boolean)] = None,
                  batchRows: Long = CommitSource.PageSize)
@@ -404,7 +397,7 @@ class CommitScan(totalRows: Long, sinceMicros: Long, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     // source-side pushdown: the `since` bound maps to a starting row
     // index and earlier PAGES are never planned at all
-    val parts: Array[InputPartition] = limitPushed match {
+    limitPushed match {
       case Some((k, desc)) =>
         // k-row slice of the filtered range, served in pushed order from
         // ONE partition (k is a user-facing LIMIT — always small)
@@ -428,8 +421,6 @@ class CommitScan(totalRows: Long, sinceMicros: Long, required: StructType,
             math.min((p + 1) * CommitSource.PageSize, totalRows)): InputPartition
         }.toArray
     }
-    CommitScan.lastPlannedPartitions = parts.length
-    parts
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

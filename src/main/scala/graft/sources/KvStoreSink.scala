@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.io.{BufferedWriter, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -135,7 +136,8 @@ class KvWriterFactory(path: String, queryId: String) extends DataWriterFactory {
 class KvDataWriter(path: String, queryId: String, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
   private val fileName = s"part-$queryId-$partitionId-$taskId.jsonl"
-  private val out = Files.newBufferedWriter(Paths.get(path, ".staging", fileName))
+  private val staged = s"$path/.staging/$fileName"
+  private val out = new BufferedWriter(new OutputStreamWriter(Fs.create(staged), UTF_8))
   private var rows = 0L
 
   private def esc(s: String): String =
@@ -167,7 +169,7 @@ class KvDataWriter(path: String, queryId: String, partitionId: Int, taskId: Long
 
   override def abort(): Unit = {
     out.close()
-    Files.deleteIfExists(Paths.get(path, ".staging", fileName))
+    Fs.delete(staged)
   }
 
   override def close(): Unit = ()

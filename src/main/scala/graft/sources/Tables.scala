@@ -110,8 +110,6 @@ object Tables {
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    // bucketed-table demos (q_bucketed_join) write managed tables here
-    "spark.sql.warehouse.dir" -> "/root/repo/target/warehouse",
     // FileOutputCommitter v2 (r15): task commit renames task output
     // directly into the destination instead of deferring every rename to
     // a SEQUENTIAL driver-side job commit — v1's job-commit loop is

@@ -67,9 +67,8 @@ object StreamOps {
     * stores and keep the session default. */
   private def runToParquet(s: SparkSession, name: String, df: DataFrame,
                            complete: Boolean, stateBytes: Long = -1L): DataFrame = {
-    val dest = s"${graft.sinks.Sinks.tmpBase}/stream_$name"
-    val ckpt = dest + ".ckpt"
-    graft.sinks.Sinks.truncate(dest); graft.sinks.Sinks.truncate(ckpt)
+    val base = graft.sinks.Sinks.scratch(s"stream_$name")
+    val (dest, ckpt) = (s"$base/store", s"$base/ckpt")
     def drain(): Unit = {
       val writer =
         if (complete)
@@ -165,8 +164,7 @@ object StreamOps {
     // time; the answer equals the unbounded dedup exactly — same oracle
     // — which is the point: identical correctness, bounded state.
     "stream_dedup_bounded" -> { (s, dir) =>
-      val src = s"${graft.sinks.Sinks.tmpBase}/dedup_bounded_src"
-      graft.sinks.Sinks.truncate(src)
+      val src = graft.sinks.Sinks.scratch("dedup_bounded_src")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       ev.union(ev) // exact duplicate delivery of every event
@@ -207,9 +205,8 @@ object StreamOps {
     // approximation with an EXACT cursor: the next run resumes at the
     // precise row index the last one committed.
     "stream_dsv2_commits" -> { (s, _) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/stream_dsv2_commits"
-      val ckpt = dest + ".ckpt"
-      graft.sinks.Sinks.truncate(dest); graft.sinks.Sinks.truncate(ckpt)
+      val base = graft.sinks.Sinks.scratch("stream_dsv2_commits")
+      val (dest, ckpt) = (s"$base/store", s"$base/ckpt")
       val stream = s.readStream.format("graft.sources.CommitSource")
         .option("rows", "3000").option("batchRows", "1000").load()
       val q = stream.writeStream.outputMode("append")
@@ -235,11 +232,8 @@ object StreamOps {
     // each key's bounded version list. Oracle = the same window over the
     // union of all version sources (maintenance ≡ recompute).
     "stream_scd2_ticks" -> { (s, dir) =>
-      val src = s"${graft.sinks.Sinks.tmpBase}/scd2_ticks_src"
-      val store = s"${graft.sinks.Sinks.tmpBase}/scd2_ticks_store"
-      val ckpt = store + ".ckpt"
-      graft.sinks.Sinks.truncate(src)
-      graft.sinks.Sinks.truncate(store); graft.sinks.Sinks.truncate(ckpt)
+      val base = graft.sinks.Sinks.scratch("scd2_ticks")
+      val (src, store, ckpt) = (s"$base/src", s"$base/store", s"$base/ckpt")
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
       val v0 = cust.select(col("c_custkey"),
@@ -285,11 +279,8 @@ object StreamOps {
     // each batch upserts into the durable store — the keyed merge
     // makes the final state independent of batch order (O8 idempotence).
     "stream_incremental_ticks" -> { (s, dir) =>
-      val src = s"${graft.sinks.Sinks.tmpBase}/events_ticks_src"
-      val dest = s"${graft.sinks.Sinks.tmpBase}/events_ticks_store"
-      val ckpt = dest + ".ckpt"
-      graft.sinks.Sinks.truncate(src)
-      graft.sinks.Sinks.truncate(dest); graft.sinks.Sinks.truncate(ckpt)
+      val base = graft.sinks.Sinks.scratch("events_ticks")
+      val (src, dest, ckpt) = (s"$base/src", s"$base/store", s"$base/ckpt")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       ev.repartitionByRange(4, col("ts")).write.parquet(src)
@@ -380,9 +371,8 @@ object StreamOps {
     // with processAllAvailable() then stopped. Stateless transform, so
     // every input row reaches the durable sink regardless of batch count.
     "stream_processing_time" -> { (s, dir) =>
-      val dest = s"${graft.sinks.Sinks.tmpBase}/stream_proctime"
-      val ckpt = dest + ".ckpt"
-      graft.sinks.Sinks.truncate(dest); graft.sinks.Sinks.truncate(ckpt)
+      val base = graft.sinks.Sinks.scratch("stream_proctime")
+      val (dest, ckpt) = (s"$base/store", s"$base/ckpt")
       val filtered = eventsStream(s, dir)
         .where(col("value") > 100)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -448,8 +438,7 @@ object StreamOps {
     // replays it relationally — the semantics a 100 TB ingest owns rather
     // than inherits.
     "stream_late_audit" -> { (s, dir) =>
-      val base = s"${graft.sinks.Sinks.tmpBase}/late_audit"
-      graft.sinks.Sinks.truncate(base)
+      val base = graft.sinks.Sinks.scratch("late_audit")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         .withColumn("tick", (col("event_id") % 3).cast("int"))

@@ -1,6 +1,6 @@
 package graft.util
 
-import java.io.{FileNotFoundException, IOException}
+import java.io.{FileNotFoundException, IOException, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
@@ -107,9 +107,15 @@ object Fs {
   }
 
   def write(p: String, text: String): Unit = {
-    val (fs, path) = fsFor(p)
-    val out = fs.create(path, true)
+    val out = create(p)
     try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** A new file at `p` (parents created, any old file replaced), open
+    * for a streamed write. */
+  def create(p: String): OutputStream = {
+    val (fs, path) = fsFor(p)
+    fs.create(path, true)
   }
 
   /** Total bytes under `p` (file or directory tree); 0 when absent.

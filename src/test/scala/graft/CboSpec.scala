@@ -25,8 +25,7 @@ class CboSpec extends SparkSpec {
 
   test("stats-driven reorder breaks the declared big-big-first order; same rows") {
     import spark.implicits._
-    val base = Sinks.tmpBase + "/cbo_spec"
-    Sinks.truncate(base)
+    val base = Sinks.scratch("cbo_spec")
     // 300 distinct keys, 100 rows each -> big x big = ~3M intermediate;
     // the small table keeps 10 of those keys -> small-first = ~1k rows
     spark.range(30000).select(($"id" % 300).as("k"), $"id".as("pay1"))

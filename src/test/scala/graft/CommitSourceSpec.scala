@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -61,7 +63,6 @@ class CommitSourceSpec extends SparkSpec {
   }
 
   test("runtime filtering (DPP): the dimension's join keys prune pages at execution") {
-    import graft.sources.CommitScan
     // dimension with a selective predicate over a real (tiny) table —
     // region-1 nations, sha keys spread across 5 distinct pages
     val dim = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "nation")
@@ -71,18 +72,23 @@ class CommitSourceSpec extends SparkSpec {
         "n_name")
     val joined = src(10000).join(dim, "sha")
       .select(col("sha"), col("ts"), col("message"), col("n_name"))
-    CommitScan.lastPlannedPartitions = -1
     val rows = joined.collect()
     // the join answer itself: exactly the 5 region-1 nations matched
     assert(rows.length === 5)
     assert(rows.map(_.getString(0)).toSet ===
       dim.select(col("sha")).collect().map(_.getString(0)).toSet)
     // the runtime filter re-planned the scan: 100 pages -> at most 5
-    // (one per candidate sha), never the full page list
-    val planned = CommitScan.lastPlannedPartitions
-    assert(planned >= 1 && planned <= 5, s"planned $planned pages; runtime pruning did not fire")
+    // (one per candidate sha), never the full page list — read from the
+    // partitions the executed commit-source scan ran
+    val executed = joined.queryExecution.executedPlan
+    val planned = new AdaptiveSparkPlanHelper {}.collect(executed) {
+      case b: BatchScanExec => b.inputRDD.getNumPartitions
+    }
+    assert(planned.size === 1, s"expected one commit-source scan:\n$executed")
+    assert(planned.head >= 1 && planned.head <= 5,
+      s"planned ${planned.head} pages; runtime pruning did not fire")
     // and the physical plan carries the dynamic-pruning runtime filter
-    val plan = joined.queryExecution.executedPlan.toString
+    val plan = executed.toString
     assert(plan.contains("RuntimeFilters") || plan.toLowerCase.contains("dynamicpruning"),
       "no runtime filter in the executed plan")
   }
@@ -131,9 +137,8 @@ class CommitSourceSpec extends SparkSpec {
   }
 
   test("micro-batch stream: bounded ticks drain exactly once; a re-run adds nothing") {
-    val dest = graft.sinks.Sinks.tmpBase + "/spec_mbstream"
-    val ckpt = dest + ".ckpt"
-    graft.sinks.Sinks.truncate(dest); graft.sinks.Sinks.truncate(ckpt)
+    val base = graft.sinks.Sinks.scratch("spec_mbstream")
+    val (dest, ckpt) = (s"$base/store", s"$base/ckpt")
     def drain(): Long = {
       val q = spark.readStream.format("graft.sources.CommitSource")
         .option("rows", "350").option("batchRows", "100").load()
@@ -178,8 +183,7 @@ class CommitSourceSpec extends SparkSpec {
   test("DSv2 write: manifest-gated visibility, append accumulates, overwrite truncates") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
-    val dest = graft.sinks.Sinks.tmpBase + "/spec/kvsink"
-    graft.sinks.Sinks.truncate(dest)
+    val dest = graft.sinks.Sinks.scratch("spec_kvsink")
     def rows(r: Range, tag: String) =
       r.map(i => (i.toLong, tag, i.toLong * 10)).toDF("k", "v", "cents")
     def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
@@ -209,8 +213,7 @@ class CommitSourceSpec extends SparkSpec {
 
   test("DSv2 write: NULL fields serialize as JSON null, never 0") {
     import spark.implicits._
-    val dest = graft.sinks.Sinks.tmpBase + "/spec/kvsink_nulls"
-    graft.sinks.Sinks.truncate(dest)
+    val dest = graft.sinks.Sinks.scratch("spec_kvsink_nulls")
     Seq[(Option[Long], Option[String], Option[Long])](
       (Some(1L), Some("a"), Some(100L)),
       (Some(2L), None, None),

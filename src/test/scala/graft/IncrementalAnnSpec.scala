@@ -13,8 +13,6 @@ import graft.util.Streams
   * that make the entry's oracle (the one-shot IVF SQL) valid. */
 class IncrementalAnnSpec extends SparkSpec {
 
-  private val base = Sinks.tmpBase + "/spec_ann"
-
   /** 30 deterministic embeddings-shaped vectors (vec_id, array<float>). */
   private def corpus: DataFrame = {
     import spark.implicits._
@@ -35,10 +33,9 @@ class IncrementalAnnSpec extends SparkSpec {
 
   test("incremental index equals one-shot across crash-resume, replay, and re-train") {
     import spark.implicits._
-    Sinks.truncate(base)
+    val base = Sinks.scratch("spec_ann")
     val d = corpus.localCheckpoint()
-    val tdir = Sinks.tmpBase + "/spec_ann_table"
-    Sinks.truncate(tdir)
+    val tdir = Sinks.scratch("spec_ann_table")
     d.write.parquet(s"$tdir/embeddings.parquet")
     val truth = oneShot(tdir)
 
@@ -80,11 +77,9 @@ class IncrementalAnnSpec extends SparkSpec {
 
   test("LSH band-table store: fold-only maintenance equals one-shot across crash-resume") {
     import spark.implicits._
-    val lbase = base + "_lsh"
-    Sinks.truncate(lbase)
+    val lbase = Sinks.scratch("spec_ann_lsh")
     val d = corpus.localCheckpoint()
-    val tdir = Sinks.tmpBase + "/spec_ann_lsh_table"
-    Sinks.truncate(tdir)
+    val tdir = Sinks.scratch("spec_ann_lsh_table")
     d.write.parquet(s"$tdir/embeddings.parquet")
     val truth = graft.llm.Similarity.queries("q_llm_knn_lsh")(spark, tdir)
       .as[(Long, Int, Long, Double)].collect()
@@ -138,11 +133,9 @@ class IncrementalAnnSpec extends SparkSpec {
 
   test("PQ code-table store: re-train equivalence, crash-resume, replay") {
     import spark.implicits._
-    val pbase = base + "_pq"
-    Sinks.truncate(pbase)
+    val pbase = Sinks.scratch("spec_ann_pq")
     val d = corpus.localCheckpoint()
-    val tdir = Sinks.tmpBase + "/spec_ann_pq_table"
-    Sinks.truncate(tdir)
+    val tdir = Sinks.scratch("spec_ann_pq_table")
     d.write.parquet(s"$tdir/embeddings.parquet")
     val truth = graft.llm.Similarity.queries("q_llm_knn_pq")(spark, tdir)
       .as[(Long, Int, Long, Long)].collect()
@@ -175,8 +168,7 @@ class IncrementalAnnSpec extends SparkSpec {
 
   test("fold tick re-assigns ONLY the batch; re-ingested vectors move cells") {
     import spark.implicits._
-    val rbase = base + "_reingest"
-    Sinks.truncate(rbase)
+    val rbase = Sinks.scratch("spec_ann_reingest")
     IncrementalAnn.tick(spark, corpus, 0L, rbase)
     val before = spark.read.parquet(s"$rbase/assign")
       .select($"vec_id", $"cell").as[(Long, Long)].collect().toMap

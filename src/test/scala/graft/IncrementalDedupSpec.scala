@@ -12,8 +12,6 @@ import graft.util.Streams
   * properties that make the entry's oracle — the one-shot SQL — valid). */
 class IncrementalDedupSpec extends SparkSpec {
 
-  private val base = Sinks.tmpBase + "/spec_neardup"
-
   // 30 docs: 1..10 unique-ish, and (i, i+100) identical pairs for i in
   // 1..10 — so the expected verified pairs are exactly the 10 dup pairs
   // (distinct filler tokens keep unrelated docs below Jaccard 0.5)
@@ -30,7 +28,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("incremental index equals one-shot across crash-resume and replay") {
     import spark.implicits._
-    IncrementalDedup.reset(base)
+    val base = Sinks.scratch("spec_neardup")
     val d = corpus.localCheckpoint()
     // one-shot truth on the full corpus
     val oneShot = Dedup.minhashVerifiedPairsOf(d)
@@ -64,8 +62,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("re-crawled docs are verified on CURRENT content, not double-counted") {
     import spark.implicits._
-    val rbase = base + "_recrawl"
-    IncrementalDedup.reset(rbase)
+    val rbase = Sinks.scratch("spec_neardup_recrawl")
     val textA = "original content alpha beta gamma delta one two three four"
     val textB = "replacement body epsilon zeta eta theta five six seven eight"
     // tick 0: doc 1 has textA, doc 2 has textB (no pair: disjoint text)
@@ -91,8 +88,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("forgetTick purges a doc from results AND the live band index") {
     import spark.implicits._
-    val fbase = base + "_forget"
-    IncrementalDedup.reset(fbase)
+    val fbase = Sinks.scratch("spec_neardup_forget")
     val t1 = "shared template alpha beta gamma delta one two three four"
     val t2 = "other template epsilon zeta eta theta five six seven eight"
     // docs 1=2 and 3=4 are dup pairs; doc 5 unrelated
@@ -137,8 +133,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("deleteByKeyBucket drops rows, empty buckets, and survives replay") {
     import spark.implicits._
-    val store = Sinks.tmpBase + "/spec_delstore"
-    Sinks.truncate(store)
+    val store = Sinks.scratch("spec_delstore")
     // 64 keys over 16 buckets: bucket b holds keys b, b+16, b+32, b+48
     Sinks.mergeByKeyBucket(spark, store,
       (0L until 64L).map(k => (k, s"v$k")).toDF("k", "v"), "k", Seq("v"))
@@ -162,11 +157,10 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("incremental CC: a later edge bridges two stored components; replay is idempotent") {
     import spark.implicits._
-    val ccBase = Sinks.tmpBase + "/spec_cc_inc"
+    val ccBase = Sinks.scratch("spec_cc_inc")
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    Sinks.truncate(ccBase)
     IncrementalDedup.ccTick(spark, Seq((1L, 2L)).toDF("doc_a", "doc_b"), 0L, ccBase)
     IncrementalDedup.ccTick(spark, Seq((3L, 4L)).toDF("doc_a", "doc_b"), 1L, ccBase)
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L),
@@ -182,11 +176,10 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("incremental CC stream resumes from its checkpoint (only unseen batches)") {
     import spark.implicits._
-    val ccBase = Sinks.tmpBase + "/spec_cc_resume"
+    val ccBase = Sinks.scratch("spec_cc_resume")
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    Sinks.truncate(ccBase)
     Seq((1L, 2L)).toDF("doc_a", "doc_b")
       .coalesce(1).write.parquet(s"$ccBase/src")
     IncrementalDedup.runCcTicks(spark, ccBase) // "crash" after draining batch 0
@@ -202,11 +195,9 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("incremental SimHash index: one-shot equivalence, replay, forget") {
     import spark.implicits._
-    val sbase = Sinks.tmpBase + "/spec_simhash"
-    Sinks.truncate(sbase)
+    val sbase = Sinks.scratch("spec_simhash")
     val d = corpus.localCheckpoint()
-    val tdir = Sinks.tmpBase + "/spec_simhash_table"
-    Sinks.truncate(tdir)
+    val tdir = Sinks.scratch("spec_simhash_table")
     d.write.parquet(s"$tdir/documents.parquet")
     def pairsOf(df: org.apache.spark.sql.DataFrame): Array[(Long, Long)] =
       df.select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted
@@ -225,8 +216,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // fingerprint joins
     IncrementalDedup.simhashForget(spark, sbase,
       d.where($"doc_id" > 100).select($"doc_id"))
-    val keptDir = Sinks.tmpBase + "/spec_simhash_kept"
-    Sinks.truncate(keptDir)
+    val keptDir = Sinks.scratch("spec_simhash_kept")
     d.where($"doc_id" <= 100).write.parquet(s"$keptDir/documents.parquet")
     val truthKept = pairsOf(Dedup.queries("q_llm_dedup_simhash_pairs")(spark, keptDir))
     assert(pairsOf(IncrementalDedup.simhashVerify(spark, sbase)) === truthKept,
@@ -235,11 +225,9 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("incremental winnow index: one-shot equivalence, replay, re-crawl, forget") {
     import spark.implicits._
-    val wbase = Sinks.tmpBase + "/spec_winnow"
-    Sinks.truncate(wbase)
+    val wbase = Sinks.scratch("spec_winnow")
     val d = corpus.localCheckpoint()
-    val tdir = Sinks.tmpBase + "/spec_winnow_table"
-    Sinks.truncate(tdir)
+    val tdir = Sinks.scratch("spec_winnow_table")
     d.write.parquet(s"$tdir/documents.parquet")
     def pairsOf(df: org.apache.spark.sql.DataFrame): Array[(Long, Long)] =
       df.select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted
@@ -265,8 +253,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // forget the re-crawled copies: result = one-shot over the kept corpus
     IncrementalDedup.winnowForget(spark, wbase,
       d.where($"doc_id" > 100).select($"doc_id"))
-    val keptDir = Sinks.tmpBase + "/spec_winnow_kept"
-    Sinks.truncate(keptDir)
+    val keptDir = Sinks.scratch("spec_winnow_kept")
     d.where($"doc_id" <= 100).write.parquet(s"$keptDir/documents.parquet")
     val truthKept = pairsOf(Dedup.queries("q_llm_winnow_dedup")(spark, keptDir))
     assert(pairsOf(IncrementalDedup.winnowServe(spark, wbase)) === truthKept,
@@ -275,11 +262,10 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("ccTick replay heals a store crashed mid-bucket-swap (persisted remap)") {
     import spark.implicits._
-    val ccBase = Sinks.tmpBase + "/spec_cc_midswap"
+    val ccBase = Sinks.scratch("spec_cc_midswap")
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    Sinks.truncate(ccBase)
     IncrementalDedup.ccTick(spark, Seq((1L, 2L), (1L, 5L)).toDF("doc_a", "doc_b"), 0L, ccBase)
     IncrementalDedup.ccTick(spark, Seq((3L, 4L)).toDF("doc_a", "doc_b"), 1L, ccBase)
     // construct the exact crash window of the bridge tick (batchId=2,
@@ -304,11 +290,10 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("ccForget replay heals a store crashed between delete and relabel") {
     import spark.implicits._
-    val ccBase = Sinks.tmpBase + "/spec_cc_forget_crash"
+    val ccBase = Sinks.scratch("spec_cc_forget_crash")
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    Sinks.truncate(ccBase)
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
     edges.coalesce(1).write.parquet(s"$ccBase/src")
     IncrementalDedup.ccTick(spark, edges, 0L, ccBase)
@@ -330,11 +315,10 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("CC forget: deleting a cut vertex splits its component; leaves don't") {
     import spark.implicits._
-    val ccBase = Sinks.tmpBase + "/spec_cc_forget"
+    val ccBase = Sinks.scratch("spec_cc_forget")
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    Sinks.truncate(ccBase)
     // chain 1-2-3 plus leaf 4 on node 1 — all one component
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 4L)).toDF("doc_a", "doc_b")
     edges.coalesce(1).write.parquet(s"$ccBase/src")
@@ -350,11 +334,10 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("ccForget edge read prunes to the affected labels' buckets; results unchanged") {
     import spark.implicits._
-    val ccBase = Sinks.tmpBase + "/spec_cc_forget_prune"
+    val ccBase = Sinks.scratch("spec_cc_forget_prune")
     def labels: Map[Long, Long] =
       spark.read.parquet(s"$ccBase/labels")
         .select($"doc", $"label").as[(Long, Long)].collect().toMap
-    Sinks.truncate(ccBase)
     // 8 disjoint 2-node components; labels 1..8 land in 8 distinct
     // edge-log buckets (pmod over the default 16)
     val edges = (1L to 8L).map(k => (k, k + 100L)).toDF("doc_a", "doc_b")

@@ -16,8 +16,6 @@ import graft.util.Streams
   * valid. */
 class IncrementalRetrievalSpec extends SparkSpec {
 
-  private val base = Sinks.tmpBase + "/spec_bm25"
-
   /** 24 deterministic documents over a 19-word vocabulary: enough term
     * overlap for non-trivial rankings, doc_id < QMax are the queries. */
   private def corpus: DataFrame = {
@@ -34,7 +32,7 @@ class IncrementalRetrievalSpec extends SparkSpec {
       .as[(Long, Int, Long, Double)].collect()
   }
 
-  private def served: Array[(Long, Int, Long, Double)] = {
+  private def served(base: String): Array[(Long, Int, Long, Double)] = {
     import spark.implicits._
     IncrementalRetrieval.serve(spark, base)
       .as[(Long, Int, Long, Double)].collect()
@@ -42,7 +40,7 @@ class IncrementalRetrievalSpec extends SparkSpec {
 
   test("incremental index equals one-shot across resume, replay, and compaction") {
     import spark.implicits._
-    Sinks.truncate(base)
+    val base = Sinks.scratch("spec_bm25")
     val d = corpus.localCheckpoint()
     val truth = oneShot(d)
 
@@ -56,7 +54,7 @@ class IncrementalRetrievalSpec extends SparkSpec {
     // between refreshes the index SERVES: the first refresh snapshots the
     // partial corpus, later arrivals are retrievable against it
     IncrementalRetrieval.refreshStats(spark, base)
-    assert(served.nonEmpty)
+    assert(served(base).nonEmpty)
     // resume: remaining batches arrive, SAME checkpoint picks up only them
     writeSlice($"doc_id" >= 10 && $"doc_id" < 18)
     writeSlice($"doc_id" >= 18)
@@ -68,23 +66,22 @@ class IncrementalRetrievalSpec extends SparkSpec {
       .where($"doc_id" >= 10).count() > 0,
       "post-tick documents must be retrievable against stale stats")
     IncrementalRetrieval.refreshStats(spark, base)
-    assert(served === truth, "refreshed incremental index must equal one-shot")
+    assert(served(base) === truth, "refreshed incremental index must equal one-shot")
 
     // at-least-once replay: re-folding an already-folded batch must not
     // change served results (a document's postings ride in one keyed row)
     IncrementalRetrieval.tick(spark, d.where($"doc_id" < 10), 0L, base)
-    assert(served === truth, "replay must be idempotent")
+    assert(served(base) === truth, "replay must be idempotent")
 
     // store maintenance: compaction bounds per-bucket file counts and
     // must not change served results
     Sinks.compactBuckets(spark, s"$base/postings")
-    assert(served === truth, "compaction must not change results")
+    assert(served(base) === truth, "compaction must not change results")
   }
 
   test("forget propagates through postings, df, and avgdl") {
     import spark.implicits._
-    val fbase = base + "_forget"
-    Sinks.truncate(fbase)
+    val fbase = Sinks.scratch("spec_bm25_forget")
     val d = corpus.localCheckpoint()
     d.coalesce(1).write.parquet(s"$fbase/src")
     Streams.drain(Streams.ticks(spark, s"$fbase/src", d.schema), s"$fbase/ckpt")(
@@ -105,8 +102,7 @@ class IncrementalRetrievalSpec extends SparkSpec {
 
   test("merge-on-read forget: request rewrites zero buckets, mask serves, compaction converges") {
     import spark.implicits._
-    val fbase = base + "_mor"
-    Sinks.truncate(fbase)
+    val fbase = Sinks.scratch("spec_bm25_mor")
     val d = corpus.localCheckpoint()
     d.coalesce(1).write.parquet(s"$fbase/src")
     Streams.drain(Streams.ticks(spark, s"$fbase/src", d.schema), s"$fbase/ckpt")(

@@ -637,8 +637,7 @@ class LlmSpec extends SparkSpec {
 
   test("temperature mixture: tau=0.5 compresses shares toward uniform; epochs hit the target") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_mixtemp"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_mixtemp")
     // 90/10 token split across two sources, identical doc lengths:
     // p = (0.9, 0.1) -> sqrt-normalized q = (0.75, 0.25) exactly
     val words = (1 to 10).map("w" + _).mkString(" ")
@@ -685,8 +684,7 @@ class LlmSpec extends SparkSpec {
 
   test("epoch shards: epoch-salted permutation reshuffles; shards partition each epoch") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_epoch"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_epoch")
     val words = (1 to 8).map("w" + _).mkString(" ")
     (0 until 64).map(i => (i.toLong, words, "en", "src"))
       .toDF("doc_id", "text", "lang", "source")
@@ -706,8 +704,7 @@ class LlmSpec extends SparkSpec {
 
   test("length buckets: pow2 edges; padding accounting is exact") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_lenbuck"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_lenbuck")
     def text(n: Int) = (1 to n).map("w" + _).mkString(" ")
     // 16 sits on the first edge; 17 spills to the 32 bucket
     Seq((1L, text(16)), (2L, text(17)), (3L, text(32)), (4L, text(100)))
@@ -879,8 +876,7 @@ class LlmSpec extends SparkSpec {
 
   test("filter funnel: first-kill attribution; docs_in telescopes") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_funnel"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_funnel")
     val shortWords = (1 to 40).map("w" + _).mkString(" ")          // mean wlen < 4
     val repeated = Seq.fill(40)("alpha").mkString(" ")             // TTR kill
     val noStops = (1 to 40).map("word" + _).mkString(" ")          // no stopwords
@@ -910,8 +906,7 @@ class LlmSpec extends SparkSpec {
 
   test("output shards: budget-targeted doc-contiguous packing; manifest exact") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_shards"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_shards")
     val words8 = (1 to 8).map("w" + _).mkString(" ")
     (0 until 200).map(i => (i.toLong, words8, "en", "src"))
       .toDF("doc_id", "text", "lang", "source")
@@ -927,12 +922,11 @@ class LlmSpec extends SparkSpec {
   test("curriculum: corpus-relative band edges; pacing cumsum telescopes") {
     import spark.implicits._
     def corpus(tdir: String, lens: Range): Unit = {
-      graft.sinks.Sinks.truncate(tdir)
       lens.map(n => (n.toLong, (1 to n).map("w" + _).mkString(" "), "en", "src"))
         .toDF("doc_id", "text", "lang", "source")
         .write.parquet(s"$tdir/documents.parquet")
     }
-    val t1 = graft.sinks.Sinks.tmpBase + "/spec_curr1"
+    val t1 = graft.sinks.Sinks.scratch("spec_curr1")
     corpus(t1, 10 to 49) // width 40 => exact 10-length bands
     val r1 = graft.llm.Curation.queries("q_llm_curriculum")(spark, t1).collect()
       .sortBy(_.getAs[Long]("stage"))
@@ -944,7 +938,7 @@ class LlmSpec extends SparkSpec {
     assert(r1.map(_.getAs[Long]("tokens")).scanLeft(0L)(_ + _).drop(1).toSeq ===
       r1.map(_.getAs[Long]("cum_tokens")).toSeq)
     // edges are corpus-relative, not hardcoded: shift the distribution
-    val t2 = graft.sinks.Sinks.tmpBase + "/spec_curr2"
+    val t2 = graft.sinks.Sinks.scratch("spec_curr2")
     corpus(t2, 100 to 139)
     val r2 = graft.llm.Curation.queries("q_llm_curriculum")(spark, t2).collect()
       .sortBy(_.getAs[Long]("stage"))
@@ -954,8 +948,7 @@ class LlmSpec extends SparkSpec {
 
   test("mixture reweight: hard domain upweighted, easy clamps to zero excess, shares normalize") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_reweight"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_reweight")
     val common = "the cat sat on the mat and the dog sat on the rug again"
     val docs =
       (0 until 20).map(i => (i.toLong, common, "en", "src0")) ++          // low NLL
@@ -980,8 +973,7 @@ class LlmSpec extends SparkSpec {
 
   test("clip dedup: aligned shared frames pair; stop-frames suppressed") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_clip"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_clip")
     def frame(c: Char) = c.toString * 100
     val stopFrame = frame('s')
     val fixture =
@@ -1006,8 +998,7 @@ class LlmSpec extends SparkSpec {
 
   test("source matrix: cross vs intra duplication cells; distinct doc counts") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_srcmatrix"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_srcmatrix")
     val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val t2 = "one two three four five six seven eight nine ten eleven"
     Seq(
@@ -1026,8 +1017,7 @@ class LlmSpec extends SparkSpec {
 
   test("multi-suite decontamination: per-suite attribution; copies contaminate every owning suite") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_multisuite"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_multisuite")
     val ta = "alpha beta gamma delta epsilon zeta eta theta"
     val tb = "one two three four five six seven eight"
     Seq(
@@ -1051,8 +1041,7 @@ class LlmSpec extends SparkSpec {
 
   test("bpe fertility: majority language wins the merges; minority pays more tokens per word") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_fertility"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_fertility")
     // en dominates: merges learn (a,b) then (ab,ab) -> "abab" is 1 token.
     // de's (c,d) only wins round 3 -> "cdcd" stays 2 tokens.
     val docs =
@@ -1069,8 +1058,7 @@ class LlmSpec extends SparkSpec {
 
   test("char entropy: constant doc flags at 0; uniform doc scores ln(n)") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_entropy"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_entropy")
     Seq((1L, "aaaaaaaaaa"), (2L, "abcdefghij"))
       .map { case (i, t) => (i, t, "en", "src") }
       .toDF("doc_id", "text", "lang", "source")
@@ -1125,8 +1113,7 @@ class LlmSpec extends SparkSpec {
 
   test("memorization audit: planted verbatim runs hit their exact span lengths and verdicts") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_memorization"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_memorization")
     // probe ids are multiples of EvalMod (97); all words unique per role
     // so only the planted runs can match
     val c = (1 to 34).map("c" + _)   // 34-token run shared probe0 <-> train1
@@ -1159,8 +1146,7 @@ class LlmSpec extends SparkSpec {
 
   test("soft dedup: near-dup copies split the ppm mass; singletons keep 1e6") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_softdedup"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_softdedup")
     val dup = (1 to 20).map("a" + _).mkString(" ")
     Seq((0L, dup), (1L, dup), (2L, (1 to 20).map("b" + _).mkString(" ")))
       .map { case (id, t) => (id, t, "en", "src") }
@@ -1181,8 +1167,7 @@ class LlmSpec extends SparkSpec {
 
   test("repeat plan: quality-ordered greedy funds the high-TTR source's second epoch first") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_repeatplan"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_repeatplan")
     // two sources, 50 tokens/epoch each: budget = 7/4 * 100 = 175 tokens.
     // epoch 1 funds both (cum 50, 100); epoch 2 goes quality-first:
     // hi (TTR 1.0) at cum 150 <= 175 funds, lo (TTR 0.1) at 200 does not.
@@ -1219,8 +1204,7 @@ class LlmSpec extends SparkSpec {
 
   test("prefix dedup: exact duplicates vs shared-prompt completions classified per group") {
     import spark.implicits._
-    val tdir = graft.sinks.Sinks.tmpBase + "/spec_prefixdedup"
-    graft.sinks.Sinks.truncate(tdir)
+    val tdir = graft.sinks.Sinks.scratch("spec_prefixdedup")
     // ids 0/40 and 1/41 are congruent mod 40 (and hence mod 8 and 5), so
     // each pair shares a seeded prompt; 0/40 also share the completion
     val same = (1 to 12).map("a" + _).mkString(" ")

@@ -88,8 +88,7 @@ object SparkProperties extends Properties("spark-ops") {
     forAll(ccCase) { case (edges, k) =>
       edges.isEmpty || {
         import spark.implicits._
-        val base = graft.sinks.Sinks.tmpBase + "/prop_cc"
-        graft.sinks.Sinks.truncate(base)
+        val base = graft.sinks.Sinks.scratch("prop_cc")
         edges.grouped(math.max(1, (edges.size + k - 1) / k)).zipWithIndex
           .foreach { case (b, i) =>
             graft.llm.IncrementalDedup.ccTick(

@@ -54,8 +54,6 @@ object CrashFs {
   * entry left anywhere in the case directory. */
 class SinksCrashSpec extends SparkSpec {
 
-  private val root = s"${Sinks.tmpBase}/spec/crash"
-
   private def entries(dir: String): Seq[JPath] = {
     val d = Paths.get(dir)
     if (!Files.exists(d)) Nil
@@ -100,10 +98,9 @@ class SinksCrashSpec extends SparkSpec {
   /** Build the pre-state with `setup` once, then enumerate every crash
     * point of `op`. Both get the store path on the crash scheme. */
   private def enumerate(name: String)(setup: String => Unit)(op: String => Unit): Unit = {
-    val dir = s"$root/$name"
+    val dir = Sinks.scratch(s"spec_crash/$name")
     def store(d: String) = s"crash://$dir/$d/store"
     spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
-    Sinks.deleteRec(dir)
     Files.createDirectories(Paths.get(s"$dir/template"))
     setup(store("template"))
     copyTree(s"$dir/template", s"$dir/clean")

@@ -9,12 +9,28 @@ import graft.util.Fs
   * partition-pruned reads of a partitionBy layout (O7/O11, SURVEY §7.4). */
 class SinksSpec extends SparkSpec {
 
-  private val base = Sinks.tmpBase + "/spec"
+  test("scratch: an empty path beneath the run root, even over an earlier call's leftovers") {
+    import spark.implicits._
+    val first = Sinks.scratch("spec_scratch")
+    Seq(1, 2).toDF("v").write.parquet(first)
+    // an interrupted publish strands an .old copy and a staging sibling
+    Seq(3).toDF("v").write.parquet(Fs.oldOf(first))
+    Seq(4).toDF("v").write.parquet(Fs.stagingOf(first))
+    val again = Sinks.scratch("spec_scratch")
+    assert(again === first)
+    Fs.heal(again) // a healing reader must not bring the .old copy back
+    Seq(again, Fs.oldOf(again), Fs.stagingOf(again)).foreach(p => assert(!Fs.exists(p), p))
+    Seq(5).toDF("v").write.parquet(again) // error-if-exists write: the path is free
+    assert(spark.read.parquet(again).as[Int].collect() === Array(5))
+    assert(again.startsWith(s"${Sinks.runRoot}/"))
+    assert(Sinks.runRoot.startsWith(s"${System.getProperty("user.dir")}/target/qtmp/run-"))
+    val warehouse = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    assert(warehouse.toUri.getPath === s"${Sinks.runRoot}/warehouse")
+  }
 
   test("writeAtomic: reader sees only the last complete snapshot; no stale sidecars") {
     import spark.implicits._
-    val dest = s"$base/atomic"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_atomic")
     Sinks.writeAtomic(Seq((1, "v1"), (2, "v1")).toDF("k", "v"), dest)
     Sinks.writeAtomic(Seq((3, "v2")).toDF("k", "v"), dest)
     val got = spark.read.parquet(dest).as[(Int, String)].collect()
@@ -25,8 +41,7 @@ class SinksSpec extends SparkSpec {
 
   test("writeAtomic heals a crash window between renames (.old present, dest gone)") {
     import spark.implicits._
-    val dest = s"$base/recover"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_recover")
     Sinks.writeAtomic(Seq((1, "v1")).toDF("k", "v"), dest)
     // simulate a crash AFTER dest->.old but BEFORE staged->dest: the
     // table vanishes and only the .old copy remains
@@ -44,7 +59,7 @@ class SinksSpec extends SparkSpec {
 
   test("truncate removes the table (O11)") {
     import spark.implicits._
-    val dest = s"$base/trunc"
+    val dest = Sinks.scratch("spec_trunc")
     Sinks.writeAtomic(Seq(1, 2, 3).toDF("x"), dest)
     assert(Files.exists(Paths.get(dest)))
     Sinks.truncate(dest)
@@ -53,8 +68,7 @@ class SinksSpec extends SparkSpec {
 
   test("mergeByKeyBucket heals a crash inside the bucket swap") {
     import spark.implicits._
-    val dest = s"$base/bucketcrash"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_bucketcrash")
     val initial = (0L to 15L).map(k => (k, 1, "v1")).toDF("k", "ord", "v")
     Sinks.mergeByKeyBucket(spark, dest, initial, "k", Seq("ord"), nBuckets = 4)
     // simulate a crash BETWEEN the two renames of bucket 2's swap: the
@@ -76,8 +90,7 @@ class SinksSpec extends SparkSpec {
 
   test("compactDeletes heals a stranded bucket before folding its deletes") {
     import spark.implicits._
-    val dest = s"$base/mor_stranded"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_mor_stranded")
     Sinks.mergeByKeyBucket(spark, dest, (0L to 15L).map(k => (k, s"v$k")).toDF("k", "v"),
       "k", Seq("v"), nBuckets = 4)
     // a crash between the two renames of bucket 2's swap strands it in its
@@ -93,8 +106,7 @@ class SinksSpec extends SparkSpec {
 
   test("mergeByKeyBucket rewrites only touched buckets, preserves the rest") {
     import spark.implicits._
-    val dest = s"$base/bucketmerge"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_bucketmerge")
     // keys 0..15 spread over 4 buckets
     val initial = (0L to 15L).map(k => (k, 1, "v1")).toDF("k", "ord", "v")
     Sinks.mergeByKeyBucket(spark, dest, initial, "k", Seq("ord"), nBuckets = 4)
@@ -111,8 +123,7 @@ class SinksSpec extends SparkSpec {
 
   test("compactBuckets coalesces accumulated small files without changing contents") {
     import spark.implicits._
-    val dest = s"$base/compact"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_compact")
     // 4 merges, each fanning rows across many shuffle tasks -> multi-file
     // buckets (AQE partition coalescing is disabled for the fixture; at
     // real scale the merge stage has many non-empty tasks per bucket
@@ -143,8 +154,7 @@ class SinksSpec extends SparkSpec {
 
   test("merges use the store's persisted bucket count, not the caller's") {
     import spark.implicits._
-    val dest = s"$base/bucketmeta"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_bucketmeta")
     Sinks.mergeByKeyBucket(spark, dest, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
       "k", Seq("v"), nBuckets = 4)
     assert(Sinks.storedBucketCount(dest) === Some(4))
@@ -175,8 +185,7 @@ class SinksSpec extends SparkSpec {
 
   test("versioned store: commit/snapshotAt/compactVersions with retention") {
     import spark.implicits._
-    val store = s"$base/versioned"
-    Sinks.deleteRec(store)
+    val store = Sinks.scratch("spec_versioned")
     assert(Sinks.latestVersion(store).isEmpty)
     assert(Sinks.commitVersion(spark, store,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), "k") === 0L)
@@ -220,8 +229,7 @@ class SinksSpec extends SparkSpec {
   test("versioned store: tombstone deletes, CDC feed, compaction keeps markers") {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
-    val store = s"$base/cdc"
-    Sinks.deleteRec(store)
+    val store = Sinks.scratch("spec_cdc")
     Sinks.commitVersion(spark, store,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), "k")          // v0
     Sinks.commitVersion(spark, store,
@@ -314,7 +322,7 @@ class SinksSpec extends SparkSpec {
     assert(routed === total, "clean + quarantined must reconcile to the source")
     assert(rep.agg(org.apache.spark.sql.functions.sum($"n_quarantined")).head.getLong(0) > 0)
     // the DLQ store keeps the ORIGINAL broken payload for replay
-    val dlq = spark.read.parquet(s"${Sinks.tmpBase}/events_dlq")
+    val dlq = spark.read.parquet(s"${Sinks.runRoot}/quarantine/dlq")
     assert(dlq.columns.contains("props"))
     assert(dlq.where($"event_id" % 13 =!= 0).count() === 0L,
       "only the corrupted slice routes to the DLQ")
@@ -346,8 +354,7 @@ class SinksSpec extends SparkSpec {
 
   test("partitionBy layout prunes: partition filter appears in the scan (O7)") {
     import spark.implicits._
-    val dest = s"$base/parts"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_parts")
     val df = (1 to 100).map(i => (i, if (i % 2 == 0) "even" else "odd")).toDF("x", "par")
     Sinks.writeAtomic(df, dest, partitionCols = Seq("par"))
     // physical layout: one directory per partition value
@@ -361,8 +368,7 @@ class SinksSpec extends SparkSpec {
   test("appendBuckets: no-read append; replayed tick overwrites its own file, never duplicates") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val dest = s"$base/append_store"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_append_store")
     Sinks.initBucketStore(dest, 4)
     def batch(r: Range) = r.toDF("v")
       .withColumn("_bucket", pmod(col("v"), lit(4)).cast("int"))
@@ -389,8 +395,7 @@ class SinksSpec extends SparkSpec {
 
   test("publishSet: readers never see a cross-version mix; republish idempotent") {
     import spark.implicits._
-    val dest = s"$base/multiset"
-    Sinks.truncate(dest)
+    val dest = Sinks.scratch("spec_multiset")
     def tbls(v: String) = Map(
       "a" -> Seq((1, v)).toDF("k", "v"),
       "b" -> Seq((2, v)).toDF("k", "v"))
@@ -417,8 +422,7 @@ class SinksSpec extends SparkSpec {
 
   test("deleteByKeyBucket honors a bucketCol store's true layout") {
     import spark.implicits._
-    val store = s"$base/fk_delete"
-    Sinks.truncate(store)
+    val store = Sinks.scratch("spec_fk_delete")
     // keyed by k, physically bucketed by the FK — the join-MV layout
     val rows = Seq((1L, 10L, "a"), (2L, 10L, "b"), (3L, 20L, "c"), (4L, 30L, "d"))
       .toDF("k", "fk", "v")
@@ -446,9 +450,8 @@ class SinksSpec extends SparkSpec {
 
   test("deleteByKeyMoR: zero data-bucket rewrites; compaction converges to the CoW result") {
     import spark.implicits._
-    val mor = s"$base/mor_store"
-    val cow = s"$base/cow_store"
-    Sinks.truncate(mor); Sinks.truncate(cow)
+    val mor = Sinks.scratch("spec_mor_store")
+    val cow = Sinks.scratch("spec_cow_store")
     val rows = (0L until 64L).map(k => (k, s"v$k")).toDF("k", "v")
     Sinks.mergeByKeyBucket(spark, mor, rows, "k", Seq("v"), nBuckets = 8)
     Sinks.mergeByKeyBucket(spark, cow, rows, "k", Seq("v"), nBuckets = 8)

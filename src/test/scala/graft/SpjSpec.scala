@@ -17,8 +17,9 @@ import graft.sources.{Spj, Tables}
 class SpjSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private val ordStore = s"${Sinks.tmpBase}/spj_spec_orders"
-  private val custStore = s"${Sinks.tmpBase}/spj_spec_customer"
+  private lazy val base = Sinks.scratch("spj_spec")
+  private lazy val ordStore = s"$base/orders"
+  private lazy val custStore = s"$base/customer"
 
   private lazy val stores: Unit =
     Spj.buildStores(spark, dir, ordStore, custStore, nBuckets = 8)

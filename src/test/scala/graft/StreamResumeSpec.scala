@@ -14,11 +14,10 @@ class StreamResumeSpec extends SparkSpec {
 
   test("file-sink streaming resumes from checkpoint exactly-once") {
     import spark.implicits._
-    val base = Sinks.tmpBase + "/spec/resume"
+    val base = Sinks.scratch("spec_resume")
     val src = s"$base/src"
     val dest = s"$base/dest"
     val ckpt = s"$base/ckpt"
-    Seq(src, dest, ckpt).foreach(Sinks.truncate)
 
     def appendBatch(r: Range): Unit =
       r.toDF("v").coalesce(1).write.mode("append").parquet(src)
@@ -51,9 +50,8 @@ class StreamResumeSpec extends SparkSpec {
   // dropDuplicates would end at numRowsTotal == all keys ever seen.
   test("dropDuplicatesWithinWatermark: state bounded + eviction visible in stateOperators") {
     import org.apache.spark.sql.functions.col
-    val base = Sinks.tmpBase + "/spec/state_obs"
+    val base = Sinks.scratch("spec_state_obs")
     val src = s"$base/src"
-    Seq(src, s"$base/ckpt").foreach(Sinks.truncate)
     val ev = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("ts"))
     val nKeys = ev.select(col("event_id")).distinct().count() // 1000

@@ -35,31 +35,38 @@ class SurveyIndexSpec extends AnyFunSuite {
   }
 
   test("llm/ operator code never touches java.nio.file (cluster portability)") {
-    // Operator, sink and stream store/scratch paths must go through the
-    // Hadoop FS client (util.Fs) so they work when the path is
-    // HDFS/object-store, not a driver-local disk (VERDICT r13 wrong-item
-    // 2). java.nio.ByteBuffer etc. remain fine — only the *.file package
-    // is the local-FS leak.
+    // Operator, sink, stream and source store/scratch paths must go
+    // through the Hadoop FS client (util.Fs) so they work when the path
+    // is HDFS/object-store, not a driver-local disk (VERDICT r13
+    // wrong-item 2). java.nio.ByteBuffer, java.io streams etc. remain
+    // fine — only the java.nio.file package and java.io.File are the
+    // local-FS leak.
     import scala.jdk.CollectionConverters._
-    val offenders = Seq("llm", "sinks", "streaming")
+    val localFs = """java\.nio\.file|java\.io\.File\b|java\.io\.\{[^}]*\bFile\b""".r
+    val offenders = Seq("llm", "sinks", "streaming", "sources")
       .flatMap(d => Files.walk(Paths.get(s"src/main/scala/graft/$d")).iterator().asScala)
       .filter(_.toString.endsWith(".scala"))
-      .filter(f => new String(Files.readAllBytes(f), "UTF-8")
-        .contains("java.nio.file"))
+      .filter(f => localFs.findFirstIn(new String(Files.readAllBytes(f), "UTF-8")).isDefined)
       .map(_.toString)
     assert(offenders.isEmpty,
-      s"java.nio.file in llm/, sinks/ or streaming/ code: $offenders — use graft.util.Fs")
+      s"java.nio.file or java.io.File in llm/, sinks/, streaming/ or sources/ code: " +
+        s"$offenders — use graft.util.Fs")
   }
 
-  /** Files under src/ (this guard's own file aside) whose text contains
-    * `needle`, relative to src/. */
-  private def filesContaining(needle: String): Set[String] = {
+  /** Text of each Scala file under `dir` (this guard's own file aside),
+    * keyed by its path relative to src/. */
+  private def sources(dir: String): Map[String, String] = {
     import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get("src")).iterator().asScala
+    Files.walk(Paths.get(dir)).iterator().asScala
       .filter(f => f.toString.endsWith(".scala") && !f.endsWith("SurveyIndexSpec.scala"))
-      .filter(f => new String(Files.readAllBytes(f), "UTF-8").contains(needle))
-      .map(f => Paths.get("src").relativize(f).toString).toSet
+      .map(f => Paths.get("src").relativize(f).toString ->
+        new String(Files.readAllBytes(f), "UTF-8"))
+      .toMap
   }
+
+  /** Files under src/ whose text contains `needle`. */
+  private def filesContaining(needle: String): Set[String] =
+    sources("src").collect { case (f, text) if text.contains(needle) => f }.toSet
 
   test("sessions are built only by graft.Session") {
     assert(filesContaining("SparkSession.builder") === Set("main/scala/graft/Session.scala"))
@@ -79,5 +86,23 @@ class SurveyIndexSpec extends AnyFunSuite {
 
   test("file-replay tick sources are built only by Streams.ticks") {
     assert(filesContaining("maxFilesPerTrigger\"") === Set("main/scala/graft/util/Streams.scala"))
+  }
+
+  test("scratch paths come only from Sinks.scratch: no tmpBase, no absolute build dir") {
+    assert(filesContaining("tmpBase").isEmpty)
+    val absoluteTarget = """"/[^"\s]*/target(/|")""".r
+    assert(sources("src").collect {
+      case (f, text) if absoluteTarget.findFirstIn(text).isDefined => f
+    }.isEmpty)
+  }
+
+  test("no two literal scratch names in src/main are equal") {
+    // two entries sharing a name would clear and overwrite each other's
+    // scratch in one run
+    val names = sources("src/main").values.toSeq
+      .flatMap("""\bscratch\("([^"]+)"\)""".r.findAllMatchIn(_).map(_.group(1)))
+    assert(names.nonEmpty)
+    val repeated = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(repeated.isEmpty, s"scratch names used more than once: ${repeated.toSeq.sorted}")
   }
 }
