@@ -17,9 +17,12 @@ import graft.sources.Tables
   * (`git_etl.ts:127-132`).
   *
   * Everything here is a declarative `DataFrame` transform so Catalyst keeps
-  * pushdown/pruning/codegen; nothing collects to the driver. At 100 TB the
-  * watermark is O(metadata) (a `max` over the sink's partition stats or
-  * streaming state), never the reference's O(N)-per-tick rescan.
+  * pushdown/pruning/codegen; nothing collects to the driver. The
+  * watermark ([[watermark]]) is `max` over the stored table: on a parquet
+  * store that is a full scan of the store every tick, the reference's
+  * O(N)-per-tick rescan. Only the DSv2 commit source's
+  * [[graft.sources.CommitAggScan]] pushes the aggregate into the source
+  * and answers it without reading rows.
   */
 object CommitEtl {
 

@@ -227,15 +227,12 @@ object IncrementalDedup {
     // the append overwrites its own per-tick file by name.
     val elog = s"$base/edges"
     graft.util.Fs.heal(elog)
-    val nE = Sinks.storedBucketCount(elog).getOrElse {
-      Sinks.initBucketStore(elog, 16); 16
-    }
-    def bucketOf(c: org.apache.spark.sql.Column) = pmod(c, lit(nE)).cast("int")
+    Sinks.initBucketStore(elog, 16, "label")
+    val layout = Sinks.layoutOf(elog)
     val newLabeled = edges
       .join(newRows.select(col("doc").as("doc_a"), col("label").as("elabel")), "doc_a")
       .select(col("doc_a"), col("doc_b"), col("elabel").as("label"))
-    val srcBuckets = remap.select(bucketOf(col("label")).as("_bucket"))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
+    val srcBuckets = layout.bucketsOf(remap, col("label"))
     val srcDirs = Sinks.bucketDirs(elog, srcBuckets)
     val movesPath = s"$base/emoves/batch_$batchId"
     // ONE physical read of the source buckets serves both projections
@@ -260,13 +257,13 @@ object IncrementalDedup {
     }
     val moved = s.read.parquet(movesPath)
     val landing = moved.unionByName(newLabeled)
-      .withColumn("_bucket", bucketOf(col("label"))).localCheckpoint()
+      .withColumn("_bucket", layout.bucketOf(col("label"))).localCheckpoint()
     if (srcBuckets.nonEmpty) {
       // rewrite ONLY the move-source buckets: drop moved-out rows, fold in
       // any moved/new rows that land back inside this same bucket set
       val staying =
         srcRows.join(remap.select(col("label")), Seq("label"), "left_anti")
-      val content = staying.withColumn("_bucket", bucketOf(col("label")))
+      val content = staying.withColumn("_bucket", layout.bucketOf(col("label")))
         .unionByName(landing.where(col("_bucket").isin(srcBuckets: _*)))
         .distinct()
       Sinks.rewriteBuckets(s, elog, content, srcBuckets, dropMissing = true)
@@ -326,9 +323,9 @@ object IncrementalDedup {
     // pruned edge read: ONLY the affected labels' buckets are listed
     val elog = s"$base/edges"
     graft.util.Fs.heal(elog)
-    val nE = Sinks.storedBucketCount(elog).getOrElse(16)
-    def bucketOf(c: org.apache.spark.sql.Column) = pmod(c, lit(nE)).cast("int")
-    val aDirs = forgetEdgeDirs(s, base, affected)
+    val layout = Sinks.layoutOf(elog)
+    val aBuckets = forgetEdgeBuckets(base, affected)
+    val aDirs = Sinks.bucketDirs(elog, aBuckets)
     val logged =
       if (aDirs.isEmpty)
         del.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
@@ -355,9 +352,7 @@ object IncrementalDedup {
       .select(col("doc").as("doc_a"), col("label").as("nl"))
     val relabeled = surviving.join(newLab, "doc_a")
       .select(col("doc_a"), col("doc_b"), col("nl").as("label"))
-    val targetB = relabeled.select(bucketOf(col("label")).as("_bucket"))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val touchedE = (aDirs.map(_.split("=").last.toInt) ++ targetB).distinct
+    val touchedE = (aBuckets ++ layout.bucketsOf(relabeled, col("label"))).distinct
     if (touchedE.nonEmpty) {
       val allRows =
         if (Sinks.bucketDirs(elog, touchedE).isEmpty) relabeled.limit(0)
@@ -365,23 +360,16 @@ object IncrementalDedup {
           .select(col("doc_a"), col("doc_b"), col("label"))
       val keptOther = allRows.join(affected, Seq("label"), "left_anti")
       val content = keptOther.unionByName(relabeled).distinct()
-        .withColumn("_bucket", bucketOf(col("label")))
+        .withColumn("_bucket", layout.bucketOf(col("label")))
       Sinks.rewriteBuckets(s, elog, content, touchedE, dropMissing = true)
     }
   }
 
-  /** The edge-log partition directories [[ccForget]] reads for an
-    * affected-label set — exposed so specs can assert the subgraph read
-    * is file-level bucket-pruned (never the full log). */
-  private[graft] def forgetEdgeDirs(s: SparkSession, base: String,
-                                    affected: DataFrame): Seq[String] = {
-    val elog = s"$base/edges"
-    val nE = Sinks.storedBucketCount(elog).getOrElse(16)
-    val abuckets = affected
-      .select(pmod(col("label"), lit(nE)).cast("int").as("_bucket"))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    Sinks.bucketDirs(elog, abuckets)
-  }
+  /** The edge-log buckets [[ccForget]] reads for an affected-label set —
+    * exposed so specs can assert the subgraph read is file-level
+    * bucket-pruned (never the full log). */
+  private[graft] def forgetEdgeBuckets(base: String, affected: DataFrame): Seq[Int] =
+    Sinks.layoutOf(s"$base/edges").bucketsOf(affected, col("label"))
 
   /** The labels store, or an empty (doc, label) table when no tick ever
     * wrote it — an EMPTY edge stream is a legal corpus state (a fully

@@ -4,7 +4,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.hadoop.util.ShutdownHookManager
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.CommitEtl
@@ -106,22 +106,62 @@ object Sinks {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(staged)
     }
 
-  /** O8 keyed upsert of `batch` into the parquet store `dest` (latest
-    * `orderCols` win per `key`, `CommitEtl.upsert`), published with
-    * [[writeAtomic]]. Heals `dest` before reading it: after a crash
-    * between a swap's two renames the store sits at its `.old` sibling,
-    * and an unhealed read would upsert into an empty store whose publish
-    * then drops the history. The whole store is rewritten per call, so
-    * a tick costs O(stored rows); [[mergeByKeyBucket]] is the O(touched
-    * buckets) form. */
-  def upsertInto(s: SparkSession, dest: String, batch: DataFrame,
-                 key: String, orderCols: Seq[String]): Unit = {
-    Fs.heal(dest)
-    val existing =
-      if (Fs.exists(dest)) s.read.parquet(dest)
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    writeAtomic(CommitEtl.upsert(existing, batch, key, orderCols), dest)
+  // ---------------------------------------------------------------------
+  // Bucket store: the one keyed parquet store. Rows live under
+  // `<store>/_bucket=<id>/`, a row's bucket is its [[BucketLayout]]'s
+  // `pmod` of one column, and the layout is persisted in the store's one
+  // metadata file, written atomically with the store's first publish.
+  // Everything that knows where a bucket lives or which bucket a value
+  // hashes to is below; callers go through it.
+  // ---------------------------------------------------------------------
+
+  /** A bucket store's layout: `n` buckets of the column `column`. */
+  final case class BucketLayout(n: Int, column: String) {
+    /** The bucket `c`'s value lives in — the one hash law of a bucket
+      * store. Int-typed, so `_bucket` round-trips partition discovery
+      * with a stable type. */
+    def bucketOf(c: Column): Column = pmod(c, lit(n)).cast("int")
+
+    /** The distinct buckets `rows`' `c` values hash into (partition
+      * metadata: at most `n` values reach the driver). */
+    def bucketsOf(rows: DataFrame, c: Column): IndexedSeq[Int] =
+      rows.select(bucketOf(c)).distinct().collect().map(_.getInt(0)).toIndexedSeq
   }
+
+  /** Name of the layout metadata file inside a bucket store
+    * (underscore-prefixed: invisible to Spark readers). */
+  private val LayoutFile = "_graft_layout"
+
+  private def writeLayout(dir: String, layout: BucketLayout): Unit =
+    Fs.write(s"$dir/$LayoutFile", s"${layout.n}\n${layout.column}")
+
+  /** The layout the bucket store `dest` was created with. Fails, naming
+    * the path, when the store has no layout metadata: bucketing a row by
+    * a guessed layout could put it beside no stored twin. */
+  def layoutOf(dest: String): BucketLayout = {
+    val meta = s"$dest/$LayoutFile"
+    if (!Fs.exists(meta))
+      throw new IllegalStateException(s"no bucket store layout at $meta")
+    val Array(n, column) = Fs.read(meta).split("\n", 2)
+    BucketLayout(n.trim.toInt, column.trim)
+  }
+
+  private def bucketDir(dest: String, b: Int): String = s"$dest/_bucket=$b"
+
+  /** The bucket directories under `dir` right now, as (bucket id, path),
+    * bucket id ascending. */
+  def bucketListing(dir: String): Seq[(Int, String)] =
+    Fs.listDirs(dir).filter(_.startsWith("_bucket="))
+      .map(d => d.stripPrefix("_bucket=").toInt -> s"$dir/$d").sortBy(_._1)
+
+  /** The bucket ids that physically exist in the store right now. */
+  def existingBuckets(dest: String): Seq[Int] = bucketListing(dest).map(_._1).toIndexedSeq
+
+  /** The EXISTING partition directories of the given buckets — handed to
+    * a parquet read, this is file-level pruning: no other bucket's files
+    * are ever listed, let alone read. */
+  def bucketDirs(dest: String, buckets: Seq[Int]): Seq[String] =
+    buckets.map(bucketDir(dest, _)).filter(Fs.exists)
 
   /** Partition-scoped keyed merge (the 100 TB fix for rewrite-the-world
     * upserts): the store is partitioned by a STABLE hash bucket of the key
@@ -148,38 +188,58 @@ object Sinks {
     // bucketCol is functionally dependent on the key and IMMUTABLE for a
     // given key (otherwise an update could land beside a stale twin it
     // never reads).
-    val bCol = Option(bucketCol).getOrElse(key)
     Fs.heal(dest)
-    if (!Fs.exists(dest)) {
-      // first write: the whole store publishes at once. The bucket count
-      // and the bucketing column are persisted INSIDE the staged dir
-      // (underscore-prefixed — invisible to Spark readers), atomic with
-      // the data, so every later merge or delete buckets against the
-      // store's true layout. `_bucket` is int-typed so it round-trips
-      // partition discovery with a stable type.
+    val fresh = !Fs.exists(dest)
+    // a merge buckets by the STORE's layout, not the caller's: a mismatch
+    // would assign a key's new row to a different bucket than its stored
+    // twin, and the upsert (which only reads touched buckets) would leave
+    // the stale twin alive — silent duplicate keys
+    val layout =
+      if (fresh) BucketLayout(nBuckets, Option(bucketCol).getOrElse(key)) else layoutOf(dest)
+    val bucketed = batch.withColumn("_bucket", layout.bucketOf(col(layout.column)))
+    if (fresh) {
+      // first write: the whole store publishes at once, its layout
+      // persisted INSIDE the staged dir, atomic with the data
       publish(dest) { staged =>
-        batch.withColumn("_bucket", pmod(col(bCol), lit(nBuckets)).cast("int"))
-          .write.partitionBy("_bucket").parquet(staged)
-        Fs.write(s"$staged/_graft_buckets", nBuckets.toString)
-        Fs.write(s"$staged/_graft_bucket_col", bCol)
+        bucketed.write.partitionBy("_bucket").parquet(staged)
+        writeLayout(staged, layout)
       }
     } else {
-      // merge against the STORE's bucket count and column, not the
-      // caller's: a mismatch would assign a key's new row to a different
-      // bucket than its stored twin, and the upsert (which only reads
-      // touched buckets) would leave the stale twin alive — silent
-      // duplicate keys. Pre-metadata stores fall back to the caller's.
-      val n = storedBucketCount(dest).getOrElse(nBuckets)
-      val storeBCol = storedBucketCol(dest).getOrElse(bCol)
-      val bucketed = batch.withColumn("_bucket",
-        pmod(col(storeBCol), lit(n)).cast("int"))
-      // touched-bucket list is partition METADATA (<= nBuckets values)
-      val touched = bucketed.select(col("_bucket")).distinct()
-        .collect().map(_.getInt(0)).toIndexedSeq
+      val touched = layout.bucketsOf(batch, col(layout.column))
       val existing = s.read.parquet(dest)
         .where(col("_bucket").isin(touched: _*))
-      val merged = CommitEtl.upsert(existing, bucketed, key, orderCols)
-      rewriteBuckets(s, dest, merged, touched)
+      rewriteBuckets(s, dest, CommitEtl.upsert(existing, bucketed, key, orderCols), touched)
+    }
+  }
+
+  /** The (key, `_del_bucket`) rows of a delete list: `_del_bucket` is the
+    * data bucket the key lives in when the store's layout column is the
+    * key or `keys` carries it, and null when the list cannot be pruned
+    * (it lacks the layout column). */
+  private def deleteTargets(layout: BucketLayout, keys: DataFrame, key: String): DataFrame = {
+    val bucket =
+      if (layout.column == key || keys.columns.contains(layout.column))
+        layout.bucketOf(col(layout.column))
+      else lit(null).cast("int")
+    keys.select(col(key), bucket.as("_del_bucket")).distinct()
+  }
+
+  /** Remove the rows whose `key` is in `targets` ([[deleteTargets]]'
+    * shape): read only the buckets the targets name — every existing
+    * bucket when any target has none — anti-join the keys, and swap the
+    * buckets back, dropping the ones left empty. */
+  private def dropKeys(s: SparkSession, dest: String, targets: DataFrame,
+                       key: String): Unit = {
+    val named = targets.select(col("_del_bucket")).distinct().collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
+    val touched =
+      if (named.forall(_.isDefined)) named.flatten.toIndexedSeq.intersect(existingBuckets(dest))
+      else existingBuckets(dest)
+    if (touched.nonEmpty) {
+      val remaining = s.read.parquet(dest)
+        .where(col("_bucket").isin(touched: _*))
+        .join(targets.select(col(key)).distinct(), Seq(key), "left_anti")
+      rewriteBuckets(s, dest, remaining, touched, dropMissing = true)
     }
   }
 
@@ -190,34 +250,17 @@ object Sinks {
     * rewrite. Idempotent — replaying a delete finds no matching keys and
     * rewrites the same (already-clean) buckets. A bucket whose rows are
     * all deleted is dropped from the store (readers of `dest` see the
-    * remaining buckets; partition discovery needs no placeholder). */
+    * remaining buckets; partition discovery needs no placeholder).
+    *
+    * Buckets come from the store's layout column, not the merge key: a
+    * bucketCol store (e.g. the FK-bucketed join MV) hashes rows by the
+    * FK, so a delete list without the FK anti-joins every bucket
+    * (correct but unpruned — supply the layout column in `keys` to keep
+    * the 100 TB pruning property). */
   def deleteByKeyBucket(s: SparkSession, dest: String, keys: DataFrame,
                         key: String): Unit = {
-    if (!Fs.exists(dest)) return
     Fs.heal(dest)
-    val n = storedBucketCount(dest).getOrElse(16)
-    // Bucket by the store's TRUE layout column (persisted at init), not by
-    // the merge key: a bucketCol store (e.g. the FK-bucketed join MV) hashes
-    // rows by the FK, so pmod(key) would read buckets the rows do NOT live
-    // in and the delete would silently remove nothing.
-    val bCol = storedBucketCol(dest).getOrElse(key)
-    val canPrune = bCol == key || keys.columns.contains(bCol)
-    val del = keys.select((col(key) +: (if (bCol == key) Nil
-      else if (canPrune) Seq(col(bCol)) else Nil)): _*).distinct()
-    val touched =
-      if (canPrune)
-        del.select(pmod(col(bCol), lit(n)).cast("int").as("_bucket"))
-          .distinct().collect().map(_.getInt(0)).toIndexedSeq
-      else
-        // delete list lacks the bucketing column: correct-but-unpruned
-        // fallback — anti-join every existing bucket (the caller should
-        // supply bCol in `keys` to keep the 100 TB pruning property)
-        existingBuckets(dest)
-    if (touched.isEmpty) return
-    val remaining = s.read.parquet(dest)
-      .where(col("_bucket").isin(touched: _*))
-      .join(del.select(col(key)), Seq(key), "left_anti")
-    rewriteBuckets(s, dest, remaining, touched, dropMissing = true)
+    if (Fs.exists(dest)) dropKeys(s, dest, deleteTargets(layoutOf(dest), keys, key), key)
   }
 
   /** Merge-on-read keyed DELETE — the cheap tier [[deleteByKeyBucket]]'s
@@ -236,12 +279,10 @@ object Sinks {
     * sidecar rows (harmless anyway — the anti-join is set-semantics —
     * but unbounded sidecar growth isn't).
     *
-    * Sidecar schema: (key, `_del_bucket` int) where `_del_bucket` is the
-    * target data bucket when derivable from the store's persisted layout
-    * column (bCol == key, or `keys` carries bCol) — compaction prunes to
-    * those buckets; a null `_del_bucket` row falls back to an all-bucket
-    * anti-join at compaction (still correct, just unpruned — same
-    * contract as [[deleteByKeyBucket]]'s missing-bucketCol fallback).
+    * Sidecar schema: (key, `_del_bucket` int), the rows of
+    * [[deleteTargets]] — compaction prunes to the named buckets, and a
+    * null `_del_bucket` row falls back to an all-bucket anti-join (still
+    * correct, just unpruned — same contract as [[deleteByKeyBucket]]).
     *
     * CONTRACT: the sidecar masks by KEY until compacted, with no
     * sequence numbers — re-upserting a key whose delete is still pending
@@ -250,23 +291,12 @@ object Sinks {
     * exactly this ordering). */
   def deleteByKeyMoR(s: SparkSession, dest: String, keys: DataFrame,
                      key: String, tag: String): Unit = {
+    Fs.heal(dest)
     if (!Fs.exists(dest)) return
-    val n = storedBucketCount(dest).getOrElse(16)
-    val bCol = storedBucketCol(dest).getOrElse(key)
-    val withBucket =
-      if (bCol == key)
-        keys.select(col(key)).distinct()
-          .withColumn("_del_bucket", pmod(col(key), lit(n)).cast("int"))
-      else if (keys.columns.contains(bCol))
-        keys.select(col(key), col(bCol)).distinct()
-          .select(col(key), pmod(col(bCol), lit(n)).cast("int").as("_del_bucket"))
-      else
-        keys.select(col(key)).distinct()
-          .withColumn("_del_bucket", lit(null).cast("int"))
     val delDir = s"$dest/_deletes"
     val staged = Fs.stagingOf(s"$delDir/del_$tag")
     Fs.delete(staged)
-    withBucket.write.mode("overwrite").parquet(staged)
+    deleteTargets(layoutOf(dest), keys, key).write.mode("overwrite").parquet(staged)
     replaceTagged(staged, delDir, s"del_${tag}_")
     Fs.delete(staged)
   }
@@ -321,20 +351,7 @@ object Sinks {
     * having taken [[deleteByKeyBucket]] directly (spec-asserted). */
   def compactDeletes(s: SparkSession, dest: String, key: String): Unit = {
     Fs.heal(dest)
-    pendingDeleteKeys(s, dest).foreach { d =>
-      val buckets = d.select(col("_del_bucket")).distinct().collect()
-        .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-      val touched: Seq[Int] =
-        if (buckets.nonEmpty && buckets.forall(_.isDefined))
-          buckets.flatten.toIndexedSeq.intersect(existingBuckets(dest))
-        else existingBuckets(dest)
-      if (touched.nonEmpty) {
-        val remaining = s.read.parquet(dest)
-          .where(col("_bucket").isin(touched: _*))
-          .join(d.select(col(key)).distinct(), Seq(key), "left_anti")
-        rewriteBuckets(s, dest, remaining, touched, dropMissing = true)
-      }
-    }
+    pendingDeleteKeys(s, dest).foreach(dropKeys(s, dest, _, key))
     Fs.delete(s"$dest/_deletes")
   }
 
@@ -354,61 +371,23 @@ object Sinks {
     Fs.delete(staging)
     df.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
     touched.foreach { b =>
-      val (staged, live) = (s"$staging/_bucket=$b", s"$dest/_bucket=$b")
+      val (staged, live) = (bucketDir(staging, b), bucketDir(dest, b))
       if (Fs.exists(staged)) Fs.swap(staged, live)
       else if (dropMissing) Fs.delete(live)
     }
     Fs.delete(staging)
   }
 
-  /** Create an empty bucketed store: just the directory plus the
-    * self-describing `_graft_buckets` metadata (callers then populate it
-    * with [[rewriteBuckets]]). No-op if the store already exists. Serves
-    * MULTISET bucket stores — rows bucketed by some derived column with
-    * no unique merge key — which [[mergeByKeyBucket]]'s keyed init path
-    * can't host (its upsert would collapse same-key rows). */
-  def initBucketStore(dest: String, nBuckets: Int): Unit =
+  /** Create an empty bucket store of `nBuckets` buckets of `column`: just
+    * the directory plus its layout metadata (callers then populate it
+    * with [[rewriteBuckets]] or [[appendBuckets]]). No-op if the store
+    * already exists. Serves MULTISET bucket stores — rows bucketed by
+    * some derived column with no unique merge key — which
+    * [[mergeByKeyBucket]]'s keyed init path can't host (its upsert would
+    * collapse same-key rows). */
+  def initBucketStore(dest: String, nBuckets: Int, column: String): Unit =
     if (!Fs.exists(dest))
-      publish(dest)(staged => Fs.write(s"$staged/_graft_buckets", nBuckets.toString))
-
-  /** The EXISTING partition directories of the given buckets — handed to
-    * a parquet read, this is file-level pruning: no other bucket's files
-    * are ever listed, let alone read. */
-  def bucketDirs(dest: String, buckets: Seq[Int]): Seq[String] =
-    buckets.map(b => s"$dest/_bucket=$b").filter(Fs.exists)
-
-  private def storeMeta(dest: String, name: String): Option[String] = {
-    val meta = s"$dest/$name"
-    if (Fs.exists(meta)) Some(Fs.read(meta).trim) else None
-  }
-
-  /** The store's bucket count from its `_graft_buckets` metadata file;
-    * None for stores predating the metadata (callers then supply it). */
-  def storedBucketCount(dest: String): Option[Int] =
-    storeMeta(dest, "_graft_buckets").map(_.toInt)
-
-  /** The store's bucketing COLUMN from its `_graft_bucket_col` metadata;
-    * None for stores predating it (which always bucketed by the key). */
-  def storedBucketCol(dest: String): Option[String] =
-    storeMeta(dest, "_graft_bucket_col")
-
-  /** The bucket ids that physically exist in the store right now —
-    * parsed from the `_bucket=N` partition dirs. */
-  def existingBuckets(dest: String): Seq[Int] =
-    Fs.listDirs(dest).filter(_.startsWith("_bucket="))
-      .map(_.stripPrefix("_bucket=").toInt).toIndexedSeq
-
-  /** Bucket count sized from expected store rows: one bucket per
-    * `targetRowsPerBucket` (default 4M — a ~100-500 MB bucket rewrite at
-    * typical row widths), rounded up to a power of two (stable pmod
-    * distribution under doubling) and clamped to [16, 65536]. At 100 TB
-    * this yields thousands of buckets, so a touched-bucket rewrite stays
-    * ~GBs instead of the table/16 (~6 TB) a fixed 16 would cost. */
-  def bucketCountFor(nRows: Long, targetRowsPerBucket: Long = 4L << 20): Int = {
-    val want = math.max(1L, (nRows + targetRowsPerBucket - 1) / targetRowsPerBucket)
-    val pow = java.lang.Long.highestOneBit(math.max(1L, want - 1)) << 1
-    math.min(65536L, math.max(16L, pow)).toInt
-  }
+      publish(dest)(writeLayout(_, BucketLayout(nBuckets, column)))
 
   /** Append `df`'s rows (carrying an int `_bucket` column) to a bucketed
     * MULTISET store without reading or rewriting existing bucket content:
@@ -426,8 +405,8 @@ object Sinks {
     Fs.delete(staging)
     df.repartition(col("_bucket")).write.mode("overwrite")
       .partitionBy("_bucket").parquet(staging)
-    Fs.listDirs(staging).filter(_.startsWith("_bucket=")).foreach { b =>
-      replaceTagged(s"$staging/$b", s"$dest/$b", s"append_${tag}_")
+    bucketListing(staging).foreach { case (b, staged) =>
+      replaceTagged(staged, bucketDir(dest, b), s"append_${tag}_")
     }
     Fs.delete(staging)
   }
@@ -443,8 +422,9 @@ object Sinks {
   def compactBuckets(s: SparkSession, dest: String,
                      maxFilesPerBucket: Int = 1): Unit = {
     Fs.heal(dest)
-    val oversized = existingBuckets(dest).filter(b =>
-      Fs.listFiles(s"$dest/_bucket=$b", ".parquet").size > maxFilesPerBucket)
+    val oversized = bucketListing(dest).collect {
+      case (b, dir) if Fs.listFiles(dir, ".parquet").size > maxFilesPerBucket => b
+    }
     if (oversized.nonEmpty) {
       val df = s.read.parquet(dest)
         .where(col("_bucket").isin(oversized: _*))
@@ -870,16 +850,17 @@ object Sinks {
     },
 
     // O8+O10 durable: a real streaming query whose sink is a foreachBatch
-    // keyed merge into a parquet store (read existing ∪ batch → dedup by
-    // key → atomic overwrite), with a checkpoint dir. The scale path the
-    // memory sink can't offer: state lives in the store, not the driver.
+    // keyed bucket merge (the batch's buckets read ∪ batch → dedup by key
+    // → those buckets swapped in), with a checkpoint dir. The scale path
+    // the memory sink can't offer: state lives in the store, not the
+    // driver, and a tick rewrites only the buckets it touches.
     "q_sink_foreachbatch_upsert" -> { (s, dir) =>
       val base = scratch("events_merged")
       val (dest, ckpt) = (s"$base/store", s"$base/ckpt")
       val stream = graft.streaming.StreamOps.eventsStream(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       Streams.drain(stream, ckpt) { (batch, _) =>
-        upsertInto(s, dest, batch, "event_id", Seq("ts", "value"))
+        mergeByKeyBucket(s, dest, batch, "event_id", Seq("ts", "value"))
       }
       s.read.parquet(dest)
         .groupBy(col("event_type"))
@@ -1163,10 +1144,7 @@ object Sinks {
       // tick 2: dim update — backfill reads ONLY the changed keys' buckets
       val dimChange = cust.where(col("c_custkey") % 10 === 0)
         .withColumn("c_mktsegment", lit("CHANGED"))
-      val n = storedBucketCount(store).getOrElse(16)
-      val touched = dimChange
-        .select(pmod(col("c_custkey"), lit(n)).cast("int").as("_b"))
-        .distinct().collect().map(_.getInt(0)).toIndexedSeq
+      val touched = layoutOf(store).bucketsOf(dimChange, col("c_custkey"))
       val affected = s.read.parquet(bucketDirs(store, touched): _*)
       val backfill = affected
         .join(broadcast(dimChange.select(col("c_custkey").as("o_custkey"),

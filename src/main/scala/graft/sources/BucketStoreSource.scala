@@ -26,17 +26,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.util.Fs
 
-/** DataSource V2 reader over a graft bucket store (`Sinks.mergeByKeyBucket`
-  * layout: parquet part files under `<path>/_bucket=<i>/` +
-  * `_graft_buckets` metadata)
-  * that reports its physical layout to the planner as a
-  * [[KeyGroupedPartitioning]] — Spark 4's STORAGE-PARTITIONED JOIN (SPJ,
-  * SPARK-37375) contract. Each bucket directory becomes exactly one
+/** DataSource V2 reader over a graft bucket store (the layout
+  * [[graft.sinks.Sinks]] owns: parquet part files in one directory per
+  * bucket, listed by `Sinks.bucketListing`) that reports its physical
+  * layout to the planner as a [[KeyGroupedPartitioning]] — Spark 4's
+  * STORAGE-PARTITIONED JOIN (SPJ, SPARK-37375) contract. Each bucket directory becomes exactly one
   * [[InputPartition]] carrying its bucket id as the partition key
   * ([[HasPartitionKey]]), so under
   * `spark.sql.sources.v2.bucketing.enabled` a join between two stores
   * bucketed the same way (same key-hash, same bucket count — the store
-  * layout `pmod(key, n)` is deterministic by construction) is planned
+  * layout's `bucketOf` is deterministic by construction) is planned
   * with ZERO shuffle exchanges on either side: partition i joins
   * partition i. This is the 100 TB story for store-store joins — two
   * 100 TB index stores co-bucketed at write time join at read time
@@ -77,21 +76,20 @@ object BucketStoreSource {
       throw new IllegalArgumentException("BucketStoreSource requires option 'path'"))
 
   /** (bucketId, data files) per bucket directory, bucket-id ascending.
-    * Underscore/dot-prefixed files (parquet `_SUCCESS`, the MoR delete
-    * sidecar lives at store level and never matches `_bucket=`) are
+    * Underscore/dot-prefixed files (parquet `_SUCCESS`; the MoR delete
+    * sidecar lives at store level, outside every bucket directory) are
     * skipped the same way Spark's own file index hides them. */
   private[sources] def bucketDirs(path: String): Seq[(Int, Seq[String])] = {
     require(Fs.isDirectory(path), s"no bucket store at $path")
-    Fs.listDirs(path).filter(_.startsWith("_bucket=")).flatMap { d =>
-      val files = Fs.listFiles(s"$path/$d", ".parquet").filterNot { f =>
+    graft.sinks.Sinks.bucketListing(path).flatMap { case (b, dir) =>
+      val files = Fs.listFiles(dir, ".parquet").filterNot { f =>
         val name = new Path(f).getName
         name.startsWith("_") || name.startsWith(".")
       }
       // an emptied bucket dir contributes no partition (deleteByKeyBucket
       // drops emptied buckets entirely, so this is the crash-window case)
-      if (files.isEmpty) None
-      else Some(d.stripPrefix("_bucket=").toInt -> files)
-    }.sortBy(_._1)
+      if (files.isEmpty) None else Some(b -> files)
+    }
   }
 
   private def firstDataFile(path: String): String =

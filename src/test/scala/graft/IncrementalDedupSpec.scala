@@ -346,8 +346,9 @@ class IncrementalDedupSpec extends SparkSpec {
       "8 components spread over 8 bucket dirs")
     // deleting doc 103 affects ONLY label 3's component: the subgraph
     // read must list exactly that bucket's directory, none of the other 7
-    val dirs = IncrementalDedup.forgetEdgeDirs(spark, ccBase, Seq(3L).toDF("label"))
-    assert(dirs.size === 1 && dirs.head.endsWith("_bucket=3"),
+    val buckets = IncrementalDedup.forgetEdgeBuckets(ccBase, Seq(3L).toDF("label"))
+    val dirs = Sinks.bucketDirs(s"$ccBase/edges", buckets)
+    assert(buckets === Seq(3) && dirs.size === 1 && dirs.head.endsWith("_bucket=3"),
       s"forget must read only the affected bucket, got $dirs")
     IncrementalDedup.ccForget(spark, ccBase, Seq(103L).toDF("doc_id"), 100L)
     assert(labels === (1L to 8L).flatMap(k =>

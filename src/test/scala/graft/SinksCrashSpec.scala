@@ -155,11 +155,6 @@ class SinksCrashSpec extends SparkSpec {
       Sinks.writeAtomic(kv(2L to 5L, "b"), _)))
   }
 
-  test("upsertInto: every crash point recovers on re-run") {
-    quietly(enumerate("upsert_into")(Sinks.writeAtomic(kv(0L to 3L, "a"), _))(
-      Sinks.upsertInto(spark, _, kv(2L to 5L, "b"), "k", Seq("v"))))
-  }
-
   test("mergeByKeyBucket first write: every crash point recovers on re-run") {
     quietly(enumerate("merge_first")(_ => ())(merge(_, kv(0L to 5L, "a"))))
   }
@@ -188,14 +183,14 @@ class SinksCrashSpec extends SparkSpec {
 
   test("appendBuckets: every crash point recovers on re-run") {
     quietly(enumerate("append") { st =>
-      Sinks.initBucketStore(st, 2)
+      Sinks.initBucketStore(st, 2, "k")
       Sinks.appendBuckets(spark, st, bucketed(0L to 3L, "a"), "t0")
     }(Sinks.appendBuckets(spark, _, bucketed(2L to 5L, "b"), "t1")))
   }
 
   test("compactBuckets: every crash point recovers on re-run") {
     quietly(enumerate("compact_buckets") { st =>
-      Sinks.initBucketStore(st, 2)
+      Sinks.initBucketStore(st, 2, "k")
       Sinks.appendBuckets(spark, st, bucketed(0L to 3L, "a"), "t0")
       Sinks.appendBuckets(spark, st, bucketed(2L to 5L, "b"), "t1")
     }(Sinks.compactBuckets(spark, _)))

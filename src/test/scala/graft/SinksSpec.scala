@@ -157,7 +157,7 @@ class SinksSpec extends SparkSpec {
     val dest = Sinks.scratch("spec_bucketmeta")
     Sinks.mergeByKeyBucket(spark, dest, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
       "k", Seq("v"), nBuckets = 4)
-    assert(Sinks.storedBucketCount(dest) === Some(4))
+    assert(Sinks.layoutOf(dest).n === 4)
     // caller passes a WRONG count on merge: key 5 would pmod to a
     // different bucket under 7 than under the store's 4 — detection must
     // keep the layout at 4 so the upsert still dedups correctly
@@ -172,15 +172,20 @@ class SinksSpec extends SparkSpec {
     assert(got(5L)._2 === (5L % 4).toInt)
   }
 
-  test("bucketCountFor: power-of-two sizing clamped to [16, 65536]") {
-    assert(Sinks.bucketCountFor(0L) === 16)
-    assert(Sinks.bucketCountFor(1000L) === 16)
-    // 1B rows / 4M per bucket = ~239 -> next power of two = 256
-    assert(Sinks.bucketCountFor(1000000000L) === 256)
-    // 1T rows -> clamped at 65536
-    assert(Sinks.bucketCountFor(1000000000000L) === 65536)
-    // exact power boundary stays put
-    assert(Sinks.bucketCountFor(64L * (4L << 20)) === 64)
+  test("a merge into a bucket store without its layout metadata fails, naming the path") {
+    import spark.implicits._
+    val dest = Sinks.scratch("spec_nolayout")
+    Sinks.mergeByKeyBucket(spark, dest, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      "k", Seq("v"), nBuckets = 4)
+    val meta = s"$dest/_graft_layout"
+    Files.delete(Paths.get(meta))
+    // bucketing by the caller's count instead could put the update of
+    // key 5 beside no stored twin; the merge must refuse, not guess
+    val e = intercept[IllegalStateException](Sinks.mergeByKeyBucket(spark, dest,
+      Seq((1L, "a2"), (5L, "c")).toDF("k", "v"), "k", Seq("v"), nBuckets = 7))
+    assert(e.getMessage.contains(meta), e.getMessage)
+    assert(spark.read.parquet(dest).select("k", "v").as[(Long, String)].collect().sorted
+      === Array((1L, "a"), (2L, "b")), "a refused merge leaves the store as it was")
   }
 
   test("versioned store: commit/snapshotAt/compactVersions with retention") {
@@ -369,7 +374,7 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val dest = Sinks.scratch("spec_append_store")
-    Sinks.initBucketStore(dest, 4)
+    Sinks.initBucketStore(dest, 4, "v")
     def batch(r: Range) = r.toDF("v")
       .withColumn("_bucket", pmod(col("v"), lit(4)).cast("int"))
     Sinks.appendBuckets(spark, dest, batch(1 to 40), "t0")

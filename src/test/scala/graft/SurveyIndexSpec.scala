@@ -96,6 +96,16 @@ class SurveyIndexSpec extends AnyFunSuite {
     }.isEmpty)
   }
 
+  test("the bucket store layout is known only to Sinks; no whole-store upsert") {
+    // a second place that lists bucket dirs or reads the layout file could
+    // bucket a row differently from the store it writes to
+    Seq("_bucket=", "_graft_layout").foreach { needle =>
+      assert(sources("src/main").collect { case (f, text) if text.contains(needle) => f }.toSet
+        === Set("main/scala/graft/sinks/Sinks.scala"), needle)
+    }
+    assert(filesContaining("upsertInto").isEmpty)
+  }
+
   test("no two literal scratch names in src/main are equal") {
     // two entries sharing a name would clear and overwrite each other's
     // scratch in one run
