@@ -66,13 +66,7 @@ object Bench {
     // optional name filter for local perf iteration (driver runs all)
     val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val full = selected.size == SparkEntry.queries.size
-    // local perf-experiment overrides ("k=v;k=v") — unset in driver runs,
-    // so the measured regime is always sessionConfs; used to A/B a conf
-    // before promoting it INTO sessionConfs with a scale justification
-    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";").map(_.trim).filter(_.contains("=")))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
-    val spark = Session.build(cpus, overrides)
+    val spark = Session.build(cpus, Map.empty)
     spark.sparkContext.setLogLevel("ERROR")
     // Warmup with a REAL table read + agg: JVM, codegen, AND the parquet
     // reader/filesystem paths are warm before the first measured query —

@@ -198,10 +198,13 @@ object Sinks {
       if (fresh) BucketLayout(nBuckets, Option(bucketCol).getOrElse(key)) else layoutOf(dest)
     val bucketed = batch.withColumn("_bucket", layout.bucketOf(col(layout.column)))
     if (fresh) {
-      // first write: the whole store publishes at once, its layout
-      // persisted INSIDE the staged dir, atomic with the data
+      // first write: the same upsert as every later merge (against an
+      // empty store), so duplicate keys within the batch collapse here
+      // too; the whole store publishes at once, its layout persisted
+      // INSIDE the staged dir, atomic with the data
       publish(dest) { staged =>
-        bucketed.write.partitionBy("_bucket").parquet(staged)
+        CommitEtl.upsert(bucketed.limit(0), bucketed, key, orderCols)
+          .write.partitionBy("_bucket").parquet(staged)
         writeLayout(staged, layout)
       }
     } else {

@@ -121,6 +121,17 @@ class SinksSpec extends SparkSpec {
     assert(got(12L) === "v1") // bucket-0 key NOT in batch keeps old value
   }
 
+  test("mergeByKeyBucket's first write collapses duplicate keys like every later merge") {
+    import spark.implicits._
+    val dest = Sinks.scratch("spec_bucketfirstdup")
+    val batch = Seq((1L, 1, "old"), (1L, 2, "new"), (2L, 1, "b")).toDF("k", "ord", "v")
+    Sinks.mergeByKeyBucket(spark, dest, batch, "k", Seq("ord"), nBuckets = 4)
+    val got = spark.read.parquet(dest).select("k", "ord", "v").as[(Long, Int, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(got === Seq((1L, 2, "new"), (2L, 1, "b")),
+      "a fresh store must hold one row per key, the highest ord")
+  }
+
   test("compactBuckets coalesces accumulated small files without changing contents") {
     import spark.implicits._
     val dest = Sinks.scratch("spec_compact")

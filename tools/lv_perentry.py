@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """One-entry-per-process sf1 oracle re-check with a spill quota.
 
-Runs tools/localverify.py for one entry at a time in a fresh subprocess
+Runs tools/selfcheck.py for one entry at a time in a fresh subprocess
 (so one entry's DuckDB state/spill can't poison the next), watching the
 spill directory and killing the child if it exceeds the disk quota or the
 wall timeout. Verdicts are written incrementally so an interrupted run
@@ -33,7 +33,7 @@ ap.add_argument("--memlimit", default="36GB")
 ap.add_argument("--threads", type=int, default=24)
 ap.add_argument("--spilldir", default="/tmp/duckspill")
 ap.add_argument("--materialize", default="",
-                help="LV_MATERIALIZE value passed through to localverify")
+                help="LV_MATERIALIZE value passed through to selfcheck")
 ap.add_argument("--keep-deferred", action="store_true",
                 help="do NOT retry entries recorded as deferred (default retries them)")
 args = ap.parse_args()
@@ -61,9 +61,10 @@ def run_one(name):
                LV_THREADS=str(args.threads), LV_SPILLDIR=args.spilldir)
     if args.materialize:
         env["LV_MATERIALIZE"] = args.materialize
+    verdicts = os.path.join(args.spilldir, "verdict.json")
     p = subprocess.Popen(
-        [sys.executable, os.path.join(here, "localverify.py"),
-         args.sfdir, args.outdir, name],
+        [sys.executable, os.path.join(here, "selfcheck.py"),
+         args.sfdir, args.outdir, name, "--json", verdicts],
         stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True, env=env)
     start, quota = time.time(), args.quota_gb * 1024**3
     while True:
@@ -81,25 +82,23 @@ def run_one(name):
                 p.kill(); p.communicate()
                 return f"deferred: oracle spill quota exceeded " \
                        f"({spill / 1024**3:.1f} GB > {args.quota_gb:.0f} GB)"
-    elapsed = time.time() - start
-    if "PASS 1  FAIL 0" in out:
+    try:
+        why = json.load(open(verdicts))["entries"][name]
+    except (OSError, ValueError, KeyError):
+        return f"deferred: runner found no selfcheck verdict " \
+               f"(exit {p.returncode}): {out.strip()[-200:]}"
+    if why == "ok":
         return "pass"
-    for line in out.splitlines():
-        line = line.strip()
-        if line.startswith(f"FAIL {name}:"):
-            why = line.split(":", 1)[1].strip()
-            # resource exhaustion inside DuckDB is a deferral, not a
-            # verdict — keyed on the exception CLASS localverify embeds
-            # (ERR[OutOfMemoryException] / ERR[IOException] with ENOSPC),
-            # never on a substring of an engine-mismatch detail (a real
-            # FAIL whose diff text mentions "Out of Memory" stays a FAIL)
-            if why.startswith("ERR[OutOfMemoryException]") or (
-                    why.startswith("ERR[IOException]")
-                    and "No space left on device" in why):
-                return f"deferred: oracle resource error ({why[:120]})"
-            return f"FAIL {why}"
-    return f"deferred: runner could not parse localverify output " \
-           f"(exit {p.returncode}): {out.strip()[-200:]}"
+    # resource exhaustion inside DuckDB is a deferral, not a verdict —
+    # keyed on the exception CLASS selfcheck puts first
+    # (ERR[OutOfMemoryException] / ERR[IOException] with ENOSPC), never on
+    # a substring of an engine-mismatch detail (a real FAIL whose diff
+    # text mentions "Out of Memory" stays a FAIL)
+    if why.startswith("ERR[OutOfMemoryException]") or (
+            why.startswith("ERR[IOException]")
+            and "No space left on device" in why):
+        return f"deferred: oracle resource error ({why[:120]})"
+    return f"FAIL {why}"
 
 
 # deferred entries are TODO on every re-run (ADVICE r13: sticky deferrals
