@@ -106,14 +106,20 @@ object CommitEtl {
     * batch, ties break on `orderCols`. This is the `read ∪ new →
     * dedup-by-key → overwrite` cycle SURVEY §7.4 describes; the window is a
     * single shuffle on the key — at scale, key-partitioned and AQE-skew-safe.
+    *
+    * `cluster = Some(c -> n)` makes that one shuffle go by the column `c`
+    * (a function of the key) into `n` partitions instead, and ranks within
+    * (`c`, key): the same rows win, and the result comes out laid out by
+    * `c` — what a writer partitioning its output by `c` wants.
     */
   def upsert(existing: DataFrame, incoming: DataFrame, key: String,
-             orderCols: Seq[String]): DataFrame = {
+             orderCols: Seq[String], cluster: Option[(String, Int)] = None): DataFrame = {
     val tagged = existing.withColumn("_src", lit(0))
       .unionByName(incoming.withColumn("_src", lit(1)))
-    val w = Window.partitionBy(col(key))
+    val spread = cluster.fold(tagged) { case (c, n) => tagged.repartition(n, col(c)) }
+    val w = Window.partitionBy((cluster.map(_._1).toSeq :+ key).map(col): _*)
       .orderBy(col("_src").desc +: orderCols.map(c => col(c).desc): _*)
-    tagged.withColumn("_rn", row_number().over(w))
+    spread.withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1).drop("_src", "_rn")
   }
 

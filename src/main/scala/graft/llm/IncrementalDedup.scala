@@ -76,7 +76,7 @@ object IncrementalDedup {
     graft.util.Fs.heal(bandStore)
     val stored =
       if (graft.util.Fs.exists(bandStore))
-        s.read.parquet(bandStore).select(col("doc_id"), col("band_idx"), col("band_key"))
+        Sinks.readStore(s, bandStore).select(col("doc_id"), col("band_idx"), col("band_key"))
       else s.createDataFrame(s.sparkContext.emptyRDD[Row],
         StructType(bandsNew.schema.fields))
     // new-vs-stored: the incremental step. Equi-join on (band_idx,

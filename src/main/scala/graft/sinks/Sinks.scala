@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.FileSystem
 import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.ingest.CommitEtl
 import graft.sources.Tables
@@ -115,25 +116,34 @@ object Sinks {
   // hashes to is below; callers go through it.
   // ---------------------------------------------------------------------
 
-  /** A bucket store's layout: `n` buckets of the column `column`. */
-  final case class BucketLayout(n: Int, column: String) {
+  /** A bucket store's layout: `n` buckets of the column `column`, and, for
+    * a keyed store, the `schema` of its rows (`_bucket` included), recorded
+    * at its first publish. */
+  final case class BucketLayout(n: Int, column: String, schema: Option[StructType] = None) {
     /** The bucket `c`'s value lives in — the one hash law of a bucket
       * store. Int-typed, so `_bucket` round-trips partition discovery
       * with a stable type. */
     def bucketOf(c: Column): Column = pmod(c, lit(n)).cast("int")
 
-    /** The distinct buckets `rows`' `c` values hash into (partition
-      * metadata: at most `n` values reach the driver). */
+    /** The distinct buckets `rows`' `c` values hash into, ascending. One
+      * stage: each task sends the driver the set of its rows' buckets (at
+      * most `n` ints), where a `distinct()` would plan a shuffle that AQE
+      * runs as two jobs. */
     def bucketsOf(rows: DataFrame, c: Column): IndexedSeq[Int] =
-      rows.select(bucketOf(c)).distinct().collect().map(_.getInt(0)).toIndexedSeq
+      rows.select(bucketOf(c)).rdd
+        .mapPartitions(it => Iterator.single(it.map(_.getInt(0)).toSet))
+        .collect().flatten.distinct.sorted.toIndexedSeq
   }
 
   /** Name of the layout metadata file inside a bucket store
     * (underscore-prefixed: invisible to Spark readers). */
   private val LayoutFile = "_graft_layout"
 
+  /** The layout file: the bucket count, the column, and the schema's JSON
+    * when one is recorded, one per line. */
   private def writeLayout(dir: String, layout: BucketLayout): Unit =
-    Fs.write(s"$dir/$LayoutFile", s"${layout.n}\n${layout.column}")
+    Fs.write(s"$dir/$LayoutFile",
+      (Seq(layout.n.toString, layout.column) ++ layout.schema.map(_.json)).mkString("\n"))
 
   /** The layout the bucket store `dest` was created with. Fails, naming
     * the path, when the store has no layout metadata: bucketing a row by
@@ -142,9 +152,43 @@ object Sinks {
     val meta = s"$dest/$LayoutFile"
     if (!Fs.exists(meta))
       throw new IllegalStateException(s"no bucket store layout at $meta")
-    val Array(n, column) = Fs.read(meta).split("\n", 2)
-    BucketLayout(n.trim.toInt, column.trim)
+    Fs.read(meta).split("\n", 3).map(_.trim) match {
+      case Array(n, column) => BucketLayout(n.toInt, column)
+      case Array(n, column, schema) =>
+        BucketLayout(n.toInt, column, Some(DataType.fromJson(schema).asInstanceOf[StructType]))
+    }
   }
+
+  /** The rows of the bucket store `dest` (with their `_bucket`). A keyed
+    * store is read under its recorded schema: a bare parquet read would
+    * first run a Spark job to infer the schema from a footer. */
+  def readStore(s: SparkSession, dest: String): DataFrame = readStore(s, dest, layoutOf(dest))
+
+  private def readStore(s: SparkSession, dest: String, layout: BucketLayout): DataFrame = {
+    val r = s.read
+    layout.schema.fold(r)(r.schema).parquet(dest)
+  }
+
+  /** `rows`' columns as name -> type, nullability aside (a parquet read
+    * makes every column nullable). */
+  private def columnTypes(rows: StructType): Map[String, String] =
+    rows.fields.map(f => f.name -> f.dataType.catalogString).toMap
+
+  /** Tasks that write `buckets` buckets at once: one per bucket, at most
+    * one per core. */
+  private def bucketSlots(s: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, s.sparkContext.defaultParallelism))
+
+  /** The one writer of bucket files: `df`'s rows (an int `_bucket`
+    * column, at most `buckets` distinct values) under `dir`, one directory
+    * and one parquet file per bucket. A numbered repartition on `_bucket`
+    * gives each bucket to exactly one task and runs [[bucketSlots]] tasks
+    * at once. AQE never coalesces a numbered repartition, so the buckets
+    * are not written one after another by a single task; the planner
+    * drops it when `df` is already laid out this way (a merge's upsert). */
+  private def writeBuckets(df: DataFrame, dir: String, buckets: Int): Unit =
+    df.repartition(bucketSlots(df.sparkSession, buckets), col("_bucket"))
+      .write.mode("overwrite").partitionBy("_bucket").parquet(dir)
 
   private def bucketDir(dest: String, b: Int): String = s"$dest/_bucket=$b"
 
@@ -197,21 +241,30 @@ object Sinks {
     val layout =
       if (fresh) BucketLayout(nBuckets, Option(bucketCol).getOrElse(key)) else layoutOf(dest)
     val bucketed = batch.withColumn("_bucket", layout.bucketOf(col(layout.column)))
+    // the upsert's one shuffle lays its rows out the way the bucket
+    // writer wants them (by `_bucket`, a function of the key, into
+    // bucketSlots tasks), so the write adds no second exchange
+    def upsert(existing: DataFrame, buckets: Int) = CommitEtl.upsert(existing, bucketed,
+      key, orderCols, cluster = Some("_bucket" -> bucketSlots(s, buckets)))
     if (fresh) {
       // first write: the same upsert as every later merge (against an
       // empty store), so duplicate keys within the batch collapse here
-      // too; the whole store publishes at once, its layout persisted
-      // INSIDE the staged dir, atomic with the data
+      // too; the whole store publishes at once, its layout and schema
+      // persisted INSIDE the staged dir, atomic with the data
+      val schema = StructType(bucketed.schema.fields.map(_.copy(nullable = true)))
       publish(dest) { staged =>
-        CommitEtl.upsert(bucketed.limit(0), bucketed, key, orderCols)
-          .write.partitionBy("_bucket").parquet(staged)
-        writeLayout(staged, layout)
+        writeBuckets(upsert(bucketed.limit(0), layout.n), staged, layout.n)
+        writeLayout(staged, layout.copy(schema = Some(schema)))
       }
     } else {
+      layout.schema.foreach { t =>
+        if (columnTypes(t) != columnTypes(bucketed.schema))
+          throw new IllegalArgumentException(s"batch columns ${bucketed.schema.catalogString} " +
+            s"differ from the ${t.catalogString} of the bucket store at $dest")
+      }
       val touched = layout.bucketsOf(batch, col(layout.column))
-      val existing = s.read.parquet(dest)
-        .where(col("_bucket").isin(touched: _*))
-      rewriteBuckets(s, dest, CommitEtl.upsert(existing, bucketed, key, orderCols), touched)
+      val existing = readStore(s, dest, layout).where(col("_bucket").isin(touched: _*))
+      rewriteBuckets(s, dest, upsert(existing, touched.size), touched)
     }
   }
 
@@ -239,7 +292,7 @@ object Sinks {
       if (named.forall(_.isDefined)) named.flatten.toIndexedSeq.intersect(existingBuckets(dest))
       else existingBuckets(dest)
     if (touched.nonEmpty) {
-      val remaining = s.read.parquet(dest)
+      val remaining = readStore(s, dest)
         .where(col("_bucket").isin(touched: _*))
         .join(targets.select(col(key)).distinct(), Seq(key), "left_anti")
       rewriteBuckets(s, dest, remaining, touched, dropMissing = true)
@@ -335,7 +388,7 @@ object Sinks {
     * OOM; AQE picks per the sidecar's actual size. A store with no
     * sidecar reads with zero overhead (no join in the plan at all). */
   def readWithDeletes(s: SparkSession, dest: String, key: String): DataFrame = {
-    val base = s.read.parquet(dest)
+    val base = readStore(s, dest)
     pendingDeleteKeys(s, dest) match {
       case None => base
       case Some(d) =>
@@ -361,8 +414,9 @@ object Sinks {
   /** Replace the `touched` buckets of a bucketed store with `df`'s rows
     * (`df` carries an int `_bucket` column and holds rows ONLY for
     * touched buckets): stage them under the store's `_merge_staging`
-    * (underscore: invisible to readers of the store), then swap each
-    * touched bucket in.
+    * (underscore: invisible to readers of the store) through
+    * [[writeBuckets]], one file per bucket, then swap each touched
+    * bucket in.
     * `dropMissing`: a touched bucket with NO staged output (every row
     * deleted or moved elsewhere) is removed from the live store instead
     * of left stale — the delete paths and multiset stores like the CC
@@ -372,7 +426,7 @@ object Sinks {
                      touched: Seq[Int], dropMissing: Boolean = false): Unit = {
     val staging = s"$dest/_merge_staging"
     Fs.delete(staging)
-    df.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+    writeBuckets(df, staging, touched.size)
     touched.foreach { b =>
       val (staged, live) = (bucketDir(staging, b), bucketDir(dest, b))
       if (Fs.exists(staged)) Fs.swap(staged, live)
@@ -394,8 +448,8 @@ object Sinks {
 
   /** Append `df`'s rows (carrying an int `_bucket` column) to a bucketed
     * MULTISET store without reading or rewriting existing bucket content:
-    * rows are staged partitioned-by-bucket (repartitioned on `_bucket`, so
-    * each bucket's rows land in one task → one staged file), then each
+    * rows are staged partitioned-by-bucket ([[writeBuckets]]: one staged
+    * file per bucket), then each
     * staged file moves into the live bucket dir under a DETERMINISTIC
     * per-(tag, bucket) name — a replayed tick replaces its own file
     * instead of duplicating rows. This is what makes a merge-free
@@ -406,35 +460,30 @@ object Sinks {
   def appendBuckets(s: SparkSession, dest: String, df: DataFrame, tag: String): Unit = {
     val staging = Fs.stagingOf(s"$dest/append_$tag")
     Fs.delete(staging)
-    df.repartition(col("_bucket")).write.mode("overwrite")
-      .partitionBy("_bucket").parquet(staging)
+    writeBuckets(df, staging, layoutOf(dest).n)
     bucketListing(staging).foreach { case (b, staged) =>
       replaceTagged(staged, bucketDir(dest, b), s"append_${tag}_")
     }
     Fs.delete(staging)
   }
 
-  /** Coalesce each bucket holding more than `maxFilesPerBucket` parquet
-    * files down to at most that many — the maintenance pass that stops
-    * small files accumulating across merges (each merge rewrites a
-    * touched bucket with up to `spark.sql.shuffle.partitions` files).
-    * Oversized buckets are rewritten via `repartition(_bucket)` (each
-    * bucket lands wholly in one task → one file) and swapped in like a
-    * merge; untouched buckets are never read. Contents are byte-identical
+  /** Rewrite each bucket holding more than one parquet file as one file —
+    * the maintenance pass that stops small files accumulating. A merge
+    * rewrites each touched bucket as one file, so the files accumulate in
+    * multiset stores, one per [[appendBuckets]] tick, and in buckets
+    * written before that rule. Oversized buckets are
+    * rewritten through [[rewriteBuckets]] and swapped in like a merge;
+    * untouched buckets are never read. Contents are byte-identical
     * (spec-asserted), so compaction can run any time between merges. */
-  def compactBuckets(s: SparkSession, dest: String,
-                     maxFilesPerBucket: Int = 1): Unit = {
+  def compactBuckets(s: SparkSession, dest: String): Unit = {
     Fs.heal(dest)
     val oversized = bucketListing(dest).collect {
-      case (b, dir) if Fs.listFiles(dir, ".parquet").size > maxFilesPerBucket => b
+      case (b, dir) if Fs.listFiles(dir, ".parquet").size > 1 => b
     }
-    if (oversized.nonEmpty) {
-      val df = s.read.parquet(dest)
-        .where(col("_bucket").isin(oversized: _*))
-        .repartition(math.max(1, oversized.size / math.max(1, maxFilesPerBucket)),
-          col("_bucket"))
-      rewriteBuckets(s, dest, df, oversized)
-    } else Fs.delete(s"$dest/_merge_staging") // a crashed pass that finished its swaps
+    if (oversized.nonEmpty)
+      rewriteBuckets(s, dest, readStore(s, dest).where(col("_bucket").isin(oversized: _*)),
+        oversized)
+    else Fs.delete(s"$dest/_merge_staging") // a crashed pass that finished its swaps
   }
 
   // ---------------------------------------------------------------------

@@ -105,9 +105,14 @@ object Tables {
     "documents" -> documents, "embeddings" -> embeddings)
 
   /** Session configs every graft session needs; applied once at session
-    * build (Verify/Bench/Probe/tests) rather than mutated per-load —
-    * `nanosAsLong` lets the ns-timestamp events parquet be read as raw longs. */
-  val sessionConfs: Map[String, String] = Map(
+    * build (Verify/Bench/Probe/tests and the perfbench harness) rather than
+    * mutated per-load — `nanosAsLong` lets the ns-timestamp events parquet
+    * be read as raw longs, and the `spark.hadoop.` copies of
+    * [[graft.util.Fs.localConfs]] bind `file:` paths to the fork-free local
+    * filesystem (every Spark write's files and directories get their modes
+    * without a forked `chmod`). */
+  val sessionConfs: Map[String, String] = graft.util.Fs.localConfs.map {
+    case (k, v) => s"spark.hadoop.$k" -> v } ++ Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     // FileOutputCommitter v2 (r15): task commit renames task output

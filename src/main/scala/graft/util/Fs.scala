@@ -1,10 +1,15 @@
 package graft.util
 
 import java.io.{FileNotFoundException, IOException, OutputStream}
+import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants,
+  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem access for every store, staging and scratch path the
@@ -42,14 +47,37 @@ import org.apache.spark.sql.SparkSession
   * entries behind (SinksCrashSpec enumerates every step). Spark's own
   * writes commit with FileOutputCommitter v2 session-wide
   * ([[graft.sources.Tables.sessionConfs]]), which is not atomic mid-job:
-  * never point readers at a directory a Spark job is writing into. */
+  * never point readers at a directory a Spark job is writing into.
+  *
+  * LOCAL DISK — `file:` paths resolve to [[ForkFreeLocalFileSystem]]
+  * ([[localConfs]]), in sessions and in the no-session fallback alike. */
 object Fs {
+
+  /** The Hadoop settings that bind `file:` to [[ForkFreeLocalFileSystem]].
+    * Sessions take them as `spark.hadoop.*` confs
+    * ([[graft.sources.Tables.sessionConfs]]); the no-session fallback
+    * below sets them too, because Hadoop caches one `FileSystem` per
+    * scheme JVM-wide: the first `file:` lookup decides the class for the
+    * rest of the run, and a harness may delete its scratch before any
+    * session exists. The second entry binds the `FileContext` API, which
+    * Structured Streaming writes its checkpoints through and which
+    * `fs.file.impl` does not reach. */
+  val localConfs: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
+  /** What Hadoop clients here are configured from when no session runs. */
+  private[graft] def fallbackConf(): Configuration = {
+    val c = new Configuration()
+    localConfs.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
 
   private def conf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .filterNot(_.sparkContext.isStopped)
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
+      .getOrElse(fallbackConf())
 
   private def fsFor(p: String): (FileSystem, Path) = {
     val path = new Path(p)
@@ -214,4 +242,39 @@ object Fs {
     val (fs, l) = fsFor(live)
     if (!fs.rename(new Path(staged), l)) swap(staged, live)
   }
+}
+
+/** Hadoop's raw local filesystem, minus the fork behind every create.
+  * Without libhadoop (Spark's jar directory ships none)
+  * `RawLocalFileSystem.setPermission` forks a `chmod` process for each
+  * file, `.crc` file and directory it creates: a one-byte `create` took
+  * 6.3-6.9 ms with its two forks and 0.4-0.5 ms without them (median of
+  * 300, 4-vCPU VM; PERF.md finding 85). This sets the same 9 mode bits
+  * through `java.nio` instead, and falls back to Hadoop's own call where
+  * the disk has no POSIX permissions. */
+class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val mode = new FsPermission((permission.toShort & 0x1ff).toShort)
+    try Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(mode.toString))
+    catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+  }
+}
+
+/** The checksummed `file:` filesystem over [[ForkFreeRawLocalFileSystem]]:
+  * what `fs.file.impl` names ([[Fs.localConfs]]). */
+class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
+
+/** The `FileContext` binding of [[ForkFreeLocalFileSystem]], in Hadoop's
+  * `LocalFs` shape (checksummed, over the raw filesystem): what
+  * `fs.AbstractFileSystem.file.impl` names ([[Fs.localConfs]]). Hadoop
+  * instantiates it with a (URI, Configuration) constructor; the URI of
+  * `file:` is fixed. */
+class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new ForkFreeRawLocalFs(conf))
+
+/** `RawLocalFs` over [[ForkFreeRawLocalFileSystem]]. */
+class ForkFreeRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
+    FsConstants.LOCAL_FS_URI, new ForkFreeRawLocalFileSystem, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+  // as RawLocalFs: no port, and any local path name is valid
+  override def getUriDefaultPort: Int = -1
+  override def isValidName(src: String): Boolean = true
 }

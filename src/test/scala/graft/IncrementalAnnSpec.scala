@@ -115,16 +115,27 @@ class IncrementalAnnSpec extends SparkSpec {
         n
       } finally walk.close()
     }
-    // fan one replay tick across many shuffle tasks (AQE coalescing off,
-    // the SinksSpec fixture trick) so buckets actually accumulate files —
-    // tiny test batches otherwise land 1 file per bucket and compaction
-    // is a no-op
+    // a replay tick fanned across many shuffle tasks (AQE coalescing off)
+    // still rewrites each bucket it touches as one file
+    val vecs = s"$lbase/vecs"
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try IncrementalAnn.tickLsh(spark, d.where($"vec_id" < 12).repartition(8), 0L, lbase)
     finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    val filesBefore = parquetFiles(s"$lbase/vecs")
-    Sinks.compactBuckets(spark, s"$lbase/vecs")
-    val filesAfter = parquetFiles(s"$lbase/vecs")
+    assert(Sinks.bucketListing(vecs).forall { case (_, dir) => parquetFiles(dir) == 1 })
+    // so split every bucket's file in two, as a store written before that
+    // rule holds them: the small files compaction exists to fold
+    Sinks.bucketListing(vecs).foreach { case (b, dir) =>
+      val split = Sinks.scratch(s"spec_ann_lsh_split/$b")
+      spark.read.parquet(dir).repartition(2).write.parquet(split)
+      graft.util.Fs.listFiles(dir, ".parquet").foreach(graft.util.Fs.delete)
+      graft.util.Fs.listFiles(split, ".parquet").foreach { f =>
+        graft.util.Fs.move(f, s"$dir/${f.substring(f.lastIndexOf('/') + 1)}")
+      }
+    }
+    assert(IncrementalAnn.serveLsh(spark, lbase).as[(Long, Int, Long, Double)].collect() === truth)
+    val filesBefore = parquetFiles(vecs)
+    Sinks.compactBuckets(spark, vecs)
+    val filesAfter = parquetFiles(vecs)
     assert(filesAfter < filesBefore,
       s"compaction must shrink the file count ($filesBefore -> $filesAfter)")
     val compacted = IncrementalAnn.serveLsh(spark, lbase).as[(Long, Int, Long, Double)].collect()

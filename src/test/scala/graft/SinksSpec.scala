@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+
 import graft.sinks.Sinks
 import graft.util.Fs
 
@@ -134,24 +136,21 @@ class SinksSpec extends SparkSpec {
 
   test("compactBuckets coalesces accumulated small files without changing contents") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     val dest = Sinks.scratch("spec_compact")
-    // 4 merges, each fanning rows across many shuffle tasks -> multi-file
-    // buckets (AQE partition coalescing is disabled for the fixture; at
-    // real scale the merge stage has many non-empty tasks per bucket
-    // without any help)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      (0 until 4).foreach { g =>
-        val batch = (0 until 64).map(i => (i.toLong, s"v${g}_$i")).toDF("k", "v")
-          .repartition(8)
-        Sinks.mergeByKeyBucket(spark, dest, batch, "k", Seq("v"), nBuckets = 4)
-      }
-    } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    // a merge writes each touched bucket as one file; small files pile up
+    // through appends, one file per bucket per tick
+    Sinks.initBucketStore(dest, 4, "k")
+    (0 until 4).foreach { g =>
+      val batch = (0 until 64).map(i => (i.toLong, s"v${g}_$i")).toDF("k", "v")
+        .repartition(8).withColumn("_bucket", pmod(col("k"), lit(4)).cast("int"))
+      Sinks.appendBuckets(spark, dest, batch, s"t$g")
+    }
     def filesPerBucket: Map[Int, Int] = (0 until 4).map { b =>
       val d = new java.io.File(s"$dest/_bucket=$b")
       b -> Option(d.listFiles).map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
     }.toMap
-    assert(filesPerBucket.values.max > 1, "merges should have left multi-file buckets")
+    assert(filesPerBucket.values.max > 1, "appends should have left multi-file buckets")
     val before = spark.read.parquet(dest).as[(Long, String, Int)].collect().sortBy(_._1)
     Sinks.compactBuckets(spark, dest)
     assert(filesPerBucket.values.forall(_ == 1),
@@ -161,6 +160,52 @@ class SinksSpec extends SparkSpec {
     // second compaction is a no-op on an already-tight store
     Sinks.compactBuckets(spark, dest)
     assert(filesPerBucket.values.forall(_ == 1))
+  }
+
+  test("a merge writes each touched bucket as one file and leaves the other buckets' files alone") {
+    import spark.implicits._
+    val dest = Sinks.scratch("spec_bucketfiles")
+    def files(b: Int): Set[String] =
+      Option(new java.io.File(s"$dest/_bucket=$b").listFiles).toSeq.flatten
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    // both writes arrive spread over more tasks than the store has buckets,
+    // and AQE leaves the upsert's shuffle partitions as they are (at scale
+    // they are big enough that it would)
+    def merge(batch: DataFrame) =
+      Session.withConfs(spark, Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false"))(
+        Sinks.mergeByKeyBucket(spark, dest, batch, "k", Seq("ord"), nBuckets = 16))
+    merge((0L until 400L).map(k => (k, 1, s"a$k")).toDF("k", "ord", "v").repartition(8))
+    assert((0 until 16).forall(files(_).size == 1), (0 until 16).map(files))
+    val before = (0 until 16).map(b => b -> files(b)).toMap
+    // touches buckets 1, 5 and 9; key 5 twice, the higher ord wins; 401 is new
+    merge(Seq((1L, 2, "b1"), (5L, 2, "b5"), (5L, 3, "c5"), (9L, 2, "b9"), (21L, 2, "b21"),
+      (401L, 2, "b401")).toDF("k", "ord", "v").repartition(4))
+    val touched = Set(1, 5, 9)
+    touched.foreach(b => assert(files(b).size === 1 && files(b) != before(b), b))
+    (0 until 16).filterNot(touched).foreach(b => assert(files(b) === before(b), b))
+    // the rows, digested in key order, are the rows the merge wrote before
+    // it wrote one file per bucket
+    val rows = spark.read.parquet(dest).select("k", "ord", "v", "_bucket").orderBy("k")
+      .collect().mkString("\n")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(digest === "4892eb4e48bfd53e5d77fb6614250898f38ebf43bfea62b34c1c30b883cebdc4")
+  }
+
+  test("a merge whose batch columns differ from the store's recorded schema fails, naming the path") {
+    import spark.implicits._
+    val dest = Sinks.scratch("spec_bucketschema")
+    Sinks.mergeByKeyBucket(spark, dest, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      "k", Seq("v"), nBuckets = 4)
+    // the recorded schema serves the store's reads: same rows, same columns
+    assert(Sinks.readStore(spark, dest).schema === spark.read.parquet(dest).schema)
+    Seq(Seq((3L, 7)).toDF("k", "v"), Seq((3L, "c", 1)).toDF("k", "v", "w")).foreach { bad =>
+      val e = intercept[IllegalArgumentException](Sinks.mergeByKeyBucket(spark, dest, bad,
+        "k", Seq("v"), nBuckets = 4))
+      assert(e.getMessage.contains(dest), e.getMessage)
+    }
+    assert(spark.read.parquet(dest).select("k", "v").as[(Long, String)].collect().sorted
+      === Array((1L, "a"), (2L, "b")), "a refused merge leaves the store as it was")
   }
 
   test("merges use the store's persisted bucket count, not the caller's") {
