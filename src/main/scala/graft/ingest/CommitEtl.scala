@@ -105,12 +105,16 @@ object CommitEtl {
     * deterministic batch operator: per key, the incoming row wins; within a
     * batch, ties break on `orderCols`. This is the `read ∪ new →
     * dedup-by-key → overwrite` cycle SURVEY §7.4 describes; the window is a
-    * single shuffle on the key — at scale, key-partitioned and AQE-skew-safe.
+    * single shuffle on the key, so at scale the rows spread over all of
+    * the shuffle's partitions by the key's hash.
     *
     * `cluster = Some(c -> n)` makes that one shuffle go by the column `c`
     * (a function of the key) into `n` partitions instead, and ranks within
     * (`c`, key): the same rows win, and the result comes out laid out by
-    * `c` — what a writer partitioning its output by `c` wants.
+    * `c` — what a writer partitioning its output by `c` wants. Each value
+    * of `c` is then ranked by one task, so at most `n` tasks run: meant
+    * for inputs small enough that AQE would run no more
+    * (`Sinks.bucketSlots`).
     */
   def upsert(existing: DataFrame, incoming: DataFrame, key: String,
              orderCols: Seq[String], cluster: Option[(String, Int)] = None): DataFrame = {

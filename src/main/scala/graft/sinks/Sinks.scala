@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.FileSystem
 import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.ingest.CommitEtl
@@ -174,20 +175,37 @@ object Sinks {
   private def columnTypes(rows: StructType): Map[String, String] =
     rows.fields.map(f => f.name -> f.dataType.catalogString).toMap
 
-  /** Tasks that write `buckets` buckets at once: one per bucket, at most
-    * one per core. */
-  private def bucketSlots(s: SparkSession, buckets: Int): Int =
+  /** How a rewrite of `buckets` buckets from `inputs` is spread over
+    * tasks. `Some(n)`: one file per bucket, from `n = min(buckets, cores)`
+    * tasks — while Spark's size estimate of the inputs is at most `n`
+    * times `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB
+    * by default). AQE packs at least that much into each task of a
+    * shuffle, so it would run no more than `n` tasks anyway; a tick's
+    * rewrite it coalesces into ONE task, which writes every bucket in
+    * turn. `None` above it: a larger rewrite keeps its own tasks (the
+    * upsert's key-partitioned window, a delete's scan), each writing a
+    * file into every bucket it holds rows of, so the bucket count never
+    * caps its parallelism; [[compactBuckets]] folds those files. */
+  private def bucketSlots(s: SparkSession, buckets: Int, inputs: DataFrame*): Option[Int] = {
+    val n = onePerBucket(s, buckets)
+    val bytes = inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+    Option.when(bytes <= n * s.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))(n)
+  }
+
+  /** Tasks that write `buckets` buckets one file each: one task per
+    * bucket, at most one per core. */
+  private def onePerBucket(s: SparkSession, buckets: Int): Int =
     math.max(1, math.min(buckets, s.sparkContext.defaultParallelism))
 
   /** The one writer of bucket files: `df`'s rows (an int `_bucket`
-    * column, at most `buckets` distinct values) under `dir`, one directory
-    * and one parquet file per bucket. A numbered repartition on `_bucket`
-    * gives each bucket to exactly one task and runs [[bucketSlots]] tasks
-    * at once. AQE never coalesces a numbered repartition, so the buckets
-    * are not written one after another by a single task; the planner
-    * drops it when `df` is already laid out this way (a merge's upsert). */
-  private def writeBuckets(df: DataFrame, dir: String, buckets: Int): Unit =
-    df.repartition(bucketSlots(df.sparkSession, buckets), col("_bucket"))
+    * column) under `dir`, one directory per bucket. With `slots =
+    * Some(n)`, a numbered repartition on `_bucket` gives each bucket to
+    * exactly one of `n` tasks, so each bucket is one file; AQE never
+    * coalesces a numbered repartition, and the planner drops it when
+    * `df` is already laid out this way (a small merge's upsert). With
+    * `None`, `df`'s own tasks write. */
+  private def writeBuckets(df: DataFrame, dir: String, slots: Option[Int]): Unit =
+    slots.fold(df)(n => df.repartition(n, col("_bucket")))
       .write.mode("overwrite").partitionBy("_bucket").parquet(dir)
 
   private def bucketDir(dest: String, b: Int): String = s"$dest/_bucket=$b"
@@ -241,19 +259,20 @@ object Sinks {
     val layout =
       if (fresh) BucketLayout(nBuckets, Option(bucketCol).getOrElse(key)) else layoutOf(dest)
     val bucketed = batch.withColumn("_bucket", layout.bucketOf(col(layout.column)))
-    // the upsert's one shuffle lays its rows out the way the bucket
-    // writer wants them (by `_bucket`, a function of the key, into
-    // bucketSlots tasks), so the write adds no second exchange
-    def upsert(existing: DataFrame, buckets: Int) = CommitEtl.upsert(existing, bucketed,
-      key, orderCols, cluster = Some("_bucket" -> bucketSlots(s, buckets)))
+    // a small upsert's one shuffle lays its rows out the way the bucket
+    // writer wants them (by `_bucket`, a function of the key, into the
+    // writer's tasks), so the write adds no second exchange
+    def upsert(existing: DataFrame, slots: Option[Int]) = CommitEtl.upsert(existing, bucketed,
+      key, orderCols, cluster = slots.map("_bucket" -> _))
     if (fresh) {
       // first write: the same upsert as every later merge (against an
       // empty store), so duplicate keys within the batch collapse here
       // too; the whole store publishes at once, its layout and schema
       // persisted INSIDE the staged dir, atomic with the data
       val schema = StructType(bucketed.schema.fields.map(_.copy(nullable = true)))
+      val slots = bucketSlots(s, layout.n, bucketed)
       publish(dest) { staged =>
-        writeBuckets(upsert(bucketed.limit(0), layout.n), staged, layout.n)
+        writeBuckets(upsert(bucketed.limit(0), slots), staged, slots)
         writeLayout(staged, layout.copy(schema = Some(schema)))
       }
     } else {
@@ -264,7 +283,8 @@ object Sinks {
       }
       val touched = layout.bucketsOf(batch, col(layout.column))
       val existing = readStore(s, dest, layout).where(col("_bucket").isin(touched: _*))
-      rewriteBuckets(s, dest, upsert(existing, touched.size), touched)
+      val slots = bucketSlots(s, touched.size, existing, bucketed)
+      rewriteBuckets(s, dest, upsert(existing, slots), touched, slots, dropMissing = false)
     }
   }
 
@@ -415,18 +435,24 @@ object Sinks {
     * (`df` carries an int `_bucket` column and holds rows ONLY for
     * touched buckets): stage them under the store's `_merge_staging`
     * (underscore: invisible to readers of the store) through
-    * [[writeBuckets]], one file per bucket, then swap each touched
-    * bucket in.
+    * [[writeBuckets]], spread over tasks as [[bucketSlots]] decides from
+    * `df`'s size, then swap each touched bucket in.
     * `dropMissing`: a touched bucket with NO staged output (every row
     * deleted or moved elsewhere) is removed from the live store instead
     * of left stale — the delete paths and multiset stores like the CC
     * edge log set it; merge/compact paths never shrink a bucket to zero
     * rows, so for them a missing staged dir means untouched. */
   def rewriteBuckets(s: SparkSession, dest: String, df: DataFrame,
-                     touched: Seq[Int], dropMissing: Boolean = false): Unit = {
+                     touched: Seq[Int], dropMissing: Boolean = false): Unit =
+    rewriteBuckets(s, dest, df, touched, bucketSlots(s, touched.size, df), dropMissing)
+
+  /** [[rewriteBuckets]] with its write's tasks given. */
+  private def rewriteBuckets(s: SparkSession, dest: String, df: DataFrame,
+                             touched: Seq[Int], slots: Option[Int],
+                             dropMissing: Boolean): Unit = {
     val staging = s"$dest/_merge_staging"
     Fs.delete(staging)
-    writeBuckets(df, staging, touched.size)
+    writeBuckets(df, staging, slots)
     touched.foreach { b =>
       val (staged, live) = (bucketDir(staging, b), bucketDir(dest, b))
       if (Fs.exists(staged)) Fs.swap(staged, live)
@@ -460,7 +486,7 @@ object Sinks {
   def appendBuckets(s: SparkSession, dest: String, df: DataFrame, tag: String): Unit = {
     val staging = Fs.stagingOf(s"$dest/append_$tag")
     Fs.delete(staging)
-    writeBuckets(df, staging, layoutOf(dest).n)
+    writeBuckets(df, staging, Some(onePerBucket(s, layoutOf(dest).n)))
     bucketListing(staging).foreach { case (b, staged) =>
       replaceTagged(staged, bucketDir(dest, b), s"append_${tag}_")
     }
@@ -468,11 +494,11 @@ object Sinks {
   }
 
   /** Rewrite each bucket holding more than one parquet file as one file —
-    * the maintenance pass that stops small files accumulating. A merge
-    * rewrites each touched bucket as one file, so the files accumulate in
-    * multiset stores, one per [[appendBuckets]] tick, and in buckets
-    * written before that rule. Oversized buckets are
-    * rewritten through [[rewriteBuckets]] and swapped in like a merge;
+    * the maintenance pass that stops small files accumulating: one per
+    * [[appendBuckets]] tick in a multiset store, and up to one per task
+    * of a rewrite too large to go one file per bucket ([[bucketSlots]]).
+    * Oversized buckets are rewritten through [[rewriteBuckets]], one
+    * task per bucket, and swapped in like a merge;
     * untouched buckets are never read. Contents are byte-identical
     * (spec-asserted), so compaction can run any time between merges. */
   def compactBuckets(s: SparkSession, dest: String): Unit = {
@@ -482,7 +508,7 @@ object Sinks {
     }
     if (oversized.nonEmpty)
       rewriteBuckets(s, dest, readStore(s, dest).where(col("_bucket").isin(oversized: _*)),
-        oversized)
+        oversized, Some(onePerBucket(s, oversized.size)), dropMissing = false)
     else Fs.delete(s"$dest/_merge_staging") // a crashed pass that finished its swaps
   }
 

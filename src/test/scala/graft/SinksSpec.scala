@@ -162,34 +162,60 @@ class SinksSpec extends SparkSpec {
     assert(filesPerBucket.values.forall(_ == 1))
   }
 
-  test("a merge writes each touched bucket as one file and leaves the other buckets' files alone") {
+  /** The bucket-file fixture: a 400-row first write into 16 buckets, then
+    * a merge touching buckets 1, 5 and 9 (key 5 twice, the higher ord
+    * wins; 401 is new), both under `confs`. Both writes arrive spread
+    * over more tasks than the store has buckets, and AQE leaves the
+    * upsert's shuffle partitions as they are (at scale they are big
+    * enough that it would). Returns the store's bucket files after the
+    * first write, the store, and its rows' SHA-256 in key order. */
+  private def bucketFilesFixture(name: String, confs: Map[String, String]) = {
     import spark.implicits._
-    val dest = Sinks.scratch("spec_bucketfiles")
-    def files(b: Int): Set[String] =
-      Option(new java.io.File(s"$dest/_bucket=$b").listFiles).toSeq.flatten
-        .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    // both writes arrive spread over more tasks than the store has buckets,
-    // and AQE leaves the upsert's shuffle partitions as they are (at scale
-    // they are big enough that it would)
+    val dest = Sinks.scratch(name)
     def merge(batch: DataFrame) =
-      Session.withConfs(spark, Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false"))(
+      Session.withConfs(spark, confs + ("spark.sql.adaptive.coalescePartitions.enabled" -> "false"))(
         Sinks.mergeByKeyBucket(spark, dest, batch, "k", Seq("ord"), nBuckets = 16))
     merge((0L until 400L).map(k => (k, 1, s"a$k")).toDF("k", "ord", "v").repartition(8))
-    assert((0 until 16).forall(files(_).size == 1), (0 until 16).map(files))
-    val before = (0 until 16).map(b => b -> files(b)).toMap
-    // touches buckets 1, 5 and 9; key 5 twice, the higher ord wins; 401 is new
+    val first = (0 until 16).map(b => b -> bucketFiles(dest, b)).toMap
     merge(Seq((1L, 2, "b1"), (5L, 2, "b5"), (5L, 3, "c5"), (9L, 2, "b9"), (21L, 2, "b21"),
       (401L, 2, "b401")).toDF("k", "ord", "v").repartition(4))
-    val touched = Set(1, 5, 9)
-    touched.foreach(b => assert(files(b).size === 1 && files(b) != before(b), b))
-    (0 until 16).filterNot(touched).foreach(b => assert(files(b) === before(b), b))
-    // the rows, digested in key order, are the rows the merge wrote before
-    // it wrote one file per bucket
+    (first, dest, rowDigest(dest))
+  }
+
+  private def bucketFiles(dest: String, b: Int): Set[String] =
+    Option(new java.io.File(s"$dest/_bucket=$b").listFiles).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet
+
+  private def rowDigest(dest: String): String = {
     val rows = spark.read.parquet(dest).select("k", "ord", "v", "_bucket").orderBy("k")
       .collect().mkString("\n")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
+    java.security.MessageDigest.getInstance("SHA-256")
       .digest(rows.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    assert(digest === "4892eb4e48bfd53e5d77fb6614250898f38ebf43bfea62b34c1c30b883cebdc4")
+  }
+
+  /** The fixture's rows as the merge wrote them before it wrote one file
+    * per bucket. */
+  private val bucketFixtureDigest = "4892eb4e48bfd53e5d77fb6614250898f38ebf43bfea62b34c1c30b883cebdc4"
+
+  test("a merge writes each touched bucket as one file and leaves the other buckets' files alone") {
+    val (first, dest, digest) = bucketFilesFixture("spec_bucketfiles", Map.empty)
+    assert(first.values.forall(_.size == 1), first)
+    val touched = Set(1, 5, 9)
+    touched.foreach(b => assert(bucketFiles(dest, b).size === 1 && bucketFiles(dest, b) != first(b), b))
+    (0 until 16).filterNot(touched).foreach(b => assert(bucketFiles(dest, b) === first(b), b))
+    assert(digest === bucketFixtureDigest)
+  }
+
+  test("a merge too large for one file per bucket keeps its key-partitioned tasks") {
+    // a minimum AQE partition of one byte makes every rewrite "large"
+    val (first, dest, digest) = bucketFilesFixture("spec_bucketfiles_large", Map(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b",
+      "spark.sql.shuffle.partitions" -> "8"))
+    assert(first.values.map(_.size).max > 1, "the upsert's tasks should each have written a file")
+    assert(digest === bucketFixtureDigest)
+    Sinks.compactBuckets(spark, dest)
+    assert((0 until 16).forall(bucketFiles(dest, _).size == 1))
+    assert(rowDigest(dest) === bucketFixtureDigest)
   }
 
   test("a merge whose batch columns differ from the store's recorded schema fails, naming the path") {
