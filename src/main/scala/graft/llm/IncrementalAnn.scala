@@ -36,8 +36,8 @@ import graft.util.{Exact, Streams}
   *    partition-independent) over a deterministic hash-SAMPLE of the
   *    vector store (~TrainPerCell·cells rows — O(√N·c), the k-means
   *    coreset bound; sampling lives inside kmeansCentroids and is
-  *    mirrored in the oracle), then ONE full re-assignment pass,
-  *    atomically swapping `cents` and `assign`. The store is scanned
+  *    mirrored in the oracle), then ONE full re-assignment pass: `cents`
+  *    is swapped in atomically, `assign` truncated and rewritten. The store is scanned
   *    once per re-train — training no longer multiplies the corpus
   *    scan by the Lloyd round count, which was the measured α_sf10 =
   *    1.19 term in the r12 scale table.
@@ -97,19 +97,22 @@ object IncrementalAnn {
   /** Periodic re-train: sample-bounded deterministic k-means over the
     * vector store (the sampling is inside [[Similarity.kmeansCentroids]]
     * — O(√N·c) training rows, corpus-relative, oracle-mirrored), one
-    * full re-assignment pass, atomic swap of both derived stores. After
+    * full re-assignment pass: an atomic swap of `cents`, a rewrite of
+    * `assign`. After
     * this tick the index is bit-identical to a from-scratch build on the
     * store's current contents. */
   private[graft] def retrain(s: SparkSession, base: String): Unit = {
-    graft.util.Fs.heal(s"$base/vecs")
-    val all = s.read.parquet(s"$base/vecs")
+    val all = Sinks.readStore(s, s"$base/vecs")
       .select(col("vec_id"), col("se")).localCheckpoint()
     val cents = Similarity.kmeansCentroids(all)
     Sinks.writeAtomic(cents, s"$base/cents")
     val assigned = Similarity.assignCells(all, s.read.parquet(s"$base/cents"), 1)
       .select(col("vec_id"), col("cent_id").as("cell"))
       .withColumn("_tick", lit(Long.MaxValue))
-    // atomic overwrite (not a merge): a re-train re-derives EVERY row
+    // a re-train re-derives EVERY row: the store is truncated, then
+    // written by a first merge. A reader racing it finds no `assign`
+    // store (readStore fails, naming the path); a crash in between leaves
+    // the store absent until the re-train runs again.
     Sinks.truncate(s"$base/assign")
     Sinks.mergeByKeyBucket(s, s"$base/assign", assigned, "vec_id", Seq("_tick"))
   }
@@ -122,12 +125,11 @@ object IncrementalAnn {
   private[graft] def serve(s: SparkSession, base: String,
                            queryPred: String = "vec_id < 10",
                            nProbe: Int = 2, topK: Int = 3): DataFrame = {
-    Seq("vecs", "assign").foreach(p => graft.util.Fs.heal(s"$base/$p"))
-    val vecs = withNrm(s.read.parquet(s"$base/vecs").select(col("vec_id"), col("se")))
+    val vecs = withNrm(Sinks.readStore(s, s"$base/vecs").select(col("vec_id"), col("se")))
       .localCheckpoint() // corpus side AND query side read it
     val cents = s.read.parquet(s"$base/cents")
     val corpus = vecs.join(
-      s.read.parquet(s"$base/assign").select(col("vec_id"), col("cell")), "vec_id")
+      Sinks.readStore(s, s"$base/assign").select(col("vec_id"), col("cell")), "vec_id")
     val probes = Similarity.assignCells(vecs.where(expr(queryPred)), cents, nProbe)
       .select(col("vec_id").as("q_id"), col("se").as("qse"),
         col("nrm").as("qnrm"), col("cent_id").as("cell"))
@@ -175,8 +177,7 @@ object IncrementalAnn {
   private[graft] def serveLsh(s: SparkSession, base: String,
                               queryPred: String = "vec_id < 10",
                               topK: Int = 3): DataFrame = {
-    graft.util.Fs.heal(s"$base/vecs")
-    val bucketed = s.read.parquet(s"$base/vecs")
+    val bucketed = Sinks.readStore(s, s"$base/vecs")
       .selectExpr("vec_id", "se", "bucket",
         "sqrt(CAST(graft_dot(se, se) AS DOUBLE)) AS nrm")
     val qs = bucketed.where(expr(queryPred))
@@ -201,7 +202,7 @@ object IncrementalAnn {
   // encoded code table (`codes`, same key as subs). Like IVF, the model
   // is corpus-trained, so maintenance has both tiers: cheap fold ticks
   // (encode ONLY the batch against the stored codebooks) and a periodic
-  // re-train tick (codebooks + full re-encode, atomic swap) after which
+  // re-train tick (codebook swap + full re-encode) after which
   // the index is bit-identical to a from-scratch build — the serve path
   // reads the code table and never touches corpus embeddings.
 
@@ -234,16 +235,17 @@ object IncrementalAnn {
   }
 
   /** Periodic re-train: codebooks over the FULL sub-vector store, full
-    * re-encode, atomic swap of both derived stores. */
+    * re-encode: an atomic swap of `cb`, a rewrite of `codes`. */
   private[graft] def retrainPq(s: SparkSession, base: String): Unit = {
-    graft.util.Fs.heal(s"$base/subs")
-    val subs = s.read.parquet(s"$base/subs")
+    val subs = Sinks.readStore(s, s"$base/subs")
       .select(col("vec_id"), col("m"), col("sub")).localCheckpoint()
     Sinks.writeAtomic(Similarity.pqCodebooks(subs), s"$base/cb")
     val codes = Similarity.pqEncode(subs, s.read.parquet(s"$base/cb"))
       .select(col("vec_id"), col("m"), col("code"))
       .withColumn("k", expr(s"vec_id * ${Similarity.PqM} + m"))
       .withColumn("_tick", lit(Long.MaxValue))
+    // truncate, then a first merge, as in [[retrain]]: a racing reader
+    // finds no `codes` store, and a crash leaves it absent until re-run
     Sinks.truncate(s"$base/codes")
     Sinks.mergeByKeyBucket(s, s"$base/codes", codes, "k", Seq("_tick"))
   }
@@ -254,13 +256,12 @@ object IncrementalAnn {
   private[graft] def servePq(s: SparkSession, base: String,
                              queryPred: String = "vec_id < 10",
                              topK: Int = 3): DataFrame = {
-    Seq("subs", "codes").foreach(p => graft.util.Fs.heal(s"$base/$p"))
     val cb = s.read.parquet(s"$base/cb")
-    val lut = s.read.parquet(s"$base/subs").where(expr(queryPred))
+    val lut = Sinks.readStore(s, s"$base/subs").where(expr(queryPred))
       .join(broadcast(cb), Seq("m"))
       .selectExpr("vec_id AS q_id", "m", "code",
         "cn2 - 2L * graft_dot(sub, cse) AS d")
-    val scored = s.read.parquet(s"$base/codes")
+    val scored = Sinks.readStore(s, s"$base/codes")
       .join(broadcast(lut), Seq("m", "code"))
       .where(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))

@@ -69,16 +69,11 @@ object IncrementalDedup {
     val sg = Dedup.shingleStreamOf(b).localCheckpoint()
     val bandsNew = Dedup.bandsFromSigs(Dedup.sigsFromShingles(sg)).localCheckpoint()
     val bandStore = s"$base/bands"
-    // heal BEFORE reading: a tick replayed after a crash inside the
-    // previous attempt's bucket swap must see the complete store, or the
-    // new-vs-stored join silently loses every pair against the damaged
-    // bucket (mergeByKeyBucket heals too, but that runs after this read)
-    graft.util.Fs.heal(bandStore)
-    val stored =
-      if (graft.util.Fs.exists(bandStore))
-        Sinks.readStore(s, bandStore).select(col("doc_id"), col("band_idx"), col("band_key"))
-      else s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        StructType(bandsNew.schema.fields))
+    // the read heals first: a tick replayed after a crash inside the
+    // previous attempt's bucket swap sees the complete store, where a
+    // damaged bucket would silently lose every new-vs-stored pair against it
+    val stored = Sinks.readStoreIfExists(s, bandStore)
+      .fold(bandsNew.limit(0))(_.select(col("doc_id"), col("band_idx"), col("band_key")))
     // new-vs-stored: the incremental step. Equi-join on (band_idx,
     // band_key) — a hash shuffle of the SMALL new side against the
     // key-partitioned store; pair orientation normalized so accumulated
@@ -168,11 +163,9 @@ object IncrementalDedup {
                             base: String): Unit = {
     val store = s"$base/labels"
     val edges = batch.select(col("doc_a"), col("doc_b")).localCheckpoint()
-    graft.util.Fs.heal(store)
-    val stored =
-      if (graft.util.Fs.exists(store))
-        s.read.parquet(store).select(col("doc"), col("label"))
-      else edges.select(col("doc_a").as("doc"), col("doc_a").as("label")).limit(0)
+    val stored = Sinks.readStoreIfExists(s, store)
+      .fold(edges.select(col("doc_a").as("doc"), col("doc_a").as("label")).limit(0))(
+        _.select(col("doc"), col("label")))
     // current labels of the batch endpoints; unseen nodes label themselves
     val nodes = edges.select(col("doc_a").as("doc"))
       .union(edges.select(col("doc_b").as("doc"))).distinct()
@@ -226,14 +219,12 @@ object IncrementalDedup {
     // idempotent (anti-join on remap passes already-moved rows through);
     // the append overwrites its own per-tick file by name.
     val elog = s"$base/edges"
-    graft.util.Fs.heal(elog)
-    Sinks.initBucketStore(elog, 16, "label")
-    val layout = Sinks.layoutOf(elog)
     val newLabeled = edges
       .join(newRows.select(col("doc").as("doc_a"), col("label").as("elabel")), "doc_a")
       .select(col("doc_a"), col("doc_b"), col("elabel").as("label"))
+    Sinks.initBucketStore(elog, 16, "label", newLabeled.schema)
+    val layout = Sinks.layoutOf(elog)
     val srcBuckets = layout.bucketsOf(remap, col("label"))
-    val srcDirs = Sinks.bucketDirs(elog, srcBuckets)
     val movesPath = s"$base/emoves/batch_$batchId"
     // ONE physical read of the source buckets serves both projections
     // (move-set derivation and the staying set below) on the normal path —
@@ -242,13 +233,10 @@ object IncrementalDedup {
     // may be half-rewritten, so the staying set reads them fresh (lazy,
     // no checkpoint) and the moves come from the persisted artifact.
     val freshTick = !committed(s, movesPath)
-    val srcRows =
-      if (srcDirs.isEmpty) newLabeled.limit(0)
-      else {
-        val r = s.read.parquet(srcDirs: _*)
-          .select(col("doc_a"), col("doc_b"), col("label"))
-        if (freshTick) r.localCheckpoint() else r
-      }
+    val srcRows = {
+      val r = Sinks.readBuckets(s, elog, srcBuckets).select(col("doc_a"), col("doc_b"), col("label"))
+      if (freshTick && srcBuckets.nonEmpty) r.localCheckpoint() else r
+    }
     if (freshTick) {
       // move-set = remap-matching rows of the source buckets, relabeled
       srcRows.join(remap, "label")
@@ -307,31 +295,23 @@ object IncrementalDedup {
                               deleted: DataFrame, tickId: Long): Unit = {
     val store = s"$base/labels"
     val del = deleted.select(col("doc_id")).localCheckpoint()
-    graft.util.Fs.heal(store)
     val affectedPath = s"$base/forgets/tick_$tickId"
     if (!committed(s, affectedPath))
-      s.read.parquet(store)
+      Sinks.readStore(s, store)
         .join(del, col("doc") === col("doc_id"))
         .select(col("label")).distinct()
         .write.mode("overwrite").parquet(affectedPath)
     val affected = s.read.parquet(affectedPath).localCheckpoint()
     Sinks.deleteByKeyBucket(s, store,
       del.select(col("doc_id").as("doc")), "doc")
-    val members = s.read.parquet(store)
+    val members = Sinks.readStore(s, store)
       .join(affected, Seq("label"), "left_semi")
       .select(col("doc")).localCheckpoint()
     // pruned edge read: ONLY the affected labels' buckets are listed
     val elog = s"$base/edges"
-    graft.util.Fs.heal(elog)
     val layout = Sinks.layoutOf(elog)
     val aBuckets = forgetEdgeBuckets(base, affected)
-    val aDirs = Sinks.bucketDirs(elog, aBuckets)
-    val logged =
-      if (aDirs.isEmpty)
-        del.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
-          col("doc_id").as("label")).limit(0)
-      else s.read.parquet(aDirs: _*).select(col("doc_a"), col("doc_b"), col("label"))
-    val surviving = logged
+    val surviving = Sinks.readBuckets(s, elog, aBuckets).select(col("doc_a"), col("doc_b"), col("label"))
       .join(del.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
       .join(del.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti")
       .localCheckpoint()
@@ -348,17 +328,15 @@ object IncrementalDedup {
     // crash window converge): purge the deleted docs' edges, move the
     // survivors to their post-forget labels' buckets, preserve unrelated
     // edges that merely share a bucket.
-    val newLab = s.read.parquet(store)
+    val newLab = Sinks.readStore(s, store)
       .select(col("doc").as("doc_a"), col("label").as("nl"))
     val relabeled = surviving.join(newLab, "doc_a")
       .select(col("doc_a"), col("doc_b"), col("nl").as("label"))
     val touchedE = (aBuckets ++ layout.bucketsOf(relabeled, col("label"))).distinct
     if (touchedE.nonEmpty) {
-      val allRows =
-        if (Sinks.bucketDirs(elog, touchedE).isEmpty) relabeled.limit(0)
-        else s.read.parquet(Sinks.bucketDirs(elog, touchedE): _*)
-          .select(col("doc_a"), col("doc_b"), col("label"))
-      val keptOther = allRows.join(affected, Seq("label"), "left_anti")
+      val keptOther = Sinks.readBuckets(s, elog, touchedE)
+        .select(col("doc_a"), col("doc_b"), col("label"))
+        .join(affected, Seq("label"), "left_anti")
       val content = keptOther.unionByName(relabeled).distinct()
         .withColumn("_bucket", layout.bucketOf(col("label")))
       Sinks.rewriteBuckets(s, elog, content, touchedE, dropMissing = true)
@@ -374,17 +352,13 @@ object IncrementalDedup {
   /** The labels store, or an empty (doc, label) table when no tick ever
     * wrote it — an EMPTY edge stream is a legal corpus state (a fully
     * distinct corpus verifies zero near-dup pairs), and the store read
-    * must degrade to "no groups" instead of failing schema inference on
-    * a bare directory. */
-  private[graft] def labelsOrEmpty(s: SparkSession, base: String): DataFrame = {
-    val p = s"$base/labels"
-    val hasData = graft.util.Fs.hasDataFiles(p)
-    if (hasData) s.read.parquet(p)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
+    * must degrade to "no groups". A store a forget emptied reads as no
+    * rows under its recorded schema. */
+  private[graft] def labelsOrEmpty(s: SparkSession, base: String): DataFrame =
+    Sinks.readStoreIfExists(s, s"$base/labels").getOrElse(
+      s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
         org.apache.spark.sql.types.StructField("doc", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType))))
-  }
+        org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType)))))
 
   /** Drain a file-stream of edge batches through [[ccTick]] (crash-safe
     * resume via the checkpoint, [[graft.util.Streams.drain]]), then run
@@ -499,10 +473,9 @@ object IncrementalDedup {
     * Forgotten docs are gone from both stores, so their pairs simply
     * never generate. */
   private[graft] def simhashVerify(s: SparkSession, base: String): DataFrame = {
-    Seq("fps", "bands").foreach(p => graft.util.Fs.heal(s"$base/$p"))
-    val fp = s.read.parquet(s"$base/fps").select(col("doc_id"), col("simhash"))
+    val fp = Sinks.readStore(s, s"$base/fps").select(col("doc_id"), col("simhash"))
       .localCheckpoint() // both pair sides
-    val bands = s.read.parquet(s"$base/bands")
+    val bands = Sinks.readStore(s, s"$base/bands")
       .select(col("doc_id"), col("band_idx"), col("band_key"))
     val kept = Dedup.capSimBands(bands, fp.agg(count(lit(1)).as("n_corpus")))
       .localCheckpoint()
@@ -588,8 +561,7 @@ object IncrementalDedup {
     * df-cap against the store's final corpus count, capped pair join
     * ([[Dedup.winnowPairsFromCapped]]). No document text is read. */
   private[graft] def winnowServe(s: SparkSession, base: String): DataFrame = {
-    graft.util.Fs.heal(s"$base/fps")
-    val st = s.read.parquet(s"$base/fps")
+    val st = Sinks.readStore(s, s"$base/fps")
     val n = st.agg(count(lit(1)).as("n_corpus"))
     val fp = st.select(col("doc_id"), explode(col("fhs")).as("fh"))
       .localCheckpoint()
@@ -625,8 +597,8 @@ object IncrementalDedup {
     * is >= the one-shot's (stale-band candidates can only ADD pairs whose
     * current Jaccard passes). */
   private[graft] def verifyAccumulated(s: SparkSession, base: String): DataFrame = {
-    val cand = s.read.parquet(s"$base/cands/batch_*").distinct()
-    val sgAll = s.read.parquet(s"$base/shingles/batch_*")
+    val cand = batches(s, s"$base/cands").distinct()
+    val sgAll = batches(s, s"$base/shingles")
     // winners come from the doc MANIFEST, not the shingle store: a doc
     // whose latest version has no shingles (< 3 tokens) must still
     // resolve to that version — it then contributes zero rows to `sg`,
@@ -638,7 +610,7 @@ object IncrementalDedup {
     // whether the doc is still part of the corpus (a tombstone from
     // [[forgetTick]] always carries the highest tick, so a forgotten doc
     // resolves to "deleted" and drops out of count, df, and pairs)
-    val latest = s.read.parquet(s"$base/docs/batch_*")
+    val latest = batches(s, s"$base/docs")
       .groupBy(col("doc_id"))
       .agg(max(struct(col("_tick"), col("_del"))).as("w"))
       .where(!col("w._del"))
@@ -654,6 +626,12 @@ object IncrementalDedup {
       .selectExpr("doc_a", "doc_b", "CAST(i AS DOUBLE) / (na + nb - i) AS jaccard")
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** The per-batch artifacts under `dir` — its listed `batch_<id>` dirs —
+    * as one frame. A `batch_*` glob read would make Spark stat the literal
+    * glob path first and log the miss with a stack trace. */
+  private def batches(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.util.Fs.listDirs(dir).filter(_.startsWith("batch_")).map(d => s"$dir/$d"): _*)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The reference's runtime shape (multi-tick incremental sync) applied

@@ -87,7 +87,6 @@ object IncrementalRetrieval {
     * BOTH the stats refresh and serving without any bucket having been
     * rewritten yet. */
   private def parts(s: SparkSession, base: String): (DataFrame, DataFrame) = {
-    graft.util.Fs.heal(s"$base/postings")
     val p = Sinks.readWithDeletes(s, s"$base/postings", "doc_id")
     val tf = p.selectExpr("doc_id", "explode(tfs) AS z")
       .selectExpr("doc_id", "z.h AS h", "z.m AS m")

@@ -4,10 +4,10 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.hadoop.util.ShutdownHookManager
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 import graft.ingest.CommitEtl
 import graft.sources.Tables
@@ -117,10 +117,10 @@ object Sinks {
   // hashes to is below; callers go through it.
   // ---------------------------------------------------------------------
 
-  /** A bucket store's layout: `n` buckets of the column `column`, and, for
-    * a keyed store, the `schema` of its rows (`_bucket` included), recorded
-    * at its first publish. */
-  final case class BucketLayout(n: Int, column: String, schema: Option[StructType] = None) {
+  /** A bucket store's layout: `n` buckets of the column `column`, and the
+    * `schema` of its rows (`_bucket` last), recorded when the store is
+    * created. */
+  final case class BucketLayout(n: Int, column: String, schema: StructType) {
     /** The bucket `c`'s value lives in — the one hash law of a bucket
       * store. Int-typed, so `_bucket` round-trips partition discovery
       * with a stable type. */
@@ -136,15 +136,20 @@ object Sinks {
         .collect().flatten.distinct.sorted.toIndexedSeq
   }
 
+  /** The schema a store of rows with `columns` records: every column
+    * nullable (a parquet read makes them so), then the int `_bucket`. */
+  private def storeSchema(columns: StructType): StructType =
+    StructType(columns.fields.filter(_.name != "_bucket").map(_.copy(nullable = true)) :+
+      StructField("_bucket", IntegerType))
+
   /** Name of the layout metadata file inside a bucket store
     * (underscore-prefixed: invisible to Spark readers). */
   private val LayoutFile = "_graft_layout"
 
-  /** The layout file: the bucket count, the column, and the schema's JSON
-    * when one is recorded, one per line. */
+  /** The layout file: the bucket count, the column and the schema's JSON,
+    * one per line. */
   private def writeLayout(dir: String, layout: BucketLayout): Unit =
-    Fs.write(s"$dir/$LayoutFile",
-      (Seq(layout.n.toString, layout.column) ++ layout.schema.map(_.json)).mkString("\n"))
+    Fs.write(s"$dir/$LayoutFile", Seq(layout.n.toString, layout.column, layout.schema.json).mkString("\n"))
 
   /** The layout the bucket store `dest` was created with. Fails, naming
     * the path, when the store has no layout metadata: bucketing a row by
@@ -153,22 +158,44 @@ object Sinks {
     val meta = s"$dest/$LayoutFile"
     if (!Fs.exists(meta))
       throw new IllegalStateException(s"no bucket store layout at $meta")
-    Fs.read(meta).split("\n", 3).map(_.trim) match {
-      case Array(n, column) => BucketLayout(n.toInt, column)
-      case Array(n, column, schema) =>
-        BucketLayout(n.toInt, column, Some(DataType.fromJson(schema).asInstanceOf[StructType]))
-    }
+    val Array(n, column, schema) = Fs.read(meta).split("\n", 3).map(_.trim)
+    BucketLayout(n.toInt, column, DataType.fromJson(schema).asInstanceOf[StructType])
   }
 
-  /** The rows of the bucket store `dest` (with their `_bucket`). A keyed
-    * store is read under its recorded schema: a bare parquet read would
-    * first run a Spark job to infer the schema from a footer. */
-  def readStore(s: SparkSession, dest: String): DataFrame = readStore(s, dest, layoutOf(dest))
+  // Reads. Every read of a bucket store goes through the functions below:
+  // they heal the store first (Fs's protocol), so a bucket stranded at
+  // its `.old` sibling by a crashed swap is read back, never skipped, and
+  // a store is absent only when healing found nothing. They read under the
+  // recorded schema: a bare parquet read would first run a Spark job to
+  // infer it from a footer. Sink calls below, which have healed already,
+  // read through the private [[readDirs]].
 
-  private def readStore(s: SparkSession, dest: String, layout: BucketLayout): DataFrame = {
-    val r = s.read
-    layout.schema.fold(r)(r.schema).parquet(dest)
+  /** The rows of the bucket store `dest` (with their `_bucket`). Fails,
+    * naming the path, when there is no store. */
+  def readStore(s: SparkSession, dest: String): DataFrame =
+    readStoreIfExists(s, dest).getOrElse(throw new IllegalStateException(s"no bucket store at $dest"))
+
+  /** [[readStore]], or None when there is no store at `dest`. */
+  def readStoreIfExists(s: SparkSession, dest: String): Option[DataFrame] = {
+    Fs.heal(dest)
+    Option.when(Fs.exists(dest))(s.read.schema(layoutOf(dest).schema).parquet(dest))
   }
+
+  /** The rows of the named `buckets` of the store `dest` — file-level
+    * pruning: no other bucket's files are listed, let alone read. Buckets
+    * the store does not hold read as no rows. */
+  def readBuckets(s: SparkSession, dest: String, buckets: Seq[Int]): DataFrame = {
+    Fs.heal(dest)
+    readDirs(s, dest, layoutOf(dest), bucketDirs(dest, buckets))
+  }
+
+  /** The bucket dirs `dirs` of the store `dest`, under `layout`'s schema;
+    * none: an empty local relation of that schema, which Spark sizes at
+    * zero bytes ([[bucketSlots]] reads the size). */
+  private def readDirs(s: SparkSession, dest: String, layout: BucketLayout,
+                       dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), layout.schema)
+    else s.read.schema(layout.schema).option("basePath", dest).parquet(dirs: _*)
 
   /** `rows`' columns as name -> type, nullability aside (a parquet read
     * makes every column nullable). */
@@ -216,14 +243,12 @@ object Sinks {
     Fs.listDirs(dir).filter(_.startsWith("_bucket="))
       .map(d => d.stripPrefix("_bucket=").toInt -> s"$dir/$d").sortBy(_._1)
 
-  /** The bucket ids that physically exist in the store right now. */
-  def existingBuckets(dest: String): Seq[Int] = bucketListing(dest).map(_._1).toIndexedSeq
-
-  /** The EXISTING partition directories of the given buckets — handed to
-    * a parquet read, this is file-level pruning: no other bucket's files
-    * are ever listed, let alone read. */
-  def bucketDirs(dest: String, buckets: Seq[Int]): Seq[String] =
-    buckets.map(bucketDir(dest, _)).filter(Fs.exists)
+  /** The existing dirs of the named `buckets` of the store `dest`, bucket
+    * id ascending: one listing of the store. */
+  private[graft] def bucketDirs(dest: String, buckets: Seq[Int]): Seq[String] = {
+    val named = buckets.toSet
+    bucketListing(dest).collect { case (b, dir) if named(b) => dir }
+  }
 
   /** Partition-scoped keyed merge (the 100 TB fix for rewrite-the-world
     * upserts): the store is partitioned by a STABLE hash bucket of the key
@@ -236,9 +261,7 @@ object Sinks {
     * Each touched bucket is swapped in on its own, so a reader racing a
     * merge may see some buckets updated before others; per-key
     * (within-bucket) consistency always holds, and a replayed tick
-    * converges because the keyed upsert is idempotent. Callers reading
-    * the store outside a sink call after a possible crash should
-    * [[graft.util.Fs.heal]] it first. */
+    * converges because the keyed upsert is idempotent. */
   def mergeByKeyBucket(s: SparkSession, dest: String, batch: DataFrame,
                        key: String, orderCols: Seq[String],
                        nBuckets: Int = 16,
@@ -257,7 +280,8 @@ object Sinks {
     // twin, and the upsert (which only reads touched buckets) would leave
     // the stale twin alive — silent duplicate keys
     val layout =
-      if (fresh) BucketLayout(nBuckets, Option(bucketCol).getOrElse(key)) else layoutOf(dest)
+      if (fresh) BucketLayout(nBuckets, Option(bucketCol).getOrElse(key), storeSchema(batch.schema))
+      else layoutOf(dest)
     val bucketed = batch.withColumn("_bucket", layout.bucketOf(col(layout.column)))
     // a small upsert's one shuffle lays its rows out the way the bucket
     // writer wants them (by `_bucket`, a function of the key, into the
@@ -269,20 +293,17 @@ object Sinks {
       // empty store), so duplicate keys within the batch collapse here
       // too; the whole store publishes at once, its layout and schema
       // persisted INSIDE the staged dir, atomic with the data
-      val schema = StructType(bucketed.schema.fields.map(_.copy(nullable = true)))
       val slots = bucketSlots(s, layout.n, bucketed)
       publish(dest) { staged =>
         writeBuckets(upsert(bucketed.limit(0), slots), staged, slots)
-        writeLayout(staged, layout.copy(schema = Some(schema)))
+        writeLayout(staged, layout)
       }
     } else {
-      layout.schema.foreach { t =>
-        if (columnTypes(t) != columnTypes(bucketed.schema))
-          throw new IllegalArgumentException(s"batch columns ${bucketed.schema.catalogString} " +
-            s"differ from the ${t.catalogString} of the bucket store at $dest")
-      }
+      if (columnTypes(layout.schema) != columnTypes(bucketed.schema))
+        throw new IllegalArgumentException(s"batch columns ${bucketed.schema.catalogString} " +
+          s"differ from the ${layout.schema.catalogString} of the bucket store at $dest")
       val touched = layout.bucketsOf(batch, col(layout.column))
-      val existing = readStore(s, dest, layout).where(col("_bucket").isin(touched: _*))
+      val existing = readDirs(s, dest, layout, bucketDirs(dest, touched))
       val slots = bucketSlots(s, touched.size, existing, bucketed)
       rewriteBuckets(s, dest, upsert(existing, slots), touched, slots, dropMissing = false)
     }
@@ -308,14 +329,14 @@ object Sinks {
                        key: String): Unit = {
     val named = targets.select(col("_del_bucket")).distinct().collect()
       .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
+    val listing = bucketListing(dest)
     val touched =
-      if (named.forall(_.isDefined)) named.flatten.toIndexedSeq.intersect(existingBuckets(dest))
-      else existingBuckets(dest)
+      if (named.forall(_.isDefined)) listing.filter { case (b, _) => named.contains(Some(b)) }
+      else listing
     if (touched.nonEmpty) {
-      val remaining = readStore(s, dest)
-        .where(col("_bucket").isin(touched: _*))
+      val remaining = readDirs(s, dest, layoutOf(dest), touched.map(_._2))
         .join(targets.select(col(key)).distinct(), Seq(key), "left_anti")
-      rewriteBuckets(s, dest, remaining, touched, dropMissing = true)
+      rewriteBuckets(s, dest, remaining, touched.map(_._1), dropMissing = true)
     }
   }
 
@@ -461,16 +482,19 @@ object Sinks {
     Fs.delete(staging)
   }
 
-  /** Create an empty bucket store of `nBuckets` buckets of `column`: just
-    * the directory plus its layout metadata (callers then populate it
-    * with [[rewriteBuckets]] or [[appendBuckets]]). No-op if the store
-    * already exists. Serves MULTISET bucket stores — rows bucketed by
+  /** Create an empty bucket store of `nBuckets` buckets of `column` for
+    * rows with the columns of `rows` (plus `_bucket`, which `rows` may
+    * hold or not): just the directory plus its layout metadata (callers
+    * then populate it with [[rewriteBuckets]] or [[appendBuckets]]).
+    * No-op if the store already exists. Serves MULTISET bucket stores — rows bucketed by
     * some derived column with no unique merge key — which
     * [[mergeByKeyBucket]]'s keyed init path can't host (its upsert would
     * collapse same-key rows). */
-  def initBucketStore(dest: String, nBuckets: Int, column: String): Unit =
+  def initBucketStore(dest: String, nBuckets: Int, column: String, rows: StructType): Unit = {
+    Fs.heal(dest) // a store stranded at `.old` exists: publishing would replace it
     if (!Fs.exists(dest))
-      publish(dest)(writeLayout(_, BucketLayout(nBuckets, column)))
+      publish(dest)(writeLayout(_, BucketLayout(nBuckets, column, storeSchema(rows))))
+  }
 
   /** Append `df`'s rows (carrying an int `_bucket` column) to a bucketed
     * MULTISET store without reading or rewriting existing bucket content:
@@ -503,12 +527,10 @@ object Sinks {
     * (spec-asserted), so compaction can run any time between merges. */
   def compactBuckets(s: SparkSession, dest: String): Unit = {
     Fs.heal(dest)
-    val oversized = bucketListing(dest).collect {
-      case (b, dir) if Fs.listFiles(dir, ".parquet").size > 1 => b
-    }
+    val oversized = bucketListing(dest).filter { case (_, dir) => Fs.listFiles(dir, ".parquet").size > 1 }
     if (oversized.nonEmpty)
-      rewriteBuckets(s, dest, readStore(s, dest).where(col("_bucket").isin(oversized: _*)),
-        oversized, Some(onePerBucket(s, oversized.size)), dropMissing = false)
+      rewriteBuckets(s, dest, readDirs(s, dest, layoutOf(dest), oversized.map(_._2)),
+        oversized.map(_._1), Some(onePerBucket(s, oversized.size)), dropMissing = false)
     else Fs.delete(s"$dest/_merge_staging") // a crashed pass that finished its swaps
   }
 
@@ -789,7 +811,7 @@ object Sinks {
         .withColumn("value", col("value") + 1)
       mergeByKeyBucket(s, dest, b1, "event_id", Seq("ts"))
       mergeByKeyBucket(s, dest, b2, "event_id", Seq("ts"))
-      s.read.parquet(dest)
+      readStore(s, dest)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumFix(col("value"), 2).as("sum_value"))
         .orderBy(col("event_type"))
@@ -818,11 +840,11 @@ object Sinks {
       def agg(df: DataFrame, phase: String) =
         df.agg(count(lit(1)).as("n"), sumFix(col("o_totalprice"), 2).as("total"))
           .select(lit(phase).as("phase"), col("n"), col("total"))
-      writeAtomic(agg(s.read.parquet(dest), "a_pre_raw")
+      writeAtomic(agg(readStore(s, dest), "a_pre_raw")
         .union(agg(readWithDeletes(s, dest, "o_orderkey"), "b_pre_mor")), snap)
       compactDeletes(s, dest, "o_orderkey")
       s.read.parquet(snap)
-        .unionByName(agg(s.read.parquet(dest), "c_post_raw"))
+        .unionByName(agg(readStore(s, dest), "c_post_raw"))
         .orderBy(col("phase"))
     },
 
@@ -940,7 +962,7 @@ object Sinks {
       Streams.drain(stream, ckpt) { (batch, _) =>
         mergeByKeyBucket(s, dest, batch, "event_id", Seq("ts", "value"))
       }
-      s.read.parquet(dest)
+      readStore(s, dest)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumFix(col("value"), 2).as("sum_value"))
         .orderBy(col("event_type"))
@@ -1185,7 +1207,7 @@ object Sinks {
           ch.where(col("change_type") === "delete").select(col("o_orderkey")),
           "o_orderkey")
       }
-      s.read.parquet(rep)
+      readStore(s, rep)
         .select(col("o_orderkey"), col("o_orderstatus"), col("val"))
         .orderBy(col("o_orderkey"))
     },
@@ -1223,7 +1245,7 @@ object Sinks {
       val dimChange = cust.where(col("c_custkey") % 10 === 0)
         .withColumn("c_mktsegment", lit("CHANGED"))
       val touched = layoutOf(store).bucketsOf(dimChange, col("c_custkey"))
-      val affected = s.read.parquet(bucketDirs(store, touched): _*)
+      val affected = readBuckets(s, store, touched)
       val backfill = affected
         .join(broadcast(dimChange.select(col("c_custkey").as("o_custkey"),
           col("c_name").as("new_name"), col("c_mktsegment").as("new_seg"))),
@@ -1233,7 +1255,7 @@ object Sinks {
         .withColumn("_ord", lit(2L))
       mergeByKeyBucket(s, store, backfill, "o_orderkey", Seq("_ord"),
         bucketCol = "o_custkey")
-      s.read.parquet(store)
+      readStore(s, store)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("c_name"), col("c_mktsegment"))
         .orderBy(col("o_orderkey"))
@@ -1270,7 +1292,7 @@ object Sinks {
       Streams.withShufflePartitions(s, Streams.statePartitionsFor(Fs.sizeBytes(src))) {
         Streams.drain(agg, ckpt)((b, _) => mergeByKeyBucket(s, store, b, "mv_key", Seq("n")))
       }
-      s.read.parquet(store)
+      readStore(s, store)
         .select(col("event_type"), col("day"), col("n"),
           (col("cents") / lit(100.0)).as("sum_value"))
         .orderBy(col("event_type"), col("day"))

@@ -11,8 +11,7 @@ import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -55,9 +54,10 @@ import graft.util.Fs
   * partitioning references it (it costs nothing: the value is injected
   * from the partition, never read from the file).
   *
-  * Supported column types are the store-layout primitives (long, int,
-  * double, float, boolean, string); anything else fails loudly at schema
-  * inference rather than mis-reading bytes.
+  * The schema is the one the store recorded at its creation. Supported
+  * column types are the store-layout primitives (long, int, double,
+  * float, boolean, string); anything else fails loudly when the schema
+  * is resolved rather than mis-reading bytes.
   *
   * Usage: `spark.read.format("graft.sources.BucketStoreSource")
   *   .option("path", storeDir).load()`.
@@ -104,33 +104,23 @@ object BucketStoreSource {
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
 
-  private def sparkTypeOf(f: PType): DataType = {
-    require(f.isPrimitive, s"unsupported nested store column '${f.getName}'")
-    val p = f.asPrimitiveType()
-    val logical = p.getLogicalTypeAnnotation
-    p.getPrimitiveTypeName match {
-      case INT64 if logical == null ||
-        logical == LogicalTypeAnnotation.intType(64, true) => LongType
-      case INT32 if logical == null ||
-        logical == LogicalTypeAnnotation.intType(32, true) => IntegerType
-      case DOUBLE => DoubleType
-      case FLOAT => FloatType
-      case BOOLEAN => BooleanType
-      case BINARY if logical == LogicalTypeAnnotation.stringType() => StringType
-      case other => throw new IllegalArgumentException(
-        s"unsupported store column '${f.getName}': $other/$logical " +
-          "(supported: long, int, double, float, boolean, string)")
-    }
-  }
-
-  /** Data columns from the footer + the `_bucket` partition column last
-    * (mirroring Spark's partition-column placement for file sources). */
+  /** The store's recorded data columns ([[graft.sinks.Sinks.layoutOf]])
+    * with the `_bucket` partition column last and non-null (mirroring
+    * Spark's partition-column placement for file sources). Fails on a
+    * column type the reader cannot decode. */
   private[sources] def storeSchema(path: String): StructType = {
-    val fields = footerSchema(path).getFields.asScala.map { f =>
-      StructField(f.getName, sparkTypeOf(f),
-        nullable = f.getRepetition != PType.Repetition.REQUIRED)
+    val data = graft.sinks.Sinks.layoutOf(path).schema.fields.filter(_.name != "_bucket")
+    data.foreach { f =>
+      f.dataType match {
+        case LongType | IntegerType | DoubleType | FloatType | BooleanType | StringType => ()
+        case _: StructType | _: ArrayType | _: MapType =>
+          throw new IllegalArgumentException(s"unsupported nested store column '${f.name}'")
+        case other => throw new IllegalArgumentException(
+          s"unsupported store column '${f.name}': ${other.catalogString} " +
+            "(supported: long, int, double, float, boolean, string)")
+      }
     }
-    StructType(fields.toSeq :+ StructField("_bucket", IntegerType, nullable = false))
+    StructType(data :+ StructField("_bucket", IntegerType, nullable = false))
   }
 
   /** Projection MessageType for the requested data columns, taken from

@@ -267,7 +267,7 @@ object StreamOps {
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("c_custkey")).orderBy(col("vdate"))
-      s.read.parquet(store)
+      graft.sinks.Sinks.readStore(s, store)
         .select(col("c_custkey"), col("seg"), col("vdate").as("eff_from"),
           coalesce(lead(col("vdate"), 1).over(w),
             lit(java.sql.Date.valueOf("9999-12-31"))).as("eff_to"),
@@ -290,7 +290,7 @@ object StreamOps {
       Streams.drain(Streams.ticks(s, src, ev.schema), ckpt) { (batch, _) =>
         graft.sinks.Sinks.mergeByKeyBucket(s, dest, batch, "event_id", Seq("ts", "value"))
       }
-      s.read.parquet(dest)
+      graft.sinks.Sinks.readStore(s, dest)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumFix(col("value"), 2).as("sum_value"))
         .orderBy(col("event_type"))

@@ -35,8 +35,9 @@ import org.apache.spark.sql.SparkSession
   *    heal moves a stranded copy back when its live path is missing and
   *    drops it when the swap had finished — for `p` itself and for every
   *    entry directly inside `p` (a bucket store's per-bucket swaps). Every
-  *    swap heals its own target first; a read-modify-write of a store
-  *    heals the store before it reads.
+  *    swap heals its own target first, and the bucket-store readers in
+  *    [[graft.sinks.Sinks]] heal the store before they read; callers
+  *    never heal.
   *  - [[replaceFile]]`(staged, live)`: replace one small file (a MANIFEST
   *    pointer, a per-tag part file) — one rename where the filesystem
   *    replaces files atomically (POSIX local disk), a swap where it
@@ -169,20 +170,6 @@ object Fs {
   def setMtime(p: String, mtimeMs: Long): Unit = {
     val (fs, path) = fsFor(p)
     fs.setTimes(path, mtimeMs, -1)
-  }
-
-  /** True iff `p` exists AND contains at least one `suffix` file at any
-    * depth — "store has committed data", degrading an empty-but-created
-    * store directory to the caller's empty frame instead of failing
-    * parquet schema inference. */
-  def hasDataFiles(p: String, suffix: String = ".parquet"): Boolean = {
-    val (fs, path) = fsFor(p)
-    if (!fs.exists(path)) return false
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(suffix)) return true
-    }
-    false
   }
 
   // --- staged publish -----------------------------------------------------

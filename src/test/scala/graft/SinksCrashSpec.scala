@@ -183,14 +183,14 @@ class SinksCrashSpec extends SparkSpec {
 
   test("appendBuckets: every crash point recovers on re-run") {
     quietly(enumerate("append") { st =>
-      Sinks.initBucketStore(st, 2, "k")
+      Sinks.initBucketStore(st, 2, "k", kv(Nil, "").schema)
       Sinks.appendBuckets(spark, st, bucketed(0L to 3L, "a"), "t0")
     }(Sinks.appendBuckets(spark, _, bucketed(2L to 5L, "b"), "t1")))
   }
 
   test("compactBuckets: every crash point recovers on re-run") {
     quietly(enumerate("compact_buckets") { st =>
-      Sinks.initBucketStore(st, 2, "k")
+      Sinks.initBucketStore(st, 2, "k", kv(Nil, "").schema)
       Sinks.appendBuckets(spark, st, bucketed(0L to 3L, "a"), "t0")
       Sinks.appendBuckets(spark, st, bucketed(2L to 5L, "b"), "t1")
     }(Sinks.compactBuckets(spark, _)))

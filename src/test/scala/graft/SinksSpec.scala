@@ -140,7 +140,7 @@ class SinksSpec extends SparkSpec {
     val dest = Sinks.scratch("spec_compact")
     // a merge writes each touched bucket as one file; small files pile up
     // through appends, one file per bucket per tick
-    Sinks.initBucketStore(dest, 4, "k")
+    Sinks.initBucketStore(dest, 4, "k", Seq((0L, "")).toDF("k", "v").schema)
     (0 until 4).foreach { g =>
       val batch = (0 until 64).map(i => (i.toLong, s"v${g}_$i")).toDF("k", "v")
         .repartition(8).withColumn("_bucket", pmod(col("k"), lit(4)).cast("int"))
@@ -232,6 +232,44 @@ class SinksSpec extends SparkSpec {
     }
     assert(spark.read.parquet(dest).select("k", "v").as[(Long, String)].collect().sorted
       === Array((1L, "a"), (2L, "b")), "a refused merge leaves the store as it was")
+  }
+
+  test("readStore heals: a bucket stranded at its .old sibling reads back with no caller heal") {
+    import spark.implicits._
+    val dest = Sinks.scratch("spec_read_heals")
+    Sinks.mergeByKeyBucket(spark, dest, (0L to 15L).map(k => (k, s"v$k")).toDF("k", "v"),
+      "k", Seq("v"), nBuckets = 4)
+    // a crash between the two renames of bucket 2's swap, as above
+    Files.move(Paths.get(s"$dest/_bucket=2"), Paths.get(Fs.oldOf(s"$dest/_bucket=2")))
+    assert(Sinks.readStore(spark, dest).select("k").as[Long].collect().sorted === (0L to 15L).toArray)
+    assert(Sinks.readStoreIfExists(spark, Sinks.scratch("spec_read_absent")).isEmpty)
+  }
+
+  test("readBuckets reads only the named buckets; absent ones read as no rows under the recorded schema") {
+    import spark.implicits._
+    val dest = Sinks.scratch("spec_read_buckets")
+    // keys 0, 1, 2, 4, 5, 6 over 4 buckets: bucket 3 never exists
+    Sinks.mergeByKeyBucket(spark, dest, Seq(0L, 1L, 2L, 4L, 5L, 6L).map(k => (k, s"v$k")).toDF("k", "v"),
+      "k", Seq("v"), nBuckets = 4)
+    val recorded = Sinks.layoutOf(dest).schema
+    val got = Sinks.readBuckets(spark, dest, Seq(1, 3)).select("k", "_bucket").as[(Long, Int)]
+      .collect().sorted.toSeq
+    assert(got === Seq((1L, 1), (5L, 1)))
+    Seq(Seq(3), Seq(3, 9), Nil).foreach { absent =>
+      val none = Sinks.readBuckets(spark, dest, absent)
+      assert(none.schema === recorded && none.count() === 0, absent)
+    }
+  }
+
+  test("a store deleteByKeyBucket emptied reads as no rows under its recorded schema") {
+    import spark.implicits._
+    val dest = Sinks.scratch("spec_read_emptied")
+    val rows = (0L to 7L).map(k => (k, s"v$k")).toDF("k", "v")
+    Sinks.mergeByKeyBucket(spark, dest, rows, "k", Seq("v"), nBuckets = 4)
+    Sinks.deleteByKeyBucket(spark, dest, rows.select("k"), "k")
+    assert(Sinks.bucketListing(dest).isEmpty, "every emptied bucket is dropped")
+    val emptied = Sinks.readStore(spark, dest)
+    assert(emptied.schema === Sinks.layoutOf(dest).schema && emptied.count() === 0)
   }
 
   test("merges use the store's persisted bucket count, not the caller's") {
@@ -456,9 +494,9 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val dest = Sinks.scratch("spec_append_store")
-    Sinks.initBucketStore(dest, 4, "v")
     def batch(r: Range) = r.toDF("v")
       .withColumn("_bucket", pmod(col("v"), lit(4)).cast("int"))
+    Sinks.initBucketStore(dest, 4, "v", batch(1 to 0).schema)
     Sinks.appendBuckets(spark, dest, batch(1 to 40), "t0")
     Sinks.appendBuckets(spark, dest, batch(41 to 60), "t1")
     assert(spark.read.parquet(dest).select("v").as[Int].collect().sorted

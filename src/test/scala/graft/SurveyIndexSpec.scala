@@ -106,6 +106,14 @@ class SurveyIndexSpec extends AnyFunSuite {
     assert(filesContaining("upsertInto").isEmpty)
   }
 
+  test("bucket stores are healed and read only by Sinks") {
+    // a caller that heals or lists bucket dirs itself would have to learn
+    // every change of the store's layout or publish protocol
+    val healers = sources("src/main").collect { case (f, text) if text.contains("Fs.heal(") => f }.toSet
+    assert(healers.subsetOf(Set("main/scala/graft/util/Fs.scala", "main/scala/graft/sinks/Sinks.scala")), healers)
+    assert(sources("src/main").collect { case (f, text) if text.contains("Sinks.bucketDirs") => f }.isEmpty)
+  }
+
   test("no two literal scratch names in src/main are equal") {
     // two entries sharing a name would clear and overwrite each other's
     // scratch in one run
