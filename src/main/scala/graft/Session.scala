@@ -12,15 +12,21 @@ object Session {
 
   /** A `local[cpus]` session under the driver contract: shuffle
     * partitions = cpus, UI off, managed tables (q_bucketed_join) in the
-    * run's scratch root, then [[Tables.sessionConfs]], then `confs` (last
-    * wins). The graft functions and optimizer rule are registered on it
-    * before it is returned. */
+    * run's scratch root, each SQL execution's shuffle files queued for
+    * deletion when it ends
+    * (`spark.sql.classic.shuffleDependency.fileCleanup.enabled`: a long
+    * Bench/Verify run holds no earlier entry's shuffle on disk; the price
+    * is that a second action on the same Dataset recomputes its shuffle),
+    * then [[Tables.sessionConfs]], then `confs` (last wins). The
+    * graft functions and optimizer rule are registered on it before it is
+    * returned. */
   def build(cpus: Int, confs: Map[String, String]): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", s"${Sinks.runRoot}/warehouse")
+      .config("spark.sql.classic.shuffleDependency.fileCleanup.enabled", "true")
     (Tables.sessionConfs ++ confs).foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     GraftFunctions.register(s)

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -28,23 +31,12 @@ object Verify {
       // keeps query N's runtime independent of how many ran before it
       graft.util.RunCache.sweep(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // oracles of the selected entries only: a filtered run's check then
-    // reports no entry it did not run as missing
-    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // oracles of the selected entries only, sorted by name: a filtered
+    // run's check then reports no entry it did not run as missing
+    val oracles = new java.util.TreeMap[String, String](
+      SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }.asJava)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(oracles))
     spark.stop()
   }
 }

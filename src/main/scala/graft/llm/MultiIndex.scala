@@ -26,8 +26,8 @@ import graft.util.Streams
   * `persist()`ed across the four folds, so the source is read once per
   * tick instead of four times.
   *
-  * Build is run-scoped-once per (session, sf dir) — the same pattern as
-  * [[Dedup.verifiedPairsFullCached]]: the four serving entries share the
+  * Build is run-scoped-once per (session, sf dir), through
+  * [[graft.util.SharedBuilds.once]]: the four serving entries share the
   * stores the one ingest maintained, which is exactly the measured
   * claim (Bench times the four `q_llm_multi_ingest_*` entries together
   * against the four standalone entries' combined cost; PERF.md records
@@ -38,24 +38,12 @@ import graft.util.Streams
   */
 object MultiIndex {
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (org.apache.spark.SparkContext, String)]()
-
   /** Store base for `dir`, building all four index stores on first use
-    * in this session (eviction by owning-context liveness, same contract
-    * as the pairs cache). */
-  private[graft] def ensureBuilt(s: SparkSession, dir: String): String = {
-    val ctx = s.sparkContext
-    built.entrySet.removeIf(e => e.getValue._1.isStopped)
-    built.computeIfAbsent((ctx.applicationId, dir), _ => {
-      val base = Sinks.scratch("multi_ingest")
-      // timed as a shared build: Bench re-attributes these seconds to a
-      // `shared_build_multi_ingest` pseudo-entry so the four serving
-      // entries' numbers mean serve cost, not build-landed-here
-      graft.util.SharedBuilds.timed("multi_ingest")(build(s, dir, base))
-      (ctx, base)
-    })._2
-  }
+    * in this session. Timed as a shared build: Bench re-attributes these
+    * seconds to a `shared_build_multi_ingest` pseudo-entry so the four
+    * serving entries' numbers mean serve cost, not build-landed-here. */
+  private[graft] def ensureBuilt(s: SparkSession, dir: String): String =
+    graft.util.SharedBuilds.once(s, "multi_ingest", dir)(build(s, dir, _))
 
   private def build(s: SparkSession, dir: String, base: String): Unit = {
     val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))

@@ -1,9 +1,8 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.SparkSession
 
-/** Pin/sweep registry for block-manager hygiene in long single-JVM runs
+/** Block-manager hygiene between the entries of a long single-JVM run
   * (Bench, Verify: hundreds of queries share one SparkContext).
   *
   * Why it exists: every `localCheckpoint()` PERSISTS an RDD, and those
@@ -16,116 +15,42 @@ import org.apache.spark.sql.execution.LogicalRDD
   * N again (an executor in a real cluster gets this isolation from the
   * scheduler; a single-JVM bench has to do it by hand).
   *
-  * Why a PIN list: unpersisting a localCheckpointed RDD is destructive —
-  * the checkpoint TRUNCATED its lineage, so the data cannot be
-  * recomputed; any artifact deliberately shared across queries (the
-  * verified-pairs cache, PERF.md #48) must survive the sweep. [[pin]]
-  * records the checkpoint RDD id behind a cached DataFrame (the
-  * `LogicalRDD` its analyzed plan wraps); [[sweep]] unpersists every
-  * persistent RDD EXCEPT the pinned ones. Pins are keyed by
-  * (applicationId, rddId), not bare rddId: RDD ids restart near 0 per
-  * SparkContext, so in a JVM that cycles contexts (test suites) a bare
-  * id pinned under an old context would shield an unrelated new RDD
-  * from the sweep — the opposite of the hygiene the sweep provides.
-  * Stale applications' pins are pruned on each sweep.
+  * Every persistent RDD is dropped: no artifact shared across queries
+  * lives in the block manager (run-scoped shared builds are written to
+  * disk by [[SharedBuilds.once]]). Shuffle files are not the sweep's job:
+  * [[graft.Session.build]] sets
+  * `spark.sql.classic.shuffleDependency.fileCleanup.enabled`, so Spark
+  * deletes each SQL execution's shuffle files when the execution ends.
   */
 object RunCache {
-
-  private val pinned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
-  /** Register the checkpoint RDD(s) behind `df` as sweep-survivors.
-    * Returns `df` for call-site chaining. */
-  def pin(df: DataFrame): DataFrame = {
-    val app = df.sparkSession.sparkContext.applicationId
-    df.queryExecution.analyzed.foreach {
-      case l: LogicalRDD => pinned.add((app, l.rdd.id))
-      case _ =>
-    }
-    df
-  }
 
   /** Sweeps since JVM start — drives the every-Kth-sweep GC floor. */
   private var sweeps = 0L
 
   /** Run the ContextCleaner's trigger (a full GC) at most every Kth
-    * sweep when nothing was unpersisted: shuffle files and broadcasts
-    * are reclaimed only after their weak references fire, and a
-    * 100 GiB-heap driver may not GC for dozens of queries, so their
-    * disk/metadata footprint grows with suite position. But an
-    * every-sweep `System.gc()` measured ~11% overhead on cheap queries
-    * (r11 judge A/B: 17.0 s vs 15.1 s over a 20-query subset), so the
-    * unconditional form taxed the 90% of entries that create no
-    * persistent blocks at all. Now: GC when the sweep actually dropped
-    * blocks (checkpoint-heavy entries, where cleanup genuinely matters)
-    * or on the every-8th floor (bounds shuffle-file accumulation at an
-    * eighth of the old cost). */
+    * sweep when nothing was unpersisted: broadcasts, and the shuffle
+    * files of RDD-API actions (which run outside any SQL execution, so
+    * the per-execution cleanup misses them), are reclaimed only after
+    * their weak references fire, and a 100 GiB-heap driver may not GC for
+    * dozens of queries. But an every-sweep `System.gc()` measured ~11%
+    * overhead on cheap queries (r11 judge A/B: 17.0 s vs 15.1 s over a
+    * 20-query subset), so the unconditional form taxed the 90% of entries
+    * that create no persistent blocks at all. Now: GC when the sweep
+    * actually dropped blocks (checkpoint-heavy entries, where cleanup
+    * genuinely matters) or on the every-8th floor. */
   private val GcEverySweeps = 8
 
-  /** Disk-pressure GC floor. The cadence above bounds HEAP/metadata
-    * growth, but shuffle files live on DISK and are reclaimed only when
-    * the ContextCleaner's post-GC weak refs fire — between GCs they
-    * accumulate without bound. Measured at generated sf1: a 295-entry
-    * Verify run had piled up 65 GiB of shuffle files in the block-manager
-    * local dir by entry 172 and then died ENOSPC (every-8th-sweep GC ×
-    * multi-GiB shuffles per entry — the sf0.1 suite never showed it
-    * because 8 entries of sf0.1 shuffle fit trivially). A real cluster
-    * is immune twice over: executors are per-app and the external
-    * shuffle service / per-job teardown reclaims files; a single-JVM
-    * suite has to watch the volume itself. The check is O(1)
-    * (`getUsableSpace`, no directory walk): when the shuffle volume's
-    * free space drops below the floor, force the GC and then WAIT
-    * (bounded) for the cleaner to actually delete — GC only enqueues the
-    * weak refs; the deletion is async, and charging ahead at ENOSPC-2GiB
-    * helps nobody. */
-  private val DiskFloorBytes: Long =
-    sys.props.get("spark.graft.sweepDiskFloorGb").map(_.toLong)
-      .getOrElse(24L) * (1L << 30)
-
-  /** Free bytes on the volume holding this app's shuffle/spill files
-    * (first configured local dir; default java.io.tmpdir). */
-  private def shuffleVolumeFree(s: SparkSession): Long = {
-    val root = s.sparkContext.getConf.get("spark.local.dir",
-      System.getProperty("java.io.tmpdir", "/tmp")).split(",").head
-    new java.io.File(root).getUsableSpace
-  }
-
-  /** Unpersist every persistent RDD not pinned. Safe between queries:
-    * per-query DataFrames are never reused across queries, and
-    * everything shared is pinned at creation. BLOCKING on purpose: the
+  /** Unpersist every persistent RDD. Safe between queries: per-query
+    * DataFrames are never reused across queries. BLOCKING on purpose: the
     * sweep runs untimed between queries, block removal is local and
     * fast, and fire-and-forget unpersist futures race the JVM's
     * shutdown pools — the rejected-execution stack traces they print
     * after the final sweep would land in the driver's stdout tail-grab
     * right behind the result JSON. */
   def sweep(s: SparkSession): Unit = {
-    val ctx = s.sparkContext
-    val app = ctx.applicationId
-    var dropped = 0
-    val live = ctx.getPersistentRDDs
-    live.foreach { case (id, rdd) =>
-      if (!pinned.contains((app, id))) { rdd.unpersist(blocking = true); dropped += 1 }
-    }
-    // prune THIS app's pins that no longer shield a live block (the
-    // artifact was unpersisted elsewhere). Foreign apps' pins are left
-    // alone — they cannot shield this app's RDDs (keys include the app)
-    // and a concurrent live session in the same JVM must keep its own.
-    pinned.removeIf { case (a, id) => a == app && !live.contains(id) }
+    val live = s.sparkContext.getPersistentRDDs
+    live.values.foreach(_.unpersist(blocking = true))
     sweeps += 1
-    val diskLow = shuffleVolumeFree(s) < DiskFloorBytes
-    if (dropped > 0 || diskLow || sweeps % GcEverySweeps == 0) System.gc()
-    if (diskLow) {
-      // bounded wait for the ContextCleaner to delete the shuffle files
-      // the GC just unreferenced (deletion is async; without the wait the
-      // next entry races it straight back into ENOSPC)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (shuffleVolumeFree(s) < DiskFloorBytes &&
-          System.nanoTime() < deadline) {
-        Thread.sleep(500)
-      }
-      System.err.println(f"[runcache] disk-pressure sweep: " +
-        f"${shuffleVolumeFree(s) / 1e9}%.1f GB free on the shuffle volume " +
-        f"(floor ${DiskFloorBytes / 1e9}%.1f GB)")
-    }
+    if (live.nonEmpty || sweeps % GcEverySweeps == 0) System.gc()
   }
 }

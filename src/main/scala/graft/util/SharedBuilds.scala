@@ -1,35 +1,64 @@
 package graft.util
 
-/** Wall-clock ledger for run-scoped SHARED builds (the verified-pairs
-  * cache, the multi-index store): artifacts built once per
-  * (session, sf dir) and consumed by several queries.
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
+
+import graft.sinks.Sinks
+
+/** The one owner of run-scoped SHARED builds (the verified-pairs
+  * artifact, the multi-index store): artifacts built once per
+  * (session, label, sf dir) into their own scratch path and consumed by
+  * several queries. Every shared artifact lives on disk, not in the block
+  * manager, so [[RunCache.sweep]] can drop every persistent RDD between
+  * entries without destroying one.
   *
-  * Why it exists: in a sorted-suite bench the whole build lands inside
+  * Build ledger: in a sorted-suite bench the whole build lands inside
   * whichever consumer runs first (alphabetically), so that entry's
   * per-query time measures "build + serve" while its siblings measure
   * "serve" — r11's judge flagged `q_llm_multi_ingest_bm25` at 21.3 s of
-  * which ~20 s was the shared 4-store build. Builders wrap their
-  * once-per-run work in [[timed]]; Bench [[drain]]s the ledger after
-  * each query, SUBTRACTS the drained seconds from that query's time, and
-  * emits the build as its own labeled pseudo-entry (`shared_build_*`) —
-  * per-entry numbers are then stable under alphabetical reordering and
-  * the suite total is unchanged (the build seconds still count, under
-  * their own name).
+  * which ~20 s was the shared 4-store build. [[once]] times each build
+  * under its label; Bench [[drain]]s the ledger after each query,
+  * SUBTRACTS the drained seconds from that query's time, and emits the
+  * build as its own labeled pseudo-entry (`shared_build_*`) — per-entry
+  * numbers are then stable under alphabetical reordering and the suite
+  * total is unchanged (the build seconds still count, under their own
+  * name).
   *
-  * Thread-safety: builds run inside `computeIfAbsent`, so each label is
-  * recorded once per (app, dir); `merge` keeps concurrent labels safe.
+  * Thread-safety: builds run inside `computeIfAbsent`, so each key is
+  * built once, and a build must not call [[once]] itself (the map's
+  * mapping function may not update the map); `merge` keeps concurrent
+  * labels safe in the ledger.
   */
 object SharedBuilds {
   private val costs =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
-  /** Record `body`'s wall time under `label` (accumulating if the label
-    * recurs before a drain, e.g. per-dir builds in a multi-sf run). */
-  def timed[T](label: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    try body
-    finally costs.merge(label, (System.nanoTime() - t0) / 1e9,
-      (a, b) => java.lang.Double.valueOf(a + b))
+  /** Built artifacts by (application id, label, dir), with the context
+    * that built them. Keyed by application, not by dir alone: a later
+    * session in the same JVM (test suites cycle contexts) gets its own
+    * build. */
+  private val built = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), (SparkContext, String)]()
+
+  /** Numbers each build's scratch path, so no two (label, dir) builds
+    * share one. */
+  private val serial = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** The scratch path holding `label`'s artifact for `dir`, running
+    * `build` into a fresh one on first use in this session. The build's
+    * wall time is recorded under `label`. Entries of stopped contexts are
+    * dropped first; a concurrent live session keeps its own. */
+  def once(s: SparkSession, label: String, dir: String)(build: String => Unit): String = {
+    val ctx = s.sparkContext
+    built.entrySet.removeIf(e => e.getValue._1.isStopped)
+    built.computeIfAbsent((ctx.applicationId, label, dir), _ => {
+      val path = Sinks.scratch(s"shared_${label}_${serial.incrementAndGet()}")
+      val t0 = System.nanoTime()
+      try build(path)
+      finally costs.merge(label, (System.nanoTime() - t0) / 1e9,
+        (a, b) => java.lang.Double.valueOf(a + b))
+      (ctx, path)
+    })._2
   }
 
   /** Snapshot-and-clear the ledger: the seconds of shared-build work

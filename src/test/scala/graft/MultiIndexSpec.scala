@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 /** The shared-ingest tier (one checkpointed stream folding each arrival
   * batch into all four index families — [[graft.llm.MultiIndex]]) must
   * serve results identical to the four standalone incremental entries,
@@ -35,6 +37,33 @@ class MultiIndexSpec extends SparkSpec {
     val b2 = graft.llm.MultiIndex.ensureBuilt(spark, dir)
     assert(b1 == b2)
     assert(marker.exists(), "second ensureBuilt rebuilt the stores")
+    // another sf dir gets its own build in its own path, and leaves the
+    // first dir's stores alone
+    val other = Files.createDirectories(Paths.get(graft.sinks.Sinks.scratch("spec_multi_index_sf")))
+    Files.copy(Paths.get(s"$dir/documents.parquet"), other.resolve("documents.parquet"))
+    val b3 = graft.llm.MultiIndex.ensureBuilt(spark, other.toString)
+    assert(b3 != b1)
+    assert(marker.exists(), "building a second sf dir truncated the first dir's stores")
     marker.delete()
+
+    // the verified-pairs artifact: the same files on a second use, and a
+    // marker beside them survives it
+    val files = graft.llm.Dedup.verifiedPairsFullCached(spark, dir).inputFiles.toSeq
+    assert(files.nonEmpty)
+    val pairsMarker = new java.io.File(new java.net.URI(files.head).getPath).getParentFile.toPath
+      .resolve("_spec_marker").toFile
+    assert(pairsMarker.createNewFile() || pairsMarker.exists())
+    assert(graft.llm.Dedup.verifiedPairsFullCached(spark, dir).inputFiles.toSeq == files)
+    assert(pairsMarker.exists(), "second use rebuilt the verified pairs")
+    pairsMarker.delete()
+  }
+
+  test("a sweep drops every persistent RDD, and the shared pairs still serve") {
+    val q = SparkEntry.queries("q_llm_graph_triangles")
+    val before = q(spark, dir).collect().toSeq
+    assert(before.nonEmpty)
+    graft.util.RunCache.sweep(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(q(spark, dir).collect().toSeq == before)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.AnalysisException
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** The session factory's two contracts: conf overrides are scoped to a
   * block, and every entry registers the graft functions on whatever
@@ -21,6 +23,21 @@ class SessionSpec extends SparkSpec {
       Session.withConfs(spark, confs)(throw new RuntimeException("boom"))
     }
     assert(spark.conf.get(set) === before && spark.conf.getOption(unset).isEmpty)
+  }
+
+  test("a shuffled action leaves no shuffle file in the block manager's dirs") {
+    // files of earlier specs' RDD-API actions (not SQL executions, so
+    // not cleaned when they end) do not count against this one
+    def shuffleFiles() = org.apache.spark.SparkEnv.get.blockManager.diskBlockManager.getAllFiles()
+      .map(_.getName).filter(_.startsWith("shuffle_")).toSet
+    val before = shuffleFiles()
+    val rows = spark.range(200000).selectExpr("id % 1000 AS k").groupBy("k").count().collect()
+    assert(rows.length === 1000)
+    // the removal is asynchronous: it is queued when the execution ends
+    eventually(timeout(Span(10, Seconds))) {
+      val left = shuffleFiles() -- before
+      assert(left.isEmpty, left.take(5))
+    }
   }
 
   test("an entry registers the graft functions on a session that lacks them") {

@@ -114,6 +114,20 @@ class SurveyIndexSpec extends AnyFunSuite {
     assert(sources("src/main").collect { case (f, text) if text.contains("Sinks.bucketDirs") => f }.isEmpty)
   }
 
+  test("no spark.graft property is read; run-scoped artifacts have one owner") {
+    // a knob read from a system property is a setting no test or bench
+    // run covers unless someone remembers to pass it
+    val graftProp = """(sys\.props|System\.getProperty)\b[^\n]*"spark\.graft\.""".r
+    assert(sources("src/main").collect {
+      case (f, text) if graftProp.findFirstIn(text).isDefined => f
+    }.isEmpty)
+    // shared builds live on disk, so the sweep needs no pin list
+    assert(filesContaining("RunCache.pin").isEmpty)
+    // keying by application is the build-once cache's job
+    assert(sources("src/main").collect { case (f, text) if text.contains("applicationId") => f }.toSet
+      === Set("main/scala/graft/util/SharedBuilds.scala"))
+  }
+
   test("no two literal scratch names in src/main are equal") {
     // two entries sharing a name would clear and overwrite each other's
     // scratch in one run
